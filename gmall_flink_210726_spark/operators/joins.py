@@ -76,13 +76,6 @@ def enrich_dims(
     return out
 
 
-def broadcast_config_join(
-    data: DataFrame, config: DataFrame, cond: Column, how: str = "inner"
-) -> DataFrame:
-    """J3 — tiny config relation joined map-side (dwd/BaseDBApp.java:75-84)."""
-    return data.join(F.broadcast(config), cond, how)
-
-
 def range_join(
     points: DataFrame,
     ranges: DataFrame,

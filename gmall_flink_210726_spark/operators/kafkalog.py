@@ -121,8 +121,10 @@ def crc32c(data: bytes, crc: int = 0) -> int:
     vectorized and only the 4 crc-dependent lookups stay in the
     sequential loop (~4x; optimization round 14, guide §4.2). All
     tiers share the same derived tables; agreement is pinned across
-    both size boundaries in tests/test_codec_fastpaths.py."""
-    crc ^= 0xFFFFFFFF
+    both size boundaries in tests/test_codec_fastpaths.py. ``crc`` is
+    masked to 32 bits on entry, so a wider seed cannot index past the
+    256-entry tables."""
+    crc = (crc & 0xFFFFFFFF) ^ 0xFFFFFFFF
     n = len(data)
     if n < 16:
         return _crc32c_small(data, crc) ^ 0xFFFFFFFF

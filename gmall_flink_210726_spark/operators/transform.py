@@ -7,8 +7,6 @@ pushdown-friendly.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -27,30 +25,6 @@ def derive_datetime(df: DataFrame, ts_col: str) -> DataFrame:
         .withColumn("create_hour", F.hour(c))
         .withColumn("create_ts", F.expr(f"unix_micros({ts_col}) div 1000"))
     )
-
-
-def coalesce_merge(
-    left: DataFrame,
-    right: DataFrame,
-    cond: Column,
-    merge_cols: Sequence[str],
-    how: str = "left",
-) -> DataFrame:
-    """P9 — wide-row construction with firstNonNull merge semantics
-    (bean/OrderWide.java:88-105): for columns present on both sides the
-    left (order-centric) value wins unless null."""
-    l, r = left.alias("l"), right.alias("r")
-    joined = l.join(r, cond, how)
-    out_cols: list[Column] = []
-    for c in left.columns:
-        if c in merge_cols and c in right.columns:
-            out_cols.append(F.coalesce(F.col(f"l.{c}"), F.col(f"r.{c}")).alias(c))
-        else:
-            out_cols.append(F.col(f"l.{c}").alias(c))
-    for c in right.columns:
-        if c not in left.columns:
-            out_cols.append(F.col(f"r.{c}").alias(c))
-    return joined.select(*out_cols)
 
 
 def project_config_columns(df: DataFrame, sink_columns: str) -> DataFrame:

@@ -795,10 +795,9 @@ def iter_zstd_frames(data: bytes, dicts: dict | None = None):
         # differentially fuzz-tested in tests/test_codec_fastpaths.py.
         if did == 0 and has_checksum and fcs is not None and fcs <= (1 << 26):
             end = _scan_frame_blocks(data, pos)
-            if has_checksum:
-                if end + 4 > len(data):
-                    raise ValueError("zstd: truncated checksum")
-                end += 4
+            if end + 4 > len(data):
+                raise ValueError("zstd: truncated checksum")
+            end += 4
             global _PA_ZSTD
             if _PA_ZSTD is None:
                 import pyarrow as pa

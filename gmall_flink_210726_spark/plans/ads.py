@@ -54,21 +54,6 @@ def product_stats_by_category3(
     )
 
 
-def product_stats_by_sku(
-    product_stats: DataFrame, date: str, limit: int = 10
-) -> DataFrame:
-    return (
-        _on_date(product_stats, date)
-        .groupBy("sku_id", "sku_name")
-        .agg(
-            F.sum("order_amount").alias("order_amount"),
-            F.sum("order_ct").alias("order_ct"),
-        )
-        .orderBy(F.desc("order_amount"))
-        .limit(limit)
-    )
-
-
 def visitor_stats_by_hour(visitor_stats: DataFrame, date: str) -> DataFrame:
     """Hourly visitor curve (publisher's getVisitorStatsByHour): uv/pv/
     new-visitor counts per hour-of-day."""

@@ -31,6 +31,8 @@ that in 1970).
 from __future__ import annotations
 
 import itertools
+import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,8 +91,6 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file-stream source. The trailing glob is
     load-bearing: FileStreamSource requires a directory basePath, and a
     glob makes it resolve the parent dir instead of the file itself."""
-    import os
-
     return _read_events_stream(
         spark,
         f"{sf_dir}/events.parque*",
@@ -98,29 +98,72 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run_to_memory(
-    stream_df: DataFrame, prefix: str, state_partitions: int = 8
-) -> str:
+def replay_partition_count(
+    source_bytes: int, advisory_bytes: int, parallelism: int
+) -> int:
+    """State partitions for a bounded replay of ``source_bytes``: one per
+    AQE advisory partition size of input, at least 1, at most the
+    session's default parallelism."""
+    return max(1, min(parallelism, -(-source_bytes // advisory_bytes)))
+
+
+def _source_bytes(paths) -> int:
+    total = 0
+    for path in paths:
+        if os.path.isdir(path):
+            for root, _, files in os.walk(path):
+                total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+        else:
+            total += os.path.getsize(path)
+    return total
+
+
+@contextmanager
+def replay_partitions(spark: SparkSession, *source_paths: str):
+    """Pin ``spark.sql.shuffle.partitions`` for a bounded stream replay of
+    ``source_paths`` (files or directories) and restore the session value
+    on exit; yields the pinned count.
+
+    A streaming query fixes its state-store partitioning at start and
+    Spark disables AQE for streaming queries, so the batch path's
+    partition sizing does not apply. Every state partition pays a store
+    open, a delta-file write and a commit per micro-batch however few
+    rows it holds, so the count follows the same rule AQE applies to
+    batch shuffles: ``ceil(source_bytes / advisoryPartitionSizeInBytes)``
+    clamped to ``[1, defaultParallelism]``. Every ``st*`` query replays
+    files already on disk with an availableNow trigger, so the input
+    bytes are known before the stream starts. The rule sees bytes, not
+    per-key Python cost: an ``applyInPandasWithState`` replay whose
+    per-key calls dominate runs them all on one worker when it gets one
+    partition."""
+    jvm = spark.sparkContext._jvm
+    advisory = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    n = replay_partition_count(
+        _source_bytes(source_paths), advisory, spark.sparkContext.defaultParallelism
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _run_to_memory(stream_df: DataFrame, prefix: str, *source_paths: str) -> str:
     """Execute the streaming plan with an availableNow trigger into a
     memory sink; returns the sink table name. availableNow processes the
     whole backlog then stops, running trailing no-data micro-batches so
     watermark-closed state flushes (noDataMicroBatches, on by default).
 
-    ``spark.sql.shuffle.partitions`` is pinned to ``state_partitions``
-    for the stream's lifetime (a streaming query fixes its state-store
-    partitioning at start): every partition pays a per-micro-batch
-    state-store open/commit, so a bounded fixture replay wants few
-    partitions — measured 3-4× faster at 8 than 32 on the sf0.1 events
-    table. A production deployment sizes this to key cardinality ×
-    executor count instead (state scales out; the commit overhead
-    amortizes against real per-batch volume). The session value is
-    restored before returning, so the driver's downstream batch plans
-    keep their own parallelism."""
+    The stream runs under :func:`replay_partitions` sized from
+    ``source_paths``, the files the plan replays; the session's shuffle
+    partitions are restored before returning, so later batch plans keep
+    their own parallelism."""
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     name = f"{prefix}_{next(_sink_seq)}"
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    with replay_partitions(spark, *source_paths):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -134,8 +177,6 @@ def _run_to_memory(
                 raise TimeoutError(f"streaming query {name} did not finish")
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return name
 
 
@@ -161,7 +202,9 @@ def st1_stream_daily_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
         # numeric event_id (same-ms ties stay deterministic)
         F.lpad(F.col("event_id").cast("string"), 12, "0").alias("payload"),
     )
-    sink = _run_to_memory(streaming_daily_uv(flat), "st1_daily_uv")
+    sink = _run_to_memory(
+        streaming_daily_uv(flat), "st1_daily_uv", f"{sf_dir}/events.parquet"
+    )
     kept = spark.table(sink)
     # one emitted row per (mid, day) ⇒ per-day count = distinct users
     return kept.groupBy(
@@ -207,7 +250,7 @@ def st2_stream_tumble_pv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "pv_ct",
     )
-    sink = _run_to_memory(out, "st2_tumble_pv")
+    sink = _run_to_memory(out, "st2_tumble_pv", f"{sf_dir}/events.parquet")
     return spark.table(sink)
 
 
@@ -259,7 +302,7 @@ def st3_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "v_time >= p_time - INTERVAL 300 SECOND AND v_time <= p_time"
         ),
     ).select("purchase_id")
-    sink = _run_to_memory(joined, "st3_interval_join")
+    sink = _run_to_memory(joined, "st3_interval_join", f"{sf_dir}/events.parquet")
     return (
         spark.table(sink)
         .groupBy("purchase_id")
@@ -294,7 +337,6 @@ def st3_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def st4_stream_jump_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
     import tempfile
 
@@ -351,7 +393,7 @@ def st4_stream_jump_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     try:
-        sink = _run_to_memory(streaming_detect_jumps(flat), "st4_jumps")
+        sink = _run_to_memory(streaming_detect_jumps(flat), "st4_jumps", stage)
     finally:
         # memory sink holds the materialized rows; the staged files are done
         shutil.rmtree(stage, ignore_errors=True)
@@ -417,7 +459,7 @@ def st5_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
         "ev_ct",
     )
-    sink = _run_to_memory(out, "st5_session")
+    sink = _run_to_memory(out, "st5_session", f"{sf_dir}/events.parquet")
     return spark.table(sink)
 
 
@@ -473,28 +515,26 @@ def st6_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
         "pv_ct",
         (F.col("pv_ct") % 2).alias("parity"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            result,
-            lambda b, e: append_stats_exactly_once(b, e, out),
-            checkpoint_dir=ckpt,
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st6 foreachBatch stream did not finish")
-        q.stop()
-        # materialize the read-back BEFORE deleting the sink dir (the
-        # driver collects after we return), then clean up: repeated
-        # bench/parity runs must not accumulate /tmp state
-        readback = (
-            spark.read.parquet(out)
-            .select("stt", "event_type", "pv_ct", "parity")
-            .localCheckpoint(eager=True)
-        )
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(
+                result,
+                lambda b, e: append_stats_exactly_once(b, e, out),
+                checkpoint_dir=ckpt,
+            )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st6 foreachBatch stream did not finish")
+            q.stop()
+            # materialize the read-back BEFORE deleting the sink dir (the
+            # driver collects after we return), then clean up: repeated
+            # bench/parity runs must not accumulate /tmp state
+            readback = (
+                spark.read.parquet(out)
+                .select("stt", "event_type", "pv_ct", "parity")
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         import shutil
 
         shutil.rmtree(out, ignore_errors=True)
@@ -522,7 +562,6 @@ def st6_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "stateful"),
 )
 def st7_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
     import tempfile
 
@@ -544,7 +583,9 @@ def st7_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped = streaming_dedup(
             ev, keys=["event_id"], event_time_col="event_time", watermark="366 days"
         )
-        sink = _run_to_memory(deduped.select("event_id", "event_type"), "st7_dedup")
+        sink = _run_to_memory(
+            deduped.select("event_id", "event_type"), "st7_dedup", stage
+        )
     finally:
         # memory sink holds the rows once _run_to_memory returns; the
         # staged replay files are no longer needed (matches st4)
@@ -598,5 +639,5 @@ def st8_stream_sliding_pv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "pv_ct",
     )
-    sink = _run_to_memory(out, "st8_sliding")
+    sink = _run_to_memory(out, "st8_sliding", f"{sf_dir}/events.parquet")
     return spark.table(sink)

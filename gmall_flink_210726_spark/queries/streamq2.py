@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_flink_210726_spark.queries.streamq import replay_partitions
 from gmall_flink_210726_spark.registry import register
 from gmall_flink_210726_spark.sources.batch import load_table
 
@@ -71,29 +72,27 @@ def st9_stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             cms_cells(counts, "user_id", "ct"), epoch, out
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(ev, _write_cells, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st9 sketch stream did not finish")
-        q.stop()
-        merged = (
-            spark.read.parquet(out)
-            .groupBy("j", "ctr")
-            .agg(F.sum("cell").alias("cell"))
-        )
-        exact = (
-            load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("ct"))
-        )
-        result = cms_probe(merged, exact, "user_id", "ct").localCheckpoint(
-            eager=True
-        )
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(ev, _write_cells, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st9 sketch stream did not finish")
+            q.stop()
+            merged = (
+                spark.read.parquet(out)
+                .groupBy("j", "ctr")
+                .agg(F.sum("cell").alias("cell"))
+            )
+            exact = (
+                load_table(spark, sf_dir, "events")
+                .groupBy("user_id")
+                .agg(F.count(F.lit(1)).alias("ct"))
+            )
+            result = cms_probe(merged, exact, "user_id", "ct").localCheckpoint(
+                eager=True
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -155,29 +154,27 @@ def st10_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             hll_registers(keyed, [], "user_id"), epoch, out
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(ev, _write_regs, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st10 sketch stream did not finish")
-        q.stop()
-        merged = (
-            spark.read.parquet(out)
-            .groupBy("reg")
-            .agg(F.max("m").alias("m"))
-            .withColumn("scope", F.lit("all"))
-        )
-        est = hll_estimate_from_registers(merged, ["scope"])
-        exact = (
-            load_table(spark, sf_dir, "events")
-            .agg(F.count_distinct("user_id").alias("exact_distinct"))
-            .withColumn("scope", F.lit("all"))
-        )
-        result = est.join(exact, "scope").localCheckpoint(eager=True)
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(ev, _write_regs, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st10 sketch stream did not finish")
+            q.stop()
+            merged = (
+                spark.read.parquet(out)
+                .groupBy("reg")
+                .agg(F.max("m").alias("m"))
+                .withColumn("scope", F.lit("all"))
+            )
+            est = hll_estimate_from_registers(merged, ["scope"])
+            exact = (
+                load_table(spark, sf_dir, "events")
+                .agg(F.count_distinct("user_id").alias("exact_distinct"))
+                .withColumn("scope", F.lit("all"))
+            )
+            result = est.join(exact, "scope").localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -295,7 +292,7 @@ def st11_stream_left_outer_interval_join(
             ),
             "left_outer",
         ).select("purchase_id", "v_uid")
-        sink = _run_to_memory(joined, "st11_left_outer")
+        sink = _run_to_memory(joined, "st11_left_outer", stage)
         return (
             spark.table(sink)
             .filter(F.col("purchase_id") >= 0)
@@ -392,69 +389,67 @@ def st12_stream_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         append_stats_exactly_once(bits, epoch, out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(ev, _write_bits, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st12 sketch stream did not finish")
-        q.stop()
-        merged_bits = spark.read.parquet(out).select("bit").distinct()
-        members = (
-            load_table(spark, sf_dir, "events")
-            .select(F.col("user_id").alias("key"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        probes = members.unionByName(
-            members.select((F.col("key") + F.lit(1_000_000_000)).alias("key"))
-        )
-        # reuse the batch calibration operator's probe/truth logic, but
-        # against the STREAM-merged filter: re-derive probe bits and
-        # join the durable bit set
-        ks = F.explode(F.sequence(F.lit(0), F.lit(k_hashes - 1))).alias("j")
-        bit = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.col("j"), F.col("k").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(m_bits)
-        ).alias("bit")
-        pr = probes.select(F.col("key").alias("k")).distinct()
-        probe_bits = pr.select("k", ks).select("k", bit)
-        hits = (
-            probe_bits.join(
-                F.broadcast(merged_bits.select("bit", F.lit(1).alias("_set"))),
-                "bit",
-                "left",
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(ev, _write_bits, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st12 sketch stream did not finish")
+            q.stop()
+            merged_bits = spark.read.parquet(out).select("bit").distinct()
+            members = (
+                load_table(spark, sf_dir, "events")
+                .select(F.col("user_id").alias("key"))
+                .distinct()
+                .localCheckpoint(eager=False)
             )
-            .groupBy("k")
-            .agg((F.count("_set") == F.lit(k_hashes)).alias("bloom_pass"))
-        )
-        truth = hits.join(
-            members.select(F.col("key").alias("k"), F.lit(1).alias("_m")),
-            "k",
-            "left",
-        ).select("k", "bloom_pass", F.col("_m").isNotNull().alias("is_member"))
-        result = truth.agg(
-            F.count(F.lit(1)).alias("n_probes"),
-            F.sum(F.col("is_member").cast("long")).cast("long").alias("n_members"),
-            F.sum(F.col("bloom_pass").cast("long")).cast("long").alias("n_pass"),
-            F.sum(
-                (F.col("bloom_pass") & ~F.col("is_member")).cast("long")
-            ).cast("long").alias("n_false_pos"),
-            F.sum(
-                (~F.col("bloom_pass") & F.col("is_member")).cast("long")
-            ).cast("long").alias("n_false_neg"),
-        ).localCheckpoint(eager=True)
+            probes = members.unionByName(
+                members.select((F.col("key") + F.lit(1_000_000_000)).alias("key"))
+            )
+            # reuse the batch calibration operator's probe/truth logic, but
+            # against the STREAM-merged filter: re-derive probe bits and
+            # join the durable bit set
+            ks = F.explode(F.sequence(F.lit(0), F.lit(k_hashes - 1))).alias("j")
+            bit = (
+                F.conv(
+                    F.substring(
+                        F.md5(F.concat_ws(":", F.col("j"), F.col("k").cast("string"))),
+                        1,
+                        15,
+                    ),
+                    16,
+                    10,
+                ).cast("long")
+                % F.lit(m_bits)
+            ).alias("bit")
+            pr = probes.select(F.col("key").alias("k")).distinct()
+            probe_bits = pr.select("k", ks).select("k", bit)
+            hits = (
+                probe_bits.join(
+                    F.broadcast(merged_bits.select("bit", F.lit(1).alias("_set"))),
+                    "bit",
+                    "left",
+                )
+                .groupBy("k")
+                .agg((F.count("_set") == F.lit(k_hashes)).alias("bloom_pass"))
+            )
+            truth = hits.join(
+                members.select(F.col("key").alias("k"), F.lit(1).alias("_m")),
+                "k",
+                "left",
+            ).select("k", "bloom_pass", F.col("_m").isNotNull().alias("is_member"))
+            result = truth.agg(
+                F.count(F.lit(1)).alias("n_probes"),
+                F.sum(F.col("is_member").cast("long")).cast("long").alias("n_members"),
+                F.sum(F.col("bloom_pass").cast("long")).cast("long").alias("n_pass"),
+                F.sum(
+                    (F.col("bloom_pass") & ~F.col("is_member")).cast("long")
+                ).cast("long").alias("n_false_pos"),
+                F.sum(
+                    (~F.col("bloom_pass") & F.col("is_member")).cast("long")
+                ).cast("long").alias("n_false_neg"),
+            ).localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result

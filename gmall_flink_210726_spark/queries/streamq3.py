@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gmall_flink_210726_spark.queries.streamq import replay_partitions
 from gmall_flink_210726_spark.registry import register
 from gmall_flink_210726_spark.sources.batch import load_table
 
@@ -73,33 +74,31 @@ def st13_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         append_stats_exactly_once(partials, epoch, out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st13 top-k stream did not finish")
-        q.stop()
-        merged = (
-            spark.read.parquet(out)
-            .groupBy("hour", "event_type")
-            .agg(F.sum("ct").cast("long").alias("ct"))
-        )
-        rk = F.row_number().over(
-            Window.partitionBy("hour").orderBy(
-                F.col("ct").desc(), F.col("event_type")
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st13 top-k stream did not finish")
+            q.stop()
+            merged = (
+                spark.read.parquet(out)
+                .groupBy("hour", "event_type")
+                .agg(F.sum("ct").cast("long").alias("ct"))
             )
-        )
-        result = (
-            merged.select(
-                "hour", "event_type", "ct", rk.cast("long").alias("rk")
+            rk = F.row_number().over(
+                Window.partitionBy("hour").orderBy(
+                    F.col("ct").desc(), F.col("event_type")
+                )
             )
-            .filter(F.col("rk") <= 3)
-            .localCheckpoint(eager=True)
-        )
+            result = (
+                merged.select(
+                    "hour", "event_type", "ct", rk.cast("long").alias("rk")
+                )
+                .filter(F.col("rk") <= 3)
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -164,20 +163,18 @@ def st14_stream_upsert_materialize(spark: SparkSession, sf_dir: str) -> DataFram
         )
         append_stats_exactly_once(latest, epoch, out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st14 upsert stream did not finish")
-        q.stop()
-        result = (
-            upsert_serve(spark.read.parquet(out))
-            .localCheckpoint(eager=True)
-        )
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st14 upsert stream did not finish")
+            q.stop()
+            result = (
+                upsert_serve(spark.read.parquet(out))
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -258,49 +255,47 @@ def st15_stream_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # global sort materialization
         append_stats_exactly_once(hashed.orderBy("h").limit(k), epoch, out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(ev, _write_bottomk, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st15 sketch stream did not finish")
-        q.stop()
-        merged = (
-            spark.read.parquet(out).select("h").distinct().orderBy("h").limit(k)
-        )
-        wr = Window.orderBy("h")
-        kth = (
-            merged.withColumn("r", F.row_number().over(wr))
-            .agg(
-                F.max(F.when(F.col("r") == k, F.col("h"))).alias("kh"),
-                F.max("r").cast("long").alias("k_used"),
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(ev, _write_bottomk, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st15 sketch stream did not finish")
+            q.stop()
+            merged = (
+                spark.read.parquet(out).select("h").distinct().orderBy("h").limit(k)
             )
-            .withColumn("scope", F.lit("all"))
-        )
-        frac = F.conv(F.substring("kh", 1, 12), 16, 10).cast("long") / F.lit(
-            float(1 << 48)
-        )
-        est = F.when(
-            F.col("k_used") < k, F.col("k_used").cast("double")
-        ).otherwise(F.lit(float(k - 1)) / frac)
-        exact = (
-            load_table(spark, sf_dir, "events")
-            .agg(F.count_distinct("user_id").cast("long").alias("exact_distinct"))
-            .withColumn("scope", F.lit("all"))
-        )
-        result = (
-            kth.join(exact, "scope")
-            .select(
-                "scope",
-                "k_used",
-                "exact_distinct",
-                F.round(est, 4).alias("kmv_estimate"),
+            wr = Window.orderBy("h")
+            kth = (
+                merged.withColumn("r", F.row_number().over(wr))
+                .agg(
+                    F.max(F.when(F.col("r") == k, F.col("h"))).alias("kh"),
+                    F.max("r").cast("long").alias("k_used"),
+                )
+                .withColumn("scope", F.lit("all"))
             )
-            .localCheckpoint(eager=True)
-        )
+            frac = F.conv(F.substring("kh", 1, 12), 16, 10).cast("long") / F.lit(
+                float(1 << 48)
+            )
+            est = F.when(
+                F.col("k_used") < k, F.col("k_used").cast("double")
+            ).otherwise(F.lit(float(k - 1)) / frac)
+            exact = (
+                load_table(spark, sf_dir, "events")
+                .agg(F.count_distinct("user_id").cast("long").alias("exact_distinct"))
+                .withColumn("scope", F.lit("all"))
+            )
+            result = (
+                kth.join(exact, "scope")
+                .select(
+                    "scope",
+                    "k_used",
+                    "exact_distinct",
+                    F.round(est, 4).alias("kmv_estimate"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -399,22 +394,20 @@ def st16_stream_salted_interval_join(
         )
         append_stats_exactly_once(partials, epoch, out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(joined, _write_partials, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st16 salted interval join did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("purchase_id")
-            .agg(F.sum("view_ct").cast("long").alias("view_ct"))
-            .localCheckpoint(eager=True)
-        )
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(joined, _write_partials, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st16 salted interval join did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("purchase_id")
+                .agg(F.sum("view_ct").cast("long").alias("view_ct"))
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -486,7 +479,9 @@ def st17_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "v_time >= p_time - INTERVAL 300 SECOND AND v_time <= p_time"
         ),
     ).select("purchase_id", "v_time")
-    sink = _run_to_memory(joined, "st17_asof_join")
+    sink = _run_to_memory(
+        joined, "st17_asof_join", f"{sf_dir}/events.parquet"
+    )
     return (
         spark.table(sink)
         .groupBy("purchase_id")
@@ -557,57 +552,55 @@ def st18_stream_histogram_quantiles(
         )
         append_stats_exactly_once(partials, epoch, out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st18 histogram stream did not finish")
-        q.stop()
-        h = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(F.sum("ct").cast("long").alias("ct"))
-        )
-        c = h.withColumn(
-            "cum",
-            F.sum("ct").over(
-                Window.orderBy("bucket").rowsBetween(
-                    Window.unboundedPreceding, Window.currentRow
-                )
-            ).cast("long"),
-        )
-        n = h.agg(F.sum("ct").cast("long").alias("nn"))
-        qf = spark.createDataFrame(
-            [("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)],
-            "p string, num long, den long",
-        )
-        r = qf.crossJoin(F.broadcast(n)).select(
-            "p",
-            F.expr("(num * nn + den - 1) div den").alias("rank_at"),
-            "nn",
-        )
-        sel = (
-            r.join(c, c["cum"] >= r["rank_at"])
-            .groupBy("p", "nn")
-            .agg(F.min("bucket").alias("bucket"))
-        )
-        result = (
-            sel.join(c, "bucket")
-            .select(
-                "p",
-                F.col("bucket").cast("long").alias("bucket"),
-                (F.col("bucket") * 200).cast("long").alias(
-                    "bucket_lo_cents"
-                ),
-                "cum",
-                F.col("nn").alias("n_rows"),
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st18 histogram stream did not finish")
+            q.stop()
+            h = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(F.sum("ct").cast("long").alias("ct"))
             )
-            .localCheckpoint(eager=True)
-        )
+            c = h.withColumn(
+                "cum",
+                F.sum("ct").over(
+                    Window.orderBy("bucket").rowsBetween(
+                        Window.unboundedPreceding, Window.currentRow
+                    )
+                ).cast("long"),
+            )
+            n = h.agg(F.sum("ct").cast("long").alias("nn"))
+            qf = spark.createDataFrame(
+                [("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)],
+                "p string, num long, den long",
+            )
+            r = qf.crossJoin(F.broadcast(n)).select(
+                "p",
+                F.expr("(num * nn + den - 1) div den").alias("rank_at"),
+                "nn",
+            )
+            sel = (
+                r.join(c, c["cum"] >= r["rank_at"])
+                .groupBy("p", "nn")
+                .agg(F.min("bucket").alias("bucket"))
+            )
+            result = (
+                sel.join(c, "bucket")
+                .select(
+                    "p",
+                    F.col("bucket").cast("long").alias("bucket"),
+                    (F.col("bucket") * 200).cast("long").alias(
+                        "bucket_lo_cents"
+                    ),
+                    "cum",
+                    F.col("nn").alias("n_rows"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -686,33 +679,31 @@ def st19_stream_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         append_stats_exactly_once(partials, epoch, out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st19 AMS stream did not finish")
-        q.stop()
-        merged = (
-            spark.read.parquet(out)
-            .groupBy("j")
-            .agg(F.sum("s").cast("long").alias("s"))
-        )
-        result = (
-            merged.agg(
-                F.sum(F.col("s") * F.col("s")).cast("long").alias("sum_sq")
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st19 AMS stream did not finish")
+            q.stop()
+            merged = (
+                spark.read.parquet(out)
+                .groupBy("j")
+                .agg(F.sum("s").cast("long").alias("s"))
             )
-            .select(
-                F.lit(16).cast("long").alias("n_estimators"),
-                (F.col("sum_sq").cast("double") / F.lit(16.0)).alias(
-                    "f2_estimate"
-                ),
+            result = (
+                merged.agg(
+                    F.sum(F.col("s") * F.col("s")).cast("long").alias("sum_sq")
+                )
+                .select(
+                    F.lit(16).cast("long").alias("n_estimators"),
+                    (F.col("sum_sq").cast("double") / F.lit(16.0)).alias(
+                        "f2_estimate"
+                    ),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -774,26 +765,24 @@ def st20_stream_bitmap_distinct(
         )
         append_stats_exactly_once(words, epoch, out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st20 bitmap stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("day", "w")
-            .agg(F.bit_or("bits").alias("bits"))
-            .groupBy("day")
-            .agg(
-                F.sum(F.bit_count("bits")).cast("long").alias("exact_uv")
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st20 bitmap stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("day", "w")
+                .agg(F.bit_or("bits").alias("bits"))
+                .groupBy("day")
+                .agg(
+                    F.sum(F.bit_count("bits")).cast("long").alias("exact_uv")
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -866,25 +855,23 @@ def st21_stream_static_enrich(
         )
         append_stats_exactly_once(partials, epoch, out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(enriched, _write_partials, checkpoint_dir=ckpt)
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st21 stream-static enrich did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("nation")
-            .agg(
-                F.sum("n_events").cast("long").alias("n_events"),
-                F.sum("revenue_cents").cast("long").alias("revenue_cents"),
+        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
+            q = write_foreach_batch(enriched, _write_partials, checkpoint_dir=ckpt)
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st21 stream-static enrich did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("nation")
+                .agg(
+                    F.sum("n_events").cast("long").alias("n_events"),
+                    F.sum("revenue_cents").cast("long").alias("revenue_cents"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
     return result
@@ -960,7 +947,6 @@ def st22_stream_warc_ingest(
     src = tempfile.mkdtemp(prefix="st22_src_")
     out = tempfile.mkdtemp(prefix="st22_out_")
     ckpt = tempfile.mkdtemp(prefix="st22_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         # 32 source files, 16 per trigger: two micro-batches whose
         # file splits land on every core — blob bodies never shuffle
@@ -999,32 +985,31 @@ def st22_stream_warc_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st22 warc ingest stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_streams").cast("long").alias("n_streams"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("n_responses").cast("long").alias("n_responses"),
-                F.sum("n_conversions").cast("long").alias(
-                    "n_conversions"
-                ),
-                F.sum("n_blocks").cast("long").alias("n_blocks"),
-                F.sum("n_words").cast("long").alias("n_words"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st22 warc ingest stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_streams").cast("long").alias("n_streams"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_records").cast("long").alias("n_records"),
+                    F.sum("n_responses").cast("long").alias("n_responses"),
+                    F.sum("n_conversions").cast("long").alias(
+                        "n_conversions"
+                    ),
+                    F.sum("n_blocks").cast("long").alias("n_blocks"),
+                    F.sum("n_words").cast("long").alias("n_words"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1106,7 +1091,6 @@ def st23_stream_webdataset(
     src = tempfile.mkdtemp(prefix="st23_src_")
     out = tempfile.mkdtemp(prefix="st23_out_")
     ckpt = tempfile.mkdtemp(prefix="st23_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_wds_media(load_table(spark, sf_dir, "documents"), partitions=32)
@@ -1136,29 +1120,28 @@ def st23_stream_webdataset(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st23 webdataset stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_shards").cast("long").alias("n_shards"),
-                F.sum("n_loaded").cast("long").alias("n_loaded"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_bad").cast("long").alias("n_bad"),
-                F.sum("n_pixels").cast("long").alias("n_pixels"),
-                F.sum("pixel_sum").cast("long").alias("pixel_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st23 webdataset stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_shards").cast("long").alias("n_shards"),
+                    F.sum("n_loaded").cast("long").alias("n_loaded"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_bad").cast("long").alias("n_bad"),
+                    F.sum("n_pixels").cast("long").alias("n_pixels"),
+                    F.sum("pixel_sum").cast("long").alias("pixel_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1228,7 +1211,6 @@ def st24_stream_avro_ingest(
     src = tempfile.mkdtemp(prefix="st24_src_")
     out = tempfile.mkdtemp(prefix="st24_out_")
     ckpt = tempfile.mkdtemp(prefix="st24_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_avro_media(load_table(spark, sf_dir, "documents"), partitions=32)
@@ -1258,29 +1240,28 @@ def st24_stream_avro_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st24 avro ingest stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_files").cast("long").alias("n_files"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("n_blocks").cast("long").alias("n_blocks"),
-                F.sum("id_sum").cast("long").alias("id_sum"),
-                F.sum("vals_sum").cast("long").alias("vals_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st24 avro ingest stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_files").cast("long").alias("n_files"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_records").cast("long").alias("n_records"),
+                    F.sum("n_blocks").cast("long").alias("n_blocks"),
+                    F.sum("id_sum").cast("long").alias("id_sum"),
+                    F.sum("vals_sum").cast("long").alias("vals_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1346,7 +1327,6 @@ def st25_stream_orc_ingest(
     src = tempfile.mkdtemp(prefix="st25_src_")
     out = tempfile.mkdtemp(prefix="st25_out_")
     ckpt = tempfile.mkdtemp(prefix="st25_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_orc_media(load_table(spark, sf_dir, "documents"), partitions=32)
@@ -1374,27 +1354,26 @@ def st25_stream_orc_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st25 orc ingest stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_files").cast("long").alias("n_files"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_rows").cast("long").alias("n_rows"),
-                F.sum("k_sum").cast("long").alias("k_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st25 orc ingest stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_files").cast("long").alias("n_files"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_rows").cast("long").alias("n_rows"),
+                    F.sum("k_sum").cast("long").alias("k_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1457,7 +1436,6 @@ def st26_stream_kafka_ingest(
     src = tempfile.mkdtemp(prefix="st26_src_")
     out = tempfile.mkdtemp(prefix="st26_out_")
     ckpt = tempfile.mkdtemp(prefix="st26_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_kafka_media(load_table(spark, sf_dir, "documents"), partitions=32)
@@ -1486,28 +1464,27 @@ def st26_stream_kafka_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st26 kafka ingest stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_segments").cast("long").alias("n_segments"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_batches").cast("long").alias("n_batches"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("payload_sum").cast("long").alias("payload_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st26 kafka ingest stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_segments").cast("long").alias("n_segments"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_batches").cast("long").alias("n_batches"),
+                    F.sum("n_records").cast("long").alias("n_records"),
+                    F.sum("payload_sum").cast("long").alias("payload_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1573,7 +1550,6 @@ def st27_stream_wiki_ingest(
     src = tempfile.mkdtemp(prefix="st27_src_")
     out = tempfile.mkdtemp(prefix="st27_out_")
     ckpt = tempfile.mkdtemp(prefix="st27_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_wiki_dump_media(
@@ -1609,31 +1585,30 @@ def st27_stream_wiki_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st27 wiki ingest stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_dumps").cast("long").alias("n_dumps"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_pages").cast("long").alias("n_pages"),
-                F.sum("id_sum").cast("long").alias("id_sum"),
-                F.sum("plain_len_sum").cast("long").alias(
-                    "plain_len_sum"
-                ),
-                F.sum("link_count").cast("long").alias("link_count"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st27 wiki ingest stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_dumps").cast("long").alias("n_dumps"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_pages").cast("long").alias("n_pages"),
+                    F.sum("id_sum").cast("long").alias("id_sum"),
+                    F.sum("plain_len_sum").cast("long").alias(
+                        "plain_len_sum"
+                    ),
+                    F.sum("link_count").cast("long").alias("link_count"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1706,7 +1681,6 @@ def st28_stream_delta_dv_scan(
     src = tempfile.mkdtemp(prefix="st28_src_")
     out = tempfile.mkdtemp(prefix="st28_out_")
     ckpt = tempfile.mkdtemp(prefix="st28_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_delta_dv_media(
@@ -1741,30 +1715,29 @@ def st28_stream_delta_dv_scan(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st28 delta dv stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_tables").cast("long").alias("n_tables"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("deleted_rows").cast("long").alias(
-                    "deleted_rows"
-                ),
-                F.sum("live_rows").cast("long").alias("live_rows"),
-                F.sum("k_sum").cast("long").alias("k_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st28 delta dv stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_tables").cast("long").alias("n_tables"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("deleted_rows").cast("long").alias(
+                        "deleted_rows"
+                    ),
+                    F.sum("live_rows").cast("long").alias("live_rows"),
+                    F.sum("k_sum").cast("long").alias("k_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1832,7 +1805,6 @@ def st29_stream_warc_http_ingest(
     src = tempfile.mkdtemp(prefix="st29_src_")
     out = tempfile.mkdtemp(prefix="st29_out_")
     ckpt = tempfile.mkdtemp(prefix="st29_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_warc_http_media(
@@ -1868,31 +1840,30 @@ def st29_stream_warc_http_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st29 warc http stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_streams").cast("long").alias("n_streams"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_http").cast("long").alias("n_http"),
-                F.sum("status_sum").cast("long").alias("status_sum"),
-                F.sum("n_chunked").cast("long").alias("n_chunked"),
-                F.sum("n_gzip").cast("long").alias("n_gzip"),
-                F.sum("n_deflate").cast("long").alias("n_deflate"),
-                F.sum("n_words").cast("long").alias("n_words"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st29 warc http stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_streams").cast("long").alias("n_streams"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_http").cast("long").alias("n_http"),
+                    F.sum("status_sum").cast("long").alias("status_sum"),
+                    F.sum("n_chunked").cast("long").alias("n_chunked"),
+                    F.sum("n_gzip").cast("long").alias("n_gzip"),
+                    F.sum("n_deflate").cast("long").alias("n_deflate"),
+                    F.sum("n_words").cast("long").alias("n_words"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1958,7 +1929,6 @@ def st30_stream_orc_decimal_ingest(
     src = tempfile.mkdtemp(prefix="st30_src_")
     out = tempfile.mkdtemp(prefix="st30_out_")
     ckpt = tempfile.mkdtemp(prefix="st30_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_orc_dec_media(
@@ -1991,28 +1961,27 @@ def st30_stream_orc_decimal_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st30 orc decimal stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_files").cast("long").alias("n_files"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_rows").cast("long").alias("n_rows"),
-                F.sum("dec_sum_mant").cast("long").alias("dec_sum_mant"),
-                F.sum("ns_sum").cast("long").alias("ns_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st30 orc decimal stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_files").cast("long").alias("n_files"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_rows").cast("long").alias("n_rows"),
+                    F.sum("dec_sum_mant").cast("long").alias("dec_sum_mant"),
+                    F.sum("ns_sum").cast("long").alias("ns_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -2107,7 +2076,6 @@ def st31_stream_kafka_txn_ingest(
     src = tempfile.mkdtemp(prefix="st31_src_")
     out = tempfile.mkdtemp(prefix="st31_out_")
     ckpt = tempfile.mkdtemp(prefix="st31_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_kafka_txn_media(
@@ -2146,34 +2114,33 @@ def st31_stream_kafka_txn_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st31 kafka txn stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_segments").cast("long").alias("n_segments"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("committed_records")
-                .cast("long")
-                .alias("committed_records"),
-                F.sum("committed_sum")
-                .cast("long")
-                .alias("committed_sum"),
-                F.sum("aborted_records")
-                .cast("long")
-                .alias("aborted_records"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st31 kafka txn stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_segments").cast("long").alias("n_segments"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("committed_records")
+                    .cast("long")
+                    .alias("committed_records"),
+                    F.sum("committed_sum")
+                    .cast("long")
+                    .alias("committed_sum"),
+                    F.sum("aborted_records")
+                    .cast("long")
+                    .alias("aborted_records"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -2241,7 +2208,6 @@ def st32_stream_warc_zstd_ingest(
     src = tempfile.mkdtemp(prefix="st32_src_")
     out = tempfile.mkdtemp(prefix="st32_out_")
     ckpt = tempfile.mkdtemp(prefix="st32_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_warc_zstd_media(
@@ -2279,33 +2245,32 @@ def st32_stream_warc_zstd_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st32 warc zstd stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_streams").cast("long").alias("n_streams"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("n_responses")
-                .cast("long")
-                .alias("n_responses"),
-                F.sum("n_conversions")
-                .cast("long")
-                .alias("n_conversions"),
-                F.sum("n_words").cast("long").alias("n_words"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st32 warc zstd stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_streams").cast("long").alias("n_streams"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_records").cast("long").alias("n_records"),
+                    F.sum("n_responses")
+                    .cast("long")
+                    .alias("n_responses"),
+                    F.sum("n_conversions")
+                    .cast("long")
+                    .alias("n_conversions"),
+                    F.sum("n_words").cast("long").alias("n_words"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -2385,7 +2350,6 @@ def st33_stream_hudi_mor_ingest(
     src = tempfile.mkdtemp(prefix="st33_src_")
     out = tempfile.mkdtemp(prefix="st33_out_")
     ckpt = tempfile.mkdtemp(prefix="st33_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_hudi_mor_media(
@@ -2417,28 +2381,27 @@ def st33_stream_hudi_mor_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            merged, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st33 hudi mor stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_tables").cast("long").alias("n_tables"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_blocks").cast("long").alias("n_blocks"),
-                F.sum("total_rows").cast("long").alias("total_rows"),
-                F.sum("k_sum").cast("long").alias("k_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                merged, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st33 hudi mor stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_tables").cast("long").alias("n_tables"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_blocks").cast("long").alias("n_blocks"),
+                    F.sum("total_rows").cast("long").alias("total_rows"),
+                    F.sum("k_sum").cast("long").alias("k_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -2502,7 +2465,6 @@ def st34_stream_flac_ingest(
     src = tempfile.mkdtemp(prefix="st34_src_")
     out = tempfile.mkdtemp(prefix="st34_out_")
     ckpt = tempfile.mkdtemp(prefix="st34_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_flac_media(
@@ -2533,27 +2495,26 @@ def st34_stream_flac_ingest(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st34 flac stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_blobs").cast("long").alias("n_blobs"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_samples").cast("long").alias("n_samples"),
-                F.sum("sample_sum").cast("long").alias("sample_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st34 flac stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_blobs").cast("long").alias("n_blobs"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_samples").cast("long").alias("n_samples"),
+                    F.sum("sample_sum").cast("long").alias("sample_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -2641,7 +2602,6 @@ def st35_stream_kafka_compacted(
     src = tempfile.mkdtemp(prefix="st35_src_")
     out = tempfile.mkdtemp(prefix="st35_out_")
     ckpt = tempfile.mkdtemp(prefix="st35_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_kafka_compacted_media(
@@ -2677,28 +2637,27 @@ def st35_stream_kafka_compacted(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st35 compacted stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_blobs").cast("long").alias("n_blobs"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("live_keys").cast("long").alias("live_keys"),
-                F.sum("value_sum").cast("long").alias("value_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st35 compacted stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_blobs").cast("long").alias("n_blobs"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_records").cast("long").alias("n_records"),
+                    F.sum("live_keys").cast("long").alias("live_keys"),
+                    F.sum("value_sum").cast("long").alias("value_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -2766,7 +2725,6 @@ def st36_stream_git_pack(
     src = tempfile.mkdtemp(prefix="st36_src_")
     out = tempfile.mkdtemp(prefix="st36_out_")
     ckpt = tempfile.mkdtemp(prefix="st36_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_git_pack_media(
@@ -2800,30 +2758,29 @@ def st36_stream_git_pack(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st36 git stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_blobs").cast("long").alias("n_blobs"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_objects").cast("long").alias("n_objects"),
-                F.sum("blob_bytes").cast("long").alias("blob_bytes"),
-                F.sum("blob_byte_sum")
-                .cast("long")
-                .alias("blob_byte_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st36 git stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_blobs").cast("long").alias("n_blobs"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_objects").cast("long").alias("n_objects"),
+                    F.sum("blob_bytes").cast("long").alias("blob_bytes"),
+                    F.sum("blob_byte_sum")
+                    .cast("long")
+                    .alias("blob_byte_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -2885,7 +2842,6 @@ def st37_stream_hbase_hfile(
     src = tempfile.mkdtemp(prefix="st37_src_")
     out = tempfile.mkdtemp(prefix="st37_out_")
     ckpt = tempfile.mkdtemp(prefix="st37_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         (
             synthesize_hfile_media(
@@ -2918,29 +2874,28 @@ def st37_stream_hbase_hfile(
             )
             append_stats_exactly_once(partials, epoch, out)
 
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = write_foreach_batch(
-            decoded, _write_partials, checkpoint_dir=ckpt
-        )
-        finished = q.awaitTermination(600)
-        if not finished:  # pragma: no cover - hung stream
-            raise TimeoutError("st37 hfile stream did not finish")
-        q.stop()
-        result = (
-            spark.read.parquet(out)
-            .groupBy("bucket")
-            .agg(
-                F.sum("n_blobs").cast("long").alias("n_blobs"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_cells").cast("long").alias("n_cells"),
-                F.sum("value_byte_sum")
-                .cast("long")
-                .alias("value_byte_sum"),
+        with replay_partitions(spark, src):
+            q = write_foreach_batch(
+                decoded, _write_partials, checkpoint_dir=ckpt
             )
-            .localCheckpoint(eager=True)
-        )
+            finished = q.awaitTermination(600)
+            if not finished:  # pragma: no cover - hung stream
+                raise TimeoutError("st37 hfile stream did not finish")
+            q.stop()
+            result = (
+                spark.read.parquet(out)
+                .groupBy("bucket")
+                .agg(
+                    F.sum("n_blobs").cast("long").alias("n_blobs"),
+                    F.sum("n_ok").cast("long").alias("n_ok"),
+                    F.sum("n_cells").cast("long").alias("n_cells"),
+                    F.sum("value_byte_sum")
+                    .cast("long")
+                    .alias("value_byte_sum"),
+                )
+                .localCheckpoint(eager=True)
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -25,17 +25,6 @@ def read_cdc_batch(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(CDC_ENVELOPE_SCHEMA).json(path)
 
 
-def read_cdc_stream(spark: SparkSession, path: str, max_files: int = 1) -> DataFrame:
-    """Streaming: file-source tail of envelope JSON lines (≈ the binlog
-    phase). maxFilesPerTrigger=1 makes micro-batches deterministic in
-    tests."""
-    return (
-        spark.readStream.schema(CDC_ENVELOPE_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .json(path)
-    )
-
-
 def parse_cdc_lines(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """Parse envelope JSON out of a string column (Kafka-style value)."""
     return raw.select(

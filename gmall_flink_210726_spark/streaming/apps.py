@@ -103,32 +103,6 @@ def keyword_stats_stream(
     )
 
 
-def product_stats_stream(
-    order_wide: DataFrame,
-    window_duration: str = "10 seconds",
-    watermark: str = "2 seconds",
-) -> DataFrame:
-    """dws/ProductStatsApp.java streaming form for the order branch:
-    watermarked tumble by sku_id with approx distinct order count
-    (A3 streaming path — exact countDistinct is unsupported in
-    append-mode streaming aggregation; SURVEY §4.2)."""
-    src = order_wide.withColumn(
-        "event_time", F.to_timestamp("create_time", DT_FMT)
-    ).withWatermark("event_time", watermark)
-    agg = src.groupBy(
-        F.window("event_time", window_duration).alias("w"), "sku_id"
-    ).agg(
-        F.sum("sku_num").alias("order_sku_num"),
-        F.sum("split_total_amount").alias("order_amount"),
-        F.approx_count_distinct("order_id").alias("order_ct"),
-    )
-    return agg.select(
-        F.date_format("w.start", DT_FMT).alias("stt"),
-        F.date_format("w.end", DT_FMT).alias("edt"),
-        "sku_id", "order_sku_num", "order_amount", "order_ct",
-    )
-
-
 def enrich_stream_with_dims(
     fact_stream: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
 ) -> DataFrame:

@@ -24,18 +24,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_event_time_watermark(
-    df: DataFrame, ts_ms_col: str, delay: str, event_time_col: str = "event_time"
-) -> DataFrame:
-    """T1/T2 — epoch-ms column → event-time timestamp + watermark.
-    delay='0 seconds' ≈ Flink's ascending-timestamps strategy
-    (dwm/OrderWideApp.java:66-72); positive delays ≈
-    BoundedOutOfOrderness (dws/ProductStatsApp.java:194-200)."""
-    return df.withColumn(event_time_col, F.timestamp_millis(F.col(ts_ms_col))).withWatermark(
-        event_time_col, delay
-    )
-
-
 def streaming_interval_join(
     left: DataFrame,
     right: DataFrame,

@@ -282,8 +282,10 @@ class TestCrc32cHybrid:
         for ln in (0, 1, 15, 16, 17, 31, 32, 100, 255, 511, 512, 513,
                    1000, 4096, 32771):
             d = bytes(rng.randrange(256) for _ in range(ln))
-            for init in (0, 0x12345678):
-                ref = _crc32c_small(d, init ^ 0xFFFFFFFF) ^ 0xFFFFFFFF
+            # a seed wider than 32 bits is masked on entry
+            for init in (0, 0x12345678, 0xDEADBEEF_12345678):
+                seed = (init & 0xFFFFFFFF) ^ 0xFFFFFFFF
+                ref = _crc32c_small(d, seed) ^ 0xFFFFFFFF
                 assert crc32c(d, init) == ref, (ln, init)
 
     def test_known_vector(self):

@@ -347,3 +347,69 @@ class TestStreamStaticEnrich:
             .collect()
         }
         assert got == want
+
+
+class TestReplayPartitions:
+    """Stream replays size their state partitions from the input bytes
+    (queries/streamq.py:replay_partitions), the rule AQE applies to
+    batch shuffles."""
+
+    def test_small_input_gets_one_partition(self):
+        from gmall_flink_210726_spark.queries.streamq import replay_partition_count
+
+        assert replay_partition_count(0, 64 << 20, 4) == 1
+        assert replay_partition_count(221_075, 64 << 20, 4) == 1
+
+    def test_large_input_clamps_to_parallelism(self):
+        from gmall_flink_210726_spark.queries.streamq import replay_partition_count
+
+        assert replay_partition_count(3 * (64 << 20), 64 << 20, 4) == 3
+        assert replay_partition_count(1 << 50, 64 << 20, 4) == 4
+
+    def test_session_value_restored_when_block_raises(self, spark, tmp_path):
+        from gmall_flink_210726_spark.queries.streamq import replay_partitions
+
+        src = tmp_path / "in.bin"
+        src.write_bytes(b"x" * 1024)
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        with pytest.raises(RuntimeError, match="boom"):
+            with replay_partitions(spark, str(src), str(tmp_path)) as n:
+                assert n == 1
+                assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+                raise RuntimeError("boom")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+    def test_st1_state_store_uses_sized_partitions(self, spark):
+        import time
+
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        from gmall_flink_210726_spark.registry import load_all
+        from tests.conftest import SF_SMALL
+
+        class Progress(StreamingQueryListener):
+            def __init__(self):
+                self.ids, self.last, self.done = set(), None, set()
+
+            def onQueryStarted(self, event):
+                if (event.name or "").startswith("st1_daily_uv"):
+                    self.ids.add(event.id)
+
+            def onQueryProgress(self, event):
+                if event.progress.id in self.ids:
+                    self.last = json.loads(event.progress.json)
+
+            def onQueryTerminated(self, event):
+                self.done.add(event.id)
+
+        listener = Progress()
+        spark.streams.addListener(listener)
+        try:
+            load_all()["st1_stream_daily_uv"].fn(spark, SF_SMALL).collect()
+            end = time.monotonic() + 30
+            while not (listener.ids and listener.ids <= listener.done):
+                assert time.monotonic() < end, "no terminated event for st1"
+                time.sleep(0.1)
+        finally:
+            spark.streams.removeListener(listener)
+        assert listener.last["stateOperators"][0]["numShufflePartitions"] == 1
