@@ -10,11 +10,12 @@ Layout (maps to SURVEY.md §2 operator inventory):
 
 - ``session``     — SparkSession factory tuned for local[N] and cluster.
 - ``schemas``     — explicit StructTypes for every stream/table shape.
-- ``sources/``    — batch + streaming sources (parquet, JSON events, CDC
-                    envelope reader ≈ ods/Flink_CDCWithCustomerSchema_Ods.java).
-- ``functions/``  — scalar function layer (F1-F15) + tokenizer UDTF (D1).
+- ``sources/``    — batch + streaming sources (parquet, CDC envelope
+                    reader ≈ ods/Flink_CDCWithCustomerSchema_Ods.java,
+                    Kafka record shapes).
+- ``functions/``  — shared scalar builders (F11, F12) + tokenizer UDTF (D1).
 - ``operators/``  — generic DataFrame→DataFrame operators: parse (P1/P2),
-                    transforms (P3-P9), splits (R1/R2), routing (R3),
+                    transforms (P7), splits (R1/R2), routing (R3),
                     unions (U1), joins (J1-J3), aggregations (A1-A6),
                     stateful batch-replay (T4-T6), plus the
                     LLM-data-pipeline extras (dedup/similarity/text).

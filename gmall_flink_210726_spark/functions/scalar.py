@@ -1,9 +1,12 @@
-"""Scalar function layer — F1-F15 from SURVEY.md §2.10.
+"""Scalar function layer — the shared F11/F12 builders (SURVEY.md §2.10).
 
-The reference implements these inline in Java (util/DateTimeUtil.java,
-dwm/OrderWideApp.java:57-64, etc.). Here each is a thin Column-level
-builder over pyspark.sql.functions so everything stays JVM-side inside
-whole-stage codegen — no Python UDFs on the hot path.
+The reference implements its scalars inline in Java
+(util/DateTimeUtil.java, dwm/OrderWideApp.java:57-64, etc.). Most of
+F1-F15 are single ``pyspark.sql.functions`` calls written inline where
+a query needs them (``queries/gmall2.f_scalar_pack``); the ones shared
+across queries live here as thin Column-level builders, so everything
+stays JVM-side inside whole-stage codegen — no Python UDFs on the hot
+path.
 """
 
 from __future__ import annotations
@@ -12,43 +15,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DT_FMT = "yyyy-MM-dd HH:mm:ss"
-
-
-def dt_string_to_epoch_ms(col: Column | str, fmt: str = DT_FMT) -> Column:
-    """F1 — 'yyyy-MM-dd HH:mm:ss' → epoch millis (util/DateTimeUtil.java:17-20)."""
-    return F.unix_timestamp(F.col(col) if isinstance(col, str) else col, fmt) * 1000
-
-
-def epoch_ms_to_dt_string(col: Column | str, fmt: str = DT_FMT) -> Column:
-    """F2 — epoch millis → 'yyyy-MM-dd HH:mm:ss' (util/DateTimeUtil.java:12-15)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(F.timestamp_millis(c), fmt)
-
-
-def day_bucket(col: Column | str) -> Column:
-    """F4 — epoch millis → 'yyyy-MM-dd' day string (dwm/UniqueVisitApp.java:66,79)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(F.timestamp_millis(c), "yyyy-MM-dd")
-
-
-def split_date_hour(create_time: Column | str) -> tuple[Column, Column]:
-    """F3 — create_time → (create_date, create_hour) (dwm/OrderWideApp.java:58-61)."""
-    c = F.col(create_time) if isinstance(create_time, str) else create_time
-    return F.split(c, " ")[0], F.hour(F.to_timestamp(c, DT_FMT))
-
-
-def age_from_birthday(birthday: Column | str) -> Column:
-    """F5 — integer age in years (dwm/OrderWideApp.java:109-114 computes
-    (now-birthday_ms)/(1000·60·60·24·365); we keep that intended 365-day
-    year so results match the reference's semantics)."""
-    b = F.col(birthday) if isinstance(birthday, str) else birthday
-    return F.floor(F.datediff(F.current_date(), F.to_date(b)) / 365).cast("long")
-
-
-def yyyymmdd(col: Column | str) -> Column:
-    """F15 — ClickHouse toYYYYMMDD(stt) analog (ProductStatsMapper.java:10)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyyMMdd")
 
 
 def one_hot(cond: Column) -> Column:

@@ -67,6 +67,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 _MAGIC = b"ARROW1"
 
 
@@ -410,9 +412,6 @@ ARROW_SCHEMA = StructType(
 
 def arrow_ipc_stats(df: DataFrame) -> DataFrame:
     """Arrow IPC file walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in ARROW_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -431,9 +430,7 @@ def arrow_ipc_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ARROW_SCHEMA
-    )
+    return map_pandas(df, gen, ARROW_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -534,13 +531,8 @@ def make_arrow_ipc(i: int) -> bytes:
 
 def synthesize_arrow_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Arrow IPC files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -562,7 +554,7 @@ def synthesize_arrow_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -854,9 +846,6 @@ DICT_SCHEMA = StructType(
 
 def arrow_dict_stats(df: DataFrame) -> DataFrame:
     """Dictionary-encoded Arrow IPC walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in DICT_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -875,9 +864,7 @@ def arrow_dict_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DICT_SCHEMA
-    )
+    return map_pandas(df, gen, DICT_SCHEMA, ["media_id", "content"])
 
 
 def _adict_n(i: int) -> int:
@@ -965,13 +952,8 @@ def make_arrow_dict(i: int) -> bytes:
 
 def synthesize_arrow_dict_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of dictionary-encoded Arrow IPC files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -995,4 +977,4 @@ def synthesize_arrow_dict_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

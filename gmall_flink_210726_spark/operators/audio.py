@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 ENERGY_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -127,15 +129,12 @@ def audio_window_energy(df: DataFrame, win: int = 16) -> DataFrame:
     """Windowed audio energy over MEDIA_SCHEMA input (see module doc).
     Arrow-batched mapInPandas; partition parallelism is decode
     parallelism."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _energy_batch(pdf, win)
 
-    return df.select("media_id", "content").mapInPandas(gen, ENERGY_SCHEMA)
+    return map_pandas(df, gen, ENERGY_SCHEMA, ["media_id", "content"])
 
 
 ZCR_SCHEMA = StructType(
@@ -209,15 +208,12 @@ def audio_zero_crossings(df: DataFrame) -> DataFrame:
     curation pipeline runs before any model-based filter. Same scale
     shape as audio_window_energy: Arrow-batched mapInPandas, 5 scalar
     columns out per file."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _zcr_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, ZCR_SCHEMA)
+    return map_pandas(df, gen, ZCR_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_wav_depths(docs: DataFrame) -> DataFrame:
@@ -227,13 +223,11 @@ def synthesize_wav_depths(docs: DataFrame) -> DataFrame:
     ``(i*13 + 5k) % 2^bits``, centered per depth, so a DuckDB oracle
     recomputes every energy integer blind with ONE formula
     parameterized by the modulus."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
     import numpy as np
     import struct
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
@@ -286,7 +280,7 @@ def synthesize_wav_depths(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 ULAW_SCHEMA = StructType(
@@ -384,15 +378,12 @@ def audio_ulaw_stats(df: DataFrame) -> DataFrame:
     voicemail corpora arrive mu-law-companded, not linear PCM). Same
     scale shape as audio_window_energy: Arrow-batched mapInPandas,
     blobs cross into Python once, 6 scalar columns out per file."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _ulaw_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, ULAW_SCHEMA)
+    return map_pandas(df, gen, ULAW_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_wav_ulaw(docs: DataFrame) -> DataFrame:
@@ -401,13 +392,11 @@ def synthesize_wav_ulaw(docs: DataFrame) -> DataFrame:
     oracle expands every sample blind through the same G.711 integer
     formula. Every 13th id is truncated mid-header — the honest
     corrupt-row stripe that must degrade to 'unknown'."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
     import numpy as np
     import struct
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
@@ -447,7 +436,7 @@ def synthesize_wav_ulaw(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # IMA ADPCM step-size table (IMA Digital Audio Pack 1992 / Microsoft
@@ -574,15 +563,12 @@ def audio_adpcm_stats(df: DataFrame) -> DataFrame:
     the decoder carries per-sample adaptive state, so any nibble-order,
     clamp, or step-table error compounds and is caught by the
     final_pred/final_idx checksums). Arrow-batched mapInPandas."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _adpcm_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, ADPCM_SCHEMA)
+    return map_pandas(df, gen, ADPCM_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_wav_adpcm(docs: DataFrame) -> DataFrame:
@@ -591,12 +577,10 @@ def synthesize_wav_adpcm(docs: DataFrame) -> DataFrame:
     nibble k = (i*13 + 7k)%16 are all LCG formulas so a DuckDB oracle
     replays the ENTIRE adaptive decode blind via list_reduce. Every
     17th id is truncated mid-header -> 'unknown'."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
     import struct
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
@@ -641,4 +625,4 @@ def synthesize_wav_adpcm(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -52,16 +52,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _Reader,
     snappy_decompress,
 )
 
 _MAGIC = b"Obj\x01"
-
-
-def _zz_long(r: _Reader) -> int:
-    return r.zigzag()
 
 
 def _bytes(r: _Reader) -> bytes:
@@ -521,28 +518,20 @@ def _avro_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def avro_container_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded Avro object-container walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _avro_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, AVRO_SCHEMA)
+    return map_pandas(df, gen, AVRO_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_avro_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Avro object-container files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -567,7 +556,7 @@ def synthesize_avro_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -991,30 +980,20 @@ def _avro_evo_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def avro_evolution_stats(df: DataFrame) -> DataFrame:
     """Reader-schema (v2) decode of v1-writer containers."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _avro_evo_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, AVRO_EVO_SCHEMA
-    )
+    return map_pandas(df, gen, AVRO_EVO_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_avro_v1_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of v1-writer Avro containers."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1039,7 +1018,7 @@ def synthesize_avro_v1_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1178,9 +1157,6 @@ def _avro_logical_one(i: int, data: bytes) -> dict | None:
 
 def avro_logical_stats(df: DataFrame) -> DataFrame:
     """Logical-type container decode over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in AVRO_LOGICAL_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1211,22 +1187,15 @@ def avro_logical_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, AVRO_LOGICAL_SCHEMA
-    )
+    return map_pandas(df, gen, AVRO_LOGICAL_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_avro_logical_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of logical-type Avro containers."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1253,7 +1222,7 @@ def synthesize_avro_logical_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.inflate import inflate
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 
 # SAM spec §4.1.2: the EOF marker is this exact 28-byte empty block
 _EOF_MARKER = bytes.fromhex(
@@ -177,9 +178,6 @@ BGZF_SCHEMA = StructType(
 def bgzf_stats(df: DataFrame) -> DataFrame:
     """Random-access BGZF proof over MEDIA_SCHEMA blobs; the target
     offset derives from media_id."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in BGZF_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -198,9 +196,7 @@ def bgzf_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, BGZF_SCHEMA
-    )
+    return map_pandas(df, gen, BGZF_SCHEMA, ["media_id", "content"])
 
 
 def _bgzf_nb(i: int) -> int:
@@ -290,13 +286,8 @@ def make_bgzf(i: int) -> bytes:
 
 def synthesize_bgzf_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of BGZF streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -318,4 +309,4 @@ def synthesize_bgzf_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 BMP_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -157,15 +159,12 @@ def _bmp_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 def bmp_rle_stats(df: DataFrame) -> DataFrame:
     """RLE8 BMP decode + palette-weighted pixel stats over MEDIA_SCHEMA
     blobs (see module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _bmp_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, BMP_SCHEMA)
+    return map_pandas(df, gen, BMP_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_bmp_rle_media(docs: DataFrame) -> DataFrame:
@@ -181,12 +180,10 @@ def synthesize_bmp_rle_media(docs: DataFrame) -> DataFrame:
     formulas of (id, row) so a DuckDB oracle recomputes both checksums
     blind. Every 11th id is truncated mid-palette — the corrupt stripe
     that must degrade to 'unknown'."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
     import struct
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
@@ -253,4 +250,4 @@ def synthesize_bmp_rle_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 
 def _cstring(data: bytes, pos: int) -> tuple[bytes, int] | None:
     nul = data.find(b"\x00", pos)
@@ -207,9 +209,6 @@ BSON_SCHEMA = StructType(
 
 def bson_stats(df: DataFrame) -> DataFrame:
     """BSON dump census over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in BSON_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -235,9 +234,7 @@ def bson_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, BSON_SCHEMA
-    )
+    return map_pandas(df, gen, BSON_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -337,13 +334,8 @@ def make_bson_dump(i: int) -> bytes:
 
 def synthesize_bson_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of BSON dumps."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -367,4 +359,4 @@ def synthesize_bson_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

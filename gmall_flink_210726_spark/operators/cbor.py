@@ -435,7 +435,7 @@ def cbor_records_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.session import ship_package
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
 
     schema = StructType(
         [
@@ -452,7 +452,6 @@ def cbor_records_stats(df):
             StructField("n_null", LongType()),
         ]
     )
-    ship_package(df.sparkSession)
 
     def batch(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
@@ -475,20 +474,19 @@ def cbor_records_stats(df):
         for pdf in batches:
             yield batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, schema)
+    return map_pandas(df, gen, schema, ["media_id", "content"])
 
 
 def synthesize_cbor_media(docs):
     """MEDIA_SCHEMA table of CBOR-sequence blobs."""
     import pandas as pd
 
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
+    from gmall_flink_210726_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        map_pandas,
     )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -510,4 +508,4 @@ def synthesize_cbor_media(docs):
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

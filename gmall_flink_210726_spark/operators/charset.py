@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 # Windows-1252 0x80-0x9F -> Unicode, hand-written from the public
 # code chart (https://en.wikipedia.org/wiki/Windows-1252 reproduces
 # the vendor table). None = the code page leaves the byte UNDEFINED.
@@ -170,15 +172,12 @@ def _charset_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def charset_transcode_stats(df: DataFrame) -> DataFrame:
     """Fallback-chain transcode over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _charset_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, CHARSET_SCHEMA)
+    return map_pandas(df, gen, CHARSET_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -220,13 +219,8 @@ def _make_charset(i: int) -> bytes:
 
 def synthesize_charset_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of mixed-encoding byte streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -248,7 +242,7 @@ def synthesize_charset_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -332,9 +326,6 @@ def charset_transcode_web(data: bytes) -> dict:
 
 def charset_web_stats(df: DataFrame) -> DataFrame:
     """Web-tail fallback chain over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in CHARSET_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -347,9 +338,7 @@ def charset_web_stats(df: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, CHARSET_SCHEMA
-    )
+    return map_pandas(df, gen, CHARSET_SCHEMA, ["media_id", "content"])
 
 
 def _make_charset_web(i: int) -> bytes:
@@ -397,13 +386,8 @@ def _make_charset_web(i: int) -> bytes:
 
 def synthesize_charset_web_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of six-stripe web-tail byte streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -425,7 +409,7 @@ def synthesize_charset_web_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------

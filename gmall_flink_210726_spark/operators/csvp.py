@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import map_pandas
+
 
 def parse_csv(text: str) -> list[list[str]] | None:
     """RFC 4180 state machine -> list of records, or None on any
@@ -169,15 +171,12 @@ def _csv_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def csv_parse_stats(df: DataFrame) -> DataFrame:
     """RFC 4180 parse over ``(media_id, csv)`` rows."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _csv_batch(pdf)
 
-    return df.select("media_id", "csv").mapInPandas(gen, CSV_SCHEMA)
+    return map_pandas(df, gen, CSV_SCHEMA, ["media_id", "csv"])
 
 
 # --------------------------------------------------------------------------
@@ -207,12 +206,8 @@ def _make_csv(i: int) -> str:
 
 def synthesize_csv_docs(docs: DataFrame) -> DataFrame:
     """``(media_id, csv)`` fixture table."""
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -225,4 +220,4 @@ def synthesize_csv_docs(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(gen, "media_id long, csv string")
+    return map_pandas(docs, gen, "media_id long, csv string")

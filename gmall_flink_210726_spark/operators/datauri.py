@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import map_pandas
+
 _B64_ALPHABET = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/"
 )
@@ -180,15 +182,12 @@ def _datauri_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def data_uri_image_stats(df: DataFrame) -> DataFrame:
     """Inline-image extraction over ``(media_id, html)`` rows."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _datauri_batch(pdf)
 
-    return df.select("media_id", "html").mapInPandas(gen, DATAURI_SCHEMA)
+    return map_pandas(df, gen, DATAURI_SCHEMA, ["media_id", "html"])
 
 
 # --------------------------------------------------------------------------
@@ -244,12 +243,8 @@ def _make_datauri_page(i: int) -> str:
 def synthesize_datauri_pages(docs: DataFrame) -> DataFrame:
     """``(media_id, html)`` fixture table of pages with inline data
     URIs."""
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -262,4 +257,4 @@ def synthesize_datauri_pages(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(gen, "media_id long, html string")
+    return map_pandas(docs, gen, "media_id long, html string")

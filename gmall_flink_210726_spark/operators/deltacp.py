@@ -41,6 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _decode_rle_hybrid,
     _page_decompress,
@@ -388,17 +389,12 @@ def _deltacp_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def delta_checkpoint_stats(df: DataFrame) -> DataFrame:
     """Checkpoint-accelerated Delta scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _deltacp_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DELTACP_SCHEMA
-    )
+    return map_pandas(df, gen, DELTACP_SCHEMA, ["media_id", "content"])
 
 
 # ------------------------------------------------------------ fixtures
@@ -571,13 +567,8 @@ def _make_delta_checkpoint_table(
 
 def synthesize_delta_checkpoint_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of checkpointed Delta tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -602,7 +593,7 @@ def synthesize_delta_checkpoint_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # ------------------------------------------------------ V2 checkpoints
@@ -977,13 +968,8 @@ def _make_delta_v2_checkpoint_table(
 
 def synthesize_delta_v2_checkpoint_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of v2-checkpoint Delta table tars."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1008,7 +994,7 @@ def synthesize_delta_v2_checkpoint_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _deltacp2_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1035,14 +1021,9 @@ def _deltacp2_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def delta_v2_checkpoint_stats(df: DataFrame) -> DataFrame:
     """V2-checkpoint reads over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _deltacp2_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DELTACP2_SCHEMA
-    )
+    return map_pandas(df, gen, DELTACP2_SCHEMA, ["media_id", "content"])

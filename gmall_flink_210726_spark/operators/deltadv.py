@@ -54,6 +54,7 @@ from pyspark.sql.types import (
 from gmall_flink_210726_spark.operators.deltalog import (
     _collect_commits,
 )
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.roaring import (
     b85_decode,
     b85_encode,
@@ -326,17 +327,12 @@ def _dvscan_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def delta_dv_scan_stats(df: DataFrame) -> DataFrame:
     """Merge-on-read Delta scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _dvscan_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DVSCAN_SCHEMA
-    )
+    return map_pandas(df, gen, DVSCAN_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -503,13 +499,8 @@ def synthesize_delta_dv_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Delta tables with deletion vectors."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -536,4 +527,4 @@ def synthesize_delta_dv_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -245,15 +246,12 @@ def _delta_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def delta_snapshot_stats(df: DataFrame) -> DataFrame:
     """Delta-log replay over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _delta_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, DELTA_SCHEMA)
+    return map_pandas(df, gen, DELTA_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -345,13 +343,8 @@ def _make_delta_log(i: int, bad_stripe: int = 12) -> bytes:
 
 def synthesize_delta_log_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Delta transaction logs (tar blobs)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -373,7 +366,7 @@ def synthesize_delta_log_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -467,17 +460,12 @@ def _delta_scan_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def delta_scan_stats(df: DataFrame) -> DataFrame:
     """Full Delta table scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _delta_scan_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DELTA_SCAN_SCHEMA
-    )
+    return map_pandas(df, gen, DELTA_SCAN_SCHEMA, ["media_id", "content"])
 
 
 def _scan_seed(i: int, v: int, k: int) -> int:
@@ -574,13 +562,8 @@ def _make_delta_table(i: int, bad_stripe: int = 13) -> bytes:
 
 def synthesize_delta_table_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of complete Delta tables (log + parts)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -604,7 +587,7 @@ def synthesize_delta_table_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -707,9 +690,6 @@ def scan_delta_table_pruned(data: bytes, lo: int, hi: int) -> dict | None:
 
 def delta_stats_skip_scan(df: DataFrame, lo: int, hi: int) -> DataFrame:
     """Pruned Delta scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -733,9 +713,7 @@ def delta_stats_skip_scan(df: DataFrame, lo: int, hi: int) -> DataFrame:
                 out, columns=[f.name for f in DELTA_SKIP_SCHEMA.fields]
             )
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DELTA_SKIP_SCHEMA
-    )
+    return map_pandas(df, gen, DELTA_SKIP_SCHEMA, ["media_id", "content"])
 
 
 def _make_delta_table_stats(i: int) -> bytes:
@@ -843,13 +821,8 @@ def _make_delta_table_stats(i: int) -> bytes:
 
 def synthesize_delta_stats_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Delta tables with min/max file stats."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -873,7 +846,7 @@ def synthesize_delta_stats_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -933,9 +906,6 @@ DELTA_ASOF_SCHEMA = StructType(
 
 def delta_asof_stats(df: DataFrame, version: int) -> DataFrame:
     """Version-as-of replay over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in DELTA_ASOF_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -954,9 +924,7 @@ def delta_asof_stats(df: DataFrame, version: int) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DELTA_ASOF_SCHEMA
-    )
+    return map_pandas(df, gen, DELTA_ASOF_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -1047,9 +1015,6 @@ def delta_partition_prune_scan(
     df: DataFrame, pcol: str, pval: str
 ) -> DataFrame:
     """Partition-pruned Delta scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in DELTA_PART_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1070,9 +1035,7 @@ def delta_partition_prune_scan(
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DELTA_PART_SCHEMA
-    )
+    return map_pandas(df, gen, DELTA_PART_SCHEMA, ["media_id", "content"])
 
 
 def _part_kvals(i: int, v: int, k: int) -> tuple[int, list[int]]:
@@ -1185,13 +1148,8 @@ def _make_delta_part_table(i: int) -> bytes:
 
 def synthesize_delta_part_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of partitioned Delta tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1215,7 +1173,7 @@ def synthesize_delta_part_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1369,9 +1327,6 @@ DELTA_CM_SCHEMA = StructType(
 
 def delta_column_mapping_scan(df: DataFrame) -> DataFrame:
     """Column-mapped Delta scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in DELTA_CM_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1392,9 +1347,7 @@ def delta_column_mapping_scan(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DELTA_CM_SCHEMA
-    )
+    return map_pandas(df, gen, DELTA_CM_SCHEMA, ["media_id", "content"])
 
 
 def _cm_n(i: int, f: int) -> int:
@@ -1539,13 +1492,8 @@ def _make_delta_cm_table(i: int) -> bytes:
 
 def synthesize_delta_cm_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of column-mapped Delta tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1569,7 +1517,7 @@ def synthesize_delta_cm_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1679,9 +1627,6 @@ DELTA_CRC_SCHEMA = StructType(
 
 def delta_checked_scan(df: DataFrame) -> DataFrame:
     """Checksum-verified Delta scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in DELTA_CRC_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1700,9 +1645,7 @@ def delta_checked_scan(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, DELTA_CRC_SCHEMA
-    )
+    return map_pandas(df, gen, DELTA_CRC_SCHEMA, ["media_id", "content"])
 
 
 def _make_delta_crc_table(i: int) -> bytes:
@@ -1815,13 +1758,8 @@ def _make_delta_crc_table(i: int) -> bytes:
 
 def synthesize_delta_crc_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of checksum-carrying Delta tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1845,7 +1783,7 @@ def synthesize_delta_crc_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2019,9 +1957,6 @@ CDF_SCHEMA = StructType(
 
 def delta_cdf_stats(df: DataFrame) -> DataFrame:
     """Change-data-feed read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in CDF_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2040,9 +1975,7 @@ def delta_cdf_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, CDF_SCHEMA
-    )
+    return map_pandas(df, gen, CDF_SCHEMA, ["media_id", "content"])
 
 
 def _cdf_n0(i: int) -> int:
@@ -2264,13 +2197,8 @@ def _make_delta_cdf_table(i: int) -> bytes:
 
 def synthesize_delta_cdf_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of CDF-enabled Delta tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -2294,4 +2222,4 @@ def synthesize_delta_cdf_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

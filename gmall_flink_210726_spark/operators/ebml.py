@@ -56,6 +56,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 _ID_EBML = 0x1A45DFA3
 _ID_DOCTYPE = 0x4282
 _ID_SEGMENT = 0x18538067
@@ -294,9 +296,6 @@ WEBM_SCHEMA = StructType(
 
 def webm_stats(df: DataFrame) -> DataFrame:
     """EBML/Matroska container walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in WEBM_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -315,9 +314,7 @@ def webm_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, WEBM_SCHEMA
-    )
+    return map_pandas(df, gen, WEBM_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -462,13 +459,8 @@ def make_webm(i: int) -> bytes:
 
 def synthesize_webm_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of webm containers."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -490,4 +482,4 @@ def synthesize_webm_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

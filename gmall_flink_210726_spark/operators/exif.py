@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 EXIF_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -180,15 +182,12 @@ def _exif_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def jpeg_exif_stats(df: DataFrame) -> DataFrame:
     """EXIF APP1 extraction over MEDIA_SCHEMA blobs (see module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _exif_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, EXIF_SCHEMA)
+    return map_pandas(df, gen, EXIF_SCHEMA, ["media_id", "content"])
 
 
 def _make_exif_jpeg(i: int) -> bytes:
@@ -247,13 +246,8 @@ def synthesize_exif_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of minimal JPEGs carrying REAL EXIF APP1
     payloads; every 7th id is truncated mid-structure (corrupt
     stripe). Even ids are little-endian TIFF, odd ids big-endian."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -275,4 +269,4 @@ def synthesize_exif_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 # CRC-8, polynomial 0x07, init 0 (FLAC frame-header checksum)
 _CRC8_TABLE = []
 for _n in range(256):
@@ -1064,9 +1066,6 @@ FLAC_SCHEMA = StructType(
 
 def flac_stats(df: DataFrame) -> DataFrame:
     """FLAC decode over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in FLAC_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1085,9 +1084,7 @@ def flac_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, FLAC_SCHEMA
-    )
+    return map_pandas(df, gen, FLAC_SCHEMA, ["media_id", "content"])
 
 
 _KINDS = ("fixed1", "fixed2", "lpc2", "verbatim")
@@ -1137,13 +1134,8 @@ def synthesize_flac_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of FLAC blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1170,4 +1162,4 @@ def synthesize_flac_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 # ---------------------------------------------------------------- fixture
 # formulas shared with the DuckDB oracle in queries/llm7.py — the
 # decoder never sees them, it parses the bytes.
@@ -408,10 +410,8 @@ def synthesize_gif_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL GIF89a blobs, one per doc_id (dims
     deterministic in the id; ids hitting _GIF_BAD are mid-stream
     truncations). Same Arrow-batched plumbing as synthesize_media."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -433,7 +433,7 @@ def synthesize_gif_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 GIF_ILACE_SCHEMA = StructType(
@@ -453,10 +453,8 @@ def synthesize_gif_interlaced_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL interlaced GIF89a blobs (the image
     descriptor interlace flag is set and the LZW stream carries the
     Appendix E four-pass row order); _GIN_BAD ids truncated."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -478,7 +476,7 @@ def synthesize_gif_interlaced_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def gif_interlaced_pixel_stats(df: DataFrame) -> DataFrame:
@@ -488,9 +486,6 @@ def gif_interlaced_pixel_stats(df: DataFrame) -> DataFrame:
     from row-scrambled ones (summation is order-invariant); the
     position-weighted sum hash-mismatches any decoder that ignores
     the interlace flag or mis-orders the four passes."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -525,7 +520,7 @@ def gif_interlaced_pixel_stats(df: DataFrame) -> DataFrame:
                 out, columns=[f.name for f in GIF_ILACE_SCHEMA.fields]
             )
 
-    return df.select("media_id", "content").mapInPandas(gen, GIF_ILACE_SCHEMA)
+    return map_pandas(df, gen, GIF_ILACE_SCHEMA, ["media_id", "content"])
 
 
 def gif_pixel_stats(df: DataFrame) -> DataFrame:
@@ -534,15 +529,12 @@ def gif_pixel_stats(df: DataFrame) -> DataFrame:
     per-image palette-index and RGB sums. Corrupt/unsupported blobs
     degrade to format='unknown' zeroed rows. Arrow-batched mapInPandas;
     decode parallelism is partition parallelism."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _gif_pixels_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, GIF_SCHEMA)
+    return map_pandas(df, gen, GIF_SCHEMA, ["media_id", "content"])
 
 
 ANIM_SCHEMA = StructType(
@@ -560,10 +552,8 @@ ANIM_SCHEMA = StructType(
 
 def synthesize_gif_animated_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL multi-frame GIF89a animations."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -585,7 +575,7 @@ def synthesize_gif_animated_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _gif_animation_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -627,12 +617,9 @@ def gif_animation_stats(df: DataFrame) -> DataFrame:
     multi-frame GIF89a bytes (every frame is its own LZW stream; the
     frame-weighted checksum pins stream order). Arrow-batched
     mapInPandas, 7 scalar columns out per file."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _gif_animation_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, ANIM_SCHEMA)
+    return map_pandas(df, gen, ANIM_SCHEMA, ["media_id", "content"])

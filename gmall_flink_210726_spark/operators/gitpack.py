@@ -55,6 +55,7 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.inflate import _inflate_at
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 
 _OBJ_COMMIT = 1
 _OBJ_TREE = 2
@@ -414,9 +415,6 @@ GITPACK_SCHEMA = StructType(
 
 def git_pack_stats(df: DataFrame) -> DataFrame:
     """Verified pack+idx census over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in GITPACK_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -435,9 +433,7 @@ def git_pack_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, GITPACK_SCHEMA
-    )
+    return map_pandas(df, gen, GITPACK_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -657,13 +653,8 @@ def synthesize_git_pack_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of git pack+idx pairs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -690,4 +681,4 @@ def synthesize_git_pack_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

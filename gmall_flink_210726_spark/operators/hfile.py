@@ -61,6 +61,7 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.kafkalog import crc32c
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 
 _MAGIC_DATA = b"DATABLK*"
 _MAGIC_ROOT_IDX = b"IDXROOT2"
@@ -286,9 +287,6 @@ HFILE_SCHEMA = StructType(
 
 def hfile_stats(df: DataFrame) -> DataFrame:
     """HFile cell census over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in HFILE_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -307,9 +305,7 @@ def hfile_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, HFILE_SCHEMA
-    )
+    return map_pandas(df, gen, HFILE_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -457,13 +453,8 @@ def synthesize_hfile_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of HFiles."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -488,4 +479,4 @@ def synthesize_hfile_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import map_pandas
+
 _BLOCK_TAGS = frozenset(
     """p div h1 h2 h3 h4 h5 h6 li ul ol br hr table tr td th blockquote
     pre section article header footer nav main form body html head
@@ -220,15 +222,12 @@ def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 def html_extract(df: DataFrame) -> DataFrame:
     """Arrow-batched extraction over ``(doc_id, html)`` rows — pure
     map stage, zero shuffle (module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _extract_batch(pdf)
 
-    return df.select("doc_id", "html").mapInPandas(gen, HTML_SCHEMA)
+    return map_pandas(df, gen, HTML_SCHEMA, ["doc_id", "html"])
 
 
 # --------------------------------------------------------------------------
@@ -281,12 +280,8 @@ def _make_html(i: int, text: str) -> str:
 
 def synthesize_html_docs(docs: DataFrame) -> DataFrame:
     """``(doc_id, html)`` fixture table from the documents corpus."""
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id", "text"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -301,4 +296,4 @@ def synthesize_html_docs(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(gen, "doc_id long, html string")
+    return map_pandas(docs, gen, "doc_id long, html string")

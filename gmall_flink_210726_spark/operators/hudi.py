@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -137,9 +138,6 @@ def read_hudi_snapshot(data: bytes, asof: str | None = None) -> dict | None:
 
 def hudi_snapshot_stats(df: DataFrame) -> DataFrame:
     """Hudi COW snapshot replay over MEDIA_SCHEMA tar blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in HUDI_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -158,9 +156,7 @@ def hudi_snapshot_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, HUDI_SCHEMA
-    )
+    return map_pandas(df, gen, HUDI_SCHEMA, ["media_id", "content"])
 
 
 _T1, _T2, _T3 = "20240101000000", "20240102000000", "20240103000000"
@@ -265,13 +261,8 @@ def synthesize_hudi_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Hudi COW tables (timeline + base files)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -298,7 +289,7 @@ def synthesize_hudi_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -757,9 +748,6 @@ HUDI_MOR_SCHEMA = StructType(
 
 def hudi_mor_stats(df: DataFrame) -> DataFrame:
     """Hudi MERGE-ON-READ snapshot replay over MEDIA_SCHEMA tars."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in HUDI_MOR_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -778,9 +766,7 @@ def hudi_mor_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, HUDI_MOR_SCHEMA
-    )
+    return map_pandas(df, gen, HUDI_MOR_SCHEMA, ["media_id", "content"])
 
 
 # -- MOR fixture ----------------------------------------------------------
@@ -1003,13 +989,8 @@ def synthesize_hudi_mor_media(
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Hudi MOR tables (timeline + base files +
     HoodieLogFormat delta logs)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1036,4 +1017,4 @@ def synthesize_hudi_mor_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

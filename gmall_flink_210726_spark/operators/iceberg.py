@@ -43,6 +43,7 @@ from gmall_flink_210726_spark.operators.avro import (
     make_avro_container,
     read_avro_container,
 )
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -272,17 +273,12 @@ def _iceberg_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def iceberg_snapshot_stats(df: DataFrame) -> DataFrame:
     """Iceberg metadata-chain walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _iceberg_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -403,13 +399,8 @@ def _make_iceberg_table(i: int, bad_stripe: int = 13) -> bytes:
 
 def synthesize_iceberg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Iceberg metadata chains (tar blobs)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -433,7 +424,7 @@ def synthesize_iceberg_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -779,17 +770,12 @@ def _iceberg_mor_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def iceberg_mor_stats(df: DataFrame) -> DataFrame:
     """Iceberg v2 merge-on-read scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _iceberg_mor_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_MOR_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_MOR_SCHEMA, ["media_id", "content"])
 
 
 # ---------------------------------------------------------- MOR fixture
@@ -973,13 +959,8 @@ def _make_iceberg_mor_table(
 
 def synthesize_iceberg_mor_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Iceberg v2 merge-on-read tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1003,7 +984,7 @@ def synthesize_iceberg_mor_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1193,17 +1174,12 @@ def _iceberg_eq_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def iceberg_eqdel_stats(df: DataFrame) -> DataFrame:
     """Iceberg v2 equality-delete scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _iceberg_eq_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_EQ_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_EQ_SCHEMA, ["media_id", "content"])
 
 
 def _eq_rows(i: int, f: int) -> int:
@@ -1337,13 +1313,8 @@ def _make_iceberg_eq_table(
 
 def synthesize_iceberg_eq_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Iceberg v2 equality-delete tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1367,7 +1338,7 @@ def synthesize_iceberg_eq_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1582,17 +1553,12 @@ def _iceberg_prune_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def iceberg_prune_stats(df: DataFrame) -> DataFrame:
     """Manifest-level partition pruning over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _iceberg_prune_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_PRUNE_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_PRUNE_SCHEMA, ["media_id", "content"])
 
 
 def _prune_days(i: int, m: int) -> tuple[int, int]:
@@ -1710,13 +1676,8 @@ def _make_iceberg_prune_table(
 
 def synthesize_iceberg_prune_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of partition-summary Iceberg chains."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1740,7 +1701,7 @@ def synthesize_iceberg_prune_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 ICEBERG_ASOF_SCHEMA = StructType(
@@ -1762,9 +1723,6 @@ ICEBERG_ASOF_SCHEMA = StructType(
 
 def iceberg_asof_stats(df: DataFrame, asof_ms: int) -> DataFrame:
     """Timestamp-as-of snapshot resolution over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in ICEBERG_ASOF_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1783,9 +1741,7 @@ def iceberg_asof_stats(df: DataFrame, asof_ms: int) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_ASOF_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_ASOF_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -1895,9 +1851,6 @@ ICEBERG_REFS_SCHEMA = StructType(
 
 def iceberg_refs_stats(df: DataFrame) -> DataFrame:
     """Ref-census walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in ICEBERG_REFS_SCHEMA.fields]
 
     def gen(batches):
@@ -1916,9 +1869,7 @@ def iceberg_refs_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_REFS_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_REFS_SCHEMA, ["media_id", "content"])
 
 
 def _refs_ns(i: int) -> int:
@@ -2048,13 +1999,8 @@ def _make_iceberg_refs_table(i: int) -> bytes:
 
 def synthesize_iceberg_refs_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of branched/tagged Iceberg tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -2079,4 +2025,4 @@ def synthesize_iceberg_refs_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -46,6 +46,7 @@ from gmall_flink_210726_spark.operators.iceberg import (
     _i32le,
     _mor_parquet,
 )
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -445,13 +446,8 @@ def _bucket_probe(i: int) -> int:
 
 def synthesize_iceberg_bucket_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of bucket-partitioned Iceberg chains."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -475,7 +471,7 @@ def synthesize_iceberg_bucket_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _iceberg_bucket_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -506,17 +502,12 @@ def _iceberg_bucket_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def iceberg_bucket_stats(df: DataFrame) -> DataFrame:
     """Bucket-pruned Iceberg point lookups over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _iceberg_bucket_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_BUCKET_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_BUCKET_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -860,9 +851,6 @@ def _make_iceberg_evo_table(i: int) -> bytes:
 
 def iceberg_evolution_stats(df: DataFrame) -> DataFrame:
     """Field-id schema-evolution scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in ICEBERG_EVO_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -881,20 +869,13 @@ def iceberg_evolution_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_EVO_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_EVO_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_iceberg_evo_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of schema-evolved Iceberg tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -918,7 +899,7 @@ def synthesize_iceberg_evo_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1092,9 +1073,6 @@ POSDEL_SCHEMA = StructType(
 
 def iceberg_pos_delete_stats(df: DataFrame) -> DataFrame:
     """v2 position-delete merge-on-read scan over MEDIA_SCHEMA."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in POSDEL_SCHEMA.fields]
 
     def gen(batches):
@@ -1113,9 +1091,7 @@ def iceberg_pos_delete_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, POSDEL_SCHEMA
-    )
+    return map_pandas(df, gen, POSDEL_SCHEMA, ["media_id", "content"])
 
 
 def _pd_n(i: int, f: int) -> int:
@@ -1294,13 +1270,8 @@ def _make_iceberg_posdel_table(i: int) -> bytes:
 
 def synthesize_iceberg_posdel_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of v2 position-delete Iceberg tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1325,7 +1296,7 @@ def synthesize_iceberg_posdel_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1555,9 +1526,6 @@ EQDEL_SCHEMA = StructType(
 
 def iceberg_eq_delete_stats(df: DataFrame) -> DataFrame:
     """v2 equality-delete merge-on-read scan over MEDIA_SCHEMA."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in EQDEL_SCHEMA.fields]
 
     def gen(batches):
@@ -1576,9 +1544,7 @@ def iceberg_eq_delete_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, EQDEL_SCHEMA
-    )
+    return map_pandas(df, gen, EQDEL_SCHEMA, ["media_id", "content"])
 
 
 def _eq_n(i: int, f: int) -> int:
@@ -1754,13 +1720,8 @@ def _make_iceberg_eqdel_table(i: int) -> bytes:
 
 def synthesize_iceberg_eqdel_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of v2 equality-delete Iceberg tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1785,4 +1746,4 @@ def synthesize_iceberg_eqdel_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

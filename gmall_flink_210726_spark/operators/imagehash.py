@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gmall_flink_210726_spark.operators.dedup import _bucket_pairs
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
 
 # fixture-dim formulas: one image *shape* per GROUP (doc_id // group),
@@ -84,9 +85,8 @@ def synthesize_grouped_bmp(docs: DataFrame, group: int = 4) -> DataFrame:
     ``group`` consecutive doc_ids — the image analog of a corpus with
     re-encoded copies. Same Arrow-batched plumbing as
     ``synthesize_media`` (operators/multimodal.py:192)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -108,7 +108,7 @@ def synthesize_grouped_bmp(docs: DataFrame, group: int = 4) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 DHASH_SCHEMA = StructType(
@@ -183,15 +183,12 @@ def dhash_images(df: DataFrame, grid: int = 8) -> DataFrame:
     mapInPandas; blobs cross into Python once per batch, numpy per
     blob; output is 5 scalar columns — the only thing downstream
     stages ever shuffle."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _dhash_batch(pdf, grid)
 
-    return df.select("media_id", "content").mapInPandas(gen, DHASH_SCHEMA)
+    return map_pandas(df, gen, DHASH_SCHEMA, ["media_id", "content"])
 
 
 def dhash_near_pairs(

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 # RFC 1951 §3.2.5: length codes 257..285 -> (extra bits, base length)
 _LEN_EXTRA = (
     0, 0, 0, 0, 0, 0, 0, 0, 1, 1, 1, 1, 2, 2, 2, 2,
@@ -385,15 +387,12 @@ def _zipd_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def zip_deflate_stats(df: DataFrame) -> DataFrame:
     """DEFLATE-entry ZIP walk with hand-written inflate (module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _zipd_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, ZIPD_SCHEMA)
+    return map_pandas(df, gen, ZIPD_SCHEMA, ["media_id", "content"])
 
 
 def _run_text(i: int, j: int, size: int) -> bytes:
@@ -451,13 +450,8 @@ def _make_zip_deflate(i: int) -> bytes:
 def synthesize_zip_deflate_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of DEFLATE-compressed zips (zlib-made, so
     the hand inflate is validated against the reference coder)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -479,7 +473,7 @@ def synthesize_zip_deflate_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -592,15 +586,12 @@ def _gzip_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def gzip_member_stats(df: DataFrame) -> DataFrame:
     """Multi-member gzip walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _gzip_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, GZIP_SCHEMA)
+    return map_pandas(df, gen, GZIP_SCHEMA, ["media_id", "content"])
 
 
 def _make_gzip_stream(i: int) -> bytes:
@@ -628,13 +619,8 @@ def _make_gzip_stream(i: int) -> bytes:
 
 def synthesize_gzip_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of multi-member gzip streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -656,4 +642,4 @@ def synthesize_gzip_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -44,6 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 # ---------------------------------------------------------------- fixture
 # dims/values shared with the DuckDB oracle in queries/llm5.py — the
 # decoder never sees these formulas, it parses the bytes.
@@ -602,10 +604,8 @@ def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL baseline JPEG blobs, one per doc_id
     (dims deterministic in the id; ids hitting _JPG_BAD are truncated
     corrupt blobs). Same Arrow-batched plumbing as synthesize_media."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -627,7 +627,7 @@ def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _jpeg_pixels_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -663,15 +663,12 @@ def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
     per-image pixel sums. Corrupt/unsupported blobs degrade to
     format='unknown' zeroed rows. Arrow-batched mapInPandas; decode
     parallelism is partition parallelism."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _jpeg_pixels_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, JPEG_SCHEMA)
+    return map_pandas(df, gen, JPEG_SCHEMA, ["media_id", "content"])
 
 
 # ------------------------------------------------------- progressive fixture
@@ -768,10 +765,8 @@ def synthesize_progressive_jpeg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL progressive JPEG blobs, one per
     doc_id (dims deterministic in the id; ids hitting _PJPG_BAD are
     truncated corrupt blobs)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -793,7 +788,7 @@ def synthesize_progressive_jpeg_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # ------------------------------------------------- restart-interval fixture
@@ -853,10 +848,8 @@ def _make_restart_jpeg(media_id: int, q_step: int = 8, ri: int = 3) -> bytes:
 
 def synthesize_restart_jpeg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL DRI/RSTn baseline JPEG blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -878,7 +871,7 @@ def synthesize_restart_jpeg_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------- 4:2:0 chroma fixture
@@ -1004,10 +997,8 @@ def _make_jpeg422(media_id: int, q_step: int = 8) -> bytes:
 
 def synthesize_jpeg422_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL 4:2:2 color JPEG blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1029,15 +1020,13 @@ def synthesize_jpeg422_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def synthesize_jpeg420_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL 4:2:0 color JPEG blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1059,4 +1048,4 @@ def synthesize_jpeg420_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 # CRC32C (Castagnoli), reflected polynomial 0x82F63B78, from scratch
 _CRC32C_TABLE = []
 for _n in range(256):
@@ -401,17 +403,12 @@ def _kafka_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def kafka_segment_stats(df: DataFrame) -> DataFrame:
     """Kafka RecordBatch v2 segment walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _kafka_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, KAFKA_SCHEMA
-    )
+    return map_pandas(df, gen, KAFKA_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -512,13 +509,8 @@ def synthesize_kafka_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Kafka log-segment byte streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -545,7 +537,7 @@ def synthesize_kafka_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -728,9 +720,6 @@ KAFKA_TXN_SCHEMA = StructType(
 
 def kafka_committed_stats(df: DataFrame) -> DataFrame:
     """read_committed segment walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in KAFKA_TXN_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -750,9 +739,7 @@ def kafka_committed_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, KAFKA_TXN_SCHEMA
-    )
+    return map_pandas(df, gen, KAFKA_TXN_SCHEMA, ["media_id", "content"])
 
 
 def _enc_batch(
@@ -889,13 +876,8 @@ def synthesize_kafka_txn_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of transactional Kafka segments."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -922,7 +904,7 @@ def synthesize_kafka_txn_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1043,9 +1025,6 @@ KAFKA_IDX_SCHEMA = StructType(
 
 def kafka_indexed_lookup_stats(df: DataFrame, target_rel: int) -> DataFrame:
     """Offset-index seek over MEDIA_SCHEMA tar blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in KAFKA_IDX_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1064,9 +1043,7 @@ def kafka_indexed_lookup_stats(df: DataFrame, target_rel: int) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, KAFKA_IDX_SCHEMA
-    )
+    return map_pandas(df, gen, KAFKA_IDX_SCHEMA, ["media_id", "content"])
 
 
 def _make_kafka_indexed_segment(i: int) -> bytes:
@@ -1119,13 +1096,8 @@ def synthesize_kafka_indexed_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of (segment.log, segment.index) tars."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1153,7 +1125,7 @@ def synthesize_kafka_indexed_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1318,9 +1290,6 @@ def read_kafka_avro_registry(data: bytes) -> dict | None:
 
 def kafka_avro_registry_stats(df: DataFrame) -> DataFrame:
     """Registry-resolved Avro decode over MEDIA_SCHEMA tar blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in KAFKA_REG_SCHEMA.fields]
 
     def gen(batches):
@@ -1339,9 +1308,7 @@ def kafka_avro_registry_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, KAFKA_REG_SCHEMA
-    )
+    return map_pandas(df, gen, KAFKA_REG_SCHEMA, ["media_id", "content"])
 
 
 def _enc_value_record(rel: int, key: bytes | None, value: bytes) -> bytes:
@@ -1449,13 +1416,8 @@ def synthesize_kafka_registry_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of registry+segment tars."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1482,7 +1444,7 @@ def synthesize_kafka_registry_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1601,9 +1563,6 @@ def kafka_time_lookup_stats(
     df: DataFrame, target_rel_ts: int
 ) -> DataFrame:
     """Time-index seek over MEDIA_SCHEMA tar blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in KAFKA_TIDX_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1622,9 +1581,7 @@ def kafka_time_lookup_stats(
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, KAFKA_TIDX_SCHEMA
-    )
+    return map_pandas(df, gen, KAFKA_TIDX_SCHEMA, ["media_id", "content"])
 
 
 def _tidx_ts_rel(i: int, off: int) -> int:
@@ -1709,13 +1666,8 @@ def synthesize_kafka_timeindexed_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of (segment.log, segment.timeindex) tars."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1743,7 +1695,7 @@ def synthesize_kafka_timeindexed_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1878,9 +1830,6 @@ COMPACT_SCHEMA = StructType(
 
 def kafka_compacted_stats(df: DataFrame) -> DataFrame:
     """Compacted-topic state read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in COMPACT_SCHEMA.fields]
 
     def gen(batches):
@@ -1899,9 +1848,7 @@ def kafka_compacted_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, COMPACT_SCHEMA
-    )
+    return map_pandas(df, gen, COMPACT_SCHEMA, ["media_id", "content"])
 
 
 def _cmp_nkeys(i: int) -> int:
@@ -2038,13 +1985,8 @@ def synthesize_kafka_compacted_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of compacted-topic log dirs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -2072,4 +2014,4 @@ def synthesize_kafka_compacted_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -341,9 +341,8 @@ def lz4_frame_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.session import ship_package
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
 
-    ship_package(df.sparkSession)
     schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -381,7 +380,7 @@ def lz4_frame_stats(df):
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(gen, schema)
+    return map_pandas(df, gen, schema, ["media_id", "content"])
 
 
 def _run_text_l(i: int, j: int, size: int) -> bytes:
@@ -428,13 +427,12 @@ def synthesize_lz4_media(docs):
     """MEDIA_SCHEMA table of concatenated LZ4 frames."""
     import pandas as pd
 
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
+    from gmall_flink_210726_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        map_pandas,
     )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -456,4 +454,4 @@ def synthesize_lz4_media(docs):
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gmall_flink_210726_spark.operators.jpeg import _decode_jpeg, _make_jpeg
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 
 _MAX_DEPTH = 12
 _STRIDE = 2  # decode every 2nd frame — the sampling knob
@@ -201,15 +202,12 @@ def _mjpeg_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def mjpeg_frame_sample(df: DataFrame) -> DataFrame:
     """Frame-sampling decode over MEDIA_SCHEMA blobs (module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _mjpeg_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, MJPEG_SCHEMA)
+    return map_pandas(df, gen, MJPEG_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -271,13 +269,8 @@ def _make_mjpeg(i: int) -> bytes:
 
 def synthesize_mjpeg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of MJPEG-in-MP4 blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -299,4 +292,4 @@ def synthesize_mjpeg_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

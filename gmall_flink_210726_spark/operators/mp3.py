@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 MP3_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -122,15 +124,12 @@ def _mp3_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 def mp3_frame_stats(df: DataFrame) -> DataFrame:
     """MPEG-1 Layer III frame walk + duration/bitrate stats over
     MEDIA_SCHEMA blobs (see module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _mp3_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, MP3_SCHEMA)
+    return map_pandas(df, gen, MP3_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_mp3_media(docs: DataFrame) -> DataFrame:
@@ -141,13 +140,8 @@ def synthesize_mp3_media(docs: DataFrame) -> DataFrame:
     DuckDB oracle recomputes the output blind. Every 9th id is
     truncated mid-frame — the corrupt stripe that must degrade to
     'unknown'."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
@@ -189,7 +183,7 @@ def synthesize_mp3_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -339,15 +333,12 @@ def _id3_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 def mp3_id3_tags(df: DataFrame) -> DataFrame:
     """ID3v2.3 tag extraction + audio frame count over MEDIA_SCHEMA
     blobs (see module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _id3_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, ID3_SCHEMA)
+    return map_pandas(df, gen, ID3_SCHEMA, ["media_id", "content"])
 
 
 def _make_id3_mp3(i: int) -> bytes:
@@ -387,13 +378,8 @@ def _make_id3_mp3(i: int) -> bytes:
 def synthesize_id3_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of ID3v2.3-tagged MP3s; every 8th id is
     truncated mid-audio (corrupt stripe)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -415,4 +401,4 @@ def synthesize_id3_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

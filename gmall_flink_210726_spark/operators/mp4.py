@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 MP4_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -140,15 +142,12 @@ def _mp4_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 def mp4_box_stats(df: DataFrame) -> DataFrame:
     """ISO-BMFF box-tree parse + mdat byte stats over MEDIA_SCHEMA
     blobs (see module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _mp4_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, MP4_SCHEMA)
+    return map_pandas(df, gen, MP4_SCHEMA, ["media_id", "content"])
 
 
 _IDENTITY_MATRIX = struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
@@ -161,13 +160,8 @@ def synthesize_mp4_media(docs: DataFrame) -> DataFrame:
     payload bytes — every field a formula of the id so a DuckDB oracle
     recomputes the whole output blind. Every 13th id is truncated
     mid-moov — the corrupt stripe that must degrade to 'unknown'."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
@@ -224,7 +218,7 @@ def synthesize_mp4_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -372,15 +366,12 @@ def mp4_sample_tables(df: DataFrame) -> DataFrame:
     count and first chunk offset — the metadata a frame sampler needs
     to seek without decoding. Corrupt blobs degrade to ONE
     codec='unknown' row (the corrupt-stripe contract)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _samples_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, SAMPLES_SCHEMA)
+    return map_pandas(df, gen, SAMPLES_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_mp4_sampletables(docs: DataFrame) -> DataFrame:
@@ -389,13 +380,8 @@ def synthesize_mp4_sampletables(docs: DataFrame) -> DataFrame:
     of (doc_id, track index) so a DuckDB oracle recomputes the decoded
     output blind. Every 11th id is truncated mid-stbl — the corrupt
     stripe that must degrade to one codec='unknown' row."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
@@ -454,7 +440,7 @@ def synthesize_mp4_sampletables(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -725,9 +711,6 @@ def read_mp4_fragments(data: bytes) -> dict | None:
 
 def mp4_fragment_stats(df: DataFrame) -> DataFrame:
     """fMP4 moof/traf/trun walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in FMP4_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -746,9 +729,7 @@ def mp4_fragment_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, FMP4_SCHEMA
-    )
+    return map_pandas(df, gen, FMP4_SCHEMA, ["media_id", "content"])
 
 
 def _fmp4_ns(i: int, f: int, t: int) -> int:
@@ -871,13 +852,8 @@ def _make_fmp4(i: int) -> bytes:
 
 def synthesize_fmp4_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of fragmented MP4 blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -899,4 +875,4 @@ def synthesize_fmp4_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

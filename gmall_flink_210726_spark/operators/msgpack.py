@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 
 class _Dec:
     __slots__ = ("data", "pos", "stats")
@@ -267,9 +269,6 @@ MSGPACK_SCHEMA = StructType(
 
 def msgpack_stats(df: DataFrame) -> DataFrame:
     """Canonical-msgpack census over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in MSGPACK_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -295,9 +294,7 @@ def msgpack_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, MSGPACK_SCHEMA
-    )
+    return map_pandas(df, gen, MSGPACK_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -429,13 +426,8 @@ def make_msgpack_stream(i: int) -> bytes:
 
 def synthesize_msgpack_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of msgpack row streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -459,4 +451,4 @@ def synthesize_msgpack_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

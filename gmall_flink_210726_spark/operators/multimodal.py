@@ -19,7 +19,13 @@ without PIL). Also real and tested:
 Scale design (100 TB of media): blobs never pass through Python row-
 by-row — Arrow moves each batch once; per-batch work is vectorized;
 decode parallelism is partition parallelism (``repartition(n)`` before
-the map when blob sizes skew).
+the map when blob sizes skew). A blob query is
+``decoder(synthesizer(docs))`` and both halves go through
+``map_pandas``, which runs the pair as ONE mapInPandas node: the
+decoder consumes the synthesizer's pandas batches in the same Python
+worker, so the blobs never make the Python → JVM → Python round trip
+between them, and the query pays the fixed per-node cost (worker
+hand-off, Arrow framing both ways) once instead of twice.
 """
 
 from __future__ import annotations
@@ -64,6 +70,39 @@ DECODED_SCHEMA = StructType(
         StructField("checksum", LongType()),
     ]
 )
+
+
+def map_pandas(
+    df: DataFrame, fn, schema: StructType | str, cols: list[str] | None = None
+) -> DataFrame:
+    """``df.select(*cols).mapInPandas(fn, schema)`` that fuses chains.
+
+    When ``df`` is the very object an earlier ``map_pandas`` call
+    returned, no second Python node is added: ``fn`` is composed after
+    the upstream's pandas function (``cols`` projected between them) in
+    one mapInPandas over the upstream's input, so intermediate blobs
+    never leave the worker. ``fn`` then reads the frames the upstream
+    yielded, without the Arrow round trip that would cast them to the
+    upstream's schema, so the upstream must yield the dtypes its schema
+    declares. Any DataFrame step in between (``select``, ``filter``,
+    ``repartition``, ``localCheckpoint``, a file round trip) yields a
+    new object and so the plain two-node plan."""
+    from gmall_flink_210726_spark.session import ship_package
+
+    ship_package(df.sparkSession)
+    upstream = vars(df).get("_map_pandas")
+    if upstream is not None:
+        src, up_fn, up_cols = upstream
+
+        def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            mid = up_fn(batches)
+            return fn((p[cols] for p in mid) if cols else mid)
+
+        return map_pandas(src, fused, schema, up_cols)
+    out = (df.select(*cols) if cols else df).mapInPandas(fn, schema)
+    out._map_pandas = (df, fn, cols)
+    return out
+
 
 try:  # pragma: no cover — not in this container
     from PIL import Image  # type: ignore
@@ -112,15 +151,12 @@ def decode_media(df: DataFrame, batch_size: int | None = None) -> DataFrame:
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size)
         )
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(spark)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _fake_decode_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, DECODED_SCHEMA)
+    return map_pandas(df, gen, DECODED_SCHEMA, ["media_id", "content"])
 
 
 HEADER_SCHEMA = StructType(
@@ -194,9 +230,8 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
     images, odd doc_ids 16-bit PCM WAV files, dims/rates deterministic
     functions of the id. Fixture generation runs through the same
     Arrow-batched mapInPandas plumbing the decode path uses."""
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -218,7 +253,7 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
                 {"media_id": ids, "content": content, "meta": meta}
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _decode_headers_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -307,15 +342,12 @@ def decode_media_headers(df: DataFrame, batch_size: int | None = None) -> DataFr
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size)
         )
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(spark)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _decode_headers_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, HEADER_SCHEMA)
+    return map_pandas(df, gen, HEADER_SCHEMA, ["media_id", "content"])
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
@@ -401,15 +433,12 @@ def resize_images(
     thumbnail stage of a multimodal training pipeline, on real BMP
     bytes (no codec libs needed). Arrow-batched mapInPandas; blobs
     cross into Python once per batch, vectorized numpy per blob."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _resize_batch(pdf, out_w, out_h)
 
-    return df.select("media_id", "content").mapInPandas(gen, RESIZE_SCHEMA)
+    return map_pandas(df, gen, RESIZE_SCHEMA, ["media_id", "content"])
 
 
 FRAME_SCHEMA = StructType(
@@ -478,15 +507,12 @@ def frame_sample_audio(df: DataFrame, stride: int = 4) -> DataFrame:
     """Audio frame subsampling over MEDIA_SCHEMA input (see
     ``_frame_sample_batch``). Same Arrow-batched mapInPandas plumbing
     as the decoders; partition parallelism is decode parallelism."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _frame_sample_batch(pdf, stride)
 
-    return df.select("media_id", "content").mapInPandas(gen, FRAME_SCHEMA)
+    return map_pandas(df, gen, FRAME_SCHEMA, ["media_id", "content"])
 
 
 CHANNEL_SCHEMA = StructType(
@@ -551,15 +577,12 @@ def image_channel_stats(df: DataFrame) -> DataFrame:
     """Image feature extraction over MEDIA_SCHEMA input (see
     ``_channel_stats_batch``); same Arrow-batched mapInPandas plumbing
     as the decoders."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _channel_stats_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, CHANNEL_SCHEMA)
+    return map_pandas(df, gen, CHANNEL_SCHEMA, ["media_id", "content"])
 
 
 # ---------------------------------------------------------------------------
@@ -715,9 +738,8 @@ def _make_png_palette(media_id: int) -> bytes:
 def synthesize_png_palette_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL paletted PNG blobs, one per doc_id;
     ids hitting ``_PPL_BAD`` truncated after IHDR."""
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -739,7 +761,7 @@ def synthesize_png_palette_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # Adam7 pass grid (PNG spec §8.2): (x0, y0, dx, dy) per pass
@@ -999,9 +1021,8 @@ def synthesize_png_media(docs: DataFrame) -> DataFrame:
     doc_id (dims deterministic in the id; ids hitting ``_PNG_BAD`` are
     truncated-after-IHDR corrupt blobs with meta format 'corrupt').
     Same Arrow-batched mapInPandas plumbing as ``synthesize_media``."""
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1023,7 +1044,7 @@ def synthesize_png_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def png_pixel_stats(
@@ -1044,15 +1065,12 @@ def png_pixel_stats(
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size)
         )
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(spark)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _png_pixels_batch(pdf, inflate_fn)
 
-    return df.select("media_id", "content").mapInPandas(gen, PNG_SCHEMA)
+    return map_pandas(df, gen, PNG_SCHEMA, ["media_id", "content"])
 
 
 PNG7_SCHEMA = StructType(
@@ -1071,9 +1089,8 @@ PNG7_SCHEMA = StructType(
 def synthesize_png_adam7_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL Adam7-interlaced PNG blobs, one per
     doc_id; ids hitting ``_PA7_BAD`` truncated after IHDR."""
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1095,7 +1112,7 @@ def synthesize_png_adam7_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def png_adam7_stats(df: DataFrame) -> DataFrame:
@@ -1108,10 +1125,6 @@ def png_adam7_stats(df: DataFrame) -> DataFrame:
     import zlib
 
     import numpy as np
-
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1150,4 +1163,4 @@ def png_adam7_stats(df: DataFrame) -> DataFrame:
                 out, columns=[f.name for f in PNG7_SCHEMA.fields]
             )
 
-    return df.select("media_id", "content").mapInPandas(gen, PNG7_SCHEMA)
+    return map_pandas(df, gen, PNG7_SCHEMA, ["media_id", "content"])

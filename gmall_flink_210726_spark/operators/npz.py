@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 def _zip_members(data: bytes) -> list[tuple[str, bytes]] | None:
     """STORED-zip members with per-member CRC32 proof — the single
     shared grammar in `operators/zipc.py` (`_iter_zip_entries`),
@@ -184,9 +186,6 @@ NPZ_SCHEMA = StructType(
 
 def npz_stats(df: DataFrame) -> DataFrame:
     """NPZ embedding-dump walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in NPZ_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -205,9 +204,7 @@ def npz_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, NPZ_SCHEMA
-    )
+    return map_pandas(df, gen, NPZ_SCHEMA, ["media_id", "content"])
 
 
 def _npz_rows(i: int) -> int:
@@ -288,13 +285,8 @@ def make_npz(i: int) -> bytes:
 
 def synthesize_npz_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of NPZ embedding dumps."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -316,4 +308,4 @@ def synthesize_npz_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

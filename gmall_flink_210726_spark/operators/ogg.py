@@ -54,6 +54,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 # --------------------------------------------------------------------------
 # RFC 3533 §6.2 page CRC: poly 0x04C11DB7, init 0, unreflected, no xor
 # --------------------------------------------------------------------------
@@ -278,9 +280,6 @@ OGG_SCHEMA = StructType(
 
 def ogg_opus_stats(df: DataFrame) -> DataFrame:
     """Ogg/Opus container walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in OGG_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -299,9 +298,7 @@ def ogg_opus_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, OGG_SCHEMA
-    )
+    return map_pandas(df, gen, OGG_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -463,13 +460,8 @@ def make_ogg_opus(i: int) -> bytes:
 
 def synthesize_ogg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Ogg/Opus streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -491,4 +483,4 @@ def synthesize_ogg_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -48,6 +48,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 _COMP_NAMES = {0: "none", 1: "zlib", 2: "snappy", 4: "lz4", 5: "zstd"}
 
 
@@ -686,15 +688,12 @@ def _orc_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def orc_column_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded ORC column read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _orc_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, ORC_SCHEMA)
+    return map_pandas(df, gen, ORC_SCHEMA, ["media_id", "content"])
 
 
 def _orc_values(i: int, n: int) -> list[int]:
@@ -757,13 +756,8 @@ def synthesize_orc_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of real ORC files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -788,7 +782,7 @@ def synthesize_orc_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1029,17 +1023,12 @@ def _orcstr_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def orc_string_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded nullable ORC string read over MEDIA_SCHEMA."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _orcstr_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ORCSTR_SCHEMA
-    )
+    return map_pandas(df, gen, ORCSTR_SCHEMA, ["media_id", "content"])
 
 
 def _make_orc_str(i: int, bad_stripe: int = 19) -> bytes:
@@ -1091,13 +1080,8 @@ def synthesize_orc_str_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of real ORC string-column files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1122,4 +1106,4 @@ def synthesize_orc_str_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

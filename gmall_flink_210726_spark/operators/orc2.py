@@ -55,6 +55,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.orc import (
     _COMP_NAMES,
     _pb_fields,
@@ -347,13 +348,8 @@ def synthesize_orc_dec_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of real decimal+timestamp ORC files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -378,7 +374,7 @@ def synthesize_orc_dec_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _orcdec_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -413,17 +409,12 @@ def _orcdec_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def orc_dec_stats(df: DataFrame) -> DataFrame:
     """Decimal+timestamp ORC read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _orcdec_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ORCDEC_SCHEMA
-    )
+    return map_pandas(df, gen, ORCDEC_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------- ROW_INDEX
@@ -734,13 +725,8 @@ def synthesize_orc_rowindex_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of row-index ORC files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -767,7 +753,7 @@ def synthesize_orc_rowindex_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _orcix_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -800,17 +786,12 @@ def _orcix_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def orc_rowindex_stats(df: DataFrame) -> DataFrame:
     """Row-index skipping reads over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _orcix_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ORCIX_SCHEMA
-    )
+    return map_pandas(df, gen, ORCIX_SCHEMA, ["media_id", "content"])
 
 
 # ------------------------------------------------------- BLOOM_FILTER
@@ -1102,13 +1083,8 @@ def synthesize_orc_bloom_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of bloom-bearing ORC files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1133,7 +1109,7 @@ def synthesize_orc_bloom_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _orcbloom_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1166,17 +1142,12 @@ def _orcbloom_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def orc_bloom_stats(df: DataFrame) -> DataFrame:
     """Bloom-gated ORC point lookups over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _orcbloom_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ORCBLOOM_SCHEMA
-    )
+    return map_pandas(df, gen, ORCBLOOM_SCHEMA, ["media_id", "content"])
 
 
 # ------------------------------------------- FLOAT + DOUBLE + BINARY
@@ -1415,13 +1386,8 @@ def synthesize_orc_double_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of real float/double/binary ORC files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1448,14 +1414,11 @@ def synthesize_orc_double_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def orc_double_stats(df: DataFrame) -> DataFrame:
     """Float/double/binary ORC read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in ORCDBL_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1485,6 +1448,4 @@ def orc_double_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ORCDBL_SCHEMA
-    )
+    return map_pandas(df, gen, ORCDBL_SCHEMA, ["media_id", "content"])

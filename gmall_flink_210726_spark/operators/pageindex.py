@@ -48,6 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _CODECS,
     _decode_rle_hybrid,
@@ -300,17 +301,12 @@ def _pageidx_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_page_index_stats(df: DataFrame) -> DataFrame:
     """Page-index-driven selective scan over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pageidx_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, PAGEIDX_SCHEMA
-    )
+    return map_pandas(df, gen, PAGEIDX_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -374,13 +370,8 @@ def _make_parquet_pageindex(i: int) -> bytes:
 
 def synthesize_parquet_pageindex_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of page-indexed parquet blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -404,4 +395,4 @@ def synthesize_parquet_pageindex_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

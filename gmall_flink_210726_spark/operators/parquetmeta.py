@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 
 class _Reader:
     __slots__ = ("data", "pos", "end")
@@ -222,15 +224,12 @@ def _pqmeta_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_footer_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded footer planning pass over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqmeta_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, PQMETA_SCHEMA)
+    return map_pandas(df, gen, PQMETA_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -298,13 +297,8 @@ def _flip_first_page_value(blob: bytes) -> bytes:
 
 def synthesize_parquet_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of real parquet files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -331,7 +325,7 @@ def synthesize_parquet_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -582,15 +576,12 @@ def _pqcol_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_column_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded column-chunk read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqcol_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, PQCOL_SCHEMA)
+    return map_pandas(df, gen, PQCOL_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -668,13 +659,8 @@ def _snappy_decompress_py(data: bytes) -> bytes:
 def synthesize_parquet_snappy_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of SNAPPY-compressed parquet files (every
     9th footer-length word smashed)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -699,7 +685,7 @@ def synthesize_parquet_snappy_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -912,15 +898,12 @@ def _pqdict_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_dict_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded dictionary-column read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqdict_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, PQDICT_SCHEMA)
+    return map_pandas(df, gen, PQDICT_SCHEMA, ["media_id", "content"])
 
 
 def _make_parquet_dict(i: int, bad_stripe: int = 8) -> bytes:
@@ -977,13 +960,8 @@ def _make_parquet_dict(i: int, bad_stripe: int = 8) -> bytes:
 
 def synthesize_parquet_dict_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of dictionary-encoded nullable parquet."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1005,19 +983,14 @@ def synthesize_parquet_dict_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def synthesize_parquet_gzip_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of GZIP-compressed parquet files (every
     11th footer-length word smashed)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1042,19 +1015,14 @@ def synthesize_parquet_gzip_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def synthesize_parquet_zstd_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of ZSTD-compressed parquet files (every
     9th footer-length word smashed)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1079,7 +1047,7 @@ def synthesize_parquet_zstd_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1354,26 +1322,18 @@ def _pqv2_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_v2_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded v2-page delta-encoded read over MEDIA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqv2_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, PQV2_SCHEMA)
+    return map_pandas(df, gen, PQV2_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_parquet_v2_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of format-v2 delta-encoded parquet files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1395,7 +1355,7 @@ def synthesize_parquet_v2_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1611,9 +1571,6 @@ PQBSS_SCHEMA = StructType(
 
 def parquet_bss_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded BYTE_STREAM_SPLIT + DELTA_BYTE_ARRAY read."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in PQBSS_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1639,19 +1596,14 @@ def parquet_bss_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(gen, PQBSS_SCHEMA)
+    return map_pandas(df, gen, PQBSS_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_parquet_bss_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of BYTE_STREAM_SPLIT/DELTA_BYTE_ARRAY
     parquet files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1673,7 +1625,7 @@ def synthesize_parquet_bss_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1845,9 +1797,6 @@ PQSKIP_SCHEMA = StructType(
 
 def parquet_skip_stats(df: DataFrame, lo: int, hi: int) -> DataFrame:
     """Stats-pruned range scan over MEDIA_SCHEMA parquet blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in PQSKIP_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1873,18 +1822,13 @@ def parquet_skip_stats(df: DataFrame, lo: int, hi: int) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(gen, PQSKIP_SCHEMA)
+    return map_pandas(df, gen, PQSKIP_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_parquet_stats_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of statistics-bearing parquet files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1906,19 +1850,14 @@ def synthesize_parquet_stats_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def synthesize_parquet_lz4_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of LZ4_RAW-compressed parquet files (every
     13th footer-length word smashed)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1943,7 +1882,7 @@ def synthesize_parquet_lz4_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2369,15 +2308,12 @@ def _pqnest_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_nested_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded nested (LIST) column read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqnest_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, PQNEST_SCHEMA)
+    return map_pandas(df, gen, PQNEST_SCHEMA, ["media_id", "content"])
 
 
 def _make_parquet_nested(
@@ -2466,13 +2402,8 @@ def _make_parquet_nested(
 
 def synthesize_parquet_nested_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of nested (two LIST columns) parquet."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -2494,7 +2425,7 @@ def synthesize_parquet_nested_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2665,15 +2596,12 @@ def _pqmap_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_map_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded nested MAP column read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqmap_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, PQMAP_SCHEMA)
+    return map_pandas(df, gen, PQMAP_SCHEMA, ["media_id", "content"])
 
 
 def _make_parquet_map(i: int, bad_stripe: int = 14) -> bytes:
@@ -2735,13 +2663,8 @@ def _make_parquet_map(i: int, bad_stripe: int = 14) -> bytes:
 
 def synthesize_parquet_map_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of nested MAP-column parquet."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -2763,18 +2686,13 @@ def synthesize_parquet_map_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def synthesize_parquet_nested_v2_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of nested parquet with DATA_PAGE_V2 pages."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -2799,7 +2717,7 @@ def synthesize_parquet_nested_v2_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3092,15 +3010,12 @@ def _pqdeep_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_deep_stats(df: DataFrame) -> DataFrame:
     """Depth-2 nested (list<list<int64>>) read over MEDIA_SCHEMA."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqdeep_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, PQDEEP_SCHEMA)
+    return map_pandas(df, gen, PQDEEP_SCHEMA, ["media_id", "content"])
 
 
 def _make_parquet_deep(i: int, bad_stripe: int = 16) -> bytes:
@@ -3173,13 +3088,8 @@ def _make_parquet_deep(i: int, bad_stripe: int = 16) -> bytes:
 
 def synthesize_parquet_deep_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of doubly-nested list<list<int64>> parquet."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -3201,7 +3111,7 @@ def synthesize_parquet_deep_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -3359,17 +3269,12 @@ def _pqstruct_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_struct_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded STRUCT column read over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqstruct_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, PQSTRUCT_SCHEMA
-    )
+    return map_pandas(df, gen, PQSTRUCT_SCHEMA, ["media_id", "content"])
 
 
 def _make_parquet_struct(i: int, bad_stripe: int = 15) -> bytes:
@@ -3432,13 +3337,8 @@ def _make_parquet_struct(i: int, bad_stripe: int = 15) -> bytes:
 
 def synthesize_parquet_struct_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of STRUCT-column parquet."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -3462,7 +3362,7 @@ def synthesize_parquet_struct_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def parquet_leaf_fields(data: bytes) -> list[tuple[int | None, bytes]] | None:

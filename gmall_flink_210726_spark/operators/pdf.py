@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gmall_flink_210726_spark.operators.inflate import inflate
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 
 _OBJ_RE = re.compile(rb"(\d+) 0 obj\b")
 _REF_RE = re.compile(rb"/(\w+)\s+(\d+) 0 R")
@@ -259,15 +260,12 @@ def _pdf_batch(pdf_in: pd.DataFrame) -> pd.DataFrame:
 
 def pdf_text_stats(df: DataFrame) -> DataFrame:
     """FlateDecode PDF text extraction over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf_in in batches:
             yield _pdf_batch(pdf_in)
 
-    return df.select("media_id", "content").mapInPandas(gen, PDF_SCHEMA)
+    return map_pandas(df, gen, PDF_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -343,13 +341,8 @@ def _make_pdf(i: int, text: str) -> bytes:
 def synthesize_pdf_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of FlateDecode PDFs built from the document
     texts."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id", "text"))
 
     def gen(batches):
@@ -374,4 +367,4 @@ def synthesize_pdf_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -10,9 +10,9 @@ group spans the full value range.
 Everything here is from the public parquet-format spec
 (BloomFilter.md + parquet.thrift) and the xxHash spec:
 
-- ``xxh64`` — the 64-bit xxHash from scratch (accumulator rounds,
-  merge, tail, avalanche). Pinned against Spark's JVM ``xxhash64``
-  (seed 42) and the reference vectors (seed 0) in tests.
+- ``xxh64`` — the 64-bit xxHash from scratch (shared with zstd.py,
+  whose frame checksum it is). Pinned against Spark's JVM
+  ``xxhash64`` (seed 42) and the reference vectors (seed 0) in tests.
 - SBBF: block index = ``((h >> 32) * nblocks) >> 32`` (the
   multiply-shift range reduction), then the low 32 hash bits pick
   one bit in each of the block's eight 32-bit words via the eight
@@ -48,74 +48,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _decode_rle_hybrid,
     _Reader,
     _read_struct,
 )
-
-# ------------------------------------------------------------- XXH64
-
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _round(acc: int, lane: int) -> int:
-    acc = (acc + lane * _P2) & _M64
-    return (_rotl(acc, 31) * _P1) & _M64
-
-
-def xxh64(data: bytes, seed: int = 0) -> int:
-    """xxHash64 over ``data`` — the parquet bloom hash (seed 0) and,
-    with seed 42, Spark's ``xxhash64`` over binary."""
-    n = len(data)
-    pos = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M64
-        v2 = (seed + _P2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _P1) & _M64
-        while pos + 32 <= n:
-            l1, l2, l3, l4 = struct.unpack_from("<QQQQ", data, pos)
-            v1 = _round(v1, l1)
-            v2 = _round(v2, l2)
-            v3 = _round(v3, l3)
-            v4 = _round(v4, l4)
-            pos += 32
-        h = (
-            _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
-        ) & _M64
-        for v in (v1, v2, v3, v4):
-            h = ((h ^ _round(0, v)) * _P1 + _P4) & _M64
-    else:
-        h = (seed + _P5) & _M64
-    h = (h + n) & _M64
-    while pos + 8 <= n:
-        (k1,) = struct.unpack_from("<Q", data, pos)
-        h = ((_rotl(h ^ _round(0, k1), 27) * _P1) + _P4) & _M64
-        pos += 8
-    if pos + 4 <= n:
-        (k,) = struct.unpack_from("<I", data, pos)
-        h = ((_rotl(h ^ (k * _P1) & _M64, 23) * _P2) + _P3) & _M64
-        pos += 4
-    while pos < n:
-        h = (_rotl(h ^ (data[pos] * _P5) & _M64, 11) * _P1) & _M64
-        pos += 1
-    h ^= h >> 33
-    h = (h * _P2) & _M64
-    h ^= h >> 29
-    h = (h * _P3) & _M64
-    h ^= h >> 32
-    return h
-
+from gmall_flink_210726_spark.operators.zstd import xxh64
 
 # ----------------------------------------------- split-block filter
 
@@ -614,13 +553,8 @@ def _make_parquet_bloom(i: int) -> bytes:
 
 def synthesize_parquet_bloom_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of hand-written bloom-bearing parquet."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -644,7 +578,7 @@ def synthesize_parquet_bloom_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _pqbloom_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -677,17 +611,12 @@ def _pqbloom_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_bloom_stats(df: DataFrame) -> DataFrame:
     """Bloom-gated point lookups over MEDIA_SCHEMA parquet blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqbloom_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, PQBLOOM_SCHEMA
-    )
+    return map_pandas(df, gen, PQBLOOM_SCHEMA, ["media_id", "content"])
 
 
 # ------------------------------------------------ BYTE_ARRAY variant
@@ -744,13 +673,8 @@ PQBLOOMSTR_SCHEMA = StructType(
 
 def synthesize_parquet_bloom_str_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of string-keyed bloom parquet files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -774,7 +698,7 @@ def synthesize_parquet_bloom_str_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _pqbloomstr_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -806,14 +730,9 @@ def _pqbloomstr_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def parquet_bloom_str_stats(df: DataFrame) -> DataFrame:
     """Bloom-gated string-key lookups over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _pqbloomstr_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, PQBLOOMSTR_SCHEMA
-    )
+    return map_pandas(df, gen, PQBLOOMSTR_SCHEMA, ["media_id", "content"])

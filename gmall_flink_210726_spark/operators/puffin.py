@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -205,9 +206,6 @@ def read_puffin_ndv(data: bytes) -> dict | None:
 
 def puffin_ndv_stats(df: DataFrame) -> DataFrame:
     """Puffin NDV trust-chain walk over MEDIA_SCHEMA tar blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in PUFFIN_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -228,9 +226,7 @@ def puffin_ndv_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, PUFFIN_SCHEMA
-    )
+    return map_pandas(df, gen, PUFFIN_SCHEMA, ["media_id", "content"])
 
 
 def _puffin_kvals(i: int) -> list[int]:
@@ -356,13 +352,8 @@ def _make_puffin_table(i: int) -> bytes:
 
 def synthesize_puffin_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of (stats.puffin, data.parquet) tars."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -386,7 +377,7 @@ def synthesize_puffin_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -601,9 +592,6 @@ def read_iceberg_dv_scan(data: bytes) -> dict | None:
 
 def iceberg_dv_stats(df: DataFrame) -> DataFrame:
     """v3 DV merge-on-read scan over MEDIA_SCHEMA tar blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in ICEBERG_DV_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -622,9 +610,7 @@ def iceberg_dv_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_DV_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_DV_SCHEMA, ["media_id", "content"])
 
 
 def _dv_file_rows(i: int, f: int) -> int:
@@ -793,13 +779,8 @@ def _make_iceberg_dv_table(i: int) -> bytes:
 
 def synthesize_iceberg_dv_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of v3 DV tables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -823,7 +804,7 @@ def synthesize_iceberg_dv_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1009,9 +990,6 @@ ICEBERG_STATS_SCHEMA = StructType(
 
 def iceberg_stats_bound(df: DataFrame) -> DataFrame:
     """Snapshot-bound Puffin statistics walk over MEDIA_SCHEMA."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in ICEBERG_STATS_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1030,9 +1008,7 @@ def iceberg_stats_bound(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ICEBERG_STATS_SCHEMA
-    )
+    return map_pandas(df, gen, ICEBERG_STATS_SCHEMA, ["media_id", "content"])
 
 
 def _stats_kvals(i: int) -> list[int]:
@@ -1187,13 +1163,8 @@ def _make_iceberg_stats_table(i: int) -> bytes:
 def synthesize_iceberg_stats_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of two-snapshot Iceberg tables with
     snapshot-bound Puffin statistics."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1217,4 +1188,4 @@ def synthesize_iceberg_stats_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -148,9 +148,8 @@ def idn_decode_stats(docs, host_col: str = "host"):
         StructType,
     )
 
-    from gmall_flink_210726_spark.session import ship_package
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
 
-    ship_package(docs.sparkSession)
     schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -185,7 +184,7 @@ def idn_decode_stats(docs, host_col: str = "host"):
                 out, columns=[f.name for f in schema.fields]
             )
 
-    return docs.select("doc_id", host_col).mapInPandas(gen, schema)
+    return map_pandas(docs, gen, schema, ["doc_id", host_col])
 
 
 def synthesize_idn_hosts(docs):
@@ -204,12 +203,9 @@ def synthesize_idn_hosts(docs):
         StructType,
     )
 
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
     schema = StructType(
         [
@@ -240,4 +236,4 @@ def synthesize_idn_hosts(docs):
                 out, columns=[f.name for f in schema.fields]
             )
 
-    return docs.mapInPandas(gen, schema)
+    return map_pandas(docs, gen, schema)

@@ -5,17 +5,11 @@ per record, decides the sink kind (kafka topic vs hbase dim table),
 target name, and column projection (func/TableProcessFunction.java:48-69,
 dwd/BaseDBApp.java:75-98).
 
-Spark-first: the config is a small DataFrame. Two consumption shapes:
-
-- ``route_with_config`` — relational: broadcast-join data to config on
-  (table, type); rows keep a ``sink_table``/``sink_type`` column. This
-  is the shape used when all routes land in one partitioned sink
-  (e.g. one Kafka write with a per-row topic column ≈ K2, or a
-  ``partitionBy("sink_table")`` file write).
-- ``split_routes`` — driver-side: collect the (tiny) config and build
-  one pruned DataFrame per route, for sinks that need distinct
-  destinations/DDL (≈ K4/K5 dim upserts). The collect is bounded by
-  config-table size (dozens of rows), never data size.
+Spark-first: the config is a small DataFrame. ``route_with_config``
+broadcast-joins data to config on (table, type); rows keep a
+``sink_table``/``sink_type`` column. This is the shape used when all
+routes land in one partitioned sink (e.g. one Kafka write with a per-row
+topic column ≈ K2, or a ``partitionBy("sink_table")`` file write).
 """
 
 from __future__ import annotations
@@ -24,8 +18,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from gmall_flink_210726_spark.operators.transform import project_config_columns
 
 
 @dataclass(frozen=True)
@@ -90,16 +82,3 @@ def route_with_config(
         F.col(type_col) == F.col("operate_type")
     )
     return data.join(F.broadcast(config), cond, "inner")
-
-
-def split_routes(
-    data: DataFrame, rules: list[RouteRule], table_col: str, type_col: str
-) -> dict[str, DataFrame]:
-    """Driver-side routing: one pruned DataFrame per sink_table."""
-    out: dict[str, DataFrame] = {}
-    for r in rules:
-        branch = data.filter(
-            (F.col(table_col) == r.source_table) & (F.col(type_col) == r.operate_type)
-        )
-        out[r.sink_table] = project_config_columns(branch, r.sink_columns)
-    return out

@@ -207,9 +207,8 @@ def sitemap_stats(docs, xml_col: str = "xml"):
         StructType,
     )
 
-    from gmall_flink_210726_spark.session import ship_package
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
 
-    ship_package(docs.sparkSession)
     schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -242,7 +241,7 @@ def sitemap_stats(docs, xml_col: str = "xml"):
                 out, columns=[f.name for f in schema.fields]
             )
 
-    return docs.select("doc_id", xml_col).mapInPandas(gen, schema)
+    return map_pandas(docs, gen, schema, ["doc_id", xml_col])
 
 
 def _make_sitemap(i: int) -> str:
@@ -286,12 +285,9 @@ def synthesize_sitemaps(docs):
         StructType,
     )
 
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
     schema = StructType(
         [
@@ -310,4 +306,4 @@ def synthesize_sitemaps(docs):
                 }
             )
 
-    return docs.mapInPandas(gen, schema)
+    return map_pandas(docs, gen, schema)

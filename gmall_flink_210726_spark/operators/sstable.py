@@ -53,6 +53,7 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.kafkalog import crc32c
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.parquetmeta import (
     snappy_decompress,
 )
@@ -254,9 +255,6 @@ SSTABLE_SCHEMA = StructType(
 
 def sstable_stats(df: DataFrame) -> DataFrame:
     """SSTable KV census over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in SSTABLE_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -275,9 +273,7 @@ def sstable_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, SSTABLE_SCHEMA
-    )
+    return map_pandas(df, gen, SSTABLE_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -419,13 +415,8 @@ def make_sstable(i: int) -> bytes:
 
 def synthesize_sstable_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of SSTables."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -447,7 +438,7 @@ def synthesize_sstable_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -573,9 +564,6 @@ WAL_SCHEMA = StructType(
 
 def leveldb_wal_stats(df: DataFrame) -> DataFrame:
     """WAL replay over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in WAL_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -594,9 +582,7 @@ def leveldb_wal_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, WAL_SCHEMA
-    )
+    return map_pandas(df, gen, WAL_SCHEMA, ["media_id", "content"])
 
 
 def _wal_nw(i: int) -> int:
@@ -751,13 +737,8 @@ def make_leveldb_wal(i: int) -> bytes:
 
 def synthesize_wal_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of WAL files."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -781,4 +762,4 @@ def synthesize_wal_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 TAR_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -159,15 +161,12 @@ def _tar_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def tar_member_stats(df: DataFrame) -> DataFrame:
     """ustar member walk over MEDIA_SCHEMA blobs (see module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _tar_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, TAR_SCHEMA)
+    return map_pandas(df, gen, TAR_SCHEMA, ["media_id", "content"])
 
 
 def _make_tar(i: int) -> bytes:
@@ -190,13 +189,8 @@ def _make_tar(i: int) -> bytes:
 
 def synthesize_tar_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of ustar shards (WebDataset shape)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -218,4 +212,4 @@ def synthesize_tar_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

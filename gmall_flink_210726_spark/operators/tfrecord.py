@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.kafkalog import crc32c
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.orc import _pb_fields
 
 _MASK_DELTA = 0xA282EAD8
@@ -332,28 +333,18 @@ def _tfrec_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def tfrecord_stats(df: DataFrame) -> DataFrame:
     """TFRecord walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _tfrec_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, TFREC_SCHEMA
-    )
+    return map_pandas(df, gen, TFREC_SCHEMA, ["media_id", "content"])
 
 
 def synthesize_tfrecord_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of TFRecord blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -377,4 +368,4 @@ def synthesize_tfrecord_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 # ---------------------------------------------------------------- fixture
 # formulas shared with the DuckDB oracle in queries/llm7.py
 _TIF_W = lambda i: 2 + i % 11  # noqa: E731
@@ -565,10 +567,8 @@ def _tiff_pixels_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 def synthesize_tiff_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL multi-strip TIFF blobs, one per
     doc_id; odd ids big-endian, ids hitting _TIF_BAD truncated."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -590,17 +590,15 @@ def synthesize_tiff_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def synthesize_tiff_packbits_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL PackBits-compressed grayscale TIFFs,
     one per doc_id; odd ids big-endian, ids hitting _TPB_BAD truncated
     mid-strip so the PackBits error surface executes."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -622,7 +620,7 @@ def synthesize_tiff_packbits_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def synthesize_tiff_lzw_media(docs: DataFrame) -> DataFrame:
@@ -631,10 +629,8 @@ def synthesize_tiff_lzw_media(docs: DataFrame) -> DataFrame:
     mid-strip so the LZW error surface executes. Strip sizes are
     chosen so the dictionary crosses 511 entries and the 9->10-bit
     early-change width bump runs on every healthy image."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import ensure_parallelism, ship_package
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -656,7 +652,7 @@ def synthesize_tiff_lzw_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def tiff_pixel_stats(df: DataFrame) -> DataFrame:
@@ -664,12 +660,9 @@ def tiff_pixel_stats(df: DataFrame) -> DataFrame:
     header, IFD walk with the 4-byte inline-value rule, multi-strip
     assembly, per-image RGB sums. Corrupt/unsupported blobs degrade to
     format='unknown' zeroed rows. Arrow-batched mapInPandas."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _tiff_pixels_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, TIFF_SCHEMA)
+    return map_pandas(df, gen, TIFF_SCHEMA, ["media_id", "content"])

@@ -1,19 +1,13 @@
-"""Row transforms — P3-P9 (SURVEY §2.3).
+"""Row transforms — P7 (SURVEY §2.3) and SCD2 validity intervals.
 
-Filters, derived-column projection, metric normalization, and the
-wide-row merge. All pure Column expressions: JVM-side, codegen'd,
-pushdown-friendly.
+Derived-column projection and change-stream interval building. All
+pure Column expressions: JVM-side, codegen'd, pushdown-friendly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def filter_deletes(df: DataFrame, type_col: str = "type") -> DataFrame:
-    """P3 — drop CDC delete events (dwd/BaseDBApp.java:55-60)."""
-    return df.filter(F.col(type_col) != "delete")
 
 
 def derive_datetime(df: DataFrame, ts_col: str) -> DataFrame:
@@ -25,13 +19,6 @@ def derive_datetime(df: DataFrame, ts_col: str) -> DataFrame:
         .withColumn("create_hour", F.hour(c))
         .withColumn("create_ts", F.expr(f"unix_micros({ts_col}) div 1000"))
     )
-
-
-def project_config_columns(df: DataFrame, sink_columns: str) -> DataFrame:
-    """P6 — config-driven column pruning: keep only the columns named in
-    a CSV config string (func/TableProcessFunction.java:71-77)."""
-    cols = [c.strip() for c in sink_columns.split(",") if c.strip()]
-    return df.select(*[c for c in cols if c in df.columns])
 
 
 def scd2_intervals(

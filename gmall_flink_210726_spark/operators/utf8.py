@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 
 def utf8_classify(data: bytes) -> dict | None:
     """Strict decode -> per-class code-point counts, or None on any
@@ -110,15 +112,12 @@ def _utf8_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def utf8_validate_stats(df: DataFrame) -> DataFrame:
     """Strict UTF-8 classification over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _utf8_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, UTF8_SCHEMA)
+    return map_pandas(df, gen, UTF8_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -153,13 +152,8 @@ def _make_utf8(i: int) -> bytes:
 
 def synthesize_utf8_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of UTF-8 byte streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -181,4 +175,4 @@ def synthesize_utf8_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gmall_flink_210726_spark.operators.inflate import iter_gzip_members
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 
 _CRLF = b"\r\n"
 
@@ -219,15 +220,12 @@ def _warc_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def warc_record_stats(df: DataFrame) -> DataFrame:
     """WARC framing walk over MEDIA_SCHEMA blobs (module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _warc_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, WARC_SCHEMA)
+    return map_pandas(df, gen, WARC_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -316,13 +314,8 @@ def synthesize_warc_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of .warc.gz streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -347,7 +340,7 @@ def synthesize_warc_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -441,17 +434,12 @@ def _warc_html_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def warc_html_text(df: DataFrame) -> DataFrame:
     """The full CommonCrawl ingest pass over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _warc_html_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, WARC_HTML_SCHEMA
-    )
+    return map_pandas(df, gen, WARC_HTML_SCHEMA, ["media_id", "content"])
 
 
 def _make_warc_html_stream(i: int, text: str) -> bytes:
@@ -497,13 +485,8 @@ def synthesize_warc_html_media(
 ) -> DataFrame:
     """MEDIA_SCHEMA table of .warc.gz streams whose response bodies
     are the HTML fixture pages."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id", "text")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -531,7 +514,7 @@ def synthesize_warc_html_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -634,17 +617,12 @@ def _warc_text_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def warc_text_extract(df: DataFrame) -> DataFrame:
     """WARC + WET combined ingest pass over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _warc_text_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, WARC_TEXT_SCHEMA
-    )
+    return map_pandas(df, gen, WARC_TEXT_SCHEMA, ["media_id", "content"])
 
 
 def _make_wet_stream(i: int, text: str) -> bytes:
@@ -684,13 +662,8 @@ def synthesize_wet_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of mixed WARC/WET .gz streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id", "text")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -718,7 +691,7 @@ def synthesize_wet_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -780,9 +753,6 @@ def _walk_warc_zstd_text(data: bytes) -> dict | None:
 
 def warc_zstd_text_extract(df: DataFrame) -> DataFrame:
     """.warc.zst ingest pass over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -812,9 +782,7 @@ def warc_zstd_text_extract(df: DataFrame) -> DataFrame:
                 out, columns=[f.name for f in WARC_TEXT_SCHEMA.fields]
             )
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, WARC_TEXT_SCHEMA
-    )
+    return map_pandas(df, gen, WARC_TEXT_SCHEMA, ["media_id", "content"])
 
 
 def _make_warc_zstd_stream(i: int, text: str) -> bytes:
@@ -900,13 +868,8 @@ def synthesize_warc_zstd_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of .warc.zst streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id", "text")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -934,7 +897,7 @@ def synthesize_warc_zstd_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1057,15 +1020,12 @@ def _wat_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def warc_wat_stats(df: DataFrame) -> DataFrame:
     """WARC/WET/WAT trio ingest pass over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _wat_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, WAT_SCHEMA)
+    return map_pandas(df, gen, WAT_SCHEMA, ["media_id", "content"])
 
 
 def _make_wat_stream(i: int) -> bytes:
@@ -1119,13 +1079,8 @@ def synthesize_wat_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of mixed WARC/WET/WAT .gz streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1150,7 +1105,7 @@ def synthesize_wat_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1275,17 +1230,12 @@ def warc_http_text(df: DataFrame) -> DataFrame:
     records de-framed and de-coded before HTML extraction. Per-blob
     stateless Arrow-batched mapInPandas; only integer stats and the
     extracted text shuffle."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _warc_http_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, WARC_HTTP_SCHEMA
-    )
+    return map_pandas(df, gen, WARC_HTTP_SCHEMA, ["media_id", "content"])
 
 
 def _chunk_body(body: bytes, step: int, lie: bool = False) -> bytes:
@@ -1436,13 +1386,8 @@ def synthesize_warc_http_media(
 ) -> DataFrame:
     """MEDIA_SCHEMA table of .warc.gz streams whose response records
     carry full HTTP/1.1 messages (the real CommonCrawl shape)."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id", "text")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1470,7 +1415,7 @@ def synthesize_warc_http_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -1614,13 +1559,8 @@ def synthesize_warc_reqresp_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of request/response-pair .warc.gz blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id", "text")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1648,7 +1588,7 @@ def synthesize_warc_reqresp_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 def _warc_req_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1680,17 +1620,12 @@ def _warc_req_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def warc_reqresp_stats(df: DataFrame) -> DataFrame:
     """Request/response pair walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _warc_req_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, WARC_REQ_SCHEMA
-    )
+    return map_pandas(df, gen, WARC_REQ_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -1800,9 +1735,6 @@ def cdx_lookup(data: bytes, urlkey: str) -> dict | None:
 def cdx_lookup_stats(df: DataFrame, urlkey_fmt: str) -> DataFrame:
     """CDXJ ranged-fetch lookup over MEDIA_SCHEMA tar blobs; the
     probe urlkey is ``urlkey_fmt.format(i=media_id)``."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in CDX_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1822,9 +1754,7 @@ def cdx_lookup_stats(df: DataFrame, urlkey_fmt: str) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, CDX_SCHEMA
-    )
+    return map_pandas(df, gen, CDX_SCHEMA, ["media_id", "content"])
 
 
 def _make_cdx_archive(i: int, text: str) -> bytes:
@@ -1928,13 +1858,8 @@ def synthesize_cdx_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of (index.cdxj, data.warc.gz) tars."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id", "text")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -1962,7 +1887,7 @@ def synthesize_cdx_media(
                 }
             )
 
-    return docs.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2061,9 +1986,6 @@ REVISIT_SCHEMA = StructType(
 
 def warc_revisit_stats(df: DataFrame) -> DataFrame:
     """Revisit-resolution walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in REVISIT_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2082,9 +2004,7 @@ def warc_revisit_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, REVISIT_SCHEMA
-    )
+    return map_pandas(df, gen, REVISIT_SCHEMA, ["media_id", "content"])
 
 
 def _rv_len(i: int, u: int) -> int:
@@ -2179,13 +2099,8 @@ def synthesize_warc_revisit_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of revisit-bearing WARC streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -2213,4 +2128,4 @@ def synthesize_warc_revisit_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

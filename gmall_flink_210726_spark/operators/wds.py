@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.tar import (
     _BLOCK,
     _make_header,
@@ -157,15 +158,12 @@ def _wds_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def wds_sample_stats(df: DataFrame) -> DataFrame:
     """WebDataset shard walk + JPEG decode over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _wds_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, WDS_SCHEMA)
+    return map_pandas(df, gen, WDS_SCHEMA, ["media_id", "content"])
 
 
 def _make_wds_shard(i: int, bad_stripe: int = 17) -> bytes:
@@ -201,13 +199,8 @@ def synthesize_wds_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of WebDataset tar shards."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -232,4 +225,4 @@ def synthesize_wds_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 from gmall_flink_210726_spark.operators.bzip2 import (
     bz2_decompress_multistream,
 )
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
 from gmall_flink_210726_spark.operators.sitemap import parse_xml
 
 # --------------------------------------------------------------------------
@@ -241,17 +242,12 @@ def _wiki_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def wiki_dump_stats(df: DataFrame) -> DataFrame:
     """Multistream dump walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _wiki_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, WIKI_SCHEMA
-    )
+    return map_pandas(df, gen, WIKI_SCHEMA, ["media_id", "content"])
 
 
 # --------------------------------------------------------------------------
@@ -325,13 +321,8 @@ def synthesize_wiki_dump_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of multistream wiki-dump blobs."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     sel = docs.select("doc_id")
     # partitions: stream twins pin the src file count here, BEFORE
     # blob synthesis, so only doc ids are ever shuffled (guide §8)
@@ -356,4 +347,4 @@ def synthesize_wiki_dump_media(
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

@@ -771,7 +771,7 @@ def xz_archive_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.session import ship_package
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
 
     schema = StructType(
         [
@@ -784,7 +784,6 @@ def xz_archive_stats(df):
             StructField("word_sum", LongType()),
         ]
     )
-    ship_package(df.sparkSession)
 
     def batch(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
@@ -813,20 +812,19 @@ def xz_archive_stats(df):
         for pdf in batches:
             yield batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, schema)
+    return map_pandas(df, gen, schema, ["media_id", "content"])
 
 
 def synthesize_xz_media(docs):
     """MEDIA_SCHEMA table of multistream xz blobs."""
     import pandas as pd
 
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
+    from gmall_flink_210726_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        map_pandas,
     )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -848,7 +846,7 @@ def synthesize_xz_media(docs):
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # ----------------------------------------------------- legacy .lzma query
@@ -928,7 +926,7 @@ def lzma_alone_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.session import ship_package
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
 
     schema = StructType(
         [
@@ -942,7 +940,6 @@ def lzma_alone_stats(df):
             StructField("word_sum", LongType()),
         ]
     )
-    ship_package(df.sparkSession)
 
     def batch(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
@@ -965,20 +962,19 @@ def lzma_alone_stats(df):
         for pdf in batches:
             yield batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, schema)
+    return map_pandas(df, gen, schema, ["media_id", "content"])
 
 
 def synthesize_lzma_alone_media(docs):
     """MEDIA_SCHEMA table of legacy .lzma blobs."""
     import pandas as pd
 
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
+    from gmall_flink_210726_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        map_pandas,
     )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1000,4 +996,4 @@ def synthesize_lzma_alone_media(docs):
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

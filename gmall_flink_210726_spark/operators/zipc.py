@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+
 ZIP_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -142,15 +144,12 @@ def _zip_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def zip_entry_stats(df: DataFrame) -> DataFrame:
     """ZIP central-directory walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _zip_batch(pdf)
 
-    return df.select("media_id", "content").mapInPandas(gen, ZIP_SCHEMA)
+    return map_pandas(df, gen, ZIP_SCHEMA, ["media_id", "content"])
 
 
 def _make_zip(i: int) -> bytes:
@@ -193,13 +192,8 @@ def _make_zip(i: int) -> bytes:
 
 def synthesize_zip_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of STORED-only zip archives."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -221,7 +215,7 @@ def synthesize_zip_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -375,9 +369,6 @@ ZIP64_SCHEMA = StructType(
 
 def zip64_entry_stats(df: DataFrame) -> DataFrame:
     """ZIP64 walk over MEDIA_SCHEMA blobs."""
-    from gmall_flink_210726_spark.session import ship_package
-
-    ship_package(df.sparkSession)
     cols = [f.name for f in ZIP64_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -398,9 +389,7 @@ def zip64_entry_stats(df: DataFrame) -> DataFrame:
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(
-        gen, ZIP64_SCHEMA
-    )
+    return map_pandas(df, gen, ZIP64_SCHEMA, ["media_id", "content"])
 
 
 def _z64_size(i: int, j: int) -> int:
@@ -485,13 +474,8 @@ def _make_zip64(i: int) -> bytes:
 
 def synthesize_zip64_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of ZIP64 archives."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
-    )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -513,4 +497,4 @@ def synthesize_zip64_media(docs: DataFrame) -> DataFrame:
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

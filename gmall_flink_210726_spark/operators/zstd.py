@@ -882,7 +882,8 @@ def zstd_decompress(data: bytes, dicts: dict | None = None) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# XXH64 (Collet, public domain reference) — zstd's content checksum.
+# XXH64 (Collet, public domain reference) — zstd's content checksum and
+# the parquet bloom-filter hash (pqbloom.py imports it from here).
 # ---------------------------------------------------------------------------
 
 _P1 = 0x9E3779B185EBCA87
@@ -903,19 +904,23 @@ def _round(acc: int, inp: int) -> int:
 
 
 def xxh64(data: bytes, seed: int = 0) -> int:
+    """xxHash64 over ``data``: zstd's content checksum (low 32 bits),
+    the parquet bloom hash (seed 0) and, with seed 42, Spark's
+    ``xxhash64`` over binary."""
     n = len(data)
-    i = 0
+    pos = 0
     if n >= 32:
         v1 = (seed + _P1 + _P2) & _M
         v2 = (seed + _P2) & _M
-        v3 = seed
+        v3 = seed & _M
         v4 = (seed - _P1) & _M
-        while i + 32 <= n:
-            v1 = _round(v1, int.from_bytes(data[i : i + 8], "little"))
-            v2 = _round(v2, int.from_bytes(data[i + 8 : i + 16], "little"))
-            v3 = _round(v3, int.from_bytes(data[i + 16 : i + 24], "little"))
-            v4 = _round(v4, int.from_bytes(data[i + 24 : i + 32], "little"))
-            i += 32
+        while pos + 32 <= n:
+            l1, l2, l3, l4 = struct.unpack_from("<QQQQ", data, pos)
+            v1 = _round(v1, l1)
+            v2 = _round(v2, l2)
+            v3 = _round(v3, l3)
+            v4 = _round(v4, l4)
+            pos += 32
         h = (
             _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
         ) & _M
@@ -924,18 +929,17 @@ def xxh64(data: bytes, seed: int = 0) -> int:
     else:
         h = (seed + _P5) & _M
     h = (h + n) & _M
-    while i + 8 <= n:
-        k = _round(0, int.from_bytes(data[i : i + 8], "little"))
-        h = (_rotl(h ^ k, 27) * _P1 + _P4) & _M
-        i += 8
-    if i + 4 <= n:
-        k = (int.from_bytes(data[i : i + 4], "little") * _P1) & _M
-        h = (_rotl(h ^ k, 23) * _P2 + _P3) & _M
-        i += 4
-    while i < n:
-        k = (data[i] * _P5) & _M
-        h = (_rotl(h ^ k, 11) * _P1) & _M
-        i += 1
+    while pos + 8 <= n:
+        (k1,) = struct.unpack_from("<Q", data, pos)
+        h = ((_rotl(h ^ _round(0, k1), 27) * _P1) + _P4) & _M
+        pos += 8
+    if pos + 4 <= n:
+        (k,) = struct.unpack_from("<I", data, pos)
+        h = ((_rotl(h ^ (k * _P1) & _M, 23) * _P2) + _P3) & _M
+        pos += 4
+    while pos < n:
+        h = (_rotl(h ^ (data[pos] * _P5) & _M, 11) * _P1) & _M
+        pos += 1
     h ^= h >> 33
     h = (h * _P2) & _M
     h ^= h >> 29
@@ -1012,9 +1016,8 @@ def _zstd_schema():
 
 def zstd_frame_stats(df):
     """Frame-walk stats over MEDIA_SCHEMA blobs (module doc)."""
-    from gmall_flink_210726_spark.session import ship_package
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
 
-    ship_package(df.sparkSession)
     pd = _import_pd()
     schema = _zstd_schema()
     cols = [f.name for f in schema.fields]
@@ -1043,7 +1046,7 @@ def zstd_frame_stats(df):
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(gen, schema)
+    return map_pandas(df, gen, schema, ["media_id", "content"])
 
 
 def add_content_checksum(frame: bytes) -> bytes:
@@ -1112,13 +1115,12 @@ def _make_zstd_stream(i: int) -> bytes:
 
 def synthesize_zstd_media(docs):
     """MEDIA_SCHEMA table of concatenated zstd frames."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
+    from gmall_flink_210726_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        map_pandas,
     )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
     pd = _import_pd()
 
@@ -1141,7 +1143,7 @@ def synthesize_zstd_media(docs):
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1361,7 +1363,7 @@ def zstd_seekable_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.session import ship_package
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
 
     pd = _import_pd()
     schema = StructType(
@@ -1375,7 +1377,6 @@ def zstd_seekable_stats(df):
             StructField("window_sum", LongType()),
         ]
     )
-    ship_package(df.sparkSession)
     cols = [f.name for f in schema.fields]
 
     def gen(batches):
@@ -1394,7 +1395,7 @@ def zstd_seekable_stats(df):
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select("media_id", "content").mapInPandas(gen, schema)
+    return map_pandas(df, gen, schema, ["media_id", "content"])
 
 
 def _seek_nf(i: int) -> int:
@@ -1463,14 +1464,13 @@ def make_zstd_seekable(i: int) -> bytes:
 
 def synthesize_zstd_seekable_media(docs):
     """MEDIA_SCHEMA table of seekable zstd streams."""
-    from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
-    from gmall_flink_210726_spark.session import (
-        ensure_parallelism,
-        ship_package,
+    from gmall_flink_210726_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        map_pandas,
     )
+    from gmall_flink_210726_spark.session import ensure_parallelism
 
     pd = _import_pd()
-    ship_package(docs.sparkSession)
     docs = ensure_parallelism(docs.select("doc_id"))
 
     def gen(batches):
@@ -1494,4 +1494,4 @@ def synthesize_zstd_seekable_media(docs):
                 }
             )
 
-    return docs.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
+    return map_pandas(docs, gen, MEDIA_SCHEMA)

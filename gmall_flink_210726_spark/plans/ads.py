@@ -42,18 +42,6 @@ def product_stats_by_trademark(
     )
 
 
-def product_stats_by_category3(
-    product_stats: DataFrame, date: str, limit: int = 10
-) -> DataFrame:
-    return (
-        _on_date(product_stats, date)
-        .groupBy("category3_id", "category3_name")
-        .agg(F.sum("order_amount").alias("order_amount"))
-        .orderBy(F.desc("order_amount"))
-        .limit(limit)
-    )
-
-
 def visitor_stats_by_hour(visitor_stats: DataFrame, date: str) -> DataFrame:
     """Hourly visitor curve (publisher's getVisitorStatsByHour): uv/pv/
     new-visitor counts per hour-of-day."""
@@ -94,16 +82,4 @@ def keyword_top(keyword_stats: DataFrame, date: str, limit: int = 20) -> DataFra
         .agg(F.sum("ct").alias("ct"))
         .orderBy(F.desc("ct"), "keyword")
         .limit(limit)
-    )
-
-
-def province_stats_map(province_stats: DataFrame, date: str) -> DataFrame:
-    """Province map (publisher's getProvinceStats)."""
-    return (
-        _on_date(province_stats, date)
-        .groupBy("province_id", "province_name")
-        .agg(
-            F.sum("order_amount").alias("order_amount"),
-            F.sum("order_count").alias("order_count"),
-        )
     )

@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from gmall_flink_210726_spark.functions.scalar import DT_FMT
 from gmall_flink_210726_spark.functions.tokenizer import tokenize_col
@@ -37,14 +36,6 @@ from gmall_flink_210726_spark.schemas import LOG_EVENT_SCHEMA
 
 def _event_time_ms(ts_ms: Column) -> Column:
     return F.timestamp_millis(ts_ms)
-
-
-def typed_from_after(df: DataFrame, schema: StructType) -> DataFrame:
-    """Project a CDC ``after`` map<string,string> into typed columns
-    (≈ util/JdbcUtil.java row→bean, minus reflection)."""
-    return df.select(
-        *[F.col("after")[f.name].cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
 
 
 def with_event_ts(df: DataFrame, create_time_col: str = "create_time") -> DataFrame:

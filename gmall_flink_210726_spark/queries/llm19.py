@@ -758,11 +758,10 @@ def lakehouse_hudi_mor_time_travel(
         read_hudi_mor_snapshot,
         synthesize_hudi_mor_media,
     )
-    from gmall_flink_210726_spark.session import ship_package
+    from gmall_flink_210726_spark.operators.multimodal import map_pandas
 
     import pandas as pd
 
-    ship_package(spark)
     media = synthesize_hudi_mor_media(
         load_table(spark, sf_dir, "documents")
     )
@@ -784,9 +783,7 @@ def lakehouse_hudi_mor_time_travel(
                 out.append(row)
             yield pd.DataFrame(out, columns=cols)
 
-    return media.select("media_id", "content").mapInPandas(
-        gen, HUDI_MOR_SCHEMA
-    )
+    return map_pandas(media, gen, HUDI_MOR_SCHEMA, ["media_id", "content"])
 
 
 @register(

@@ -1,4 +1,4 @@
-"""Sinks — K3/K4/K5/K6 (SURVEY §2.2).
+"""Sinks — K3/K4/K5 (SURVEY §2.2).
 
 The reference writes dimension rows to Phoenix/HBase with hand-built
 upsert SQL + auto-DDL (func/DimSinkFunction.java:28-72,
@@ -15,7 +15,6 @@ documented anti-join + union pattern):
   reference's all-varchar auto-DDL).
 - K3 ``append_stats_table`` — whole-micro-batch append (the JDBC
   batch of 2 rows / 2 s becomes the trigger interval).
-- K6 ``debug_sink`` — console.
 
 Scale note: the upsert shuffles the existing table once on the pk
 anti-join; at warehouse scale this is exactly what a Delta MERGE plans
@@ -401,8 +400,3 @@ def compact_stats_table(
         )
     shutil.rmtree(old, ignore_errors=True)
     return n_rows
-
-
-def debug_sink(df: DataFrame, n: int = 20) -> None:
-    """K6 — the reference's `.print()` (dwd/BaseDBApp.java:89-90)."""
-    df.show(n, truncate=False)

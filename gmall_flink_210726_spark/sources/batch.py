@@ -1,8 +1,8 @@
-"""Batch sources: the driver's TPC-H-ish parquet tables + generic readers.
+"""Batch sources: the driver's TPC-H-ish parquet tables.
 
 The reference consumes Kafka topics (util/MyKafkaUtil.java:32-37); the
-batch-replay mode of this engine treats a directory of parquet/JSON files
-as the replayed topic. Parquet scans get predicate pushdown + column
+batch-replay mode of this engine treats a directory of parquet files as
+the replayed topic. Parquet scans get predicate pushdown + column
 pruning from Catalyst for free — the reference's manual column pruning
 (func/TableProcessFunction.java:71-77) is subsumed for these paths.
 """
@@ -70,14 +70,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs
-
-
-def read_json_events(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Raw behavior-log JSON lines with corrupt-record capture (P1 —
-    ≈ the dirty side output at dwd/BaseLogApp.java:51-63)."""
-    return (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )

@@ -1,48 +1,20 @@
-"""Kafka source/sink builders — S1/K1/K2 (SURVEY §2.1-2.2).
+"""Kafka record shapes — K1/K2 (SURVEY §2.2).
 
-The container has no Kafka broker or connector jar, so these builders
-configure readers/writers without triggering a load/start; the record
-(de)serialization helpers are pure Column transforms and fully tested.
-On a cluster with `spark-sql-kafka-0-10` on the classpath the builders
-are complete:
+There is no Kafka broker or connector jar here, so the engine ships no
+reader or writer; these record serializers are pure Column transforms
+that produce exactly the ``key``/``value``/``topic`` columns Spark's
+Kafka sink (`spark-sql-kafka-0-10`) consumes:
 
-    df = kafka_stream_reader(spark, "b:9092", "ods_base_log").load()
-    events = kafka_value_string(df)
-    ...
-    (kafka_writer(to_kafka_records(out), "b:9092", topic="dwd_page_log")
+    (to_kafka_records(out).writeStream.format("kafka")
+        .option("kafka.bootstrap.servers", "b:9092")
+        .option("topic", "dwd_page_log")
         .option("checkpointLocation", ckpt).start())
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def kafka_stream_reader(
-    spark: SparkSession,
-    brokers: str,
-    subscribe: str,
-    starting_offsets: str = "latest",
-    group_id: str | None = None,
-):
-    """S1 — topic consumer (util/MyKafkaUtil.java:32-37: group id,
-    SimpleStringSchema ≈ value cast to string by kafka_value_string).
-    Returns the configured DataStreamReader; caller invokes .load()."""
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", subscribe)
-        .option("startingOffsets", starting_offsets)
-    )
-    if group_id:
-        reader = reader.option("kafka.group.id", group_id)
-    return reader
-
-
-def kafka_value_string(df: DataFrame) -> DataFrame:
-    """Kafka's binary value → string column (SimpleStringSchema)."""
-    return df.select(F.col("value").cast("string").alias("value"))
 
 
 def to_kafka_records(df: DataFrame, key: Column | None = None) -> DataFrame:
@@ -61,15 +33,3 @@ def to_kafka_dynamic(df: DataFrame, topic_col: str, value_col: str) -> DataFrame
     return df.select(
         F.col(topic_col).alias("topic"), F.col(value_col).cast("string").alias("value")
     )
-
-
-def kafka_writer(df: DataFrame, brokers: str, topic: str | None = None):
-    """Configured Kafka writeStream (at-least-once — matching the
-    reference's Semantic.NONE at util/MyKafkaUtil.java:29; use
-    foreachBatch + idempotent sinks for exactly-once)."""
-    writer = df.writeStream.format("kafka").option(
-        "kafka.bootstrap.servers", brokers
-    )
-    if topic:
-        writer = writer.option("topic", topic)
-    return writer

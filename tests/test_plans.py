@@ -602,8 +602,8 @@ class TestRound6PlanShapes:
         assert "bit_or" in plan  # the word pack actually aggregates
 
     def test_adpcm_is_single_mapinpandas_pass(self, spark):
-        """ADPCM: synthesize + decode are two chained Arrow passes; no
-        shuffle between them (pipelined map stages)."""
+        """ADPCM: synthesize + decode run as one fused mapInPandas; no
+        shuffle around it (one pipelined map stage)."""
         plan = _plan(SPECS["multimodal_wav_adpcm"].fn(spark, SF_SMALL))
         assert plan.count("Exchange") <= 1  # only the ensure_parallelism round-robin
 
@@ -979,8 +979,8 @@ class TestRound12Plans:
         assert all("doc_id" not in ln for ln in seg_lines)
 
     def test_warc_http_walk_is_single_map_stage(self, spark):
-        """multimodal_warc_http: fixture synth + decode is two
-        chained mapInPandas over the documents scan — no join, no
+        """multimodal_warc_http: fixture synth + decode is one fused
+        mapInPandas over the documents scan — no join, no
         aggregation, zero shuffles."""
         plan = (
             SPECS["multimodal_warc_http"]
@@ -1098,3 +1098,135 @@ class TestRound14PlanShapes:
             "multimodal_msgpack_rows",
         ):
             self._assert_pure_map(spark, name)
+
+
+# The benchmark's blob_decode queries: (query, module, synthesizer,
+# decoder), each registered as ``decoder(synthesizer(documents))``.
+_BLOB_QUERIES = (
+    ("multimodal_orc_double", "orc2", "synthesize_orc_double_media", "orc_double_stats"),
+    ("multimodal_flac_frames", "flac", "synthesize_flac_media", "flac_stats"),
+    ("multimodal_avro_container", "avro", "synthesize_avro_media", "avro_container_stats"),
+    ("multimodal_warc_zstd", "warc", "synthesize_warc_zstd_media", "warc_zstd_text_extract"),
+    ("multimodal_jpeg_420", "jpeg", "synthesize_jpeg420_media", "jpeg_pixel_stats"),
+    ("multimodal_png_adam7", "multimodal", "synthesize_png_adam7_media", "png_adam7_stats"),
+    ("multimodal_xz_archive", "xz", "synthesize_xz_media", "xz_archive_stats"),
+    ("lakehouse_delta_scan", "deltalog", "synthesize_delta_table_media", "delta_scan_stats"),
+)
+
+
+def _python_nodes(df) -> int:
+    return _plan(df).count("MapInPandas")
+
+
+def _blob_pair(name):
+    import importlib
+
+    _, mod, synth, stats = next(q for q in _BLOB_QUERIES if q[0] == name)
+    m = importlib.import_module(f"gmall_flink_210726_spark.operators.{mod}")
+    return getattr(m, synth), getattr(m, stats)
+
+
+def _direct_blob_maps(src: str) -> list[int]:
+    """Lines where ``src`` calls ``.mapInPandas(`` to produce
+    MEDIA_SCHEMA or right after ``select("media_id", "content")`` —
+    the two ends of a blob query that must go through ``map_pandas``."""
+    import ast
+
+    hits = []
+    for node in ast.walk(ast.parse(src)):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "mapInPandas"
+        ):
+            continue
+        recv = node.func.value
+        blob_select = (
+            isinstance(recv, ast.Call)
+            and isinstance(recv.func, ast.Attribute)
+            and recv.func.attr == "select"
+            and [getattr(a, "value", None) for a in recv.args]
+            == ["media_id", "content"]
+        )
+        media_out = any(
+            isinstance(a, ast.Name) and a.id == "MEDIA_SCHEMA"
+            for a in list(node.args) + [k.value for k in node.keywords]
+        )
+        if blob_select or media_out:
+            hits.append(node.lineno)
+    return hits
+
+
+class TestBlobQueryFusion:
+    """A blob query is decoder(synthesizer(docs)); ``map_pandas`` runs
+    both pandas functions in one Python node when the decoder's input
+    is the synthesizer's own result, and keeps two otherwise."""
+
+    @pytest.mark.parametrize("name", [q[0] for q in _BLOB_QUERIES])
+    def test_blob_query_is_one_python_node(self, spark, name):
+        assert _python_nodes(SPECS[name].fn(spark, SF_SMALL)) == 1
+
+    @pytest.mark.parametrize("name", [q[0] for q in _BLOB_QUERIES])
+    def test_fused_equals_two_node_plan(self, spark, name):
+        from gmall_flink_210726_spark.sources.batch import load_table
+        from tests.oracle import _normalize
+
+        synth, stats = _blob_pair(name)
+        media = synth(load_table(spark, SF_SMALL, "documents"))
+        fused, unfused = stats(media), stats(media.select("*"))
+        assert (_python_nodes(fused), _python_nodes(unfused)) == (1, 2)
+        rows = _normalize(fused.toPandas())
+        assert rows and rows == _normalize(unfused.toPandas())
+
+    def test_step_between_keeps_two_nodes(self, spark):
+        from gmall_flink_210726_spark.sources.batch import load_table
+        from tests.oracle import _normalize
+
+        synth, stats = _blob_pair("multimodal_png_adam7")
+        media = synth(load_table(spark, SF_SMALL, "documents"))
+        fused = stats(media)
+        shuffled = stats(media.repartition(3))
+        assert _python_nodes(shuffled) == 2
+        # the checkpoint runs the synthesizer in its own job; the
+        # decoder reads the materialized rows
+        ckpt = stats(media.localCheckpoint())
+        assert _python_nodes(ckpt) == 1
+        assert "ExistingRDD" in _plan(ckpt)
+        want = _normalize(fused.toPandas())
+        assert _normalize(shuffled.toPandas()) == want
+        assert _normalize(ckpt.toPandas()) == want
+
+    def test_three_chained_calls_are_one_node(self, spark):
+        from gmall_flink_210726_spark.operators.multimodal import map_pandas
+
+        def add(k):
+            def fn(batches):
+                for pdf in batches:
+                    yield pdf.assign(x=pdf["x"] + k, y=pdf["x"] * 0)
+
+            return fn
+
+        src = spark.range(10).selectExpr("id AS x")
+        one = map_pandas(src, add(1), "x long, y long")
+        two = map_pandas(one, add(10), "x long, y long", ["x"])
+        three = map_pandas(two, add(100), "x long, y long")
+        assert _python_nodes(three) == 1
+        assert sorted(r.x for r in three.collect()) == list(range(111, 121))
+
+    def test_blob_maps_go_through_the_helper(self):
+        import pathlib
+
+        import gmall_flink_210726_spark as pkg
+
+        assert _direct_blob_maps(
+            'df.select("media_id", "content").mapInPandas(gen, S)\n'
+            "docs.mapInPandas(gen, MEDIA_SCHEMA)\n"
+            "map_pandas(df, gen, S, ['media_id', 'content'])\n"
+        ) == [1, 2]
+        root = pathlib.Path(pkg.__file__).parent
+        bad = {
+            str(p.relative_to(root)): lines
+            for p in sorted(root.rglob("*.py"))
+            if (lines := _direct_blob_maps(p.read_text()))
+        }
+        assert not bad, f"call map_pandas instead of mapInPandas: {bad}"
