@@ -56,9 +56,7 @@ path; this extends SURVEY §2.12's beyond-reference multimodal family.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -67,7 +65,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 _MAGIC = b"ARROW1"
 
@@ -392,7 +394,7 @@ def read_arrow_ipc(data: bytes) -> dict | None:
 
 
 # --------------------------------------------------------------------------
-# Spark wrapper
+# Spark wrapper: one ``blob_stats`` call (operators/multimodal.py)
 # --------------------------------------------------------------------------
 
 ARROW_SCHEMA = StructType(
@@ -412,25 +414,7 @@ ARROW_SCHEMA = StructType(
 
 def arrow_ipc_stats(df: DataFrame) -> DataFrame:
     """Arrow IPC file walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in ARROW_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_arrow_ipc(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="arrow", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, ARROW_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_arrow_ipc, ARROW_SCHEMA, "arrow")
 
 
 # --------------------------------------------------------------------------
@@ -531,30 +515,7 @@ def make_arrow_ipc(i: int) -> bytes:
 
 def synthesize_arrow_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Arrow IPC files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make_arrow_ipc(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "arrow",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_arrow_ipc, blob_meta("arrow"))
 
 
 # --------------------------------------------------------------------------
@@ -846,25 +807,7 @@ DICT_SCHEMA = StructType(
 
 def arrow_dict_stats(df: DataFrame) -> DataFrame:
     """Dictionary-encoded Arrow IPC walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in DICT_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_arrow_dict(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="arrow-dict", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, DICT_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_arrow_dict, DICT_SCHEMA, "arrow-dict")
 
 
 def _adict_n(i: int) -> int:
@@ -952,29 +895,4 @@ def make_arrow_dict(i: int) -> bytes:
 
 def synthesize_arrow_dict_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of dictionary-encoded Arrow IPC files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        make_arrow_dict(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "arrow",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_arrow_dict, blob_meta("arrow"))

@@ -27,14 +27,15 @@ hour of 48 kHz stereo ~2^58 — int64 is safe by a wide margin.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    _wav_chunks,
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 ENERGY_SCHEMA = StructType(
     [
@@ -48,93 +49,49 @@ ENERGY_SCHEMA = StructType(
 )
 
 
-def _energy_batch(pdf: pd.DataFrame, win: int) -> pd.DataFrame:
-    """RIFF chunk walk (the ``_frame_sample_batch`` convention,
-    operators/multimodal.py:426) then vectorized window energies.
-    Non-WAV/corrupt blobs degrade to format='unknown', zeros."""
-    import struct
-
+def _energy_walk(b: bytes, win: int) -> dict | None:
+    """RIFF chunk walk then vectorized window energies; 8/16/24-bit PCM."""
     import numpy as np
 
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "n_windows": 0,
-            "total_energy": 0,
-            "max_energy": 0,
-            "n_clipped": 0,
-        }
-        try:
-            if b[:4] == b"RIFF" and b[8:12] == b"WAVE" and len(b) >= 44:
-                ch = bits = 0
-                data_pos = data_sz = 0
-                pos = 12
-                while pos + 8 <= len(b):
-                    cid, csz = struct.unpack_from("<4sI", b, pos)
-                    if cid == b"fmt ":
-                        _, ch, _, _, _, bits = struct.unpack_from(
-                            "<HHIIHH", b, pos + 8
-                        )
-                    elif cid == b"data":
-                        data_pos, data_sz = pos + 8, csz
-                    pos += 8 + csz + (csz & 1)
-                if (
-                    ch > 0
-                    and bits in (8, 16, 24)
-                    and data_pos
-                    and data_pos + data_sz <= len(b)
-                ):
-                    bps = bits // 8
-                    n_frames = data_sz // (bps * ch)
-                    nw = n_frames // win
-                    row.update(format="wav", n_windows=int(nw))
-                    if nw > 0:
-                        ns = nw * win * ch
-                        if bits == 16:
-                            arr = np.frombuffer(
-                                b, "<i2", offset=data_pos, count=ns
-                            ).astype(np.int64)
-                        elif bits == 8:
-                            # WAV 8-bit PCM is UNSIGNED, 128-centered
-                            arr = (
-                                np.frombuffer(
-                                    b, np.uint8, offset=data_pos, count=ns
-                                ).astype(np.int64)
-                                - 128
-                            )
-                        else:  # 24-bit little-endian two's complement
-                            raw = np.frombuffer(
-                                b, np.uint8, offset=data_pos, count=3 * ns
-                            ).astype(np.int64).reshape(ns, 3)
-                            v = raw[:, 0] | (raw[:, 1] << 8) | (raw[:, 2] << 16)
-                            arr = v - ((v & 0x800000) << 1)
-                        rail = (1 << (bits - 1)) - 1
-                        sq = (arr * arr).reshape(nw, win * ch)
-                        energies = sq.sum(axis=1)
-                        row.update(
-                            total_energy=int(energies.sum()),
-                            max_energy=int(energies.max()),
-                            n_clipped=int((np.abs(arr) >= rail).sum()),
-                        )
-        except (struct.error, ValueError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in ENERGY_SCHEMA.fields])
+    w = _wav_chunks(b)
+    if w is None:
+        return None
+    _, ch, _, bits, data_pos, data_sz = w
+    if not (
+        ch > 0 and bits in (8, 16, 24) and data_pos and data_pos + data_sz <= len(b)
+    ):
+        return None
+    bps = bits // 8
+    nw = data_sz // (bps * ch) // win
+    if nw == 0:
+        return {"n_windows": 0}
+    ns = nw * win * ch
+    if bits == 16:
+        arr = np.frombuffer(b, "<i2", offset=data_pos, count=ns).astype(np.int64)
+    elif bits == 8:
+        # WAV 8-bit PCM is UNSIGNED, 128-centered
+        raw = np.frombuffer(b, np.uint8, offset=data_pos, count=ns)
+        arr = raw.astype(np.int64) - 128
+    else:  # 24-bit little-endian two's complement
+        raw = np.frombuffer(
+            b, np.uint8, offset=data_pos, count=3 * ns
+        ).astype(np.int64).reshape(ns, 3)
+        v = raw[:, 0] | (raw[:, 1] << 8) | (raw[:, 2] << 16)
+        arr = v - ((v & 0x800000) << 1)
+    rail = (1 << (bits - 1)) - 1
+    energies = (arr * arr).reshape(nw, win * ch).sum(axis=1)
+    return {
+        "n_windows": int(nw),
+        "total_energy": int(energies.sum()),
+        "max_energy": int(energies.max()),
+        "n_clipped": int((np.abs(arr) >= rail).sum()),
+    }
 
 
 def audio_window_energy(df: DataFrame, win: int = 16) -> DataFrame:
     """Windowed audio energy over MEDIA_SCHEMA input (see module doc).
-    Arrow-batched mapInPandas; partition parallelism is decode
-    parallelism."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _energy_batch(pdf, win)
-
-    return map_pandas(df, gen, ENERGY_SCHEMA, ["media_id", "content"])
+    Non-WAV/corrupt blobs degrade to format='unknown', zeros."""
+    return blob_stats(df, lambda b: _energy_walk(b, win), ENERGY_SCHEMA, "wav")
 
 
 ZCR_SCHEMA = StructType(
@@ -148,72 +105,40 @@ ZCR_SCHEMA = StructType(
 )
 
 
-def _zcr_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def _zcr_walk(b: bytes) -> dict | None:
     """Per-channel zero-crossing count + total absolute amplitude over
     ALL frames (no windowing/truncation — unlike the energy pass this
     uses the full data chunk). A crossing is a flip of the (x >= 0)
     sign bit between consecutive frames WITHIN a channel — the frame
     stride must deinterleave correctly or counts mismatch the oracle."""
-    import struct
-
     import numpy as np
 
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "n_frames": 0,
-            "n_zero_cross": 0,
-            "abs_sum": 0,
-        }
-        try:
-            if b[:4] == b"RIFF" and b[8:12] == b"WAVE" and len(b) >= 44:
-                ch = bits = 0
-                data_pos = data_sz = 0
-                pos = 12
-                while pos + 8 <= len(b):
-                    cid, csz = struct.unpack_from("<4sI", b, pos)
-                    if cid == b"fmt ":
-                        _, ch, _, _, _, bits = struct.unpack_from(
-                            "<HHIIHH", b, pos + 8
-                        )
-                    elif cid == b"data":
-                        data_pos, data_sz = pos + 8, csz
-                    pos += 8 + csz + (csz & 1)
-                if ch > 0 and bits == 16 and data_pos and data_pos + data_sz <= len(b):
-                    nf = data_sz // (2 * ch)
-                    row.update(format="wav", n_frames=int(nf))
-                    if nf > 0:
-                        arr = np.frombuffer(
-                            b, "<i2", offset=data_pos, count=nf * ch
-                        ).astype(np.int64).reshape(nf, ch)
-                        nonneg = arr >= 0
-                        row.update(
-                            n_zero_cross=int(
-                                (nonneg[1:] != nonneg[:-1]).sum()
-                            ),
-                            abs_sum=int(np.abs(arr).sum()),
-                        )
-        except (struct.error, ValueError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in ZCR_SCHEMA.fields])
+    w = _wav_chunks(b)
+    if w is None:
+        return None
+    _, ch, _, bits, data_pos, data_sz = w
+    if not (ch > 0 and bits == 16 and data_pos and data_pos + data_sz <= len(b)):
+        return None
+    nf = data_sz // (2 * ch)
+    if nf == 0:
+        return {"n_frames": 0}
+    arr = np.frombuffer(
+        b, "<i2", offset=data_pos, count=nf * ch
+    ).astype(np.int64).reshape(nf, ch)
+    nonneg = arr >= 0
+    return {
+        "n_frames": int(nf),
+        "n_zero_cross": int((nonneg[1:] != nonneg[:-1]).sum()),
+        "abs_sum": int(np.abs(arr).sum()),
+    }
 
 
 def audio_zero_crossings(df: DataFrame) -> DataFrame:
     """Zero-crossing rate + absolute-amplitude screen over MEDIA_SCHEMA
     WAV blobs — the cheap voiced/unvoiced + silence heuristic an audio
     curation pipeline runs before any model-based filter. Same scale
-    shape as audio_window_energy: Arrow-batched mapInPandas, 5 scalar
-    columns out per file."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _zcr_batch(pdf)
-
-    return map_pandas(df, gen, ZCR_SCHEMA, ["media_id", "content"])
+    shape as audio_window_energy: 5 scalar columns out per file."""
+    return blob_stats(df, _zcr_walk, ZCR_SCHEMA, "wav")
 
 
 def synthesize_wav_depths(docs: DataFrame) -> DataFrame:
@@ -223,12 +148,9 @@ def synthesize_wav_depths(docs: DataFrame) -> DataFrame:
     ``(i*13 + 5k) % 2^bits``, centered per depth, so a DuckDB oracle
     recomputes every energy integer blind with ONE formula
     parameterized by the modulus."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
     import numpy as np
     import struct
-
-    docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
         bits = {0: 8, 1: 24, 2: 16}[i % 3]
@@ -261,26 +183,7 @@ def synthesize_wav_depths(docs: DataFrame) -> DataFrame:
             + payload
         )
 
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "wav",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 8000,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make, blob_meta("wav", sample_rate=8000))
 
 
 ULAW_SCHEMA = StructType(
@@ -312,78 +215,38 @@ def _ulaw_lut():
     return np.where(sign == 1, 132 - t, t - 132)
 
 
-def _ulaw_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def _ulaw_walk(b: bytes) -> dict | None:
     """RIFF walk accepting ONLY WAVE_FORMAT_MULAW (fmt tag 7, 8-bit);
-    anything else — PCM, truncated, foreign bytes — degrades to
-    format='unknown', zeros."""
-    import struct
-
+    anything else — PCM, truncated, foreign bytes — is refused."""
     import numpy as np
 
-    lut = _ulaw_lut()
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "n_samples": 0,
-            "abs_sum": 0,
-            "energy": 0,
-            "max_abs": 0,
-        }
-        try:
-            if b[:4] == b"RIFF" and b[8:12] == b"WAVE" and len(b) >= 44:
-                tag = ch = bits = 0
-                data_pos = data_sz = 0
-                pos = 12
-                while pos + 8 <= len(b):
-                    cid, csz = struct.unpack_from("<4sI", b, pos)
-                    if cid == b"fmt ":
-                        tag, ch, _, _, _, bits = struct.unpack_from(
-                            "<HHIIHH", b, pos + 8
-                        )
-                    elif cid == b"data":
-                        data_pos, data_sz = pos + 8, csz
-                    pos += 8 + csz + (csz & 1)
-                if (
-                    tag == 7
-                    and ch > 0
-                    and bits == 8
-                    and data_pos
-                    and data_pos + data_sz <= len(b)
-                ):
-                    ns = data_sz  # one byte per sample
-                    row.update(format="ulaw", n_samples=int(ns))
-                    if ns > 0:
-                        raw = np.frombuffer(
-                            b, np.uint8, offset=data_pos, count=ns
-                        )
-                        dec = lut[raw]
-                        ab = np.abs(dec)
-                        row.update(
-                            abs_sum=int(ab.sum()),
-                            energy=int((dec * dec).sum()),
-                            max_abs=int(ab.max()),
-                        )
-        except (struct.error, ValueError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in ULAW_SCHEMA.fields])
+    w = _wav_chunks(b)
+    if w is None:
+        return None
+    tag, ch, _, bits, data_pos, data_sz = w
+    if not (
+        tag == 7 and ch > 0 and bits == 8 and data_pos and data_pos + data_sz <= len(b)
+    ):
+        return None
+    ns = data_sz  # one byte per sample
+    if ns == 0:
+        return {"n_samples": 0}
+    dec = _ulaw_lut()[np.frombuffer(b, np.uint8, offset=data_pos, count=ns)]
+    ab = np.abs(dec)
+    return {
+        "n_samples": int(ns),
+        "abs_sum": int(ab.sum()),
+        "energy": int((dec * dec).sum()),
+        "max_abs": int(ab.max()),
+    }
 
 
 def audio_ulaw_stats(df: DataFrame) -> DataFrame:
     """G.711 mu-law decode + amplitude stats over MEDIA_SCHEMA blobs —
     the telephony-audio leg of the decode surface (8 kHz call-center /
     voicemail corpora arrive mu-law-companded, not linear PCM). Same
-    scale shape as audio_window_energy: Arrow-batched mapInPandas,
-    blobs cross into Python once, 6 scalar columns out per file."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _ulaw_batch(pdf)
-
-    return map_pandas(df, gen, ULAW_SCHEMA, ["media_id", "content"])
+    scale shape as audio_window_energy: 6 scalar columns out per file."""
+    return blob_stats(df, _ulaw_walk, ULAW_SCHEMA, "ulaw")
 
 
 def synthesize_wav_ulaw(docs: DataFrame) -> DataFrame:
@@ -392,12 +255,9 @@ def synthesize_wav_ulaw(docs: DataFrame) -> DataFrame:
     oracle expands every sample blind through the same G.711 integer
     formula. Every 13th id is truncated mid-header — the honest
     corrupt-row stripe that must degrade to 'unknown'."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
     import numpy as np
     import struct
-
-    docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
         ch = 1 + i % 2
@@ -417,26 +277,7 @@ def synthesize_wav_ulaw(docs: DataFrame) -> DataFrame:
         )
         return blob[:20] if i % 13 == 0 else blob
 
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "wav",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 8000,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make, blob_meta("wav", sample_rate=8000))
 
 
 # IMA ADPCM step-size table (IMA Digital Audio Pack 1992 / Microsoft
@@ -496,65 +337,35 @@ def _adpcm_decode_block(b: bytes, off: int, nb: int, samples: list[int]) -> int:
     return idx
 
 
-def _adpcm_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def _adpcm_walk(b: bytes) -> dict | None:
     """RIFF walk accepting ONLY WAVE_FORMAT_IMA_ADPCM (tag 0x11, 4-bit,
-    MONO); anything else degrades to 'unknown'. Multi-block data decodes
+    MONO); anything else is refused. Multi-block data decodes
     block-by-block at block_align stride."""
-    import struct
-
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "n_samples": 0,
-            "abs_sum": 0,
-            "energy": 0,
-            "final_pred": 0,
-            "final_idx": 0,
-        }
-        try:
-            if b[:4] == b"RIFF" and b[8:12] == b"WAVE" and len(b) >= 44:
-                tag = ch = bits = balign = 0
-                data_pos = data_sz = 0
-                pos = 12
-                while pos + 8 <= len(b):
-                    cid, csz = struct.unpack_from("<4sI", b, pos)
-                    if cid == b"fmt ":
-                        tag, ch, _, _, balign, bits = struct.unpack_from(
-                            "<HHIIHH", b, pos + 8
-                        )
-                    elif cid == b"data":
-                        data_pos, data_sz = pos + 8, csz
-                    pos += 8 + csz + (csz & 1)
-                if (
-                    tag == 0x11
-                    and ch == 1
-                    and bits == 4
-                    and balign >= 5
-                    and data_pos
-                    and data_pos + data_sz <= len(b)
-                    and data_sz % balign == 0
-                ):
-                    samples: list[int] = []
-                    idx = 0
-                    for boff in range(data_pos, data_pos + data_sz, balign):
-                        idx = _adpcm_decode_block(
-                            b, boff, balign - 4, samples
-                        )
-                    row.update(
-                        format="adpcm",
-                        n_samples=len(samples),
-                        abs_sum=int(sum(abs(s) for s in samples)),
-                        energy=int(sum(s * s for s in samples)),
-                        final_pred=int(samples[-1]),
-                        final_idx=int(idx),
-                    )
-        except (struct.error, ValueError, IndexError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in ADPCM_SCHEMA.fields])
+    w = _wav_chunks(b)
+    if w is None:
+        return None
+    tag, ch, balign, bits, data_pos, data_sz = w
+    if not (
+        tag == 0x11
+        and ch == 1
+        and bits == 4
+        and balign >= 5
+        and data_pos
+        and data_pos + data_sz <= len(b)
+        and data_sz % balign == 0
+    ):
+        return None
+    samples: list[int] = []
+    idx = 0
+    for boff in range(data_pos, data_pos + data_sz, balign):
+        idx = _adpcm_decode_block(b, boff, balign - 4, samples)
+    return {
+        "n_samples": len(samples),
+        "abs_sum": int(sum(abs(s) for s in samples)),
+        "energy": int(sum(s * s for s in samples)),
+        "final_pred": int(samples[-1]),
+        "final_idx": int(idx),
+    }
 
 
 def audio_adpcm_stats(df: DataFrame) -> DataFrame:
@@ -562,13 +373,8 @@ def audio_adpcm_stats(df: DataFrame) -> DataFrame:
     PREDICTIVE-codec leg of the decode surface (4:1-compressed speech;
     the decoder carries per-sample adaptive state, so any nibble-order,
     clamp, or step-table error compounds and is caught by the
-    final_pred/final_idx checksums). Arrow-batched mapInPandas."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _adpcm_batch(pdf)
-
-    return map_pandas(df, gen, ADPCM_SCHEMA, ["media_id", "content"])
+    final_pred/final_idx checksums)."""
+    return blob_stats(df, _adpcm_walk, ADPCM_SCHEMA, "adpcm")
 
 
 def synthesize_wav_adpcm(docs: DataFrame) -> DataFrame:
@@ -577,11 +383,8 @@ def synthesize_wav_adpcm(docs: DataFrame) -> DataFrame:
     nibble k = (i*13 + 7k)%16 are all LCG formulas so a DuckDB oracle
     replays the ENTIRE adaptive decode blind via list_reduce. Every
     17th id is truncated mid-header -> 'unknown'."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
     import struct
-
-    docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
         pred0 = ((i * 37) % 4096) - 2048
@@ -606,23 +409,4 @@ def synthesize_wav_adpcm(docs: DataFrame) -> DataFrame:
         )
         return blob[:30] if i % 17 == 0 else blob
 
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "wav",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 8000,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make, blob_meta("wav", sample_rate=8000))

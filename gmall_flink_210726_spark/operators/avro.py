@@ -45,14 +45,15 @@ from __future__ import annotations
 import json
 import struct
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _Reader,
     snappy_decompress,
@@ -473,90 +474,35 @@ AVRO_SCHEMA = StructType(
 )
 
 
-def _avro_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = {
-            "media_id": int(mid),
-            "format": "unknown",
-            "codec": "",
-            "n_records": 0,
-            "n_blocks": 0,
-            "id_sum": 0,
-            "name_count": 0,
-            "name_len_sum": 0,
-            "vals_count": 0,
-            "vals_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            got = read_avro_container(b)
-        except Exception:
-            got = None
-        if got is not None:
-            records, codec, n_blocks = got
-            row.update(
-                format="avro",
-                codec=codec,
-                n_records=len(records),
-                n_blocks=n_blocks,
-                id_sum=sum(rec["id"] for rec in records),
-                name_count=sum(
-                    1 for rec in records if rec["name"] is not None
-                ),
-                name_len_sum=sum(
-                    len(rec["name"])
-                    for rec in records
-                    if rec["name"] is not None
-                ),
-                vals_count=sum(len(rec["vals"]) for rec in records),
-                vals_sum=sum(sum(rec["vals"]) for rec in records),
-            )
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in AVRO_SCHEMA.fields])
+def _avro_walk(b: bytes) -> dict | None:
+    got = read_avro_container(b)
+    if got is None:
+        return None
+    records, codec, n_blocks = got
+    return dict(
+        codec=codec,
+        n_records=len(records),
+        n_blocks=n_blocks,
+        id_sum=sum(rec["id"] for rec in records),
+        name_count=sum(1 for rec in records if rec["name"] is not None),
+        name_len_sum=sum(
+            len(rec["name"]) for rec in records if rec["name"] is not None
+        ),
+        vals_count=sum(len(rec["vals"]) for rec in records),
+        vals_sum=sum(sum(rec["vals"]) for rec in records),
+    )
 
 
 def avro_container_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded Avro object-container walk over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _avro_batch(pdf)
-
-    return map_pandas(df, gen, AVRO_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _avro_walk, AVRO_SCHEMA, "avro")
 
 
 def synthesize_avro_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Avro object-container files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_avro(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "avro",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_avro, blob_meta("avro"), partitions)
 
 
 # --------------------------------------------------------------------------
@@ -937,88 +883,33 @@ AVRO_EVO_SCHEMA = StructType(
 )
 
 
-def _avro_evo_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = {
-            "media_id": int(mid),
-            "format": "unknown",
-            "n_records": 0,
-            "id_sum": 0,
-            "qty_sum": 0,
-            "name_count": 0,
-            "name_len_sum": 0,
-            "score_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            got = read_avro_resolved(b, READER_V2)
-        except Exception:
-            got = None
-        if got is not None:
-            records, _, _ = got
-            row.update(
-                format="avro",
-                n_records=len(records),
-                id_sum=sum(rec["id"] for rec in records),
-                qty_sum=sum(rec["qty"] for rec in records),
-                name_count=sum(
-                    1 for rec in records if rec["name"] is not None
-                ),
-                name_len_sum=sum(
-                    len(rec["name"])
-                    for rec in records
-                    if rec["name"] is not None
-                ),
-                score_sum=sum(rec["score"] for rec in records),
-            )
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in AVRO_EVO_SCHEMA.fields]
+def _avro_evo_walk(b: bytes) -> dict | None:
+    got = read_avro_resolved(b, READER_V2)
+    if got is None:
+        return None
+    records, _, _ = got
+    return dict(
+        n_records=len(records),
+        id_sum=sum(rec["id"] for rec in records),
+        qty_sum=sum(rec["qty"] for rec in records),
+        name_count=sum(1 for rec in records if rec["name"] is not None),
+        name_len_sum=sum(
+            len(rec["name"]) for rec in records if rec["name"] is not None
+        ),
+        score_sum=sum(rec["score"] for rec in records),
     )
 
 
 def avro_evolution_stats(df: DataFrame) -> DataFrame:
     """Reader-schema (v2) decode of v1-writer containers."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _avro_evo_batch(pdf)
-
-    return map_pandas(df, gen, AVRO_EVO_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _avro_evo_walk, AVRO_EVO_SCHEMA, "avro")
 
 
 def synthesize_avro_v1_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of v1-writer Avro containers."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_avro_v1(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "avro",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_avro_v1, blob_meta("avro"), partitions)
 
 
 # --------------------------------------------------------------------------
@@ -1157,72 +1048,20 @@ def _avro_logical_one(i: int, data: bytes) -> dict | None:
 
 def avro_logical_stats(df: DataFrame) -> DataFrame:
     """Logical-type container decode over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in AVRO_LOGICAL_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                row = {
-                    "media_id": mid,
-                    "format": "unknown",
-                    "codec": "",
-                    "n_records": 0,
-                    "n_blocks": 0,
-                    "price_unscaled_sum": 0,
-                    "qty_unscaled_sum": 0,
-                    "date_min": "",
-                    "ts_max_iso": "",
-                    "uuid_first": "",
-                    "lt_ignored": 0,
-                }
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = _avro_logical_one(mid, b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="avro_lt", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, AVRO_LOGICAL_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b, mid: _avro_logical_one(mid, b),
+        AVRO_LOGICAL_SCHEMA,
+        "avro_lt",
+        by_id=True,
+    )
 
 
 def synthesize_avro_logical_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of logical-type Avro containers."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_avro_logical(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "avro",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_avro_logical, blob_meta("avro"), partitions)
 
 
 # --------------------------------------------------------------------------

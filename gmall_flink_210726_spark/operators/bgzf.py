@@ -31,9 +31,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -43,7 +41,11 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.inflate import inflate
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 # SAM spec §4.1.2: the EOF marker is this exact 28-byte empty block
 _EOF_MARKER = bytes.fromhex(
@@ -178,25 +180,7 @@ BGZF_SCHEMA = StructType(
 def bgzf_stats(df: DataFrame) -> DataFrame:
     """Random-access BGZF proof over MEDIA_SCHEMA blobs; the target
     offset derives from media_id."""
-    cols = [f.name for f in BGZF_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_bgzf(b, int(mid))
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="bgzf", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, BGZF_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_bgzf, BGZF_SCHEMA, "bgzf", by_id=True)
 
 
 def _bgzf_nb(i: int) -> int:
@@ -286,27 +270,4 @@ def make_bgzf(i: int) -> bytes:
 
 def synthesize_bgzf_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of BGZF streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make_bgzf(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "bgzf",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_bgzf, blob_meta("bgzf"))

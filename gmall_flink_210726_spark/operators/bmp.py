@@ -25,14 +25,14 @@ a handful of integer stats per file is all that shuffles.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 BMP_SCHEMA = StructType(
     [
@@ -85,86 +85,63 @@ def _decode_rle8(data: bytes, w: int, h: int) -> list[list[int]] | None:
             pos += c1 + (c1 & 1)
 
 
-def _bmp_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def _bmp_walk(b: bytes) -> dict | None:
     import struct
 
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "width": 0,
-            "height": 0,
-            "idx_sum": 0,
-            "weighted_sum": 0,
-        }
-        try:
-            if b[:2] == b"BM" and len(b) >= 54:
-                (_, _, _, data_off) = struct.unpack_from("<IHHI", b, 2)
-                (
-                    hdr_sz,
-                    w,
-                    h,
-                    _planes,
-                    bpp,
-                    compression,
-                    _img_sz,
-                ) = struct.unpack_from("<iiiHHII", b, 14)
-                if (
-                    hdr_sz == 40
-                    and bpp == 8
-                    and compression == 1  # BI_RLE8
-                    and w > 0
-                    and h > 0  # positive height: bottom-up
-                    and data_off <= len(b)
-                    and 14 + 40 + 1024 <= data_off
-                ):
-                    pal_off = 14 + hdr_sz
-                    # BGRX quads
-                    pal = [
-                        (
-                            b[pal_off + 4 * p],
-                            b[pal_off + 4 * p + 1],
-                            b[pal_off + 4 * p + 2],
-                        )
-                        for p in range(256)
-                    ]
-                    stored = _decode_rle8(b[data_off:], w, h)
-                    if stored is not None:
-                        # stored row 0 is the BOTTOM image row
-                        idx_sum = 0
-                        wsum = 0
-                        for yf, r in enumerate(stored):
-                            yi = h - 1 - yf
-                            rw = 0
-                            for v in r:
-                                idx_sum += v
-                                bb, gg, rr = pal[v]
-                                rw += rr + 2 * gg + 3 * bb
-                            wsum += (yi + 1) * rw
-                        row.update(
-                            format="bmp",
-                            width=int(w),
-                            height=int(h),
-                            idx_sum=int(idx_sum),
-                            weighted_sum=int(wsum),
-                        )
-        except (struct.error, ValueError, IndexError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in BMP_SCHEMA.fields])
+    if not (b[:2] == b"BM" and len(b) >= 54):
+        return None
+    (_, _, _, data_off) = struct.unpack_from("<IHHI", b, 2)
+    (
+        hdr_sz,
+        w,
+        h,
+        _planes,
+        bpp,
+        compression,
+        _img_sz,
+    ) = struct.unpack_from("<iiiHHII", b, 14)
+    if not (
+        hdr_sz == 40
+        and bpp == 8
+        and compression == 1  # BI_RLE8
+        and w > 0
+        and h > 0  # positive height: bottom-up
+        and data_off <= len(b)
+        and 14 + 40 + 1024 <= data_off
+    ):
+        return None
+    pal_off = 14 + hdr_sz
+    # BGRX quads
+    pal = [
+        (b[pal_off + 4 * p], b[pal_off + 4 * p + 1], b[pal_off + 4 * p + 2])
+        for p in range(256)
+    ]
+    stored = _decode_rle8(b[data_off:], w, h)
+    if stored is None:
+        return None
+    # stored row 0 is the BOTTOM image row
+    idx_sum = 0
+    wsum = 0
+    for yf, r in enumerate(stored):
+        yi = h - 1 - yf
+        rw = 0
+        for v in r:
+            idx_sum += v
+            bb, gg, rr = pal[v]
+            rw += rr + 2 * gg + 3 * bb
+        wsum += (yi + 1) * rw
+    return {
+        "width": int(w),
+        "height": int(h),
+        "idx_sum": int(idx_sum),
+        "weighted_sum": int(wsum),
+    }
 
 
 def bmp_rle_stats(df: DataFrame) -> DataFrame:
     """RLE8 BMP decode + palette-weighted pixel stats over MEDIA_SCHEMA
     blobs (see module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _bmp_batch(pdf)
-
-    return map_pandas(df, gen, BMP_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _bmp_walk, BMP_SCHEMA, "bmp")
 
 
 def synthesize_bmp_rle_media(docs: DataFrame) -> DataFrame:
@@ -180,11 +157,8 @@ def synthesize_bmp_rle_media(docs: DataFrame) -> DataFrame:
     formulas of (id, row) so a DuckDB oracle recomputes both checksums
     blind. Every 11th id is truncated mid-palette — the corrupt stripe
     that must degrade to 'unknown'."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
     import struct
-
-    docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
         w = 16 + i % 9
@@ -231,23 +205,4 @@ def synthesize_bmp_rle_media(docs: DataFrame) -> DataFrame:
         )
         return blob[:40] if i % 11 == 0 else blob
 
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "bmp",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make, blob_meta("bmp"))

@@ -34,9 +34,7 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -45,7 +43,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 
 def _cstring(data: bytes, pos: int) -> tuple[bytes, int] | None:
@@ -209,32 +211,7 @@ BSON_SCHEMA = StructType(
 
 def bson_stats(df: DataFrame) -> DataFrame:
     """BSON dump census over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in BSON_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_bson_dump(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(
-                        {
-                            k: v
-                            for k, v in st.items()
-                            if k in cols
-                        },
-                        format="bson",
-                    )
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, BSON_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_bson_dump, BSON_SCHEMA, "bson")
 
 
 # --------------------------------------------------------------------------
@@ -334,29 +311,4 @@ def make_bson_dump(i: int) -> bytes:
 
 def synthesize_bson_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of BSON dumps."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        make_bson_dump(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "bson",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_bson_dump, blob_meta("bson"))

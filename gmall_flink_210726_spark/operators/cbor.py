@@ -425,9 +425,6 @@ def _make_cbor_blob(
 
 def cbor_records_stats(df):
     """CBOR-sequence walk over MEDIA_SCHEMA blobs."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -435,7 +432,7 @@ def cbor_records_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.operators.multimodal import blob_stats
 
     schema = StructType(
         [
@@ -452,60 +449,14 @@ def cbor_records_stats(df):
             StructField("n_null", LongType()),
         ]
     )
-
-    def batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        zero = {
-            f.name: 0 for f in schema.fields if f.name != "format"
-        }
-        for mid, blob in zip(pdf["media_id"], pdf["content"]):
-            row = dict(zero, media_id=int(mid), format="unknown")
-            b = bytes(blob) if blob is not None else b""
-            try:
-                st = read_cbor_records(b)
-            except Exception:
-                st = None
-            if st is not None:
-                row.update(format="cbor", **st)
-            out.append(row)
-        return pd.DataFrame(out, columns=[f.name for f in schema.fields])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield batch(pdf)
-
-    return map_pandas(df, gen, schema, ["media_id", "content"])
+    return blob_stats(df, read_cbor_records, schema, "cbor")
 
 
 def synthesize_cbor_media(docs):
     """MEDIA_SCHEMA table of CBOR-sequence blobs."""
-    import pandas as pd
-
     from gmall_flink_210726_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        map_pandas,
+        blob_meta,
+        synthesize_blobs,
     )
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_cbor_blob(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "cbor",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_cbor_blob, blob_meta("cbor"))

@@ -31,7 +31,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    map_pandas,
+    synthesize_blobs,
+)
 
 # Windows-1252 0x80-0x9F -> Unicode, hand-written from the public
 # code chart (https://en.wikipedia.org/wiki/Windows-1252 reproduces
@@ -219,30 +223,7 @@ def _make_charset(i: int) -> bytes:
 
 def synthesize_charset_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of mixed-encoding byte streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_charset(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "bytes",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_charset, blob_meta("bytes"))
 
 
 # --------------------------------------------------------------------------
@@ -386,30 +367,7 @@ def _make_charset_web(i: int) -> bytes:
 
 def synthesize_charset_web_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of six-stripe web-tail byte streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_charset_web(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "bytes",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_charset_web, blob_meta("bytes"))
 
 
 # --------------------------------------------------------------------------

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import map_pandas
+from gmall_flink_210726_spark.operators.multimodal import blob_stats, map_pandas
 
 
 def parse_csv(text: str) -> list[list[str]] | None:
@@ -146,37 +146,11 @@ def _csv_stats(text: str) -> dict | None:
     }
 
 
-def _csv_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, text in zip(pdf["media_id"], pdf["csv"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_rows": 0,
-            "n_fields": 0,
-            "amt_sum": 0,
-            "note_newlines": 0,
-            "quote_chars": 0,
-        }
-        try:
-            st = _csv_stats(text if text is not None else "")
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="csv", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in CSV_SCHEMA.fields])
-
-
 def csv_parse_stats(df: DataFrame) -> DataFrame:
     """RFC 4180 parse over ``(media_id, csv)`` rows."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _csv_batch(pdf)
-
-    return map_pandas(df, gen, CSV_SCHEMA, ["media_id", "csv"])
+    return blob_stats(
+        df, lambda t: _csv_stats(t or ""), CSV_SCHEMA, "csv", cols=("media_id", "csv")
+    )
 
 
 # --------------------------------------------------------------------------

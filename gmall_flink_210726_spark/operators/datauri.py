@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import map_pandas
+from gmall_flink_210726_spark.operators.multimodal import blob_stats, map_pandas
 
 _B64_ALPHABET = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/"
@@ -155,39 +155,15 @@ def _extract_one(html: str) -> dict | None:
     }
 
 
-def _datauri_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, page in zip(pdf["media_id"], pdf["html"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_uris": 0,
-            "img_w": 0,
-            "img_h": 0,
-            "img_payload_sum": 0,
-            "txt_sum": 0,
-        }
-        try:
-            st = _extract_one(page if page is not None else "")
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="datauri", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in DATAURI_SCHEMA.fields]
-    )
-
-
 def data_uri_image_stats(df: DataFrame) -> DataFrame:
     """Inline-image extraction over ``(media_id, html)`` rows."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _datauri_batch(pdf)
-
-    return map_pandas(df, gen, DATAURI_SCHEMA, ["media_id", "html"])
+    return blob_stats(
+        df,
+        lambda t: _extract_one(t or ""),
+        DATAURI_SCHEMA,
+        "datauri",
+        cols=("media_id", "html"),
+    )
 
 
 # --------------------------------------------------------------------------

@@ -30,9 +30,7 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -41,7 +39,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _decode_rle_hybrid,
     _page_decompress,
@@ -367,34 +369,9 @@ DELTACP_SCHEMA = StructType(
 )
 
 
-def _deltacp_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0 for f in DELTACP_SCHEMA.fields if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_delta_checkpoint_table(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="delta", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in DELTACP_SCHEMA.fields]
-    )
-
-
 def delta_checkpoint_stats(df: DataFrame) -> DataFrame:
     """Checkpoint-accelerated Delta scan over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _deltacp_batch(pdf)
-
-    return map_pandas(df, gen, DELTACP_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_delta_checkpoint_table, DELTACP_SCHEMA, "delta")
 
 
 # ------------------------------------------------------------ fixtures
@@ -567,33 +544,7 @@ def _make_delta_checkpoint_table(
 
 def synthesize_delta_checkpoint_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of checkpointed Delta tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_delta_checkpoint_table(int(i))
-                        for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_delta_checkpoint_table, blob_meta("delta"))
 
 
 # ------------------------------------------------------ V2 checkpoints
@@ -968,62 +919,9 @@ def _make_delta_v2_checkpoint_table(
 
 def synthesize_delta_v2_checkpoint_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of v2-checkpoint Delta table tars."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_delta_v2_checkpoint_table(int(x))
-                        for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
-
-
-def _deltacp2_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0
-        for f in DELTACP2_SCHEMA.fields
-        if f.name not in ("media_id", "format")
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = {"media_id": int(mid), "format": "unknown", **zero}
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_delta_v2_checkpoint_table(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="delta", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in DELTACP2_SCHEMA.fields]
-    )
+    return synthesize_blobs(docs, _make_delta_v2_checkpoint_table, blob_meta("delta"))
 
 
 def delta_v2_checkpoint_stats(df: DataFrame) -> DataFrame:
     """V2-checkpoint reads over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _deltacp2_batch(pdf)
-
-    return map_pandas(df, gen, DELTACP2_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_delta_v2_checkpoint_table, DELTACP2_SCHEMA, "delta")

@@ -40,9 +40,7 @@ import json
 import struct
 import uuid as _uuid
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -54,7 +52,11 @@ from pyspark.sql.types import (
 from gmall_flink_210726_spark.operators.deltalog import (
     _collect_commits,
 )
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.roaring import (
     b85_decode,
     b85_encode,
@@ -305,34 +307,9 @@ DVSCAN_SCHEMA = StructType(
 )
 
 
-def _dvscan_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0 for f in DVSCAN_SCHEMA.fields if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = scan_delta_table_mor(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="delta", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in DVSCAN_SCHEMA.fields]
-    )
-
-
 def delta_dv_scan_stats(df: DataFrame) -> DataFrame:
     """Merge-on-read Delta scan over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _dvscan_batch(pdf)
-
-    return map_pandas(df, gen, DVSCAN_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, scan_delta_table_mor, DVSCAN_SCHEMA, "delta")
 
 
 # --------------------------------------------------------------------------
@@ -499,32 +476,4 @@ def synthesize_delta_dv_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Delta tables with deletion vectors."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_delta_dv_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_delta_dv_table, blob_meta("delta"), partitions)

@@ -28,14 +28,15 @@ the table-format layer. Arrow-batched ``mapInPandas``, zero shuffle.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -228,30 +229,9 @@ def replay_delta_log(data: bytes) -> dict | None:
     }
 
 
-def _delta_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {f.name: 0 for f in DELTA_SCHEMA.fields if f.name != "format"}
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = replay_delta_log(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="delta", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in DELTA_SCHEMA.fields])
-
-
 def delta_snapshot_stats(df: DataFrame) -> DataFrame:
     """Delta-log replay over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _delta_batch(pdf)
-
-    return map_pandas(df, gen, DELTA_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, replay_delta_log, DELTA_SCHEMA, "delta")
 
 
 # --------------------------------------------------------------------------
@@ -343,30 +323,7 @@ def _make_delta_log(i: int, bad_stripe: int = 12) -> bytes:
 
 def synthesize_delta_log_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Delta transaction logs (tar blobs)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_delta_log(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_delta_log, blob_meta("delta"))
 
 
 # --------------------------------------------------------------------------
@@ -438,34 +395,9 @@ DELTA_SCAN_SCHEMA = StructType(
 )
 
 
-def _delta_scan_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0 for f in DELTA_SCAN_SCHEMA.fields if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = scan_delta_table(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="delta", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in DELTA_SCAN_SCHEMA.fields]
-    )
-
-
 def delta_scan_stats(df: DataFrame) -> DataFrame:
     """Full Delta table scan over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _delta_scan_batch(pdf)
-
-    return map_pandas(df, gen, DELTA_SCAN_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, scan_delta_table, DELTA_SCAN_SCHEMA, "delta")
 
 
 def _scan_seed(i: int, v: int, k: int) -> int:
@@ -562,32 +494,7 @@ def _make_delta_table(i: int, bad_stripe: int = 13) -> bytes:
 
 def synthesize_delta_table_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of complete Delta tables (log + parts)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_delta_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_delta_table, blob_meta("delta"))
 
 
 # --------------------------------------------------------------------------
@@ -690,30 +597,9 @@ def scan_delta_table_pruned(data: bytes, lo: int, hi: int) -> dict | None:
 
 def delta_stats_skip_scan(df: DataFrame, lo: int, hi: int) -> DataFrame:
     """Pruned Delta scan over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            zero = {
-                f.name: 0
-                for f in DELTA_SKIP_SCHEMA.fields
-                if f.name != "format"
-            }
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = dict(zero, media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = scan_delta_table_pruned(b, lo, hi)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="delta", **st)
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in DELTA_SKIP_SCHEMA.fields]
-            )
-
-    return map_pandas(df, gen, DELTA_SKIP_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df, lambda b: scan_delta_table_pruned(b, lo, hi), DELTA_SKIP_SCHEMA, "delta"
+    )
 
 
 def _make_delta_table_stats(i: int) -> bytes:
@@ -821,32 +707,7 @@ def _make_delta_table_stats(i: int) -> bytes:
 
 def synthesize_delta_stats_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Delta tables with min/max file stats."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_delta_table_stats(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_delta_table_stats, blob_meta("delta"))
 
 
 # --------------------------------------------------------------------------
@@ -906,25 +767,9 @@ DELTA_ASOF_SCHEMA = StructType(
 
 def delta_asof_stats(df: DataFrame, version: int) -> DataFrame:
     """Version-as-of replay over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in DELTA_ASOF_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = replay_delta_log_asof(b, version)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="delta", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, DELTA_ASOF_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df, lambda b: replay_delta_log_asof(b, version), DELTA_ASOF_SCHEMA, "delta"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1015,27 +860,12 @@ def delta_partition_prune_scan(
     df: DataFrame, pcol: str, pval: str
 ) -> DataFrame:
     """Partition-pruned Delta scan over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in DELTA_PART_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = scan_delta_table_partition_pruned(
-                        b, pcol, pval
-                    )
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="delta", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, DELTA_PART_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b: scan_delta_table_partition_pruned(b, pcol, pval),
+        DELTA_PART_SCHEMA,
+        "delta",
+    )
 
 
 def _part_kvals(i: int, v: int, k: int) -> tuple[int, list[int]]:
@@ -1148,32 +978,7 @@ def _make_delta_part_table(i: int) -> bytes:
 
 def synthesize_delta_part_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of partitioned Delta tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_delta_part_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_delta_part_table, blob_meta("delta"))
 
 
 # --------------------------------------------------------------------------
@@ -1327,27 +1132,13 @@ DELTA_CM_SCHEMA = StructType(
 
 def delta_column_mapping_scan(df: DataFrame) -> DataFrame:
     """Column-mapped Delta scan over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in DELTA_CM_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(
-                    media_id=int(mid), format="unknown", mode="none"
-                )
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = scan_delta_column_mapped(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="delta", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, DELTA_CM_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        scan_delta_column_mapped,
+        DELTA_CM_SCHEMA,
+        "delta",
+        defaults={"mode": "none"},
+    )
 
 
 def _cm_n(i: int, f: int) -> int:
@@ -1492,32 +1283,7 @@ def _make_delta_cm_table(i: int) -> bytes:
 
 def synthesize_delta_cm_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of column-mapped Delta tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_delta_cm_table(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_delta_cm_table, blob_meta("delta"))
 
 
 # --------------------------------------------------------------------------
@@ -1627,25 +1393,7 @@ DELTA_CRC_SCHEMA = StructType(
 
 def delta_checked_scan(df: DataFrame) -> DataFrame:
     """Checksum-verified Delta scan over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in DELTA_CRC_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = scan_delta_table_checked(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="delta", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, DELTA_CRC_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, scan_delta_table_checked, DELTA_CRC_SCHEMA, "delta")
 
 
 def _make_delta_crc_table(i: int) -> bytes:
@@ -1758,32 +1506,7 @@ def _make_delta_crc_table(i: int) -> bytes:
 
 def synthesize_delta_crc_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of checksum-carrying Delta tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_delta_crc_table(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_delta_crc_table, blob_meta("delta"))
 
 
 # --------------------------------------------------------------------------
@@ -1957,25 +1680,7 @@ CDF_SCHEMA = StructType(
 
 def delta_cdf_stats(df: DataFrame) -> DataFrame:
     """Change-data-feed read over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in CDF_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_delta_cdf(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="delta-cdf", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, CDF_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_delta_cdf, CDF_SCHEMA, "delta-cdf")
 
 
 def _cdf_n0(i: int) -> int:
@@ -2197,29 +1902,4 @@ def _make_delta_cdf_table(i: int) -> bytes:
 
 def synthesize_delta_cdf_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of CDF-enabled Delta tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_delta_cdf_table(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "delta",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_delta_cdf_table, blob_meta("delta"))

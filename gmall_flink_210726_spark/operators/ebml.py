@@ -45,9 +45,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -56,7 +54,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 _ID_EBML = 0x1A45DFA3
 _ID_DOCTYPE = 0x4282
@@ -275,7 +277,7 @@ def read_webm(data: bytes) -> dict | None:
 
 
 # --------------------------------------------------------------------------
-# Spark wrapper
+# Spark wrapper: one ``blob_stats`` call (operators/multimodal.py)
 # --------------------------------------------------------------------------
 
 WEBM_SCHEMA = StructType(
@@ -296,25 +298,7 @@ WEBM_SCHEMA = StructType(
 
 def webm_stats(df: DataFrame) -> DataFrame:
     """EBML/Matroska container walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in WEBM_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_webm(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="webm", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, WEBM_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_webm, WEBM_SCHEMA, "webm")
 
 
 # --------------------------------------------------------------------------
@@ -459,27 +443,4 @@ def make_webm(i: int) -> bytes:
 
 def synthesize_webm_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of webm containers."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make_webm(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "webm",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_webm, blob_meta("webm"))

@@ -24,14 +24,15 @@ per blob shuffle, bodies never do.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 EXIF_SCHEMA = StructType(
     [
@@ -154,40 +155,9 @@ def _parse_jpeg_exif(b: bytes) -> dict | None:
     return exif
 
 
-def _exif_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "byte_order": "",
-            "orientation": 0,
-            "make": "",
-            "xres_num": 0,
-            "n_ifd_entries": 0,
-            "width": 0,
-            "height": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _parse_jpeg_exif(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="jpeg", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in EXIF_SCHEMA.fields])
-
-
 def jpeg_exif_stats(df: DataFrame) -> DataFrame:
     """EXIF APP1 extraction over MEDIA_SCHEMA blobs (see module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _exif_batch(pdf)
-
-    return map_pandas(df, gen, EXIF_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _parse_jpeg_exif, EXIF_SCHEMA, "jpeg")
 
 
 def _make_exif_jpeg(i: int) -> bytes:
@@ -246,27 +216,8 @@ def synthesize_exif_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of minimal JPEGs carrying REAL EXIF APP1
     payloads; every 7th id is truncated mid-structure (corrupt
     stripe). Even ids are little-endian TIFF, odd ids big-endian."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_exif_jpeg(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "jpeg",
-                            "width": 16 + int(i) % 9,
-                            "height": 8 + int(i) % 7,
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_exif_jpeg,
+        lambda i: blob_meta("jpeg", 16 + i % 9, 8 + i % 7),
+    )

@@ -25,15 +25,17 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 # CRC-8, polynomial 0x07, init 0 (FLAC frame-header checksum)
 _CRC8_TABLE = []
@@ -1047,7 +1049,7 @@ def make_flac(
 
 
 # --------------------------------------------------------------------------
-# Spark wrapper + deterministic fixture
+# Spark wrapper (one ``blob_stats`` call) + deterministic fixture
 # --------------------------------------------------------------------------
 
 FLAC_SCHEMA = StructType(
@@ -1066,25 +1068,7 @@ FLAC_SCHEMA = StructType(
 
 def flac_stats(df: DataFrame) -> DataFrame:
     """FLAC decode over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in FLAC_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_flac(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="flac", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, FLAC_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_flac, FLAC_SCHEMA, "flac")
 
 
 _KINDS = ("fixed1", "fixed2", "lpc2", "verbatim")
@@ -1134,32 +1118,4 @@ def synthesize_flac_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of FLAC blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_flac_media(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "flac",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_flac_media, blob_meta("flac"), partitions)

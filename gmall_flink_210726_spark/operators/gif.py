@@ -26,14 +26,15 @@ the oracle never sees a byte of the LZW stream.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 # ---------------------------------------------------------------- fixture
 # formulas shared with the DuckDB oracle in queries/llm7.py — the
@@ -374,66 +375,27 @@ def _decode_gif(b: bytes):
     return iw, ih, pal, idx
 
 
-def _gif_pixels_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "width": 0,
-            "height": 0,
-            "n_pixels": 0,
-            "idx_sum": 0,
-            "rgb_sum": 0,
-        }
-        try:
-            w, h, pal, idx = _decode_gif(b)
-            rgb = sum(
-                pal[3 * c] + pal[3 * c + 1] + pal[3 * c + 2] for c in idx
-            )
-            row.update(
-                format="gif",
-                width=int(w),
-                height=int(h),
-                n_pixels=int(w) * int(h),
-                idx_sum=int(sum(idx)),
-                rgb_sum=int(rgb),
-            )
-        except (ValueError, struct.error, IndexError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in GIF_SCHEMA.fields])
+def _gif_pixels_walk(b: bytes) -> dict:
+    w, h, pal, idx = _decode_gif(b)
+    rgb = sum(pal[3 * c] + pal[3 * c + 1] + pal[3 * c + 2] for c in idx)
+    return {
+        "width": int(w),
+        "height": int(h),
+        "n_pixels": int(w) * int(h),
+        "idx_sum": int(sum(idx)),
+        "rgb_sum": int(rgb),
+    }
 
 
 def synthesize_gif_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL GIF89a blobs, one per doc_id (dims
     deterministic in the id; ids hitting _GIF_BAD are mid-stream
-    truncations). Same Arrow-batched plumbing as synthesize_media."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_gif(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _GIF_BAD(i) else "gif",
-                            "width": _GIF_W(i),
-                            "height": _GIF_H(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    truncations). Built through ``synthesize_blobs``."""
+    return synthesize_blobs(
+        docs,
+        _make_gif,
+        lambda i: blob_meta("corrupt" if _GIF_BAD(i) else "gif", _GIF_W(i), _GIF_H(i)),
+    )
 
 
 GIF_ILACE_SCHEMA = StructType(
@@ -453,30 +415,11 @@ def synthesize_gif_interlaced_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL interlaced GIF89a blobs (the image
     descriptor interlace flag is set and the LZW stream carries the
     Appendix E four-pass row order); _GIN_BAD ids truncated."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_gif_interlaced(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _GIN_BAD(i) else "gif",
-                            "width": _GIN_W(i),
-                            "height": _GIN_H(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_gif_interlaced,
+        lambda i: blob_meta("corrupt" if _GIN_BAD(i) else "gif", _GIN_W(i), _GIN_H(i)),
+    )
 
 
 def gif_interlaced_pixel_stats(df: DataFrame) -> DataFrame:
@@ -487,54 +430,25 @@ def gif_interlaced_pixel_stats(df: DataFrame) -> DataFrame:
     position-weighted sum hash-mismatches any decoder that ignores
     the interlace flag or mis-orders the four passes."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(blob) if blob is not None else b""
-                row = {
-                    "media_id": int(media_id),
-                    "format": "unknown",
-                    "width": 0,
-                    "height": 0,
-                    "n_pixels": 0,
-                    "idx_sum": 0,
-                    "idx_possum": 0,
-                }
-                try:
-                    w, h, _pal, idx = _decode_gif(b)
-                    row.update(
-                        format="gif",
-                        width=int(w),
-                        height=int(h),
-                        n_pixels=int(w) * int(h),
-                        idx_sum=int(sum(idx)),
-                        idx_possum=int(
-                            sum((p + 1) * v for p, v in enumerate(idx))
-                        ),
-                    )
-                except (ValueError, struct.error, IndexError):
-                    pass
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in GIF_ILACE_SCHEMA.fields]
-            )
+    def walk(b: bytes) -> dict:
+        w, h, _pal, idx = _decode_gif(b)
+        return {
+            "width": int(w),
+            "height": int(h),
+            "n_pixels": int(w) * int(h),
+            "idx_sum": int(sum(idx)),
+            "idx_possum": int(sum((p + 1) * v for p, v in enumerate(idx))),
+        }
 
-    return map_pandas(df, gen, GIF_ILACE_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, walk, GIF_ILACE_SCHEMA, "gif")
 
 
 def gif_pixel_stats(df: DataFrame) -> DataFrame:
     """REAL GIF89a decode over MEDIA_SCHEMA input: full variable-width
     LZW (table growth, CLEAR resets, KwKwK) with stdlib alone, emitting
     per-image palette-index and RGB sums. Corrupt/unsupported blobs
-    degrade to format='unknown' zeroed rows. Arrow-batched mapInPandas;
-    decode parallelism is partition parallelism."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _gif_pixels_batch(pdf)
-
-    return map_pandas(df, gen, GIF_SCHEMA, ["media_id", "content"])
+    degrade to format='unknown' zeroed rows."""
+    return blob_stats(df, _gif_pixels_walk, GIF_SCHEMA, "gif")
 
 
 ANIM_SCHEMA = StructType(
@@ -552,74 +466,30 @@ ANIM_SCHEMA = StructType(
 
 def synthesize_gif_animated_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL multi-frame GIF89a animations."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_gif_animated(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _GAN_BAD(i) else "gif",
-                            "width": _GAN_W(i),
-                            "height": _GAN_H(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_gif_animated,
+        lambda i: blob_meta("corrupt" if _GAN_BAD(i) else "gif", _GAN_W(i), _GAN_H(i)),
+    )
 
 
-def _gif_animation_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "width": 0,
-            "height": 0,
-            "n_frames": 0,
-            "idx_sum": 0,
-            "idx_framesum": 0,
-        }
-        try:
-            w, h, pal, frames = _decode_gif_frames(b)
-            sums = [sum(idx) for _, _, idx in frames]
-            row.update(
-                format="gif",
-                width=int(frames[0][0]),
-                height=int(frames[0][1]),
-                n_frames=len(frames),
-                idx_sum=int(sum(sums)),
-                # frame-order-weighted: a decoder that permutes or
-                # merges frames matches idx_sum but not this
-                idx_framesum=int(
-                    sum((f + 1) * s for f, s in enumerate(sums))
-                ),
-            )
-        except (ValueError, struct.error, IndexError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in ANIM_SCHEMA.fields])
+def _gif_animation_walk(b: bytes) -> dict:
+    _w, _h, _pal, frames = _decode_gif_frames(b)
+    sums = [sum(idx) for _, _, idx in frames]
+    return {
+        "width": int(frames[0][0]),
+        "height": int(frames[0][1]),
+        "n_frames": len(frames),
+        "idx_sum": int(sum(sums)),
+        # frame-order-weighted: a decoder that permutes or
+        # merges frames matches idx_sum but not this
+        "idx_framesum": int(sum((f + 1) * s for f, s in enumerate(sums))),
+    }
 
 
 def gif_animation_stats(df: DataFrame) -> DataFrame:
     """Per-animation frame count + per-frame index checksums over real
     multi-frame GIF89a bytes (every frame is its own LZW stream; the
-    frame-weighted checksum pins stream order). Arrow-batched
-    mapInPandas, 7 scalar columns out per file."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _gif_animation_batch(pdf)
-
-    return map_pandas(df, gen, ANIM_SCHEMA, ["media_id", "content"])
+    frame-weighted checksum pins stream order); 7 scalar columns out
+    per file."""
+    return blob_stats(df, _gif_animation_walk, ANIM_SCHEMA, "gif")

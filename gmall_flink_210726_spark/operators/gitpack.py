@@ -43,9 +43,7 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -55,7 +53,11 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.inflate import _inflate_at
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 _OBJ_COMMIT = 1
 _OBJ_TREE = 2
@@ -415,25 +417,7 @@ GITPACK_SCHEMA = StructType(
 
 def git_pack_stats(df: DataFrame) -> DataFrame:
     """Verified pack+idx census over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in GITPACK_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_git_pack(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="git-pack", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, GITPACK_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_git_pack, GITPACK_SCHEMA, "git-pack")
 
 
 # --------------------------------------------------------------------------
@@ -653,32 +637,4 @@ def synthesize_git_pack_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of git pack+idx pairs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        make_git_pack(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "git",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_git_pack, blob_meta("git"), partitions)

@@ -49,9 +49,7 @@ HFileBlock documentation.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -61,7 +59,11 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.kafkalog import crc32c
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 _MAGIC_DATA = b"DATABLK*"
 _MAGIC_ROOT_IDX = b"IDXROOT2"
@@ -287,25 +289,7 @@ HFILE_SCHEMA = StructType(
 
 def hfile_stats(df: DataFrame) -> DataFrame:
     """HFile cell census over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in HFILE_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_hfile(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="hfile", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, HFILE_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_hfile, HFILE_SCHEMA, "hfile")
 
 
 # --------------------------------------------------------------------------
@@ -453,30 +437,4 @@ def synthesize_hfile_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of HFiles."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make_hfile(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "hfile",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_hfile, blob_meta("hfile"), partitions)

@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import map_pandas
+from gmall_flink_210726_spark.operators.multimodal import blob_stats, map_pandas
 
 _BLOCK_TAGS = frozenset(
     """p div h1 h2 h3 h4 h5 h6 li ul ol br hr table tr td th blockquote
@@ -193,41 +193,21 @@ HTML_SCHEMA = StructType(
 )
 
 
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for did, markup in zip(pdf["doc_id"], pdf["html"]):
-        did = int(did)
-        row = {
-            "doc_id": did,
-            "format": "unknown",
-            "title": "",
-            "n_blocks": 0,
-            "body_text": "",
-        }
-        try:
-            res = extract_text(markup if markup is not None else "")
-        except Exception:
-            res = None
-        if res is not None:
-            row.update(
-                format="html",
-                title=res["title"],
-                n_blocks=len(res["blocks"]),
-                body_text="\n".join(res["blocks"]),
-            )
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in HTML_SCHEMA.fields])
+def _extract_walk(markup: str) -> dict | None:
+    res = extract_text(markup or "")
+    if res is None:
+        return None
+    return dict(
+        title=res["title"],
+        n_blocks=len(res["blocks"]),
+        body_text="\n".join(res["blocks"]),
+    )
 
 
 def html_extract(df: DataFrame) -> DataFrame:
     """Arrow-batched extraction over ``(doc_id, html)`` rows — pure
     map stage, zero shuffle (module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _extract_batch(pdf)
-
-    return map_pandas(df, gen, HTML_SCHEMA, ["doc_id", "html"])
+    return blob_stats(df, _extract_walk, HTML_SCHEMA, "html", cols=("doc_id", "html"))
 
 
 # --------------------------------------------------------------------------

@@ -30,14 +30,15 @@ Ships as one tar per table; Arrow-batched ``mapInPandas``.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -138,25 +139,7 @@ def read_hudi_snapshot(data: bytes, asof: str | None = None) -> dict | None:
 
 def hudi_snapshot_stats(df: DataFrame) -> DataFrame:
     """Hudi COW snapshot replay over MEDIA_SCHEMA tar blobs."""
-    cols = [f.name for f in HUDI_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_hudi_snapshot(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="hudi", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, HUDI_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_hudi_snapshot, HUDI_SCHEMA, "hudi")
 
 
 _T1, _T2, _T3 = "20240101000000", "20240102000000", "20240103000000"
@@ -261,35 +244,7 @@ def synthesize_hudi_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Hudi COW tables (timeline + base files)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_hudi_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "hudi",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_hudi_table, blob_meta("hudi"), partitions)
 
 
 # --------------------------------------------------------------------------
@@ -748,25 +703,7 @@ HUDI_MOR_SCHEMA = StructType(
 
 def hudi_mor_stats(df: DataFrame) -> DataFrame:
     """Hudi MERGE-ON-READ snapshot replay over MEDIA_SCHEMA tars."""
-    cols = [f.name for f in HUDI_MOR_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_hudi_mor_snapshot(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="hudi", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, HUDI_MOR_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_hudi_mor_snapshot, HUDI_MOR_SCHEMA, "hudi")
 
 
 # -- MOR fixture ----------------------------------------------------------
@@ -989,32 +926,4 @@ def synthesize_hudi_mor_media(
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Hudi MOR tables (timeline + base files +
     HoodieLogFormat delta logs)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_hudi_mor_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "hudi",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_hudi_mor_table, blob_meta("hudi"), partitions)

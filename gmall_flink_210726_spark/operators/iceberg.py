@@ -32,9 +32,6 @@ layer is the only thing a 100 TB planner reads. Arrow-batched
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -43,7 +40,11 @@ from gmall_flink_210726_spark.operators.avro import (
     make_avro_container,
     read_avro_container,
 )
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -251,34 +252,9 @@ def read_iceberg_asof(data: bytes, asof_ms: int) -> dict | None:
     }
 
 
-def _iceberg_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0 for f in ICEBERG_SCHEMA.fields if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_iceberg_snapshot(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="iceberg", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in ICEBERG_SCHEMA.fields]
-    )
-
-
 def iceberg_snapshot_stats(df: DataFrame) -> DataFrame:
     """Iceberg metadata-chain walk over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _iceberg_batch(pdf)
-
-    return map_pandas(df, gen, ICEBERG_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_iceberg_snapshot, ICEBERG_SCHEMA, "iceberg")
 
 
 # --------------------------------------------------------------------------
@@ -399,32 +375,7 @@ def _make_iceberg_table(i: int, bad_stripe: int = 13) -> bytes:
 
 def synthesize_iceberg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Iceberg metadata chains (tar blobs)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_table, blob_meta("iceberg"))
 
 
 # --------------------------------------------------------------------------
@@ -746,36 +697,9 @@ ICEBERG_MOR_SCHEMA = StructType(
 )
 
 
-def _iceberg_mor_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0
-        for f in ICEBERG_MOR_SCHEMA.fields
-        if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_iceberg_mor(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="iceberg", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in ICEBERG_MOR_SCHEMA.fields]
-    )
-
-
 def iceberg_mor_stats(df: DataFrame) -> DataFrame:
     """Iceberg v2 merge-on-read scan over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _iceberg_mor_batch(pdf)
-
-    return map_pandas(df, gen, ICEBERG_MOR_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_iceberg_mor, ICEBERG_MOR_SCHEMA, "iceberg")
 
 
 # ---------------------------------------------------------- MOR fixture
@@ -959,32 +883,7 @@ def _make_iceberg_mor_table(
 
 def synthesize_iceberg_mor_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Iceberg v2 merge-on-read tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_mor_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_mor_table, blob_meta("iceberg"))
 
 
 # --------------------------------------------------------------------------
@@ -1152,34 +1051,9 @@ ICEBERG_EQ_SCHEMA = StructType(
 )
 
 
-def _iceberg_eq_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0 for f in ICEBERG_EQ_SCHEMA.fields if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_iceberg_eqdel(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="iceberg", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in ICEBERG_EQ_SCHEMA.fields]
-    )
-
-
 def iceberg_eqdel_stats(df: DataFrame) -> DataFrame:
     """Iceberg v2 equality-delete scan over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _iceberg_eq_batch(pdf)
-
-    return map_pandas(df, gen, ICEBERG_EQ_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_iceberg_eqdel, ICEBERG_EQ_SCHEMA, "iceberg")
 
 
 def _eq_rows(i: int, f: int) -> int:
@@ -1313,32 +1187,7 @@ def _make_iceberg_eq_table(
 
 def synthesize_iceberg_eq_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Iceberg v2 equality-delete tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_eq_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_eq_table, blob_meta("iceberg"))
 
 
 # --------------------------------------------------------------------------
@@ -1527,38 +1376,15 @@ def _prune_predicate(i: int) -> tuple[int, int]:
     return lo, lo + 25
 
 
-def _iceberg_prune_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0
-        for f in ICEBERG_PRUNE_SCHEMA.fields
-        if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        i = int(mid)
-        row = dict(zero, media_id=i, format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        lo, hi = _prune_predicate(i)
-        try:
-            st = read_iceberg_manifest_prune(b, lo, hi)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="iceberg", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in ICEBERG_PRUNE_SCHEMA.fields]
-    )
-
-
 def iceberg_prune_stats(df: DataFrame) -> DataFrame:
     """Manifest-level partition pruning over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _iceberg_prune_batch(pdf)
-
-    return map_pandas(df, gen, ICEBERG_PRUNE_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b, i: read_iceberg_manifest_prune(b, *_prune_predicate(i)),
+        ICEBERG_PRUNE_SCHEMA,
+        "iceberg",
+        by_id=True,
+    )
 
 
 def _prune_days(i: int, m: int) -> tuple[int, int]:
@@ -1676,32 +1502,7 @@ def _make_iceberg_prune_table(
 
 def synthesize_iceberg_prune_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of partition-summary Iceberg chains."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_prune_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_prune_table, blob_meta("iceberg"))
 
 
 ICEBERG_ASOF_SCHEMA = StructType(
@@ -1723,25 +1524,9 @@ ICEBERG_ASOF_SCHEMA = StructType(
 
 def iceberg_asof_stats(df: DataFrame, asof_ms: int) -> DataFrame:
     """Timestamp-as-of snapshot resolution over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in ICEBERG_ASOF_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_iceberg_asof(b, asof_ms)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="iceberg", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, ICEBERG_ASOF_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df, lambda b: read_iceberg_asof(b, asof_ms), ICEBERG_ASOF_SCHEMA, "iceberg"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1851,25 +1636,7 @@ ICEBERG_REFS_SCHEMA = StructType(
 
 def iceberg_refs_stats(df: DataFrame) -> DataFrame:
     """Ref-census walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in ICEBERG_REFS_SCHEMA.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_iceberg_refs(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="iceberg", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, ICEBERG_REFS_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_iceberg_refs, ICEBERG_REFS_SCHEMA, "iceberg")
 
 
 def _refs_ns(i: int) -> int:
@@ -1999,30 +1766,4 @@ def _make_iceberg_refs_table(i: int) -> bytes:
 
 def synthesize_iceberg_refs_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of branched/tagged Iceberg tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_refs_table(int(x))
-                        for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_refs_table, blob_meta("iceberg"))

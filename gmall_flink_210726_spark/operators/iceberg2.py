@@ -31,9 +31,6 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -46,7 +43,11 @@ from gmall_flink_210726_spark.operators.iceberg import (
     _i32le,
     _mor_parquet,
 )
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -446,68 +447,18 @@ def _bucket_probe(i: int) -> int:
 
 def synthesize_iceberg_bucket_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of bucket-partitioned Iceberg chains."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_bucket_table(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
-
-
-def _iceberg_bucket_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_manifests": 0,
-            "n_manifests_read": 0,
-            "files_selected": 0,
-            "rows_selected": 0,
-            "n_found": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_iceberg_bucket_prune(b, _bucket_probe(mid))
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="iceberg", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in ICEBERG_BUCKET_SCHEMA.fields]
-    )
+    return synthesize_blobs(docs, _make_iceberg_bucket_table, blob_meta("iceberg"))
 
 
 def iceberg_bucket_stats(df: DataFrame) -> DataFrame:
     """Bucket-pruned Iceberg point lookups over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _iceberg_bucket_batch(pdf)
-
-    return map_pandas(df, gen, ICEBERG_BUCKET_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b, mid: read_iceberg_bucket_prune(b, _bucket_probe(mid)),
+        ICEBERG_BUCKET_SCHEMA,
+        "iceberg",
+        by_id=True,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -851,55 +802,12 @@ def _make_iceberg_evo_table(i: int) -> bytes:
 
 def iceberg_evolution_stats(df: DataFrame) -> DataFrame:
     """Field-id schema-evolution scan over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in ICEBERG_EVO_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_iceberg_evolved(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="iceberg", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, ICEBERG_EVO_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_iceberg_evolved, ICEBERG_EVO_SCHEMA, "iceberg")
 
 
 def synthesize_iceberg_evo_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of schema-evolved Iceberg tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_evo_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_evo_table, blob_meta("iceberg"))
 
 
 # --------------------------------------------------------------------------
@@ -1073,25 +981,7 @@ POSDEL_SCHEMA = StructType(
 
 def iceberg_pos_delete_stats(df: DataFrame) -> DataFrame:
     """v2 position-delete merge-on-read scan over MEDIA_SCHEMA."""
-    cols = [f.name for f in POSDEL_SCHEMA.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_iceberg_pos_deletes(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="iceberg", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, POSDEL_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_iceberg_pos_deletes, POSDEL_SCHEMA, "iceberg")
 
 
 def _pd_n(i: int, f: int) -> int:
@@ -1270,33 +1160,7 @@ def _make_iceberg_posdel_table(i: int) -> bytes:
 
 def synthesize_iceberg_posdel_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of v2 position-delete Iceberg tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_posdel_table(int(x))
-                        for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_posdel_table, blob_meta("iceberg"))
 
 
 # --------------------------------------------------------------------------
@@ -1526,25 +1390,7 @@ EQDEL_SCHEMA = StructType(
 
 def iceberg_eq_delete_stats(df: DataFrame) -> DataFrame:
     """v2 equality-delete merge-on-read scan over MEDIA_SCHEMA."""
-    cols = [f.name for f in EQDEL_SCHEMA.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_iceberg_eq_deletes(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="iceberg", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, EQDEL_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_iceberg_eq_deletes, EQDEL_SCHEMA, "iceberg")
 
 
 def _eq_n(i: int, f: int) -> int:
@@ -1720,30 +1566,4 @@ def _make_iceberg_eqdel_table(i: int) -> bytes:
 
 def synthesize_iceberg_eqdel_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of v2 equality-delete Iceberg tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_eqdel_table(int(x))
-                        for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_eqdel_table, blob_meta("iceberg"))

@@ -35,17 +35,17 @@ operators/multimodal.py:151).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gmall_flink_210726_spark.operators.dedup import _bucket_pairs
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA
+from gmall_flink_210726_spark.operators.multimodal import (
+    _bmp24_pixels,
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 # fixture-dim formulas: one image *shape* per GROUP (doc_id // group),
 # so group members decode to identically-sized pixel arrays. Shared
@@ -83,32 +83,12 @@ def _make_group_bmp(media_id: int, group: int) -> bytes:
 def synthesize_grouped_bmp(docs: DataFrame, group: int = 4) -> DataFrame:
     """MEDIA_SCHEMA table of real BMP blobs in near-duplicate groups of
     ``group`` consecutive doc_ids — the image analog of a corpus with
-    re-encoded copies. Same Arrow-batched plumbing as
-    ``synthesize_media`` (operators/multimodal.py:192)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_group_bmp(i, group) for i in ids],
-                    "meta": [
-                        {
-                            "format": "bmp",
-                            "width": _GRP_W(i // group),
-                            "height": _GRP_H(i // group),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    re-encoded copies."""
+    return synthesize_blobs(
+        docs,
+        lambda i: _make_group_bmp(i, group),
+        lambda i: blob_meta("bmp", _GRP_W(i // group), _GRP_H(i // group)),
+    )
 
 
 DHASH_SCHEMA = StructType(
@@ -122,73 +102,36 @@ DHASH_SCHEMA = StructType(
 )
 
 
-def _dhash_batch(pdf: pd.DataFrame, grid: int) -> pd.DataFrame:
+def _dhash_walk(b: bytes, grid: int) -> dict | None:
     """Difference hash from on-wire BMP bytes: nearest-neighbor sample
     a (grid+1) x grid luminance grid in stored-row space (the
-    ``_resize_batch`` sampling convention, operators/multimodal.py:349
-    — sample source pixel (x*w//(grid+1), y*h//grid), cell value = sum
+    ``_resize_walk`` sampling convention, operators/multimodal.py —
+    sample source pixel (x*w//(grid+1), y*h//grid), cell value = sum
     of the 3 channel bytes), then bit (y,x) = cell[y][x+1] > cell[y][x]
-    packed little-endian into an int64. Non-BMP/corrupt blobs degrade
-    to format='unknown', dhash 0 — never throw away the partition for
-    one bad file."""
-    import struct
-
+    packed little-endian into an int64."""
     import numpy as np
 
+    got = _bmp24_pixels(b)
+    if got is None:
+        return None
+    w, h, arr = got
     gw = grid + 1
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "width": 0,
-            "height": 0,
-            "dhash": 0,
-        }
-        try:
-            if b[:2] == b"BM" and len(b) >= 54:
-                off = struct.unpack_from("<I", b, 10)[0]
-                _, w, h, _, bpp, _, _ = struct.unpack_from("<IiiHHII", b, 14)
-                h = abs(h)
-                rowb = (w * 3 + 3) // 4 * 4
-                if bpp == 24 and w > 0 and h > 0 and off + rowb * h <= len(b):
-                    arr = np.frombuffer(
-                        b, np.uint8, offset=off, count=rowb * h
-                    ).reshape(h, rowb)
-                    sy = (np.arange(grid, dtype=np.int64) * h) // grid
-                    sx = (np.arange(gw, dtype=np.int64) * w) // gw
-                    cols = sx[:, None] * 3 + np.arange(3)
-                    # (grid, gw): per-cell luminance = sum of 3 bytes
-                    cells = arr[sy][:, cols].sum(axis=2, dtype=np.int64)
-                    bits = (cells[:, 1:] > cells[:, :-1]).ravel()
-                    weights = np.uint64(1) << np.arange(
-                        grid * grid, dtype=np.uint64
-                    )
-                    sig = np.uint64(np.sum(weights[bits], dtype=np.uint64))
-                    row.update(
-                        format="bmp",
-                        width=int(w),
-                        height=int(h),
-                        dhash=int(sig.astype(np.int64)),
-                    )
-        except (struct.error, ValueError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in DHASH_SCHEMA.fields])
+    sy = (np.arange(grid, dtype=np.int64) * h) // grid
+    sx = (np.arange(gw, dtype=np.int64) * w) // gw
+    cols = sx[:, None] * 3 + np.arange(3)
+    # (grid, gw): per-cell luminance = sum of 3 bytes
+    cells = arr[sy][:, cols].sum(axis=2, dtype=np.int64)
+    bits = (cells[:, 1:] > cells[:, :-1]).ravel()
+    weights = np.uint64(1) << np.arange(grid * grid, dtype=np.uint64)
+    sig = np.uint64(np.sum(weights[bits], dtype=np.uint64))
+    return {"width": int(w), "height": int(h), "dhash": int(sig.astype(np.int64))}
 
 
 def dhash_images(df: DataFrame, grid: int = 8) -> DataFrame:
-    """64-bit dHash per image over MEDIA_SCHEMA input. Arrow-batched
-    mapInPandas; blobs cross into Python once per batch, numpy per
-    blob; output is 5 scalar columns — the only thing downstream
-    stages ever shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _dhash_batch(pdf, grid)
-
-    return map_pandas(df, gen, DHASH_SCHEMA, ["media_id", "content"])
+    """64-bit dHash per image over MEDIA_SCHEMA input; output is 5
+    scalar columns — the only thing downstream stages ever shuffle.
+    Non-BMP/corrupt blobs degrade to format='unknown', dhash 0."""
+    return blob_stats(df, lambda b: _dhash_walk(b, grid), DHASH_SCHEMA, "bmp")
 
 
 def dhash_near_pairs(

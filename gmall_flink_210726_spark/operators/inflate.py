@@ -21,14 +21,15 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 # RFC 1951 §3.2.5: length codes 257..285 -> (extra bits, base length)
 _LEN_EXTRA = (
@@ -362,37 +363,9 @@ def _walk_zip_deflate(data: bytes) -> dict | None:
     }
 
 
-def _zipd_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_entries": 0,
-            "total_uncompressed": 0,
-            "payload_sum": 0,
-            "first_name": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_zip_deflate(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="zip", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in ZIPD_SCHEMA.fields])
-
-
 def zip_deflate_stats(df: DataFrame) -> DataFrame:
     """DEFLATE-entry ZIP walk with hand-written inflate (module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _zipd_batch(pdf)
-
-    return map_pandas(df, gen, ZIPD_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_zip_deflate, ZIPD_SCHEMA, "zip")
 
 
 def _run_text(i: int, j: int, size: int) -> bytes:
@@ -450,30 +423,7 @@ def _make_zip_deflate(i: int) -> bytes:
 def synthesize_zip_deflate_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of DEFLATE-compressed zips (zlib-made, so
     the hand inflate is validated against the reference coder)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_zip_deflate(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "zip",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_zip_deflate, blob_meta("zip"))
 
 
 # --------------------------------------------------------------------------
@@ -561,37 +511,9 @@ def _walk_gzip(data: bytes) -> dict | None:
     }
 
 
-def _gzip_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_members": 0,
-            "total_uncompressed": 0,
-            "payload_sum": 0,
-            "first_name": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_gzip(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="gzip", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in GZIP_SCHEMA.fields])
-
-
 def gzip_member_stats(df: DataFrame) -> DataFrame:
     """Multi-member gzip walk over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _gzip_batch(pdf)
-
-    return map_pandas(df, gen, GZIP_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_gzip, GZIP_SCHEMA, "gzip")
 
 
 def _make_gzip_stream(i: int) -> bytes:
@@ -619,27 +541,4 @@ def _make_gzip_stream(i: int) -> bytes:
 
 def synthesize_gzip_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of multi-member gzip streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_gzip_stream(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "gzip",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_gzip_stream, blob_meta("gzip"))

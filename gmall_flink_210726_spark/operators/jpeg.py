@@ -37,14 +37,15 @@ integer-exact.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 # ---------------------------------------------------------------- fixture
 # dims/values shared with the DuckDB oracle in queries/llm5.py — the
@@ -603,72 +604,34 @@ JPEG_SCHEMA = StructType(
 def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL baseline JPEG blobs, one per doc_id
     (dims deterministic in the id; ids hitting _JPG_BAD are truncated
-    corrupt blobs). Same Arrow-batched plumbing as synthesize_media."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_jpeg(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _JPG_BAD(i) else "jpeg",
-                            "width": 8 * _JPG_BW(i) - _JPG_WPAD(i),
-                            "height": 8 * _JPG_BH(i) - _JPG_HPAD(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    corrupt blobs). Built through ``synthesize_blobs``."""
+    return synthesize_blobs(
+        docs,
+        _make_jpeg,
+        lambda i: blob_meta(
+            "corrupt" if _JPG_BAD(i) else "jpeg",
+            8 * _JPG_BW(i) - _JPG_WPAD(i),
+            8 * _JPG_BH(i) - _JPG_HPAD(i),
+        ),
+    )
 
 
-def _jpeg_pixels_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "width": 0,
-            "height": 0,
-            "n_pixels": 0,
-            "pixel_sum": 0,
-        }
-        try:
-            w, h, px = _decode_jpeg(b)
-            row.update(
-                format="jpeg",
-                width=int(w),
-                height=int(h),
-                n_pixels=int(w) * int(h),
-                pixel_sum=int(px.sum(dtype="int64")),
-            )
-        except (ValueError, struct.error, IndexError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in JPEG_SCHEMA.fields])
+def _jpeg_pixels_walk(b: bytes) -> dict:
+    w, h, px = _decode_jpeg(b)
+    return {
+        "width": int(w),
+        "height": int(h),
+        "n_pixels": int(w) * int(h),
+        "pixel_sum": int(px.sum(dtype="int64")),
+    }
 
 
 def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
     """REAL baseline-JPEG decode over MEDIA_SCHEMA input: Huffman
     entropy decode + dequant + IDCT with stdlib/numpy alone, emitting
     per-image pixel sums. Corrupt/unsupported blobs degrade to
-    format='unknown' zeroed rows. Arrow-batched mapInPandas; decode
-    parallelism is partition parallelism."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _jpeg_pixels_batch(pdf)
-
-    return map_pandas(df, gen, JPEG_SCHEMA, ["media_id", "content"])
+    format='unknown' zeroed rows."""
+    return blob_stats(df, _jpeg_pixels_walk, JPEG_SCHEMA, "jpeg")
 
 
 # ------------------------------------------------------- progressive fixture
@@ -765,30 +728,15 @@ def synthesize_progressive_jpeg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL progressive JPEG blobs, one per
     doc_id (dims deterministic in the id; ids hitting _PJPG_BAD are
     truncated corrupt blobs)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_progressive_jpeg(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _PJPG_BAD(i) else "jpeg",
-                            "width": 8 * _PJPG_BW(i) - _PJPG_WPAD(i),
-                            "height": 8 * _PJPG_BH(i) - _PJPG_HPAD(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_progressive_jpeg,
+        lambda i: blob_meta(
+            "corrupt" if _PJPG_BAD(i) else "jpeg",
+            8 * _PJPG_BW(i) - _PJPG_WPAD(i),
+            8 * _PJPG_BH(i) - _PJPG_HPAD(i),
+        ),
+    )
 
 
 # ------------------------------------------------- restart-interval fixture
@@ -848,30 +796,15 @@ def _make_restart_jpeg(media_id: int, q_step: int = 8, ri: int = 3) -> bytes:
 
 def synthesize_restart_jpeg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL DRI/RSTn baseline JPEG blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_restart_jpeg(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _RJPG_BAD(i) else "jpeg",
-                            "width": 8 * _RJPG_BW(i) - _RJPG_WPAD(i),
-                            "height": 8 * _RJPG_BH(i) - _RJPG_HPAD(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_restart_jpeg,
+        lambda i: blob_meta(
+            "corrupt" if _RJPG_BAD(i) else "jpeg",
+            8 * _RJPG_BW(i) - _RJPG_WPAD(i),
+            8 * _RJPG_BH(i) - _RJPG_HPAD(i),
+        ),
+    )
 
 
 # --------------------------------------------------- 4:2:0 chroma fixture
@@ -997,55 +930,25 @@ def _make_jpeg422(media_id: int, q_step: int = 8) -> bytes:
 
 def synthesize_jpeg422_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL 4:2:2 color JPEG blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_jpeg422(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _J422_BAD(i) else "jpeg",
-                            "width": 16 * _J422_MW(i) - _J422_WPAD(i),
-                            "height": 8 * _J422_MH(i) - _J422_HPAD(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_jpeg422,
+        lambda i: blob_meta(
+            "corrupt" if _J422_BAD(i) else "jpeg",
+            16 * _J422_MW(i) - _J422_WPAD(i),
+            8 * _J422_MH(i) - _J422_HPAD(i),
+        ),
+    )
 
 
 def synthesize_jpeg420_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL 4:2:0 color JPEG blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_jpeg420(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _J420_BAD(i) else "jpeg",
-                            "width": 16 * _J420_MW(i) - _J420_WPAD(i),
-                            "height": 16 * _J420_MH(i) - _J420_HPAD(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_jpeg420,
+        lambda i: blob_meta(
+            "corrupt" if _J420_BAD(i) else "jpeg",
+            16 * _J420_MW(i) - _J420_WPAD(i),
+            16 * _J420_MH(i) - _J420_HPAD(i),
+        ),
+    )

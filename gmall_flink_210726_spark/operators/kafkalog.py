@@ -42,14 +42,15 @@ zero shuffle.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 # CRC32C (Castagnoli), reflected polynomial 0x82F63B78, from scratch
 _CRC32C_TABLE = []
@@ -369,46 +370,11 @@ KAFKA_SCHEMA = StructType(
 )
 
 
-def _kafka_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        i = int(mid)
-        row = {
-            "media_id": i,
-            "format": "unknown",
-            "compression": "",
-            "n_batches": 0,
-            "n_records": 0,
-            "n_null_keys": 0,
-            "key_len_sum": 0,
-            "value_len_sum": 0,
-            "payload_sum": 0,
-            "ts_delta_sum": 0,
-            "max_offset": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_kafka_segment(b)
-        except Exception:
-            st = None
-        if st is not None:
-            # compression comes from the DECODED batch attributes,
-            # not the fixture id
-            row.update(format="kafka", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in KAFKA_SCHEMA.fields]
-    )
-
-
 def kafka_segment_stats(df: DataFrame) -> DataFrame:
-    """Kafka RecordBatch v2 segment walk over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _kafka_batch(pdf)
-
-    return map_pandas(df, gen, KAFKA_SCHEMA, ["media_id", "content"])
+    """Kafka RecordBatch v2 segment walk over MEDIA_SCHEMA blobs; the
+    ``compression`` column comes from the DECODED batch attributes, not
+    the fixture id."""
+    return blob_stats(df, read_kafka_segment, KAFKA_SCHEMA, "kafka")
 
 
 # --------------------------------------------------------------------------
@@ -509,35 +475,7 @@ def synthesize_kafka_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of Kafka log-segment byte streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_kafka_segment(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "kafka",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_kafka_segment, blob_meta("kafka"), partitions)
 
 
 # --------------------------------------------------------------------------
@@ -720,26 +658,7 @@ KAFKA_TXN_SCHEMA = StructType(
 
 def kafka_committed_stats(df: DataFrame) -> DataFrame:
     """read_committed segment walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in KAFKA_TXN_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                i = int(mid)
-                row = {c: 0 for c in cols}
-                row.update(media_id=i, format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_kafka_segment_committed(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="kafka", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, KAFKA_TXN_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_kafka_segment_committed, KAFKA_TXN_SCHEMA, "kafka")
 
 
 def _enc_batch(
@@ -876,35 +795,9 @@ def synthesize_kafka_txn_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of transactional Kafka segments."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_kafka_txn_segment(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "kafka",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_kafka_txn_segment, blob_meta("kafka"), partitions
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1025,25 +918,12 @@ KAFKA_IDX_SCHEMA = StructType(
 
 def kafka_indexed_lookup_stats(df: DataFrame, target_rel: int) -> DataFrame:
     """Offset-index seek over MEDIA_SCHEMA tar blobs."""
-    cols = [f.name for f in KAFKA_IDX_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_kafka_indexed_lookup(b, target_rel)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="kafka", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, KAFKA_IDX_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b: read_kafka_indexed_lookup(b, target_rel),
+        KAFKA_IDX_SCHEMA,
+        "kafka",
+    )
 
 
 def _make_kafka_indexed_segment(i: int) -> bytes:
@@ -1096,36 +976,9 @@ def synthesize_kafka_indexed_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of (segment.log, segment.index) tars."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_kafka_indexed_segment(int(i))
-                        for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "kafka",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_kafka_indexed_segment, blob_meta("kafka"), partitions
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1290,25 +1143,9 @@ def read_kafka_avro_registry(data: bytes) -> dict | None:
 
 def kafka_avro_registry_stats(df: DataFrame) -> DataFrame:
     """Registry-resolved Avro decode over MEDIA_SCHEMA tar blobs."""
-    cols = [f.name for f in KAFKA_REG_SCHEMA.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_kafka_avro_registry(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="avro_registry", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, KAFKA_REG_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df, read_kafka_avro_registry, KAFKA_REG_SCHEMA, "avro_registry"
+    )
 
 
 def _enc_value_record(rel: int, key: bytes | None, value: bytes) -> bytes:
@@ -1416,35 +1253,9 @@ def synthesize_kafka_registry_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of registry+segment tars."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_kafka_registry_tar(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "kafka",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_kafka_registry_tar, blob_meta("kafka"), partitions
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1563,25 +1374,12 @@ def kafka_time_lookup_stats(
     df: DataFrame, target_rel_ts: int
 ) -> DataFrame:
     """Time-index seek over MEDIA_SCHEMA tar blobs."""
-    cols = [f.name for f in KAFKA_TIDX_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_kafka_time_lookup(b, target_rel_ts)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="kafka", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, KAFKA_TIDX_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b: read_kafka_time_lookup(b, target_rel_ts),
+        KAFKA_TIDX_SCHEMA,
+        "kafka",
+    )
 
 
 def _tidx_ts_rel(i: int, off: int) -> int:
@@ -1666,36 +1464,9 @@ def synthesize_kafka_timeindexed_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of (segment.log, segment.timeindex) tars."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_kafka_timeindexed_segment(int(x))
-                        for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "kafka",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_kafka_timeindexed_segment, blob_meta("kafka"), partitions
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1830,25 +1601,7 @@ COMPACT_SCHEMA = StructType(
 
 def kafka_compacted_stats(df: DataFrame) -> DataFrame:
     """Compacted-topic state read over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in COMPACT_SCHEMA.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_kafka_compacted(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="kafka-compacted", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, COMPACT_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_kafka_compacted, COMPACT_SCHEMA, "kafka-compacted")
 
 
 def _cmp_nkeys(i: int) -> int:
@@ -1985,33 +1738,6 @@ def synthesize_kafka_compacted_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of compacted-topic log dirs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_kafka_compacted_tar(int(x))
-                        for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "kafka",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_kafka_compacted_tar, blob_meta("kafka"), partitions
+    )

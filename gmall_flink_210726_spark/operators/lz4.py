@@ -332,8 +332,6 @@ def lz4_stream_stats_one(data: bytes) -> dict | None:
 
 def lz4_frame_stats(df):
     """Frame-walk stats over MEDIA_SCHEMA blobs."""
-    import pandas as pd
-
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -341,7 +339,7 @@ def lz4_frame_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.operators.multimodal import blob_stats
 
     schema = StructType(
         [
@@ -354,33 +352,7 @@ def lz4_frame_stats(df):
             StructField("payload_sum", LongType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                row = {
-                    "media_id": mid,
-                    "format": "unknown",
-                    "n_frames": 0,
-                    "n_checksummed": 0,
-                    "n_skippable": 0,
-                    "decoded_len": 0,
-                    "payload_sum": 0,
-                }
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = lz4_stream_stats_one(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="lz4", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, schema, ["media_id", "content"])
+    return blob_stats(df, lz4_stream_stats_one, schema, "lz4")
 
 
 def _run_text_l(i: int, j: int, size: int) -> bytes:
@@ -425,33 +397,9 @@ def _make_lz4_stream(i: int) -> bytes:
 
 def synthesize_lz4_media(docs):
     """MEDIA_SCHEMA table of concatenated LZ4 frames."""
-    import pandas as pd
-
     from gmall_flink_210726_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        map_pandas,
+        blob_meta,
+        synthesize_blobs,
     )
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_lz4_stream(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "lz4",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_lz4_stream, blob_meta("lz4"))

@@ -30,15 +30,16 @@ Grammar sources: ISO/IEC 14496-12 (boxes, sample tables), ITU-T T.81
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gmall_flink_210726_spark.operators.jpeg import _decode_jpeg, _make_jpeg
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 _MAX_DEPTH = 12
 _STRIDE = 2  # decode every 2nd frame — the sampling knob
@@ -175,39 +176,9 @@ MJPEG_SCHEMA = StructType(
 )
 
 
-def _mjpeg_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_frames": 0,
-            "n_decoded": 0,
-            "first_width": 0,
-            "first_height": 0,
-            "n_pixels": 0,
-            "pixel_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_mjpeg(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="mjpeg", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in MJPEG_SCHEMA.fields])
-
-
 def mjpeg_frame_sample(df: DataFrame) -> DataFrame:
     """Frame-sampling decode over MEDIA_SCHEMA blobs (module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _mjpeg_batch(pdf)
-
-    return map_pandas(df, gen, MJPEG_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_mjpeg, MJPEG_SCHEMA, "mjpeg")
 
 
 # --------------------------------------------------------------------------
@@ -269,27 +240,4 @@ def _make_mjpeg(i: int) -> bytes:
 
 def synthesize_mjpeg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of MJPEG-in-MP4 blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_mjpeg(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "mjpeg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_mjpeg, blob_meta("mjpeg"))

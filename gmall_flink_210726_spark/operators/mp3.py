@@ -22,14 +22,15 @@ integer stats per file is all that shuffles.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 MP3_SCHEMA = StructType(
     [
@@ -97,39 +98,10 @@ def _walk_frames(data: bytes) -> dict | None:
     }
 
 
-def _mp3_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_frames": 0,
-            "total_bytes": 0,
-            "duration_ms": 0,
-            "kbps_sum": 0,
-            "pad_frames": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_frames(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="mp3", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in MP3_SCHEMA.fields])
-
-
 def mp3_frame_stats(df: DataFrame) -> DataFrame:
     """MPEG-1 Layer III frame walk + duration/bitrate stats over
     MEDIA_SCHEMA blobs (see module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _mp3_batch(pdf)
-
-    return map_pandas(df, gen, MP3_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_frames, MP3_SCHEMA, "mp3")
 
 
 def synthesize_mp3_media(docs: DataFrame) -> DataFrame:
@@ -140,9 +112,6 @@ def synthesize_mp3_media(docs: DataFrame) -> DataFrame:
     DuckDB oracle recomputes the output blind. Every 9th id is
     truncated mid-frame — the corrupt stripe that must degrade to
     'unknown'."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
         n_frames = 6 + i % 10
@@ -164,26 +133,7 @@ def synthesize_mp3_media(docs: DataFrame) -> DataFrame:
         blob = b"".join(parts)
         return blob[: len(blob) - 40] if i % 9 == 0 else blob
 
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "mp3",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 44100,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make, blob_meta("mp3", sample_rate=44100))
 
 
 # --------------------------------------------------------------------------
@@ -304,41 +254,10 @@ def _parse_id3_mp3(data: bytes) -> dict | None:
     }
 
 
-def _id3_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "id3_version": 0,
-            "n_tags": 0,
-            "title": "",
-            "artist": "",
-            "track": 0,
-            "tag_bytes": 0,
-            "n_frames": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _parse_id3_mp3(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="mp3", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in ID3_SCHEMA.fields])
-
-
 def mp3_id3_tags(df: DataFrame) -> DataFrame:
     """ID3v2.3 tag extraction + audio frame count over MEDIA_SCHEMA
     blobs (see module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _id3_batch(pdf)
-
-    return map_pandas(df, gen, ID3_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _parse_id3_mp3, ID3_SCHEMA, "mp3")
 
 
 def _make_id3_mp3(i: int) -> bytes:
@@ -378,27 +297,4 @@ def _make_id3_mp3(i: int) -> bytes:
 def synthesize_id3_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of ID3v2.3-tagged MP3s; every 8th id is
     truncated mid-audio (corrupt stripe)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_id3_mp3(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "mp3",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 44100,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_id3_mp3, blob_meta("mp3", sample_rate=44100))

@@ -32,7 +32,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    map_pandas,
+    synthesize_blobs,
+)
 
 MP4_SCHEMA = StructType(
     [
@@ -93,61 +98,35 @@ def _walk(data: bytes, start: int, end: int, st: dict, depth: int = 0) -> bool:
     return pos == end
 
 
-def _mp4_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "brand": "",
-            "timescale": 0,
-            "duration_ms": 0,
-            "n_tracks": 0,
-            "n_boxes": 0,
-            "mdat_bytes": 0,
-            "payload_sum": 0,
-        }
-        st = {
-            "brand": None,
-            "timescale": 0,
-            "duration": 0,
-            "n_tracks": 0,
-            "n_boxes": 0,
-            "mdat_bytes": 0,
-            "payload_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            ok = _walk(b, 0, len(b), st)
-        except Exception:
-            ok = False
-        if ok and st["brand"] and st["timescale"] > 0:
-            row.update(
-                format="mp4",
-                brand=st["brand"],
-                timescale=st["timescale"],
-                # integer ms, truncating division (positive operands:
-                # Python // == SQL // here)
-                duration_ms=st["duration"] * 1000 // st["timescale"],
-                n_tracks=st["n_tracks"],
-                n_boxes=st["n_boxes"],
-                mdat_bytes=st["mdat_bytes"],
-                payload_sum=st["payload_sum"],
-            )
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in MP4_SCHEMA.fields])
+def _mp4_stats(b: bytes) -> dict | None:
+    st = {
+        "brand": None,
+        "timescale": 0,
+        "duration": 0,
+        "n_tracks": 0,
+        "n_boxes": 0,
+        "mdat_bytes": 0,
+        "payload_sum": 0,
+    }
+    if not (_walk(b, 0, len(b), st) and st["brand"] and st["timescale"] > 0):
+        return None
+    return dict(
+        brand=st["brand"],
+        timescale=st["timescale"],
+        # integer ms, truncating division (positive operands:
+        # Python // == SQL // here)
+        duration_ms=st["duration"] * 1000 // st["timescale"],
+        n_tracks=st["n_tracks"],
+        n_boxes=st["n_boxes"],
+        mdat_bytes=st["mdat_bytes"],
+        payload_sum=st["payload_sum"],
+    )
 
 
 def mp4_box_stats(df: DataFrame) -> DataFrame:
     """ISO-BMFF box-tree parse + mdat byte stats over MEDIA_SCHEMA
     blobs (see module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _mp4_batch(pdf)
-
-    return map_pandas(df, gen, MP4_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _mp4_stats, MP4_SCHEMA, "mp4")
 
 
 _IDENTITY_MATRIX = struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
@@ -160,9 +139,6 @@ def synthesize_mp4_media(docs: DataFrame) -> DataFrame:
     payload bytes — every field a formula of the id so a DuckDB oracle
     recomputes the whole output blind. Every 13th id is truncated
     mid-moov — the corrupt stripe that must degrade to 'unknown'."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
         brand = (b"isom", b"mp42", b"avc1")[i % 3]
@@ -199,26 +175,7 @@ def synthesize_mp4_media(docs: DataFrame) -> DataFrame:
         blob = ftyp + moov + mdat
         return blob[:30] if i % 13 == 0 else blob
 
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "mp4",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make, blob_meta("mp4"))
 
 
 # --------------------------------------------------------------------------
@@ -380,9 +337,6 @@ def synthesize_mp4_sampletables(docs: DataFrame) -> DataFrame:
     of (doc_id, track index) so a DuckDB oracle recomputes the decoded
     output blind. Every 11th id is truncated mid-stbl — the corrupt
     stripe that must degrade to one codec='unknown' row."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
 
     def make(i: int) -> bytes:
         brand = (b"isom", b"mp42", b"avc1")[i % 3]
@@ -421,26 +375,7 @@ def synthesize_mp4_sampletables(docs: DataFrame) -> DataFrame:
         blob = ftyp + moov
         return blob[: len(blob) - 23] if i % 11 == 0 else blob
 
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "mp4",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make, blob_meta("mp4"))
 
 
 # --------------------------------------------------------------------------
@@ -711,25 +646,7 @@ def read_mp4_fragments(data: bytes) -> dict | None:
 
 def mp4_fragment_stats(df: DataFrame) -> DataFrame:
     """fMP4 moof/traf/trun walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in FMP4_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_mp4_fragments(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="fmp4", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, FMP4_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_mp4_fragments, FMP4_SCHEMA, "fmp4")
 
 
 def _fmp4_ns(i: int, f: int, t: int) -> int:
@@ -852,27 +769,4 @@ def _make_fmp4(i: int) -> bytes:
 
 def synthesize_fmp4_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of fragmented MP4 blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_fmp4(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "mp4",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_fmp4, blob_meta("mp4"))

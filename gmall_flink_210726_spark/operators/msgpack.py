@@ -24,9 +24,7 @@ shuffle (the L17 multimodal pattern).
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -35,7 +33,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 
 class _Dec:
@@ -269,32 +271,7 @@ MSGPACK_SCHEMA = StructType(
 
 def msgpack_stats(df: DataFrame) -> DataFrame:
     """Canonical-msgpack census over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in MSGPACK_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_msgpack_stream(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(
-                        {
-                            k: v
-                            for k, v in st.items()
-                            if k in cols
-                        },
-                        format="msgpack",
-                    )
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, MSGPACK_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_msgpack_stream, MSGPACK_SCHEMA, "msgpack")
 
 
 # --------------------------------------------------------------------------
@@ -426,29 +403,4 @@ def make_msgpack_stream(i: int) -> bytes:
 
 def synthesize_msgpack_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of msgpack row streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        make_msgpack_stream(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "msgpack",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_msgpack_stream, blob_meta("msgpack"))

@@ -10,8 +10,8 @@ without PIL). Also real and tested:
 
 - the column contract: ``content binary`` + ``meta struct<format,
   width, height, sample_rate>``;
-- the Spark-side plumbing: ``mapInPandas`` over Arrow batches with a
-  bounded batch size, schema declared up front, partition-preserving;
+- the Spark-side plumbing: ``mapInPandas`` over Arrow batches,
+  schema declared up front, partition-preserving;
 - a deterministic fake decoder (header peek + byte stats) exercising
   the identical UDF signature and batch shape the real codecs drop
   into.
@@ -20,12 +20,20 @@ Scale design (100 TB of media): blobs never pass through Python row-
 by-row — Arrow moves each batch once; per-batch work is vectorized;
 decode parallelism is partition parallelism (``repartition(n)`` before
 the map when blob sizes skew). A blob query is
-``decoder(synthesizer(docs))`` and both halves go through
-``map_pandas``, which runs the pair as ONE mapInPandas node: the
-decoder consumes the synthesizer's pandas batches in the same Python
-worker, so the blobs never make the Python → JVM → Python round trip
-between them, and the query pays the fixed per-node cost (worker
-hand-off, Arrow framing both ways) once instead of twice.
+``decoder(synthesizer(docs))``, and each half reaches Spark one way:
+
+- a synthesizer calls ``synthesize_blobs(docs, make, meta)``, which
+  shuffles only the doc ids (``partitions`` or ``ensure_parallelism``)
+  and then builds ``make(i)`` / ``meta(i)`` per id;
+- a decoder calls ``blob_stats(df, walk, schema, fmt)``, which owns the
+  bad-blob policy: a blob the walk refuses (None) or fails on gets
+  ``format='unknown'`` and schema-typed blanks, in one ``try``.
+
+Both end in ``map_pandas``, which runs the pair as ONE mapInPandas
+node: the decoder consumes the synthesizer's pandas batches in the
+same Python worker, so the blobs never make the Python → JVM → Python
+round trip between them, and the query pays the fixed per-node cost
+(worker hand-off, Arrow framing both ways) once instead of twice.
 """
 
 from __future__ import annotations
@@ -38,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -104,6 +113,122 @@ def map_pandas(
     return out
 
 
+def blob_meta(fmt: str, width: int = 0, height: int = 0, sample_rate: int = 0) -> dict:
+    """One MEDIA_SCHEMA ``meta`` value."""
+    return {"format": fmt, "width": width, "height": height, "sample_rate": sample_rate}
+
+
+def synthesize_blobs(
+    docs: DataFrame,
+    make,
+    meta,
+    partitions: int | None = None,
+    cols: tuple[str, ...] = ("doc_id",),
+) -> DataFrame:
+    """MEDIA_SCHEMA table with one blob per doc: ``media_id`` is the
+    ``cols[0]`` id, ``content`` is ``make(i, *rest)`` for the row's
+    ``cols`` values (``i`` a Python int) and ``meta`` is ``meta(i)``, or
+    ``meta`` itself when it is a dict (see ``blob_meta``). Only the
+    ``cols`` cross the ``repartition(partitions)`` (or the
+    ``ensure_parallelism`` split); the blobs are made after it."""
+    from gmall_flink_210726_spark.session import ensure_parallelism
+
+    sel = docs.select(*cols)
+    # partitions: stream twins pin the src file count here, BEFORE
+    # blob synthesis, so only doc ids are ever shuffled (guide §8)
+    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
+    meta_of = meta if callable(meta) else lambda _: meta
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf[cols[0]].astype("int64")
+            rows = list(zip(ids.tolist(), *(pdf[c] for c in cols[1:])))
+            yield pd.DataFrame(
+                {
+                    "media_id": ids,
+                    "content": [make(*r) for r in rows],
+                    "meta": [meta_of(r[0]) for r in rows],
+                }
+            )
+
+    return map_pandas(docs, gen, MEDIA_SCHEMA)
+
+
+def _blank(dtype):
+    """A decoder row's value for a field the walk did not fill."""
+    if isinstance(dtype, StringType):
+        return ""
+    if isinstance(dtype, DoubleType):
+        return 0.0
+    if isinstance(dtype, LongType):
+        return 0
+    return None
+
+
+def blob_batch(
+    walk,
+    schema: StructType,
+    fmt: str,
+    defaults: dict | None = None,
+    by_id: bool = False,
+    cols: tuple[str, str] = ("media_id", "content"),
+):
+    """The pandas step of ``blob_stats``: a function from one batch of
+    ``cols`` to its ``schema`` frame (see ``blob_stats``)."""
+    key, col = cols
+    names = [f.name for f in schema.fields]
+    blank = {f.name: _blank(f.dataType) for f in schema.fields}
+    blank["format"] = "unknown"
+    blank.update(defaults or {})
+
+    def batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = []
+        for mid, blob in zip(pdf[key], pdf[col]):
+            row = dict(blank)
+            row[key] = int(mid)
+            if blob is None:
+                b = b""
+            else:
+                b = blob if isinstance(blob, str) else bytes(blob)
+            try:
+                fields = walk(b, int(mid)) if by_id else walk(b)
+            except Exception:
+                fields = None
+            if fields is not None:
+                row["format"] = fmt
+                row.update(fields)
+            out.append(row)
+        return pd.DataFrame(out, columns=names)
+
+    return batch
+
+
+def blob_stats(
+    df: DataFrame,
+    walk,
+    schema: StructType,
+    fmt: str,
+    defaults: dict | None = None,
+    by_id: bool = False,
+    cols: tuple[str, str] = ("media_id", "content"),
+) -> DataFrame:
+    """One ``schema`` row per blob: ``walk(content)`` (``walk(content,
+    media_id)`` with ``by_id``) returns the row's fields, or None for a
+    blob it refuses; the row then gets ``format=fmt`` and those fields
+    (a ``format`` among them wins). A refused blob, or one whose walk
+    raises, keeps ``format='unknown'`` and schema-typed blanks
+    (``defaults`` overrides some): one bad file never fails the
+    partition. ``cols`` names the id and blob columns; a null blob
+    walks as ``b""``, a string column's values walk as ``str``."""
+    batch = blob_batch(walk, schema, fmt, defaults, by_id, cols)
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield batch(pdf)
+
+    return map_pandas(df, gen, schema, list(cols))
+
+
 try:  # pragma: no cover — not in this container
     from PIL import Image  # type: ignore
 
@@ -138,19 +263,10 @@ def _fake_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def decode_media(df: DataFrame, batch_size: int | None = None) -> DataFrame:
-    """mapInPandas decode pipeline over MEDIA_SCHEMA-shaped input.
-
-    Pass ``batch_size`` to bound Arrow batch memory for large blobs
-    (sets the session's ``arrow.maxRecordsPerBatch`` — a session-wide
-    knob, so only set it when you mean it; the default leaves the
-    session untouched). The iterator shape lets a real decoder stream
-    batch-by-batch without materializing a partition."""
-    spark = df.sparkSession
-    if batch_size is not None:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size)
-        )
+def decode_media(df: DataFrame) -> DataFrame:
+    """mapInPandas decode pipeline over MEDIA_SCHEMA-shaped input. The
+    iterator shape lets a real decoder stream batch-by-batch without
+    materializing a partition."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -225,35 +341,38 @@ def _make_wav(media_id: int) -> bytes:
     return header + samples.tobytes()
 
 
+def _wav_chunks(b: bytes) -> tuple[int, int, int, int, int, int] | None:
+    """RIFF chunk walk (fmt / data are not guaranteed adjacent):
+    ``(fmt tag, channels, block align, bits, data pos, data size)``,
+    zeros for a chunk that never appears; None for a non-WAVE blob."""
+    import struct
+
+    if not (b[:4] == b"RIFF" and b[8:12] == b"WAVE" and len(b) >= 44):
+        return None
+    tag = ch = balign = bits = 0
+    data_pos = data_sz = 0
+    pos = 12
+    while pos + 8 <= len(b):
+        cid, csz = struct.unpack_from("<4sI", b, pos)
+        if cid == b"fmt ":
+            tag, ch, _, _, balign, bits = struct.unpack_from("<HHIIHH", b, pos + 8)
+        elif cid == b"data":
+            data_pos, data_sz = pos + 8, csz
+        pos += 8 + csz + (csz & 1)
+    return tag, ch, balign, bits, data_pos, data_sz
+
+
 def synthesize_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL media blobs: even doc_ids become BMP
     images, odd doc_ids 16-bit PCM WAV files, dims/rates deterministic
-    functions of the id. Fixture generation runs through the same
-    Arrow-batched mapInPandas plumbing the decode path uses."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            content = [
-                _make_bmp(i) if i % 2 == 0 else _make_wav(i) for i in ids
-            ]
-            meta = [
-                {
-                    "format": "bmp" if i % 2 == 0 else "wav",
-                    "width": _BMP_W(i) if i % 2 == 0 else 0,
-                    "height": _BMP_H(i) if i % 2 == 0 else 0,
-                    "sample_rate": 0 if i % 2 == 0 else _WAV_SR(i),
-                }
-                for i in ids
-            ]
-            yield pd.DataFrame(
-                {"media_id": ids, "content": content, "meta": meta}
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    functions of the id."""
+    return synthesize_blobs(
+        docs,
+        lambda i: _make_bmp(i) if i % 2 == 0 else _make_wav(i),
+        lambda i: blob_meta("bmp", _BMP_W(i), _BMP_H(i))
+        if i % 2 == 0
+        else blob_meta("wav", sample_rate=_WAV_SR(i)),
+    )
 
 
 def _decode_headers_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -332,16 +451,11 @@ def _decode_headers_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out, columns=[f.name for f in HEADER_SCHEMA.fields])
 
 
-def decode_media_headers(df: DataFrame, batch_size: int | None = None) -> DataFrame:
+def decode_media_headers(df: DataFrame) -> DataFrame:
     """Real decode pipeline over MEDIA_SCHEMA input: Arrow-batched
     mapInPandas, struct-parsed BMP/WAV headers + exact payload byte
     sums. Same plumbing contract as ``decode_media``; this one reads
     actual on-wire bytes."""
-    spark = df.sparkSession
-    if batch_size is not None:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size)
-        )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -378,52 +492,46 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def _resize_batch(pdf: pd.DataFrame, out_w: int, out_h: int) -> pd.DataFrame:
-    """Nearest-neighbor BMP thumbnail from the on-wire bytes: sample
-    source pixel (x*w//out_w, y*h//out_h) in stored-row space (BMP rows
-    are physically bottom-up; nearest-neighbor is orientation-
-    invariant for the stats and the thumb keeps the stored order).
-    Non-BMP/corrupt blobs degrade to format='unknown', thumb NULL."""
+def _bmp24_pixels(b: bytes):
+    """``(w, h, stored rows)`` of a 24-bpp BMP, each row ``(w*3+3)//4*4``
+    bytes (padding included, physical bottom-up order); None for any
+    other blob."""
     import struct
 
     import numpy as np
 
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "out_w": 0,
-            "out_h": 0,
-            "thumb_sum": 0,
-            "thumb": None,
-        }
-        try:
-            if b[:2] == b"BM" and len(b) >= 54:
-                off = struct.unpack_from("<I", b, 10)[0]
-                _, w, h, _, bpp, _, _ = struct.unpack_from("<IiiHHII", b, 14)
-                h = abs(h)
-                rowb = (w * 3 + 3) // 4 * 4
-                if bpp == 24 and w > 0 and h > 0 and off + rowb * h <= len(b):
-                    arr = np.frombuffer(
-                        b, np.uint8, offset=off, count=rowb * h
-                    ).reshape(h, rowb)
-                    sy = (np.arange(out_h, dtype=np.int64) * h) // out_h
-                    sx = (np.arange(out_w, dtype=np.int64) * w) // out_w
-                    cols = (sx[:, None] * 3 + np.arange(3)).ravel()
-                    thumb = arr[np.ix_(sy, cols)]
-                    row.update(
-                        format="bmp",
-                        out_w=out_w,
-                        out_h=out_h,
-                        thumb_sum=int(thumb.sum(dtype=np.int64)),
-                        thumb=thumb.tobytes(),
-                    )
-        except (struct.error, ValueError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in RESIZE_SCHEMA.fields])
+    if not (b[:2] == b"BM" and len(b) >= 54):
+        return None
+    off = struct.unpack_from("<I", b, 10)[0]
+    _, w, h, _, bpp, _, _ = struct.unpack_from("<IiiHHII", b, 14)
+    h = abs(h)
+    rowb = (w * 3 + 3) // 4 * 4
+    if not (bpp == 24 and w > 0 and h > 0 and off + rowb * h <= len(b)):
+        return None
+    return w, h, np.frombuffer(b, np.uint8, offset=off, count=rowb * h).reshape(h, rowb)
+
+
+def _resize_walk(b: bytes, out_w: int, out_h: int) -> dict | None:
+    """Nearest-neighbor BMP thumbnail from the on-wire bytes: sample
+    source pixel (x*w//out_w, y*h//out_h) in stored-row space (BMP rows
+    are physically bottom-up; nearest-neighbor is orientation-
+    invariant for the stats and the thumb keeps the stored order)."""
+    import numpy as np
+
+    got = _bmp24_pixels(b)
+    if got is None:
+        return None
+    w, h, arr = got
+    sy = (np.arange(out_h, dtype=np.int64) * h) // out_h
+    sx = (np.arange(out_w, dtype=np.int64) * w) // out_w
+    cols = (sx[:, None] * 3 + np.arange(3)).ravel()
+    thumb = arr[np.ix_(sy, cols)]
+    return {
+        "out_w": out_w,
+        "out_h": out_h,
+        "thumb_sum": int(thumb.sum(dtype=np.int64)),
+        "thumb": thumb.tobytes(),
+    }
 
 
 def resize_images(
@@ -431,14 +539,11 @@ def resize_images(
 ) -> DataFrame:
     """Image resize over MEDIA_SCHEMA input — the feature-extract /
     thumbnail stage of a multimodal training pipeline, on real BMP
-    bytes (no codec libs needed). Arrow-batched mapInPandas; blobs
-    cross into Python once per batch, vectorized numpy per blob."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _resize_batch(pdf, out_w, out_h)
-
-    return map_pandas(df, gen, RESIZE_SCHEMA, ["media_id", "content"])
+    bytes (no codec libs needed); vectorized numpy per blob.
+    Non-BMP/corrupt blobs degrade to format='unknown', thumb NULL."""
+    return blob_stats(
+        df, lambda b: _resize_walk(b, out_w, out_h), RESIZE_SCHEMA, "bmp"
+    )
 
 
 FRAME_SCHEMA = StructType(
@@ -452,67 +557,35 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def _frame_sample_batch(pdf: pd.DataFrame, stride: int) -> pd.DataFrame:
+def _frame_sample_walk(b: bytes, stride: int) -> dict | None:
     """Every ``stride``-th audio frame (one frame = one sample per
     channel) from real WAV bytes: signed-sample sum + abs sum of the
     sampled frames — the fixed-rate subsampling a speech pipeline runs
-    before featurization. Non-WAV/corrupt → format='unknown', zeros."""
-    import struct
-
+    before featurization."""
     import numpy as np
 
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "n_frames": 0,
-            "frame_sum": 0,
-            "frame_abs_sum": 0,
-        }
-        try:
-            if b[:4] == b"RIFF" and b[8:12] == b"WAVE" and len(b) >= 44:
-                ch = bits = 0
-                data_pos = data_sz = 0
-                pos = 12
-                while pos + 8 <= len(b):
-                    cid, csz = struct.unpack_from("<4sI", b, pos)
-                    if cid == b"fmt ":
-                        _, ch, _, _, _, bits = struct.unpack_from(
-                            "<HHIIHH", b, pos + 8
-                        )
-                    elif cid == b"data":
-                        data_pos, data_sz = pos + 8, csz
-                    pos += 8 + csz + (csz & 1)
-                if ch > 0 and bits == 16 and data_pos and data_pos + data_sz <= len(b):
-                    n_samp = data_sz // (2 * ch) * ch  # whole frames only
-                    arr = np.frombuffer(
-                        b, "<i2", offset=data_pos, count=n_samp
-                    ).reshape(-1, ch)
-                    sampled = arr[::stride].astype(np.int64)
-                    row.update(
-                        format="wav",
-                        n_frames=int(sampled.shape[0]),
-                        frame_sum=int(sampled.sum()),
-                        frame_abs_sum=int(np.abs(sampled).sum()),
-                    )
-        except (struct.error, ValueError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
+    w = _wav_chunks(b)
+    if w is None:
+        return None
+    _, ch, _, bits, data_pos, data_sz = w
+    if not (ch > 0 and bits == 16 and data_pos and data_pos + data_sz <= len(b)):
+        return None
+    n_samp = data_sz // (2 * ch) * ch  # whole frames only
+    arr = np.frombuffer(b, "<i2", offset=data_pos, count=n_samp).reshape(-1, ch)
+    sampled = arr[::stride].astype(np.int64)
+    return {
+        "n_frames": int(sampled.shape[0]),
+        "frame_sum": int(sampled.sum()),
+        "frame_abs_sum": int(np.abs(sampled).sum()),
+    }
 
 
 def frame_sample_audio(df: DataFrame, stride: int = 4) -> DataFrame:
     """Audio frame subsampling over MEDIA_SCHEMA input (see
-    ``_frame_sample_batch``). Same Arrow-batched mapInPandas plumbing
-    as the decoders; partition parallelism is decode parallelism."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _frame_sample_batch(pdf, stride)
-
-    return map_pandas(df, gen, FRAME_SCHEMA, ["media_id", "content"])
+    ``_frame_sample_walk``). Non-WAV/corrupt → format='unknown', zeros."""
+    return blob_stats(
+        df, lambda b: _frame_sample_walk(b, stride), FRAME_SCHEMA, "wav"
+    )
 
 
 CHANNEL_SCHEMA = StructType(
@@ -527,62 +600,32 @@ CHANNEL_SCHEMA = StructType(
 )
 
 
-def _channel_stats_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+def _channel_stats_walk(b: bytes) -> dict | None:
     """Per-channel byte sums over the PIXELS of a 24-bpp BMP (BGR order
     on the wire: c0=blue, c1=green, c2=red) — the feature-extraction
     stage of an image pipeline, on real bytes. Row PADDING is excluded,
     so an implementation that sums the raw payload (stride-naive) gets
     a different answer on any width whose 3*w is not 4-aligned."""
-    import struct
-
     import numpy as np
 
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "n_pixels": 0,
-            "sum_c0": 0,
-            "sum_c1": 0,
-            "sum_c2": 0,
-        }
-        try:
-            if b[:2] == b"BM" and len(b) >= 54:
-                off = struct.unpack_from("<I", b, 10)[0]
-                _, w, h, _, bpp, _, _ = struct.unpack_from("<IiiHHII", b, 14)
-                h = abs(h)
-                rowb = (w * 3 + 3) // 4 * 4
-                if bpp == 24 and w > 0 and h > 0 and off + rowb * h <= len(b):
-                    arr = np.frombuffer(
-                        b, np.uint8, offset=off, count=rowb * h
-                    ).reshape(h, rowb)
-                    px = arr[:, : w * 3].reshape(h, w, 3).astype(np.int64)
-                    sums = px.sum(axis=(0, 1))
-                    row.update(
-                        format="bmp",
-                        n_pixels=int(w * h),
-                        sum_c0=int(sums[0]),
-                        sum_c1=int(sums[1]),
-                        sum_c2=int(sums[2]),
-                    )
-        except (struct.error, ValueError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in CHANNEL_SCHEMA.fields])
+    got = _bmp24_pixels(b)
+    if got is None:
+        return None
+    w, h, arr = got
+    px = arr[:, : w * 3].reshape(h, w, 3).astype(np.int64)
+    sums = px.sum(axis=(0, 1))
+    return {
+        "n_pixels": int(w * h),
+        "sum_c0": int(sums[0]),
+        "sum_c1": int(sums[1]),
+        "sum_c2": int(sums[2]),
+    }
 
 
 def image_channel_stats(df: DataFrame) -> DataFrame:
     """Image feature extraction over MEDIA_SCHEMA input (see
-    ``_channel_stats_batch``); same Arrow-batched mapInPandas plumbing
-    as the decoders."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _channel_stats_batch(pdf)
-
-    return map_pandas(df, gen, CHANNEL_SCHEMA, ["media_id", "content"])
+    ``_channel_stats_walk``)."""
+    return blob_stats(df, _channel_stats_walk, CHANNEL_SCHEMA, "bmp")
 
 
 # ---------------------------------------------------------------------------
@@ -738,30 +781,11 @@ def _make_png_palette(media_id: int) -> bytes:
 def synthesize_png_palette_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL paletted PNG blobs, one per doc_id;
     ids hitting ``_PPL_BAD`` truncated after IHDR."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_png_palette(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _PPL_BAD(i) else "png",
-                            "width": _PPL_W(i),
-                            "height": _PPL_H(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_png_palette,
+        lambda i: blob_meta("corrupt" if _PPL_BAD(i) else "png", _PPL_W(i), _PPL_H(i)),
+    )
 
 
 # Adam7 pass grid (PNG spec §8.2): (x0, y0, dx, dy) per pass
@@ -980,97 +1004,40 @@ PNG_SCHEMA = StructType(
 )
 
 
-def _png_pixels_batch(pdf: pd.DataFrame, inflate_fn=None) -> pd.DataFrame:
-    import struct
-    import zlib
-
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "width": 0,
-            "height": 0,
-            "n_pixels": 0,
-            "sum_r": 0,
-            "sum_g": 0,
-            "sum_b": 0,
-        }
-        try:
-            w, h, px = _decode_png(b, inflate_fn)
-            sums = px.sum(axis=(0, 1))
-            row.update(
-                format="png",
-                width=w,
-                height=h,
-                n_pixels=w * h,
-                sum_r=int(sums[0]),
-                sum_g=int(sums[1]),
-                sum_b=int(sums[2]),
-            )
-        except (ValueError, zlib.error, struct.error):
-            pass  # malformed blob → clean unknown row; never throw
-            # away the partition for one bad file
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in PNG_SCHEMA.fields])
+def _png_pixels_walk(b: bytes, inflate_fn=None) -> dict:
+    w, h, px = _decode_png(b, inflate_fn)
+    sums = px.sum(axis=(0, 1))
+    return {
+        "width": w,
+        "height": h,
+        "n_pixels": w * h,
+        "sum_r": int(sums[0]),
+        "sum_g": int(sums[1]),
+        "sum_b": int(sums[2]),
+    }
 
 
 def synthesize_png_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL zlib-compressed PNG blobs, one per
     doc_id (dims deterministic in the id; ids hitting ``_PNG_BAD`` are
-    truncated-after-IHDR corrupt blobs with meta format 'corrupt').
-    Same Arrow-batched mapInPandas plumbing as ``synthesize_media``."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_png(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _PNG_BAD(i) else "png",
-                            "width": _PNG_W(i),
-                            "height": _PNG_H(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    truncated-after-IHDR corrupt blobs with meta format 'corrupt')."""
+    return synthesize_blobs(
+        docs,
+        _make_png,
+        lambda i: blob_meta("corrupt" if _PNG_BAD(i) else "png", _PNG_W(i), _PNG_H(i)),
+    )
 
 
-def png_pixel_stats(
-    df: DataFrame,
-    batch_size: int | None = None,
-    inflate_fn=None,
-) -> DataFrame:
+def png_pixel_stats(df: DataFrame, inflate_fn=None) -> DataFrame:
     """REAL general-codec image decode over MEDIA_SCHEMA input: inflate
     the IDAT stream with stdlib zlib, undo the per-scanline filters
     (all five spec filters supported), and emit per-channel (RGB) pixel
     sums — the feature-extraction core of an image pipeline with zero
     codec libraries. Corrupt/unsupported blobs degrade to
-    format='unknown' zeroed rows. Arrow-batched mapInPandas; decode
-    parallelism is partition parallelism, blobs cross into Python once
-    per batch."""
-    spark = df.sparkSession
-    if batch_size is not None:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size)
-        )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _png_pixels_batch(pdf, inflate_fn)
-
-    return map_pandas(df, gen, PNG_SCHEMA, ["media_id", "content"])
+    format='unknown' zeroed rows."""
+    return blob_stats(
+        df, lambda b: _png_pixels_walk(b, inflate_fn), PNG_SCHEMA, "png"
+    )
 
 
 PNG7_SCHEMA = StructType(
@@ -1089,30 +1056,11 @@ PNG7_SCHEMA = StructType(
 def synthesize_png_adam7_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL Adam7-interlaced PNG blobs, one per
     doc_id; ids hitting ``_PA7_BAD`` truncated after IHDR."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_png_adam7(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _PA7_BAD(i) else "png",
-                            "width": _PA7_W(i),
-                            "height": _PA7_H(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_png_adam7,
+        lambda i: blob_meta("corrupt" if _PA7_BAD(i) else "png", _PA7_W(i), _PA7_H(i)),
+    )
 
 
 def png_adam7_stats(df: DataFrame) -> DataFrame:
@@ -1121,46 +1069,18 @@ def png_adam7_stats(df: DataFrame) -> DataFrame:
     (k+1) * byte[k]) — pass scatter errors that happen to preserve the
     multiset of bytes cannot cancel out of the weighted sum (the same
     guard the interlaced-GIF query uses)."""
-    import struct
-    import zlib
-
     import numpy as np
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-                b = bytes(blob) if blob is not None else b""
-                row = {
-                    "media_id": int(media_id),
-                    "format": "unknown",
-                    "width": 0,
-                    "height": 0,
-                    "n_pixels": 0,
-                    "sum_rgb": 0,
-                    "pos_sum": 0,
-                }
-                try:
-                    w, h, px = _decode_png(b)
-                    raster = px.reshape(-1)
-                    row.update(
-                        format="png",
-                        width=w,
-                        height=h,
-                        n_pixels=w * h,
-                        sum_rgb=int(raster.sum()),
-                        pos_sum=int(
-                            (
-                                (np.arange(raster.size, dtype=np.int64) + 1)
-                                * raster
-                            ).sum()
-                        ),
-                    )
-                except (ValueError, zlib.error, struct.error):
-                    pass
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PNG7_SCHEMA.fields]
-            )
+    def walk(b: bytes) -> dict:
+        w, h, px = _decode_png(b)
+        raster = px.reshape(-1)
+        weights = np.arange(raster.size, dtype=np.int64) + 1
+        return {
+            "width": w,
+            "height": h,
+            "n_pixels": w * h,
+            "sum_rgb": int(raster.sum()),
+            "pos_sum": int((weights * raster).sum()),
+        }
 
-    return map_pandas(df, gen, PNG7_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, walk, PNG7_SCHEMA, "png")

@@ -34,9 +34,7 @@ from __future__ import annotations
 
 import ast
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -45,7 +43,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 def _zip_members(data: bytes) -> list[tuple[str, bytes]] | None:
     """STORED-zip members with per-member CRC32 proof — the single
@@ -186,25 +188,7 @@ NPZ_SCHEMA = StructType(
 
 def npz_stats(df: DataFrame) -> DataFrame:
     """NPZ embedding-dump walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in NPZ_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_npz_embeddings(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="npz", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, NPZ_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_npz_embeddings, NPZ_SCHEMA, "npz")
 
 
 def _npz_rows(i: int) -> int:
@@ -285,27 +269,4 @@ def make_npz(i: int) -> bytes:
 
 def synthesize_npz_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of NPZ embedding dumps."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make_npz(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "npz",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_npz, blob_meta("npz"))

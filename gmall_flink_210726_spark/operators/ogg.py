@@ -43,9 +43,7 @@ path; this extends SURVEY §2.12's beyond-reference multimodal family.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -54,7 +52,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 # --------------------------------------------------------------------------
 # RFC 3533 §6.2 page CRC: poly 0x04C11DB7, init 0, unreflected, no xor
@@ -260,7 +262,7 @@ def read_ogg_opus(data: bytes) -> dict | None:
 
 
 # --------------------------------------------------------------------------
-# Spark wrapper
+# Spark wrapper: one ``blob_stats`` call (operators/multimodal.py)
 # --------------------------------------------------------------------------
 
 OGG_SCHEMA = StructType(
@@ -280,25 +282,7 @@ OGG_SCHEMA = StructType(
 
 def ogg_opus_stats(df: DataFrame) -> DataFrame:
     """Ogg/Opus container walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in OGG_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_ogg_opus(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="ogg-opus", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, OGG_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_ogg_opus, OGG_SCHEMA, "ogg-opus")
 
 
 # --------------------------------------------------------------------------
@@ -460,27 +444,4 @@ def make_ogg_opus(i: int) -> bytes:
 
 def synthesize_ogg_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of Ogg/Opus streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make_ogg_opus(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "ogg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 48000,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_ogg_opus, blob_meta("ogg", sample_rate=48000))

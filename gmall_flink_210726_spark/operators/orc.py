@@ -40,15 +40,16 @@ are chosen so the C++ writer emits every sub-encoding across ids
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 _COMP_NAMES = {0: "none", 1: "zlib", 2: "snappy", 4: "lz4", 5: "zstd"}
 
@@ -148,16 +149,8 @@ class _BitReader:
 
 
 def _svarint(data: bytes, pos: int) -> tuple[int, int]:
-    v = shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("rle: truncated varint")
-        b = data[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return _zz(v), pos
-        shift += 7
+    v, pos = _uvarint(data, pos)
+    return _zz(v), pos
 
 
 def _uvarint(data: bytes, pos: int) -> tuple[int, int]:
@@ -171,6 +164,8 @@ def _uvarint(data: bytes, pos: int) -> tuple[int, int]:
         if not b & 0x80:
             return v, pos
         shift += 7
+        if shift > 63:
+            raise ValueError("varint: too long")
 
 
 def _svarints(body: bytes, rows: int) -> tuple[list[int], int]:
@@ -656,44 +651,9 @@ ORC_SCHEMA = StructType(
 )
 
 
-def _orc_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = {
-            "media_id": int(mid),
-            "format": "unknown",
-            "compression": "",
-            "n_rows": 0,
-            "k_sum": 0,
-            "k_min": 0,
-            "k_max": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_orc_int_column(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(
-                format="orc",
-                compression=st["compression"],
-                n_rows=st["n_rows"],
-                k_sum=st["k_sum"],
-                k_min=st["k_min"],
-                k_max=st["k_max"],
-            )
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in ORC_SCHEMA.fields])
-
-
 def orc_column_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded ORC column read over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _orc_batch(pdf)
-
-    return map_pandas(df, gen, ORC_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_orc_int_column, ORC_SCHEMA, "orc")
 
 
 def _orc_values(i: int, n: int) -> list[int]:
@@ -756,33 +716,7 @@ def synthesize_orc_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of real ORC files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_orc(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "orc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_orc, blob_meta("orc"), partitions)
 
 
 # --------------------------------------------------------------------------
@@ -987,48 +921,9 @@ ORCSTR_SCHEMA = StructType(
 )
 
 
-def _orcstr_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = {
-            "media_id": int(mid),
-            "format": "unknown",
-            "n_rows": 0,
-            "n_nulls": 0,
-            "n_strs": 0,
-            "str_len_sum": 0,
-            "min_s": "",
-            "max_s": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_orc_string_column(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(
-                format="orc",
-                n_rows=st["n_rows"],
-                n_nulls=st["n_nulls"],
-                n_strs=st["n_strs"],
-                str_len_sum=st["str_len_sum"],
-                min_s=st["min_s"],
-                max_s=st["max_s"],
-            )
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in ORCSTR_SCHEMA.fields]
-    )
-
-
 def orc_string_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded nullable ORC string read over MEDIA_SCHEMA."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _orcstr_batch(pdf)
-
-    return map_pandas(df, gen, ORCSTR_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_orc_string_column, ORCSTR_SCHEMA, "orc")
 
 
 def _make_orc_str(i: int, bad_stripe: int = 19) -> bytes:
@@ -1080,30 +975,4 @@ def synthesize_orc_str_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of real ORC string-column files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_orc_str(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "orc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_orc_str, blob_meta("orc"), partitions)

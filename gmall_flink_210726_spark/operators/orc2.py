@@ -41,10 +41,7 @@ Arrow-batched ``mapInPandas``; per-blob stateless.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -55,13 +52,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.orc import (
     _COMP_NAMES,
     _pb_fields,
     _rle_v2,
     _svarints,
     _unframe,
+    _uvarint,
     _zz,
 )
 
@@ -348,73 +350,12 @@ def synthesize_orc_dec_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of real decimal+timestamp ORC files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_orc_dec(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "orc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
-
-
-def _orcdec_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = {
-            "media_id": int(mid),
-            "format": "unknown",
-            "compression": "",
-            "n_rows": 0,
-            "scale": 0,
-            "dec_sum_mant": 0,
-            "dec_min_mant": 0,
-            "dec_max_mant": 0,
-            "ts_min_ms": 0,
-            "ts_max_ms": 0,
-            "ns_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_orc_dec_ts(b)
-        except Exception:
-            st = None
-        if st is not None:
-            st.pop("n_stripes")
-            row.update(format="orc", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in ORCDEC_SCHEMA.fields]
-    )
+    return synthesize_blobs(docs, _make_orc_dec, blob_meta("orc"), partitions)
 
 
 def orc_dec_stats(df: DataFrame) -> DataFrame:
     """Decimal+timestamp ORC read over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _orcdec_batch(pdf)
-
-    return map_pandas(df, gen, ORCDEC_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_orc_dec_ts, ORCDEC_SCHEMA, "orc")
 
 
 # --------------------------------------------------------- ROW_INDEX
@@ -424,24 +365,9 @@ def _packed_varints(raw: bytes) -> list[int]:
     out = []
     pos = 0
     while pos < len(raw):
-        v, pos = _uvarint_at(raw, pos)
+        v, pos = _uvarint(raw, pos)
         out.append(v)
     return out
-
-
-def _uvarint_at(data: bytes, pos: int) -> tuple[int, int]:
-    out = shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("varint: out of input")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint: too long")
 
 
 def _parse_row_index(raw: bytes) -> list[dict]:
@@ -643,15 +569,15 @@ def _patch_row_index(
     while p < end and not (
         (stats_done or not lie_stats) and (pos_done or not lie_pos)
     ):
-        tag, p = _uvarint_at(data, p)
+        tag, p = _uvarint(data, p)
         assert tag == 0x0A  # entry, length-delimited
-        elen, p = _uvarint_at(data, p)
+        elen, p = _uvarint(data, p)
         e_end = p + elen
         positions_span = None
         stats_span = None
         while p < e_end:
-            t2, p = _uvarint_at(data, p)
-            l2, p = _uvarint_at(data, p)
+            t2, p = _uvarint(data, p)
+            l2, p = _uvarint(data, p)
             if t2 == 0x0A:
                 positions_span = (p, p + l2)
             elif t2 == 0x12:
@@ -659,18 +585,18 @@ def _patch_row_index(
             p += l2
         if lie_pos and not pos_done and entry_no == 1:
             s0, _s1 = positions_span
-            v, after = _uvarint_at(data, s0)
+            v, after = _uvarint(data, s0)
             blob[s0:after] = _same_len_bump(v, zig=False)
             pos_done = True
         if lie_stats and not stats_done and stats_span is not None:
             sp, s_end = stats_span
             ist_span = None
             while sp < s_end:
-                t3, sp = _uvarint_at(data, sp)
+                t3, sp = _uvarint(data, sp)
                 if t3 == 0x08:  # numberOfValues varint
-                    _, sp = _uvarint_at(data, sp)
+                    _, sp = _uvarint(data, sp)
                     continue
-                l3, sp = _uvarint_at(data, sp)
+                l3, sp = _uvarint(data, sp)
                 if t3 == 0x12:
                     ist_span = (sp, sp + l3)
                 sp += l3
@@ -679,9 +605,9 @@ def _patch_row_index(
             if not (emin > hi or emax < lo):  # first SELECTED stride
                 ip, i_end = ist_span
                 while ip < i_end:
-                    t4, ip = _uvarint_at(data, ip)
+                    t4, ip = _uvarint(data, ip)
                     v4_start = ip
-                    v4, ip = _uvarint_at(data, ip)
+                    v4, ip = _uvarint(data, ip)
                     if t4 == 0x10:  # maximum
                         blob[v4_start:ip] = _same_len_bump(
                             _zz(v4), zig=True
@@ -725,73 +651,18 @@ def synthesize_orc_rowindex_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of row-index ORC files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_orc_rowindex(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "orc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
-
-
-def _orcix_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_rows": 0,
-            "n_strides": 0,
-            "n_sel": 0,
-            "n_skipped": 0,
-            "n_match": 0,
-            "match_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        _n, lo, hi = _rowindex_params(mid)
-        try:
-            st = read_orc_rowindex(b, lo, hi)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="orc", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in ORCIX_SCHEMA.fields]
-    )
+    return synthesize_blobs(docs, _make_orc_rowindex, blob_meta("orc"), partitions)
 
 
 def orc_rowindex_stats(df: DataFrame) -> DataFrame:
     """Row-index skipping reads over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _orcix_batch(pdf)
-
-    return map_pandas(df, gen, ORCIX_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b, mid: read_orc_rowindex(b, *_rowindex_params(mid)[1:]),
+        ORCIX_SCHEMA,
+        "orc",
+        by_id=True,
+    )
 
 
 # ------------------------------------------------------- BLOOM_FILTER
@@ -1042,20 +913,20 @@ def _make_orc_bloom(i: int) -> bytes:
     entry = 0
     s_target = i % nst
     while p < end:
-        tag, p = _uvarint_at(data, p)
+        tag, p = _uvarint(data, p)
         assert tag == 0x0A
-        elen, p = _uvarint_at(data, p)
+        elen, p = _uvarint(data, p)
         e_end = p + elen
         k_span = bits_span = None
         q2 = p
         while q2 < e_end:
-            t2, q2 = _uvarint_at(data, q2)
+            t2, q2 = _uvarint(data, q2)
             if t2 == 0x08:
                 v_start = q2
-                _v, q2 = _uvarint_at(data, q2)
+                _v, q2 = _uvarint(data, q2)
                 k_span = (v_start, q2)
             else:
-                l2, q2 = _uvarint_at(data, q2)
+                l2, q2 = _uvarint(data, q2)
                 if t2 == 0x1A:
                     bits_span = (q2, q2 + l2)
                 q2 += l2
@@ -1083,71 +954,26 @@ def synthesize_orc_bloom_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of bloom-bearing ORC files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_orc_bloom(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "orc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_orc_bloom, blob_meta("orc"), partitions)
 
 
-def _orcbloom_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_rows": 0,
-            "n_strides": 0,
-            "n_found": 0,
-            "found_stride": -1,
-            "q": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        _n, q, _present = _orc_bloom_params(mid)
-        try:
-            st = read_orc_bloom_lookup(b, q)
-        except Exception:
-            st = None
-        if st is not None:
-            st.pop("n_maybe")  # bloom FPs are legal -> not oracled
-            row.update(format="orc", q=q, **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in ORCBLOOM_SCHEMA.fields]
-    )
+def _orcbloom_walk(b: bytes, mid: int) -> dict | None:
+    _n, q, _present = _orc_bloom_params(mid)
+    st = read_orc_bloom_lookup(b, q)
+    # n_maybe stays out of the row: bloom FPs are legal -> not oracled
+    return None if st is None else dict(st, q=q)
 
 
 def orc_bloom_stats(df: DataFrame) -> DataFrame:
     """Bloom-gated ORC point lookups over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _orcbloom_batch(pdf)
-
-    return map_pandas(df, gen, ORCBLOOM_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        _orcbloom_walk,
+        ORCBLOOM_SCHEMA,
+        "orc",
+        defaults={"found_stride": -1},
+        by_id=True,
+    )
 
 
 # ------------------------------------------- FLOAT + DOUBLE + BINARY
@@ -1386,66 +1212,9 @@ def synthesize_orc_double_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of real float/double/binary ORC files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_orc_double(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "orc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_orc_double, blob_meta("orc"), partitions)
 
 
 def orc_double_stats(df: DataFrame) -> DataFrame:
     """Float/double/binary ORC read over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in ORCDBL_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {
-                    "media_id": int(mid),
-                    "format": "unknown",
-                    "compression": "",
-                    "n_rows": 0,
-                    "f_sum": 0.0,
-                    "x_sum": 0.0,
-                    "x_min": 0.0,
-                    "x_max": 0.0,
-                    "blen_sum": 0,
-                    "bsum": 0,
-                }
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_orc_double_bin(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    st.pop("n_stripes")
-                    row.update(format="orc", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, ORCDBL_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_orc_double_bin, ORCDBL_SCHEMA, "orc")

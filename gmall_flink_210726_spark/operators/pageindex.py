@@ -37,9 +37,7 @@ lakehouse at production scale.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -48,7 +46,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _CODECS,
     _decode_rle_hybrid,
@@ -277,36 +279,15 @@ def _predicate(i: int) -> tuple[int, int]:
     return lo, lo + 250
 
 
-def _pageidx_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0 for f in PAGEIDX_SCHEMA.fields if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        i = int(mid)
-        row = dict(zero, media_id=i, format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        lo, hi = _predicate(i)
-        try:
-            st = read_parquet_page_index(b, lo, hi)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in PAGEIDX_SCHEMA.fields]
-    )
-
-
 def parquet_page_index_stats(df: DataFrame) -> DataFrame:
     """Page-index-driven selective scan over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pageidx_batch(pdf)
-
-    return map_pandas(df, gen, PAGEIDX_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b, i: read_parquet_page_index(b, *_predicate(i)),
+        PAGEIDX_SCHEMA,
+        "parquet",
+        by_id=True,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -370,29 +351,4 @@ def _make_parquet_pageindex(i: int) -> bytes:
 
 def synthesize_parquet_pageindex_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of page-indexed parquet blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_parquet_pageindex(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_parquet_pageindex, blob_meta("parquet"))

@@ -31,14 +31,15 @@ apache/parquet-format FileMetaData (both public).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 
 class _Reader:
@@ -198,38 +199,9 @@ PQMETA_SCHEMA = StructType(
 )
 
 
-def _pqmeta_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_rows": 0,
-            "n_row_groups": 0,
-            "n_columns": 0,
-            "first_column": "",
-            "max_rg_rows": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = parse_parquet_footer(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in PQMETA_SCHEMA.fields])
-
-
 def parquet_footer_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded footer planning pass over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqmeta_batch(pdf)
-
-    return map_pandas(df, gen, PQMETA_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, parse_parquet_footer, PQMETA_SCHEMA, "parquet")
 
 
 # --------------------------------------------------------------------------
@@ -297,35 +269,12 @@ def _flip_first_page_value(blob: bytes) -> bytes:
 
 def synthesize_parquet_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of real parquet files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    docs = ensure_parallelism(docs.select("doc_id"))
+    def make(i: int) -> bytes:
+        blob = _make_parquet(i)
+        return _flip_first_page_value(blob) if i % 10 == 0 and i % 7 != 0 else blob
 
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _flip_first_page_value(_make_parquet(int(i)))
-                        if i % 10 == 0 and i % 7 != 0
-                        else _make_parquet(int(i))
-                        for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make, blob_meta("parquet"))
 
 
 # --------------------------------------------------------------------------
@@ -552,36 +501,9 @@ PQCOL_SCHEMA = StructType(
 )
 
 
-def _pqcol_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_values": 0,
-            "k_sum": 0,
-            "n_pages": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_parquet_column_k(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in PQCOL_SCHEMA.fields])
-
-
 def parquet_column_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded column-chunk read over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqcol_batch(pdf)
-
-    return map_pandas(df, gen, PQCOL_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_parquet_column_k, PQCOL_SCHEMA, "parquet")
 
 
 # --------------------------------------------------------------------------
@@ -659,33 +581,9 @@ def _snappy_decompress_py(data: bytes) -> bytes:
 def synthesize_parquet_snappy_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of SNAPPY-compressed parquet files (every
     9th footer-length word smashed)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_parquet(int(i), "SNAPPY", bad_stripe=9)
-                        for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, lambda i: _make_parquet(i, "SNAPPY", bad_stripe=9), blob_meta("parquet")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -871,39 +769,9 @@ PQDICT_SCHEMA = StructType(
 )
 
 
-def _pqdict_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_values": 0,
-            "n_nulls": 0,
-            "n_pages": 0,
-            "dict_size": 0,
-            "value_bytes_sum": 0,
-            "dict_bytes_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_parquet_column_s_dict(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in PQDICT_SCHEMA.fields])
-
-
 def parquet_dict_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded dictionary-column read over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqdict_batch(pdf)
-
-    return map_pandas(df, gen, PQDICT_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_parquet_column_s_dict, PQDICT_SCHEMA, "parquet")
 
 
 def _make_parquet_dict(i: int, bad_stripe: int = 8) -> bytes:
@@ -960,94 +828,23 @@ def _make_parquet_dict(i: int, bad_stripe: int = 8) -> bytes:
 
 def synthesize_parquet_dict_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of dictionary-encoded nullable parquet."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_parquet_dict(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_parquet_dict, blob_meta("parquet"))
 
 
 def synthesize_parquet_gzip_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of GZIP-compressed parquet files (every
     11th footer-length word smashed)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_parquet(int(i), "GZIP", bad_stripe=11)
-                        for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, lambda i: _make_parquet(i, "GZIP", bad_stripe=11), blob_meta("parquet")
+    )
 
 
 def synthesize_parquet_zstd_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of ZSTD-compressed parquet files (every
     9th footer-length word smashed)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_parquet(int(i), "ZSTD", bad_stripe=9)
-                        for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, lambda i: _make_parquet(i, "ZSTD", bad_stripe=9), blob_meta("parquet")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1297,65 +1094,14 @@ PQV2_SCHEMA = StructType(
 )
 
 
-def _pqv2_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_values": 0,
-            "n_pages": 0,
-            "k_sum": 0,
-            "s_bytes_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_parquet_columns_v2(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in PQV2_SCHEMA.fields])
-
-
 def parquet_v2_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded v2-page delta-encoded read over MEDIA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqv2_batch(pdf)
-
-    return map_pandas(df, gen, PQV2_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_parquet_columns_v2, PQV2_SCHEMA, "parquet")
 
 
 def synthesize_parquet_v2_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of format-v2 delta-encoded parquet files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_parquet_v2(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_parquet_v2, blob_meta("parquet"))
 
 
 # --------------------------------------------------------------------------
@@ -1571,61 +1317,13 @@ PQBSS_SCHEMA = StructType(
 
 def parquet_bss_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded BYTE_STREAM_SPLIT + DELTA_BYTE_ARRAY read."""
-    cols = [f.name for f in PQBSS_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                row = {
-                    "media_id": mid,
-                    "format": "unknown",
-                    "n_values": 0,
-                    "n_pages": 0,
-                    "v_q_sum": 0,
-                    "s_bytes_sum": 0,
-                }
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_parquet_columns_bss_dba(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="parquet", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, PQBSS_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_parquet_columns_bss_dba, PQBSS_SCHEMA, "parquet")
 
 
 def synthesize_parquet_bss_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of BYTE_STREAM_SPLIT/DELTA_BYTE_ARRAY
     parquet files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_parquet_bss(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_parquet_bss, blob_meta("parquet"))
 
 
 # --------------------------------------------------------------------------
@@ -1797,92 +1495,22 @@ PQSKIP_SCHEMA = StructType(
 
 def parquet_skip_stats(df: DataFrame, lo: int, hi: int) -> DataFrame:
     """Stats-pruned range scan over MEDIA_SCHEMA parquet blobs."""
-    cols = [f.name for f in PQSKIP_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                row = {
-                    "media_id": mid,
-                    "format": "unknown",
-                    "n_groups": 0,
-                    "n_skipped": 0,
-                    "n_match": 0,
-                    "match_sum": 0,
-                }
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = parquet_stats_skip(b, lo, hi)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="parquet", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, PQSKIP_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df, lambda b: parquet_stats_skip(b, lo, hi), PQSKIP_SCHEMA, "parquet"
+    )
 
 
 def synthesize_parquet_stats_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of statistics-bearing parquet files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_parquet_stats(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_parquet_stats, blob_meta("parquet"))
 
 
 def synthesize_parquet_lz4_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of LZ4_RAW-compressed parquet files (every
     13th footer-length word smashed)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_parquet(int(i), "LZ4", bad_stripe=13)
-                        for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, lambda i: _make_parquet(i, "LZ4", bad_stripe=13), blob_meta("parquet")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2290,30 +1918,9 @@ PQNEST_SCHEMA = StructType(
 )
 
 
-def _pqnest_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {f.name: 0 for f in PQNEST_SCHEMA.fields if f.name != "format"}
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_parquet_nested(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in PQNEST_SCHEMA.fields])
-
-
 def parquet_nested_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded nested (LIST) column read over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqnest_batch(pdf)
-
-    return map_pandas(df, gen, PQNEST_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_parquet_nested, PQNEST_SCHEMA, "parquet")
 
 
 def _make_parquet_nested(
@@ -2402,30 +2009,7 @@ def _make_parquet_nested(
 
 def synthesize_parquet_nested_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of nested (two LIST columns) parquet."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_parquet_nested(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_parquet_nested, blob_meta("parquet"))
 
 
 # --------------------------------------------------------------------------
@@ -2578,30 +2162,9 @@ PQMAP_SCHEMA = StructType(
 )
 
 
-def _pqmap_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {f.name: 0 for f in PQMAP_SCHEMA.fields if f.name != "format"}
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_parquet_map(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in PQMAP_SCHEMA.fields])
-
-
 def parquet_map_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded nested MAP column read over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqmap_batch(pdf)
-
-    return map_pandas(df, gen, PQMAP_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_parquet_map, PQMAP_SCHEMA, "parquet")
 
 
 def _make_parquet_map(i: int, bad_stripe: int = 14) -> bytes:
@@ -2663,61 +2226,16 @@ def _make_parquet_map(i: int, bad_stripe: int = 14) -> bytes:
 
 def synthesize_parquet_map_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of nested MAP-column parquet."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_parquet_map(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_parquet_map, blob_meta("parquet"))
 
 
 def synthesize_parquet_nested_v2_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of nested parquet with DATA_PAGE_V2 pages."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_parquet_nested(int(i), page_version="2.0")
-                        for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        lambda i: _make_parquet_nested(i, page_version="2.0"),
+        blob_meta("parquet"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2992,30 +2510,9 @@ PQDEEP_SCHEMA = StructType(
 )
 
 
-def _pqdeep_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {f.name: 0 for f in PQDEEP_SCHEMA.fields if f.name != "format"}
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_parquet_deep(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in PQDEEP_SCHEMA.fields])
-
-
 def parquet_deep_stats(df: DataFrame) -> DataFrame:
     """Depth-2 nested (list<list<int64>>) read over MEDIA_SCHEMA."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqdeep_batch(pdf)
-
-    return map_pandas(df, gen, PQDEEP_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_parquet_deep, PQDEEP_SCHEMA, "parquet")
 
 
 def _make_parquet_deep(i: int, bad_stripe: int = 16) -> bytes:
@@ -3088,30 +2585,7 @@ def _make_parquet_deep(i: int, bad_stripe: int = 16) -> bytes:
 
 def synthesize_parquet_deep_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of doubly-nested list<list<int64>> parquet."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_parquet_deep(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_parquet_deep, blob_meta("parquet"))
 
 
 # --------------------------------------------------------------------------
@@ -3247,34 +2721,9 @@ PQSTRUCT_SCHEMA = StructType(
 )
 
 
-def _pqstruct_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0 for f in PQSTRUCT_SCHEMA.fields if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_parquet_struct(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in PQSTRUCT_SCHEMA.fields]
-    )
-
-
 def parquet_struct_stats(df: DataFrame) -> DataFrame:
     """Hand-decoded STRUCT column read over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqstruct_batch(pdf)
-
-    return map_pandas(df, gen, PQSTRUCT_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_parquet_struct, PQSTRUCT_SCHEMA, "parquet")
 
 
 def _make_parquet_struct(i: int, bad_stripe: int = 15) -> bytes:
@@ -3337,32 +2786,7 @@ def _make_parquet_struct(i: int, bad_stripe: int = 15) -> bytes:
 
 def synthesize_parquet_struct_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of STRUCT-column parquet."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_parquet_struct(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_parquet_struct, blob_meta("parquet"))
 
 
 def parquet_leaf_fields(data: bytes) -> list[tuple[int | None, bytes]] | None:

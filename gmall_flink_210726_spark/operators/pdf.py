@@ -30,15 +30,16 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gmall_flink_210726_spark.operators.inflate import inflate
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 _OBJ_RE = re.compile(rb"(\d+) 0 obj\b")
 _REF_RE = re.compile(rb"/(\w+)\s+(\d+) 0 R")
@@ -235,37 +236,9 @@ PDF_SCHEMA = StructType(
 )
 
 
-def _pdf_batch(pdf_in: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf_in["media_id"], pdf_in["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_pages": 0,
-            "n_objects": 0,
-            "n_text_ops": 0,
-            "body_text": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = extract_pdf_text(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="pdf", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in PDF_SCHEMA.fields])
-
-
 def pdf_text_stats(df: DataFrame) -> DataFrame:
     """FlateDecode PDF text extraction over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_in in batches:
-            yield _pdf_batch(pdf_in)
-
-    return map_pandas(df, gen, PDF_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, extract_pdf_text, PDF_SCHEMA, "pdf")
 
 
 # --------------------------------------------------------------------------
@@ -341,30 +314,4 @@ def _make_pdf(i: int, text: str) -> bytes:
 def synthesize_pdf_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of FlateDecode PDFs built from the document
     texts."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id", "text"))
-
-    def gen(batches):
-        for pdf_in in batches:
-            ids = pdf_in["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_pdf(int(i), t)
-                        for i, t in zip(ids, pdf_in["text"])
-                    ],
-                    "meta": [
-                        {
-                            "format": "pdf",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_pdf, blob_meta("pdf"), None, ("doc_id", "text"))

@@ -41,14 +41,15 @@ bytes-read scales with matching groups, not table size.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _decode_rle_hybrid,
     _Reader,
@@ -553,70 +554,19 @@ def _make_parquet_bloom(i: int) -> bytes:
 
 def synthesize_parquet_bloom_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of hand-written bloom-bearing parquet."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_parquet_bloom(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
-
-
-def _pqbloom_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_groups": 0,
-            "n_maybe": 0,
-            "n_skipped": 0,
-            "n_found": 0,
-            "found_group": -1,
-            "k_sum_read": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        _g, _nb, q, _present = _bloom_params(mid)
-        try:
-            st = read_parquet_bloom_lookup(b, q)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in PQBLOOM_SCHEMA.fields]
-    )
+    return synthesize_blobs(docs, _make_parquet_bloom, blob_meta("parquet"))
 
 
 def parquet_bloom_stats(df: DataFrame) -> DataFrame:
     """Bloom-gated point lookups over MEDIA_SCHEMA parquet blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqbloom_batch(pdf)
-
-    return map_pandas(df, gen, PQBLOOM_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b, mid: read_parquet_bloom_lookup(b, _bloom_params(mid)[2]),
+        PQBLOOM_SCHEMA,
+        "parquet",
+        defaults={"found_group": -1},
+        by_id=True,
+    )
 
 
 # ------------------------------------------------ BYTE_ARRAY variant
@@ -673,66 +623,20 @@ PQBLOOMSTR_SCHEMA = StructType(
 
 def synthesize_parquet_bloom_str_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of string-keyed bloom parquet files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_parquet_bloom_str(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "parquet",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
-
-
-def _pqbloomstr_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_groups": 0,
-            "n_found": 0,
-            "found_group": -1,
-        }
-        b = bytes(blob) if blob is not None else b""
-        _g, _nb, q, _present = _bloom_str_params(mid)
-        try:
-            st = read_parquet_bloom_lookup(b, q, ptype=6)
-        except Exception:
-            st = None
-        if st is not None:
-            for k in ("n_maybe", "n_skipped", "k_sum_read"):
-                st.pop(k)  # FP-dependent: not oracled
-            row.update(format="parquet", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in PQBLOOMSTR_SCHEMA.fields]
-    )
+    return synthesize_blobs(docs, _make_parquet_bloom_str, blob_meta("parquet"))
 
 
 def parquet_bloom_str_stats(df: DataFrame) -> DataFrame:
-    """Bloom-gated string-key lookups over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _pqbloomstr_batch(pdf)
-
-    return map_pandas(df, gen, PQBLOOMSTR_SCHEMA, ["media_id", "content"])
+    """Bloom-gated string-key lookups over MEDIA_SCHEMA blobs; the
+    FP-dependent n_maybe / n_skipped / k_sum_read stay out of the row
+    (not oracled)."""
+    return blob_stats(
+        df,
+        lambda b, mid: read_parquet_bloom_lookup(
+            b, _bloom_str_params(mid)[2], ptype=6
+        ),
+        PQBLOOMSTR_SCHEMA,
+        "parquet",
+        defaults={"found_group": -1},
+        by_id=True,
+    )

@@ -35,14 +35,15 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
 
@@ -206,27 +207,7 @@ def read_puffin_ndv(data: bytes) -> dict | None:
 
 def puffin_ndv_stats(df: DataFrame) -> DataFrame:
     """Puffin NDV trust-chain walk over MEDIA_SCHEMA tar blobs."""
-    cols = [f.name for f in PUFFIN_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(
-                    media_id=int(mid), format="unknown", blob_codec=""
-                )
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_puffin_ndv(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="puffin", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, PUFFIN_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_puffin_ndv, PUFFIN_SCHEMA, "puffin")
 
 
 def _puffin_kvals(i: int) -> list[int]:
@@ -352,32 +333,7 @@ def _make_puffin_table(i: int) -> bytes:
 
 def synthesize_puffin_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of (stats.puffin, data.parquet) tars."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_puffin_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "puffin",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_puffin_table, blob_meta("puffin"))
 
 
 # --------------------------------------------------------------------------
@@ -592,25 +548,7 @@ def read_iceberg_dv_scan(data: bytes) -> dict | None:
 
 def iceberg_dv_stats(df: DataFrame) -> DataFrame:
     """v3 DV merge-on-read scan over MEDIA_SCHEMA tar blobs."""
-    cols = [f.name for f in ICEBERG_DV_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_iceberg_dv_scan(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="iceberg", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, ICEBERG_DV_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_iceberg_dv_scan, ICEBERG_DV_SCHEMA, "iceberg")
 
 
 def _dv_file_rows(i: int, f: int) -> int:
@@ -779,32 +717,7 @@ def _make_iceberg_dv_table(i: int) -> bytes:
 
 def synthesize_iceberg_dv_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of v3 DV tables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_dv_table(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_dv_table, blob_meta("iceberg"))
 
 
 # --------------------------------------------------------------------------
@@ -990,25 +903,7 @@ ICEBERG_STATS_SCHEMA = StructType(
 
 def iceberg_stats_bound(df: DataFrame) -> DataFrame:
     """Snapshot-bound Puffin statistics walk over MEDIA_SCHEMA."""
-    cols = [f.name for f in ICEBERG_STATS_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_iceberg_stats_bound(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="iceberg", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, ICEBERG_STATS_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_iceberg_stats_bound, ICEBERG_STATS_SCHEMA, "iceberg")
 
 
 def _stats_kvals(i: int) -> list[int]:
@@ -1163,29 +1058,4 @@ def _make_iceberg_stats_table(i: int) -> bytes:
 def synthesize_iceberg_stats_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of two-snapshot Iceberg tables with
     snapshot-bound Puffin statistics."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_iceberg_stats_table(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "iceberg",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_iceberg_stats_table, blob_meta("iceberg"))

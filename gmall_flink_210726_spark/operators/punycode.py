@@ -139,7 +139,6 @@ def idn_host_stats(host: str) -> dict | None:
 
 def idn_decode_stats(docs, host_col: str = "host"):
     """Arrow-batched decode over a (doc_id, host) frame."""
-    import pandas as pd
 
     from pyspark.sql.types import (
         LongType,
@@ -148,7 +147,7 @@ def idn_decode_stats(docs, host_col: str = "host"):
         StructType,
     )
 
-    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.operators.multimodal import blob_stats
 
     schema = StructType(
         [
@@ -161,30 +160,18 @@ def idn_decode_stats(docs, host_col: str = "host"):
         ]
     )
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did, host in zip(pdf["doc_id"], pdf[host_col]):
-                row = {
-                    "doc_id": int(did),
-                    "status": "invalid",
-                    "n_labels": 0,
-                    "n_idn_labels": 0,
-                    "n_cps": 0,
-                    "cp_sum": 0,
-                }
-                try:
-                    st = idn_host_stats(host or "")
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(status="ok", **st)
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in schema.fields]
-            )
+    def walk(host: str) -> dict | None:
+        st = idn_host_stats(host or "")
+        return None if st is None else dict(st, status="ok")
 
-    return map_pandas(docs, gen, schema, ["doc_id", host_col])
+    return blob_stats(
+        docs,
+        walk,
+        schema,
+        "",
+        defaults={"status": "invalid"},
+        cols=("doc_id", host_col),
+    )
 
 
 def synthesize_idn_hosts(docs):

@@ -198,7 +198,6 @@ def parse_sitemap(doc: str) -> dict | None:
 
 def sitemap_stats(docs, xml_col: str = "xml"):
     """Arrow-batched sitemap parse over (doc_id, xml) rows."""
-    import pandas as pd
 
     from pyspark.sql.types import (
         LongType,
@@ -207,7 +206,7 @@ def sitemap_stats(docs, xml_col: str = "xml"):
         StructType,
     )
 
-    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.operators.multimodal import blob_stats
 
     schema = StructType(
         [
@@ -219,29 +218,14 @@ def sitemap_stats(docs, xml_col: str = "xml"):
         ]
     )
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for did, xml in zip(pdf["doc_id"], pdf[xml_col]):
-                row = {
-                    "doc_id": int(did),
-                    "kind": "invalid",
-                    "n_entries": 0,
-                    "loc_len_sum": 0,
-                    "pri_x10_sum": 0,
-                }
-                try:
-                    st = parse_sitemap(xml or "")
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(st)
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in schema.fields]
-            )
-
-    return map_pandas(docs, gen, schema, ["doc_id", xml_col])
+    return blob_stats(
+        docs,
+        lambda xml: parse_sitemap(xml or ""),
+        schema,
+        "",
+        defaults={"kind": "invalid"},
+        cols=("doc_id", xml_col),
+    )
 
 
 def _make_sitemap(i: int) -> str:

@@ -41,9 +41,7 @@ at open-format level.  Extends SURVEY §2.12's multimodal family.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -53,7 +51,11 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.kafkalog import crc32c
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.parquetmeta import (
     snappy_decompress,
 )
@@ -255,25 +257,7 @@ SSTABLE_SCHEMA = StructType(
 
 def sstable_stats(df: DataFrame) -> DataFrame:
     """SSTable KV census over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in SSTABLE_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_sstable(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="sstable", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, SSTABLE_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_sstable, SSTABLE_SCHEMA, "sstable")
 
 
 # --------------------------------------------------------------------------
@@ -415,30 +399,7 @@ def make_sstable(i: int) -> bytes:
 
 def synthesize_sstable_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of SSTables."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [make_sstable(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "sstable",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_sstable, blob_meta("sstable"))
 
 
 # --------------------------------------------------------------------------
@@ -564,25 +525,7 @@ WAL_SCHEMA = StructType(
 
 def leveldb_wal_stats(df: DataFrame) -> DataFrame:
     """WAL replay over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in WAL_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_leveldb_wal(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="leveldb-wal", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, WAL_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_leveldb_wal, WAL_SCHEMA, "leveldb-wal")
 
 
 def _wal_nw(i: int) -> int:
@@ -737,29 +680,4 @@ def make_leveldb_wal(i: int) -> bytes:
 
 def synthesize_wal_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of WAL files."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        make_leveldb_wal(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "leveldb-wal",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_leveldb_wal, blob_meta("leveldb-wal"))

@@ -17,14 +17,14 @@ per shard shuffle, payloads never do.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 TAR_SCHEMA = StructType(
     [
@@ -135,38 +135,9 @@ def _walk_tar(data: bytes) -> dict | None:
     }
 
 
-def _tar_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_members": 0,
-            "total_payload": 0,
-            "payload_sum": 0,
-            "n_blocks": 0,
-            "first_name": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_tar(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="tar", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in TAR_SCHEMA.fields])
-
-
 def tar_member_stats(df: DataFrame) -> DataFrame:
     """ustar member walk over MEDIA_SCHEMA blobs (see module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _tar_batch(pdf)
-
-    return map_pandas(df, gen, TAR_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_tar, TAR_SCHEMA, "tar")
 
 
 def _make_tar(i: int) -> bytes:
@@ -189,27 +160,4 @@ def _make_tar(i: int) -> bytes:
 
 def synthesize_tar_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of ustar shards (WebDataset shape)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_tar(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "tar",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_tar, blob_meta("tar"))

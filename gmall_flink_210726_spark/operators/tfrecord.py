@@ -31,9 +31,7 @@ and trailing partial frames refuse.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -43,7 +41,11 @@ from pyspark.sql.types import (
 )
 
 from gmall_flink_210726_spark.operators.kafkalog import crc32c
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.orc import _pb_fields
 
 _MASK_DELTA = 0xA282EAD8
@@ -311,61 +313,11 @@ TFREC_SCHEMA = StructType(
 )
 
 
-def _tfrec_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0 for f in TFREC_SCHEMA.fields if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_tfrecord_examples(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="tfrecord", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in TFREC_SCHEMA.fields]
-    )
-
-
 def tfrecord_stats(df: DataFrame) -> DataFrame:
     """TFRecord walk over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _tfrec_batch(pdf)
-
-    return map_pandas(df, gen, TFREC_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_tfrecord_examples, TFREC_SCHEMA, "tfrecord")
 
 
 def synthesize_tfrecord_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of TFRecord blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_tfrecord_blob(int(i)) for i in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "tfrecord",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_tfrecord_blob, blob_meta("tfrecord"))

@@ -28,14 +28,15 @@ big-endian (MM) so BOTH byte orders are exercised on-wire.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 # ---------------------------------------------------------------- fixture
 # formulas shared with the DuckDB oracle in queries/llm7.py
@@ -537,90 +538,35 @@ def _decode_tiff(b: bytes):
     return w, h, spp, bytes(data[:need])
 
 
-def _tiff_pixels_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for media_id, blob in zip(pdf["media_id"], pdf["content"]):
-        b = bytes(blob) if blob is not None else b""
-        row = {
-            "media_id": int(media_id),
-            "format": "unknown",
-            "width": 0,
-            "height": 0,
-            "n_pixels": 0,
-            "rgb_sum": 0,
-        }
-        try:
-            w, h, spp, data = _decode_tiff(b)
-            row.update(
-                format="tiff",
-                width=int(w),
-                height=int(h),
-                n_pixels=int(w) * int(h),
-                rgb_sum=int(sum(data)),
-            )
-        except (ValueError, struct.error, IndexError):
-            pass
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in TIFF_SCHEMA.fields])
+def _tiff_pixels_walk(b: bytes) -> dict:
+    w, h, _spp, data = _decode_tiff(b)
+    return {
+        "width": int(w),
+        "height": int(h),
+        "n_pixels": int(w) * int(h),
+        "rgb_sum": int(sum(data)),
+    }
 
 
 def synthesize_tiff_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL multi-strip TIFF blobs, one per
     doc_id; odd ids big-endian, ids hitting _TIF_BAD truncated."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_tiff(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _TIF_BAD(i) else "tiff",
-                            "width": _TIF_W(i),
-                            "height": _TIF_H(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_tiff,
+        lambda i: blob_meta("corrupt" if _TIF_BAD(i) else "tiff", _TIF_W(i), _TIF_H(i)),
+    )
 
 
 def synthesize_tiff_packbits_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of REAL PackBits-compressed grayscale TIFFs,
     one per doc_id; odd ids big-endian, ids hitting _TPB_BAD truncated
     mid-strip so the PackBits error surface executes."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_tiff_packbits(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _TPB_BAD(i) else "tiff",
-                            "width": _TPB_W(i),
-                            "height": _TPB_H(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_tiff_packbits,
+        lambda i: blob_meta("corrupt" if _TPB_BAD(i) else "tiff", _TPB_W(i), _TPB_H(i)),
+    )
 
 
 def synthesize_tiff_lzw_media(docs: DataFrame) -> DataFrame:
@@ -629,40 +575,16 @@ def synthesize_tiff_lzw_media(docs: DataFrame) -> DataFrame:
     mid-strip so the LZW error surface executes. Strip sizes are
     chosen so the dictionary crosses 511 entries and the 9->10-bit
     early-change width bump runs on every healthy image."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_tiff_lzw(i) for i in ids],
-                    "meta": [
-                        {
-                            "format": "corrupt" if _TLZ_BAD(i) else "tiff",
-                            "width": _TLZ_W(i),
-                            "height": _TLZ_H(i),
-                            "sample_rate": 0,
-                        }
-                        for i in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs,
+        _make_tiff_lzw,
+        lambda i: blob_meta("corrupt" if _TLZ_BAD(i) else "tiff", _TLZ_W(i), _TLZ_H(i)),
+    )
 
 
 def tiff_pixel_stats(df: DataFrame) -> DataFrame:
     """REAL baseline-TIFF decode over MEDIA_SCHEMA input: byte-order
     header, IFD walk with the 4-byte inline-value rule, multi-strip
     assembly, per-image RGB sums. Corrupt/unsupported blobs degrade to
-    format='unknown' zeroed rows. Arrow-batched mapInPandas."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _tiff_pixels_batch(pdf)
-
-    return map_pandas(df, gen, TIFF_SCHEMA, ["media_id", "content"])
+    format='unknown' zeroed rows."""
+    return blob_stats(df, _tiff_pixels_walk, TIFF_SCHEMA, "tiff")

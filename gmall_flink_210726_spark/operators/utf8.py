@@ -24,14 +24,14 @@ batched ``mapInPandas``, zero shuffle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 
 def utf8_classify(data: bytes) -> dict | None:
@@ -87,37 +87,9 @@ UTF8_SCHEMA = StructType(
 )
 
 
-def _utf8_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_ascii": 0,
-            "n_2byte": 0,
-            "n_3byte": 0,
-            "n_4byte": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = utf8_classify(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="utf8", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in UTF8_SCHEMA.fields])
-
-
 def utf8_validate_stats(df: DataFrame) -> DataFrame:
     """Strict UTF-8 classification over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _utf8_batch(pdf)
-
-    return map_pandas(df, gen, UTF8_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, utf8_classify, UTF8_SCHEMA, "utf8")
 
 
 # --------------------------------------------------------------------------
@@ -152,27 +124,4 @@ def _make_utf8(i: int) -> bytes:
 
 def synthesize_utf8_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of UTF-8 byte streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_utf8(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "utf8",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_utf8, blob_meta("utf8"))

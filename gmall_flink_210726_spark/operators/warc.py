@@ -34,15 +34,15 @@ RFC 1951/1952 decode, CRC-proven per member).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from gmall_flink_210726_spark.operators.inflate import iter_gzip_members
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 _CRLF = b"\r\n"
 
@@ -194,38 +194,9 @@ WARC_SCHEMA = StructType(
 )
 
 
-def _warc_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_records": 0,
-            "n_responses": 0,
-            "content_bytes": 0,
-            "payload_sum": 0,
-            "first_uri": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_warc(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="warc", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in WARC_SCHEMA.fields])
-
-
 def warc_record_stats(df: DataFrame) -> DataFrame:
     """WARC framing walk over MEDIA_SCHEMA blobs (module doc)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _warc_batch(pdf)
-
-    return map_pandas(df, gen, WARC_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_warc, WARC_SCHEMA, "warc")
 
 
 # --------------------------------------------------------------------------
@@ -314,33 +285,7 @@ def synthesize_warc_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of .warc.gz streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_warc_stream(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "warc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_warc_stream, blob_meta("warc"), partitions)
 
 
 # --------------------------------------------------------------------------
@@ -406,40 +351,9 @@ def _walk_warc_html(data: bytes) -> dict | None:
     }
 
 
-def _warc_html_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_records": 0,
-            "title": "",
-            "n_blocks": 0,
-            "n_words": 0,
-            "body_text": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_warc_html(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="warc", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in WARC_HTML_SCHEMA.fields]
-    )
-
-
 def warc_html_text(df: DataFrame) -> DataFrame:
     """The full CommonCrawl ingest pass over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _warc_html_batch(pdf)
-
-    return map_pandas(df, gen, WARC_HTML_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_warc_html, WARC_HTML_SCHEMA, "warc")
 
 
 def _make_warc_html_stream(i: int, text: str) -> bytes:
@@ -485,36 +399,9 @@ def synthesize_warc_html_media(
 ) -> DataFrame:
     """MEDIA_SCHEMA table of .warc.gz streams whose response bodies
     are the HTML fixture pages."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id", "text")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_warc_html_stream(int(i), t)
-                        for i, t in zip(ids, pdf["text"])
-                    ],
-                    "meta": [
-                        {
-                            "format": "warc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_warc_html_stream, blob_meta("warc"), partitions, ("doc_id", "text")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -587,42 +474,9 @@ def _walk_warc_text(data: bytes) -> dict | None:
     }
 
 
-def _warc_text_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_records": 0,
-            "n_responses": 0,
-            "n_conversions": 0,
-            "title": "",
-            "n_blocks": 0,
-            "n_words": 0,
-            "body_text": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_warc_text(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="warc", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in WARC_TEXT_SCHEMA.fields]
-    )
-
-
 def warc_text_extract(df: DataFrame) -> DataFrame:
     """WARC + WET combined ingest pass over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _warc_text_batch(pdf)
-
-    return map_pandas(df, gen, WARC_TEXT_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_warc_text, WARC_TEXT_SCHEMA, "warc")
 
 
 def _make_wet_stream(i: int, text: str) -> bytes:
@@ -662,36 +516,9 @@ def synthesize_wet_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of mixed WARC/WET .gz streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id", "text")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_wet_stream(int(i), t)
-                        for i, t in zip(ids, pdf["text"])
-                    ],
-                    "meta": [
-                        {
-                            "format": "warc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_wet_stream, blob_meta("warc"), partitions, ("doc_id", "text")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -753,36 +580,7 @@ def _walk_warc_zstd_text(data: bytes) -> dict | None:
 
 def warc_zstd_text_extract(df: DataFrame) -> DataFrame:
     """.warc.zst ingest pass over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                row = {
-                    "media_id": mid,
-                    "format": "unknown",
-                    "n_records": 0,
-                    "n_responses": 0,
-                    "n_conversions": 0,
-                    "title": "",
-                    "n_blocks": 0,
-                    "n_words": 0,
-                    "body_text": "",
-                }
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = _walk_warc_zstd_text(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="warc", **st)
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in WARC_TEXT_SCHEMA.fields]
-            )
-
-    return map_pandas(df, gen, WARC_TEXT_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_warc_zstd_text, WARC_TEXT_SCHEMA, "warc")
 
 
 def _make_warc_zstd_stream(i: int, text: str) -> bytes:
@@ -868,36 +666,9 @@ def synthesize_warc_zstd_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of .warc.zst streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id", "text")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_warc_zstd_stream(int(i), t)
-                        for i, t in zip(ids, pdf["text"])
-                    ],
-                    "meta": [
-                        {
-                            "format": "warc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_warc_zstd_stream, blob_meta("warc"), partitions, ("doc_id", "text")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -993,39 +764,9 @@ def _walk_warc_wat(data: bytes) -> dict | None:
     }
 
 
-def _wat_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = {
-            "media_id": int(mid),
-            "format": "unknown",
-            "n_records": 0,
-            "n_warcinfo": 0,
-            "n_responses": 0,
-            "n_conversions": 0,
-            "n_metadata": 0,
-            "n_links": 0,
-            "link_len_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_warc_wat(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="warc", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in WAT_SCHEMA.fields])
-
-
 def warc_wat_stats(df: DataFrame) -> DataFrame:
     """WARC/WET/WAT trio ingest pass over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _wat_batch(pdf)
-
-    return map_pandas(df, gen, WAT_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_warc_wat, WAT_SCHEMA, "warc")
 
 
 def _make_wat_stream(i: int) -> bytes:
@@ -1079,33 +820,7 @@ def synthesize_wat_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of mixed WARC/WET/WAT .gz streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_wat_stream(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "warc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_wat_stream, blob_meta("warc"), partitions)
 
 
 # --------------------------------------------------------------------------
@@ -1193,49 +908,12 @@ def _walk_warc_http(data: bytes) -> dict | None:
     }
 
 
-def _warc_http_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_records": 0,
-            "n_responses": 0,
-            "n_http": 0,
-            "status_sum": 0,
-            "n_chunked": 0,
-            "n_gzip": 0,
-            "n_deflate": 0,
-            "title": "",
-            "n_blocks": 0,
-            "n_words": 0,
-            "body_text": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_warc_http(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="warc", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in WARC_HTTP_SCHEMA.fields]
-    )
-
-
 def warc_http_text(df: DataFrame) -> DataFrame:
     """The REAL CommonCrawl ingest pass: HTTP-bearing response
     records de-framed and de-coded before HTML extraction. Per-blob
     stateless Arrow-batched mapInPandas; only integer stats and the
     extracted text shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _warc_http_batch(pdf)
-
-    return map_pandas(df, gen, WARC_HTTP_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_warc_http, WARC_HTTP_SCHEMA, "warc")
 
 
 def _chunk_body(body: bytes, step: int, lie: bool = False) -> bytes:
@@ -1386,36 +1064,9 @@ def synthesize_warc_http_media(
 ) -> DataFrame:
     """MEDIA_SCHEMA table of .warc.gz streams whose response records
     carry full HTTP/1.1 messages (the real CommonCrawl shape)."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id", "text")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_warc_http_stream(int(i), t)
-                        for i, t in zip(ids, pdf["text"])
-                    ],
-                    "meta": [
-                        {
-                            "format": "warc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_warc_http_stream, blob_meta("warc"), partitions, ("doc_id", "text")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1559,73 +1210,18 @@ def synthesize_warc_reqresp_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of request/response-pair .warc.gz blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id", "text")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_warc_reqresp_stream(int(x), t)
-                        for x, t in zip(ids, pdf["text"])
-                    ],
-                    "meta": [
-                        {
-                            "format": "warc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
-
-
-def _warc_req_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = {
-            "media_id": int(mid),
-            "format": "unknown",
-            "n_records": 0,
-            "n_requests": 0,
-            "n_get": 0,
-            "n_post": 0,
-            "req_body_len": 0,
-            "status_sum": 0,
-            "n_words": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_warc_reqresp(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="warc", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in WARC_REQ_SCHEMA.fields]
+    return synthesize_blobs(
+        docs,
+        _make_warc_reqresp_stream,
+        blob_meta("warc"),
+        partitions,
+        ("doc_id", "text"),
     )
 
 
 def warc_reqresp_stats(df: DataFrame) -> DataFrame:
     """Request/response pair walk over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _warc_req_batch(pdf)
-
-    return map_pandas(df, gen, WARC_REQ_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_warc_reqresp, WARC_REQ_SCHEMA, "warc")
 
 
 # --------------------------------------------------------------------------
@@ -1735,26 +1331,13 @@ def cdx_lookup(data: bytes, urlkey: str) -> dict | None:
 def cdx_lookup_stats(df: DataFrame, urlkey_fmt: str) -> DataFrame:
     """CDXJ ranged-fetch lookup over MEDIA_SCHEMA tar blobs; the
     probe urlkey is ``urlkey_fmt.format(i=media_id)``."""
-    cols = [f.name for f in CDX_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                row = {c: 0 for c in cols}
-                row.update(media_id=mid, format="unknown", title="")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = cdx_lookup(b, urlkey_fmt.format(i=mid))
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="cdx", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, CDX_SCHEMA, ["media_id", "content"])
+    return blob_stats(
+        df,
+        lambda b, mid: cdx_lookup(b, urlkey_fmt.format(i=mid)),
+        CDX_SCHEMA,
+        "cdx",
+        by_id=True,
+    )
 
 
 def _make_cdx_archive(i: int, text: str) -> bytes:
@@ -1858,36 +1441,9 @@ def synthesize_cdx_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of (index.cdxj, data.warc.gz) tars."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id", "text")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_cdx_archive(int(x), t)
-                        for x, t in zip(ids, pdf["text"])
-                    ],
-                    "meta": [
-                        {
-                            "format": "warc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_cdx_archive, blob_meta("warc"), partitions, ("doc_id", "text")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1986,25 +1542,7 @@ REVISIT_SCHEMA = StructType(
 
 def warc_revisit_stats(df: DataFrame) -> DataFrame:
     """Revisit-resolution walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in REVISIT_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = _walk_warc_revisit(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="warc", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, REVISIT_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_warc_revisit, REVISIT_SCHEMA, "warc")
 
 
 def _rv_len(i: int, u: int) -> int:
@@ -2099,33 +1637,6 @@ def synthesize_warc_revisit_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of revisit-bearing WARC streams."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        _make_warc_revisit_stream(int(x))
-                        for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "warc",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(
+        docs, _make_warc_revisit_stream, blob_meta("warc"), partitions
+    )

@@ -23,14 +23,14 @@ task and the walk streams member-by-member.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.tar import (
     _BLOCK,
     _make_header,
@@ -132,38 +132,9 @@ def _walk_wds(data: bytes) -> dict | None:
     }
 
 
-def _wds_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = {
-            "media_id": int(mid),
-            "format": "unknown",
-            "n_samples": 0,
-            "n_ok": 0,
-            "n_bad": 0,
-            "n_pixels": 0,
-            "pixel_sum": 0,
-            "cls_sum": 0,
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_wds(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="webdataset", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in WDS_SCHEMA.fields])
-
-
 def wds_sample_stats(df: DataFrame) -> DataFrame:
     """WebDataset shard walk + JPEG decode over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _wds_batch(pdf)
-
-    return map_pandas(df, gen, WDS_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_wds, WDS_SCHEMA, "webdataset")
 
 
 def _make_wds_shard(i: int, bad_stripe: int = 17) -> bytes:
@@ -199,30 +170,4 @@ def synthesize_wds_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of WebDataset tar shards."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_wds_shard(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "webdataset",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_wds_shard, blob_meta("webdataset"), partitions)

@@ -25,9 +25,6 @@ encyclopedia-dump corpus a training pipeline starts from.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -39,7 +36,11 @@ from pyspark.sql.types import (
 from gmall_flink_210726_spark.operators.bzip2 import (
     bz2_decompress_multistream,
 )
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 from gmall_flink_210726_spark.operators.sitemap import parse_xml
 
 # --------------------------------------------------------------------------
@@ -220,34 +221,9 @@ WIKI_SCHEMA = StructType(
 )
 
 
-def _wiki_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    zero = {
-        f.name: 0 for f in WIKI_SCHEMA.fields if f.name != "format"
-    }
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        row = dict(zero, media_id=int(mid), format="unknown")
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = read_wiki_dump(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="wikidump", **st)
-        out.append(row)
-    return pd.DataFrame(
-        out, columns=[f.name for f in WIKI_SCHEMA.fields]
-    )
-
-
 def wiki_dump_stats(df: DataFrame) -> DataFrame:
     """Multistream dump walk over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _wiki_batch(pdf)
-
-    return map_pandas(df, gen, WIKI_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, read_wiki_dump, WIKI_SCHEMA, "wikidump")
 
 
 # --------------------------------------------------------------------------
@@ -321,30 +297,4 @@ def synthesize_wiki_dump_media(
     docs: DataFrame, partitions: int | None = None
 ) -> DataFrame:
     """MEDIA_SCHEMA table of multistream wiki-dump blobs."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    sel = docs.select("doc_id")
-    # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
-    docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_wiki_dump(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "wikidump",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_wiki_dump, blob_meta("wikidump"), partitions)

@@ -761,9 +761,6 @@ def _make_xz_archive(
 
 def xz_archive_stats(df):
     """Multistream xz walk over MEDIA_SCHEMA blobs."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -771,7 +768,7 @@ def xz_archive_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.operators.multimodal import blob_stats
 
     schema = StructType(
         [
@@ -785,68 +782,21 @@ def xz_archive_stats(df):
         ]
     )
 
-    def batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for mid, blob in zip(pdf["media_id"], pdf["content"]):
-            row = {
-                "media_id": int(mid),
-                "format": "unknown",
-                "check_kind": "",
-                "n_streams": 0,
-                "payload_len": 0,
-                "n_words": 0,
-                "word_sum": 0,
-            }
-            b = bytes(blob) if blob is not None else b""
-            try:
-                st = read_xz_archive(b)
-            except Exception:
-                st = None
-            if st is not None:
-                st = dict(st); st["check_kind"] = st.pop("check")
-                row.update(format="xz", **st)
-            out.append(row)
-        return pd.DataFrame(out, columns=[f.name for f in schema.fields])
+    def walk(b: bytes) -> dict | None:
+        st = read_xz_archive(b)
+        return None if st is None else dict(st, check_kind=st["check"])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield batch(pdf)
-
-    return map_pandas(df, gen, schema, ["media_id", "content"])
+    return blob_stats(df, walk, schema, "xz")
 
 
 def synthesize_xz_media(docs):
     """MEDIA_SCHEMA table of multistream xz blobs."""
-    import pandas as pd
-
     from gmall_flink_210726_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        map_pandas,
+        blob_meta,
+        synthesize_blobs,
     )
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_xz_archive(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "xz",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_xz_archive, blob_meta("xz"))
 
 
 # ----------------------------------------------------- legacy .lzma query
@@ -916,9 +866,6 @@ def _make_lzma_alone(
 
 def lzma_alone_stats(df):
     """Legacy .lzma walk over MEDIA_SCHEMA blobs."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -926,7 +873,7 @@ def lzma_alone_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.operators.multimodal import blob_stats
 
     schema = StructType(
         [
@@ -941,59 +888,14 @@ def lzma_alone_stats(df):
         ]
     )
 
-    def batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        zero = {
-            f.name: 0 for f in schema.fields if f.name != "format"
-        }
-        for mid, blob in zip(pdf["media_id"], pdf["content"]):
-            row = dict(zero, media_id=int(mid), format="unknown")
-            b = bytes(blob) if blob is not None else b""
-            try:
-                st = read_lzma_alone(b)
-            except Exception:
-                st = None
-            if st is not None:
-                row.update(format="lzma", **st)
-            out.append(row)
-        return pd.DataFrame(out, columns=[f.name for f in schema.fields])
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield batch(pdf)
-
-    return map_pandas(df, gen, schema, ["media_id", "content"])
+    return blob_stats(df, read_lzma_alone, schema, "lzma")
 
 
 def synthesize_lzma_alone_media(docs):
     """MEDIA_SCHEMA table of legacy .lzma blobs."""
-    import pandas as pd
-
     from gmall_flink_210726_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        map_pandas,
+        blob_meta,
+        synthesize_blobs,
     )
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_lzma_alone(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "lzma",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_lzma_alone, blob_meta("lzma"))

@@ -24,14 +24,15 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from gmall_flink_210726_spark.operators.multimodal import MEDIA_SCHEMA, map_pandas
+from gmall_flink_210726_spark.operators.multimodal import (
+    blob_meta,
+    blob_stats,
+    synthesize_blobs,
+)
 
 ZIP_SCHEMA = StructType(
     [
@@ -118,38 +119,9 @@ def _walk_zip(data: bytes) -> dict | None:
     }
 
 
-def _zip_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = []
-    for mid, blob in zip(pdf["media_id"], pdf["content"]):
-        mid = int(mid)
-        row = {
-            "media_id": mid,
-            "format": "unknown",
-            "n_entries": 0,
-            "total_bytes": 0,
-            "payload_sum": 0,
-            "cd_size": 0,
-            "first_name": "",
-        }
-        b = bytes(blob) if blob is not None else b""
-        try:
-            st = _walk_zip(b)
-        except Exception:
-            st = None
-        if st is not None:
-            row.update(format="zip", **st)
-        out.append(row)
-    return pd.DataFrame(out, columns=[f.name for f in ZIP_SCHEMA.fields])
-
-
 def zip_entry_stats(df: DataFrame) -> DataFrame:
     """ZIP central-directory walk over MEDIA_SCHEMA blobs."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _zip_batch(pdf)
-
-    return map_pandas(df, gen, ZIP_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_zip, ZIP_SCHEMA, "zip")
 
 
 def _make_zip(i: int) -> bytes:
@@ -192,30 +164,7 @@ def _make_zip(i: int) -> bytes:
 
 def synthesize_zip_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of STORED-only zip archives."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_zip(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "zip",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_zip, blob_meta("zip"))
 
 
 # --------------------------------------------------------------------------
@@ -369,27 +318,7 @@ ZIP64_SCHEMA = StructType(
 
 def zip64_entry_stats(df: DataFrame) -> DataFrame:
     """ZIP64 walk over MEDIA_SCHEMA blobs."""
-    cols = [f.name for f in ZIP64_SCHEMA.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(
-                    media_id=int(mid), format="unknown", first_name=""
-                )
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = _walk_zip64(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="zip64", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, ZIP64_SCHEMA, ["media_id", "content"])
+    return blob_stats(df, _walk_zip64, ZIP64_SCHEMA, "zip64")
 
 
 def _z64_size(i: int, j: int) -> int:
@@ -474,27 +403,4 @@ def _make_zip64(i: int) -> bytes:
 
 def synthesize_zip64_media(docs: DataFrame) -> DataFrame:
     """MEDIA_SCHEMA table of ZIP64 archives."""
-    from gmall_flink_210726_spark.session import ensure_parallelism
-
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_zip64(int(x)) for x in ids],
-                    "meta": [
-                        {
-                            "format": "zip",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_zip64, blob_meta("zip"))

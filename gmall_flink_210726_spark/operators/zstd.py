@@ -981,12 +981,6 @@ def zstd_stream_stats_one(data: bytes) -> dict | None:
         return None
 
 
-def _import_pd():
-    import pandas as pd
-
-    return pd
-
-
 ZSTD_SCHEMA = None
 
 
@@ -1016,37 +1010,9 @@ def _zstd_schema():
 
 def zstd_frame_stats(df):
     """Frame-walk stats over MEDIA_SCHEMA blobs (module doc)."""
-    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.operators.multimodal import blob_stats
 
-    pd = _import_pd()
-    schema = _zstd_schema()
-    cols = [f.name for f in schema.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                row = {
-                    "media_id": mid,
-                    "format": "unknown",
-                    "n_frames": 0,
-                    "n_checksummed": 0,
-                    "n_skippable": 0,
-                    "decoded_len": 0,
-                    "payload_sum": 0,
-                }
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = zstd_stream_stats_one(b)
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="zstd", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, schema, ["media_id", "content"])
+    return blob_stats(df, zstd_stream_stats_one, _zstd_schema(), "zstd")
 
 
 def add_content_checksum(frame: bytes) -> bytes:
@@ -1116,34 +1082,11 @@ def _make_zstd_stream(i: int) -> bytes:
 def synthesize_zstd_media(docs):
     """MEDIA_SCHEMA table of concatenated zstd frames."""
     from gmall_flink_210726_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        map_pandas,
+        blob_meta,
+        synthesize_blobs,
     )
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    docs = ensure_parallelism(docs.select("doc_id"))
-    pd = _import_pd()
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [_make_zstd_stream(int(i)) for i in ids],
-                    "meta": [
-                        {
-                            "format": "zstd",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, _make_zstd_stream, blob_meta("zstd"))
 
 
 # ---------------------------------------------------------------------------
@@ -1363,9 +1306,8 @@ def zstd_seekable_stats(df):
         StructType,
     )
 
-    from gmall_flink_210726_spark.operators.multimodal import map_pandas
+    from gmall_flink_210726_spark.operators.multimodal import blob_stats
 
-    pd = _import_pd()
     schema = StructType(
         [
             StructField("media_id", LongType()),
@@ -1377,25 +1319,7 @@ def zstd_seekable_stats(df):
             StructField("window_sum", LongType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                row = {c: 0 for c in cols}
-                row.update(media_id=int(mid), format="unknown")
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    st = read_zstd_seekable(b, int(mid))
-                except Exception:
-                    st = None
-                if st is not None:
-                    row.update(format="zstd-seekable", **st)
-                out.append(row)
-            yield pd.DataFrame(out, columns=cols)
-
-    return map_pandas(df, gen, schema, ["media_id", "content"])
+    return blob_stats(df, read_zstd_seekable, schema, "zstd-seekable", by_id=True)
 
 
 def _seek_nf(i: int) -> int:
@@ -1465,33 +1389,8 @@ def make_zstd_seekable(i: int) -> bytes:
 def synthesize_zstd_seekable_media(docs):
     """MEDIA_SCHEMA table of seekable zstd streams."""
     from gmall_flink_210726_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        map_pandas,
+        blob_meta,
+        synthesize_blobs,
     )
-    from gmall_flink_210726_spark.session import ensure_parallelism
 
-    pd = _import_pd()
-    docs = ensure_parallelism(docs.select("doc_id"))
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "content": [
-                        make_zstd_seekable(int(x)) for x in ids
-                    ],
-                    "meta": [
-                        {
-                            "format": "zstd",
-                            "width": 0,
-                            "height": 0,
-                            "sample_rate": 0,
-                        }
-                        for _ in ids
-                    ],
-                }
-            )
-
-    return map_pandas(docs, gen, MEDIA_SCHEMA)
+    return synthesize_blobs(docs, make_zstd_seekable, blob_meta("zstd"))

@@ -9,8 +9,19 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from gmall_flink_210726_spark.operators.audio import _ulaw_batch, _ulaw_lut
-from gmall_flink_210726_spark.operators.bmp import _bmp_batch, _decode_rle8
+from gmall_flink_210726_spark.operators.audio import (
+    ADPCM_SCHEMA,
+    ULAW_SCHEMA,
+    _adpcm_walk,
+    _ulaw_lut,
+    _ulaw_walk,
+)
+from gmall_flink_210726_spark.operators.bmp import BMP_SCHEMA, _bmp_walk, _decode_rle8
+from gmall_flink_210726_spark.operators.multimodal import blob_batch
+
+_bmp_batch = blob_batch(_bmp_walk, BMP_SCHEMA, "bmp")
+_ulaw_batch = blob_batch(_ulaw_walk, ULAW_SCHEMA, "ulaw")
+_adpcm_batch = blob_batch(_adpcm_walk, ADPCM_SCHEMA, "adpcm")
 
 
 def _bmp_blob(i: int = 5) -> bytes:
@@ -175,8 +186,6 @@ def _adpcm_blob(i: int = 4) -> bytes:
 
 class TestAdpcmRobustness:
     def test_good_blob_decodes(self):
-        from gmall_flink_210726_spark.operators.audio import _adpcm_batch
-
         out = _adpcm_batch(
             pd.DataFrame({"media_id": [4], "content": [_adpcm_blob(4)]})
         )
@@ -189,10 +198,7 @@ class TestAdpcmRobustness:
         RESTARTS the state (per spec); stats must cover both blocks."""
         import struct
 
-        from gmall_flink_210726_spark.operators.audio import (
-            _adpcm_batch,
-            _adpcm_decode_block,
-        )
+        from gmall_flink_210726_spark.operators.audio import _adpcm_decode_block
 
         nb = 6
         blk = struct.pack("<hBB", 1000, 10, 0) + bytes(range(nb))
@@ -222,24 +228,18 @@ class TestAdpcmRobustness:
 
     @pytest.mark.parametrize("cut", [0, 12, 30, 45])
     def test_truncation_degrades(self, cut):
-        from gmall_flink_210726_spark.operators.audio import _adpcm_batch
-
         out = _adpcm_batch(
             pd.DataFrame({"media_id": [4], "content": [_adpcm_blob(4)[:cut]]})
         )
         assert out.iloc[0]["format"] == "unknown"
 
     def test_pcm_and_ulaw_rejected(self):
-        from gmall_flink_210726_spark.operators.audio import _adpcm_batch
-
         out = _adpcm_batch(
             pd.DataFrame({"media_id": [3], "content": [_ulaw_blob(3)]})
         )
         assert out.iloc[0]["format"] == "unknown"
 
     def test_bitflips_never_raise(self):
-        from gmall_flink_210726_spark.operators.audio import _adpcm_batch
-
         base = _adpcm_blob(7)
         for pos in range(0, len(base), 9):
             mutated = bytearray(base)

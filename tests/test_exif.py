@@ -9,14 +9,15 @@ import struct
 import pandas as pd
 
 from gmall_flink_210726_spark.operators.exif import (
-    _exif_batch,
+    EXIF_SCHEMA,
     _make_exif_jpeg,
     _parse_jpeg_exif,
 )
+from gmall_flink_210726_spark.operators.multimodal import blob_batch
 
 
 def _decode(blob: bytes) -> pd.Series:
-    return _exif_batch(
+    return blob_batch(_parse_jpeg_exif, EXIF_SCHEMA, "jpeg")(
         pd.DataFrame({"media_id": [1], "content": [blob]})
     ).iloc[0]
 

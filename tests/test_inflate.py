@@ -13,10 +13,11 @@ import pytest
 from gmall_flink_210726_spark.operators.inflate import (
     _make_zip_deflate,
     _run_text,
+    ZIPD_SCHEMA,
     _walk_zip_deflate,
-    _zipd_batch,
     inflate,
 )
+from gmall_flink_210726_spark.operators.multimodal import blob_batch
 
 
 def _deflate(data: bytes, level: int = 6) -> bytes:
@@ -105,7 +106,7 @@ class TestZipDeflateWalk:
         # flip a byte inside the first compressed payload
         name_len = len(b"d_3_0.txt")
         blob[30 + name_len + 4] ^= 0x01
-        out = _zipd_batch(
+        out = blob_batch(_walk_zip_deflate, ZIPD_SCHEMA, "zip")(
             pd.DataFrame({"media_id": [3], "content": [bytes(blob)]})
         )
         assert out.iloc[0]["format"] == "unknown"
@@ -160,8 +161,9 @@ class TestGzipWalk:
 
     def test_truncation_and_fuzz_never_raise(self):
         from gmall_flink_210726_spark.operators.inflate import (
-            _gzip_batch,
+            GZIP_SCHEMA,
             _make_gzip_stream,
+            _walk_gzip,
         )
 
         blob = _make_gzip_stream(5)
@@ -170,7 +172,7 @@ class TestGzipWalk:
             mut = bytearray(blob)
             mut[pos] ^= 0x10
             frames.append(bytes(mut))
-        out = _gzip_batch(
+        out = blob_batch(_walk_gzip, GZIP_SCHEMA, "gzip")(
             pd.DataFrame(
                 {
                     "media_id": list(range(len(frames))),

@@ -1022,8 +1022,10 @@ class TestPngCodec:
         import pandas as pd
 
         from gmall_flink_210726_spark.operators.multimodal import (
+            PNG_SCHEMA,
             _make_png,
-            _png_pixels_batch,
+            _png_pixels_walk,
+            blob_batch,
         )
 
         good = _make_png(12)
@@ -1036,7 +1038,7 @@ class TestPngCodec:
             5: b"\x89PNG\r\n\x1a\njunkjunkjunk",  # sig ok, garbage chunks
             6: good,  # control: still decodes
         }
-        out = _png_pixels_batch(
+        out = blob_batch(_png_pixels_walk, PNG_SCHEMA, "png")(
             pd.DataFrame(
                 {"media_id": list(cases), "content": list(cases.values())}
             )

@@ -12,9 +12,10 @@ import pandas as pd
 
 from gmall_flink_210726_spark.operators.mp3 import (
     _BITRATES,
-    _mp3_batch,
+    MP3_SCHEMA,
     _walk_frames,
 )
+from gmall_flink_210726_spark.operators.multimodal import blob_batch
 
 
 def _mp3_blob(i: int = 5) -> bytes:
@@ -31,7 +32,7 @@ def _mp3_blob(i: int = 5) -> bytes:
 
 
 def _decode(blob: bytes) -> pd.Series:
-    return _mp3_batch(
+    return blob_batch(_walk_frames, MP3_SCHEMA, "mp3")(
         pd.DataFrame({"media_id": [1], "content": [blob]})
     ).iloc[0]
 
@@ -118,9 +119,9 @@ class TestMp3Robustness:
 
 
 def _id3_decode(blob: bytes) -> pd.Series:
-    from gmall_flink_210726_spark.operators.mp3 import _id3_batch
+    from gmall_flink_210726_spark.operators.mp3 import ID3_SCHEMA, _parse_id3_mp3
 
-    return _id3_batch(
+    return blob_batch(_parse_id3_mp3, ID3_SCHEMA, "mp3")(
         pd.DataFrame({"media_id": [1], "content": [blob]})
     ).iloc[0]
 

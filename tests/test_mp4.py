@@ -13,9 +13,11 @@ import pandas as pd
 
 from gmall_flink_210726_spark.operators.mp4 import (
     _IDENTITY_MATRIX,
-    _mp4_batch,
+    MP4_SCHEMA,
+    _mp4_stats,
     _walk,
 )
+from gmall_flink_210726_spark.operators.multimodal import blob_batch
 
 
 def _mp4_blob(i: int = 5) -> bytes:
@@ -53,7 +55,8 @@ def _mp4_blob(i: int = 5) -> bytes:
 
 
 def _decode(blob: bytes) -> pd.Series:
-    out = _mp4_batch(pd.DataFrame({"media_id": [1], "content": [blob]}))
+    decode = blob_batch(_mp4_stats, MP4_SCHEMA, "mp4")
+    out = decode(pd.DataFrame({"media_id": [1], "content": [blob]}))
     return out.iloc[0]
 
 

@@ -8,6 +8,7 @@ import io
 
 import pyarrow as pa
 import pyarrow.orc as orc_mod
+import pytest
 
 from gmall_flink_210726_spark.operators.orc import (
     _closest_fixed_bits,
@@ -15,6 +16,8 @@ from gmall_flink_210726_spark.operators.orc import (
     _make_orc,
     _orc_values,
     _pb_fields,
+    _svarint,
+    _uvarint,
     read_orc_int_column,
     rle_v2_signed,
 )
@@ -29,6 +32,28 @@ def _write(vals, compression="uncompressed", stripe_size=4096):
         stripe_size=stripe_size,
     )
     return buf.getvalue()
+
+
+class TestVarint:
+    def test_max_uint64_decodes(self):
+        assert _uvarint(b"\xff" * 9 + b"\x01", 0) == ((1 << 64) - 1, 10)
+        assert _svarint(b"\x03", 0) == (-2, 1)
+
+    def test_overlong_varint_raises(self):
+        # 11 continuation bytes before the terminator: past 64 bits
+        for read in (_uvarint, _svarint):
+            with pytest.raises(ValueError, match="too long"):
+                read(b"\xff" * 11 + b"\x01", 0)
+
+    def test_truncated_varint_raises(self):
+        for read in (_uvarint, _svarint):
+            with pytest.raises(ValueError):
+                read(b"\x80\x80", 0)
+
+    def test_orc2_reads_through_the_same_varint(self):
+        from gmall_flink_210726_spark.operators import orc2
+
+        assert orc2._uvarint is _uvarint
 
 
 class TestProtobufWalk:

@@ -1129,11 +1129,29 @@ def _blob_pair(name):
 def _direct_blob_maps(src: str) -> list[int]:
     """Lines where ``src`` calls ``.mapInPandas(`` to produce
     MEDIA_SCHEMA or right after ``select("media_id", "content")`` —
-    the two ends of a blob query that must go through ``map_pandas``."""
+    the two ends of a blob query that must go through ``map_pandas`` —
+    or calls ``map_pandas(..., MEDIA_SCHEMA)`` anywhere but inside
+    ``synthesize_blobs``, the one synthesizer skeleton."""
     import ast
 
+    tree = ast.parse(src)
+    kernel = {
+        id(n)
+        for f in ast.walk(tree)
+        if isinstance(f, ast.FunctionDef) and f.name == "synthesize_blobs"
+        for n in ast.walk(f)
+    }
     hits = []
-    for node in ast.walk(ast.parse(src)):
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None))
+            == "map_pandas"
+            and any(getattr(a, "id", None) == "MEDIA_SCHEMA" for a in node.args)
+            and id(node) not in kernel
+        ):
+            hits.append(node.lineno)
+            continue
         if not (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
@@ -1222,7 +1240,8 @@ class TestBlobQueryFusion:
             'df.select("media_id", "content").mapInPandas(gen, S)\n'
             "docs.mapInPandas(gen, MEDIA_SCHEMA)\n"
             "map_pandas(df, gen, S, ['media_id', 'content'])\n"
-        ) == [1, 2]
+            "map_pandas(docs, gen, MEDIA_SCHEMA)\n"
+        ) == [1, 2, 4]
         root = pathlib.Path(pkg.__file__).parent
         bad = {
             str(p.relative_to(root)): lines
@@ -1230,3 +1249,67 @@ class TestBlobQueryFusion:
             if (lines := _direct_blob_maps(p.read_text()))
         }
         assert not bad, f"call map_pandas instead of mapInPandas: {bad}"
+
+
+class TestBlobKernel:
+    """``blob_stats`` owns the bad-blob policy and ``synthesize_blobs``
+    the id shuffle, once for every decoder and synthesizer."""
+
+    def test_refused_and_raising_walks_keep_typed_blanks(self, spark):
+        from pyspark.sql.types import StructType
+
+        from gmall_flink_210726_spark.operators.multimodal import blob_stats
+
+        schema = StructType.fromDDL(
+            "media_id long, format string, n long, tag string, x double, raw binary"
+        )
+
+        def walk(b: bytes):
+            if b == b"boom":
+                raise RuntimeError("corrupt blob")
+            if b == b"no":
+                return None
+            return {"n": len(b), "tag": b.decode(), "x": 0.5, "raw": b[:1]}
+
+        media = spark.createDataFrame(
+            [(1, b"boom"), (2, b"no"), (3, b"abc"), (4, None)],
+            "media_id long, content binary",
+        )
+        got = {r.media_id: r for r in blob_stats(media, walk, schema, "t").collect()}
+        blank = dict(format="unknown", n=0, tag="", x=0.0, raw=None)
+        assert got[1].asDict() == dict(blank, media_id=1)
+        assert got[2].asDict() == dict(blank, media_id=2)
+        assert got[3].asDict() == dict(
+            media_id=3, format="t", n=3, tag="abc", x=0.5, raw=bytearray(b"a")
+        )
+        # a null blob walks as b""
+        assert got[4].asDict() == dict(
+            media_id=4, format="t", n=0, tag="", x=0.5, raw=bytearray()
+        )
+
+    def test_partitions_shuffle_ids_before_synthesis(self, spark):
+        from pyspark.sql.types import StructType
+
+        from gmall_flink_210726_spark.operators.multimodal import (
+            blob_meta,
+            blob_stats,
+            synthesize_blobs,
+        )
+        from gmall_flink_210726_spark.sources.batch import load_table
+
+        docs = load_table(spark, SF_SMALL, "documents")
+        media = synthesize_blobs(
+            docs, lambda i: bytes([i % 256]) * 3, blob_meta("x"), partitions=3
+        )
+        out = blob_stats(
+            media,
+            lambda b: {"n": len(b)},
+            StructType.fromDDL("media_id long, format string, n long"),
+            "x",
+        )
+        lines = _plan(out).splitlines()
+        at = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+        assert _python_nodes(out) == 1 and len(at) == 1
+        assert [i for i, ln in enumerate(lines) if "MapInPandas" in ln][0] < at[0]
+        assert "content" not in "\n".join(lines[at[0]:])
+        assert {r.n for r in out.collect()} == {3}

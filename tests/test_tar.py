@@ -9,14 +9,15 @@ import pandas as pd
 
 from gmall_flink_210726_spark.operators.tar import (
     _BLOCK,
+    TAR_SCHEMA,
     _make_tar,
-    _tar_batch,
     _walk_tar,
 )
+from gmall_flink_210726_spark.operators.multimodal import blob_batch
 
 
 def _decode(blob: bytes) -> pd.Series:
-    return _tar_batch(
+    return blob_batch(_walk_tar, TAR_SCHEMA, "tar")(
         pd.DataFrame({"media_id": [1], "content": [blob]})
     ).iloc[0]
 

@@ -13,14 +13,15 @@ import zipfile
 import pandas as pd
 
 from gmall_flink_210726_spark.operators.zipc import (
+    ZIP_SCHEMA,
     _make_zip,
     _walk_zip,
-    _zip_batch,
 )
+from gmall_flink_210726_spark.operators.multimodal import blob_batch
 
 
 def _decode(blob: bytes) -> pd.Series:
-    return _zip_batch(
+    return blob_batch(_walk_zip, ZIP_SCHEMA, "zip")(
         pd.DataFrame({"media_id": [1], "content": [blob]})
     ).iloc[0]
 
