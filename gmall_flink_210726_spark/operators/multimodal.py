@@ -135,7 +135,7 @@ def synthesize_blobs(
 
     sel = docs.select(*cols)
     # partitions: stream twins pin the src file count here, BEFORE
-    # blob synthesis, so only doc ids are ever shuffled (guide §8)
+    # blob synthesis, so only doc ids are ever shuffled
     docs = sel.repartition(partitions) if partitions else ensure_parallelism(sel)
     meta_of = meta if callable(meta) else lambda _: meta
 
