@@ -54,6 +54,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.orc import _enc_uvarint, _zz_enc
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _Reader,
     snappy_decompress,
@@ -366,32 +367,10 @@ _SCHEMA = {
 }
 
 
-def _zz_enc(v: int) -> bytes:
-    u = (v << 1) ^ (v >> 63) if v < 0 else v << 1
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _snappy_literal(data: bytes) -> bytes:
     """Literal-only snappy block (valid snappy by construction):
     varint uncompressed length, then <=60-byte literal runs."""
-    out = bytearray()
-    n = len(data)
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            break
+    out = bytearray(_enc_uvarint(len(data)))
     for pos in range(0, len(data), 60):
         chunk = data[pos : pos + 60]
         out.append((len(chunk) - 1) << 2)

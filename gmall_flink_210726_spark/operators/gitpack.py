@@ -58,6 +58,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.orc import _enc_uvarint
 
 _OBJ_COMMIT = 1
 _OBJ_TREE = 2
@@ -473,18 +474,6 @@ def _enc_ofs(off: int) -> bytes:
     )
 
 
-def _enc_delta_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _make_delta(base: bytes, result: bytes) -> bytes:
     """copy(shared prefix) + insert(rest) — enough to exercise both
     command kinds."""
@@ -497,8 +486,8 @@ def _make_delta(base: bytes, result: bytes) -> bytes:
     ):
         prefix += 1
     out = bytearray()
-    out += _enc_delta_varint(len(base))
-    out += _enc_delta_varint(len(result))
+    out += _enc_uvarint(len(base))
+    out += _enc_uvarint(len(result))
     if prefix:
         out += bytes([0x80 | 0x01 | 0x10, 0x00, prefix])
         # cmd: copy, offset byte 0 present (=0), size byte 0 present
@@ -572,8 +561,8 @@ def make_git_pack(i: int) -> bytes:
             delta = _make_delta(blobs[b - 1], content)
             if i % 19 == 0 and i % 13 != 0 and i % 17 != 0 and b == 2:
                 delta = (
-                    _enc_delta_varint(len(blobs[b - 1]) + 1)
-                    + delta[len(_enc_delta_varint(len(blobs[b - 1]))) :]
+                    _enc_uvarint(len(blobs[b - 1]) + 1)
+                    + delta[len(_enc_uvarint(len(blobs[b - 1]))) :]
                 )
             pack.extend(
                 _enc_obj_header(_OBJ_OFS_DELTA, len(delta))

@@ -51,6 +51,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.orc import _zz_enc
 
 # CRC32C (Castagnoli), reflected polynomial 0x82F63B78, from scratch
 _CRC32C_TABLE = []
@@ -179,19 +180,6 @@ def _zz_dec(data: bytes, pos: int) -> tuple[int, int]:
         if not b & 0x80:
             return (v >> 1) ^ -(v & 1), pos
         shift += 7
-
-
-def _zz_enc(v: int) -> bytes:
-    u = (v << 1) ^ (v >> 63) if v < 0 else v << 1
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
 
 
 _COMP_NAMES = {0: "none", 1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}

@@ -168,6 +168,26 @@ def _uvarint(data: bytes, pos: int) -> tuple[int, int]:
             raise ValueError("varint: too long")
 
 
+def _enc_uvarint(v: int) -> bytes:
+    """LEB128, the inverse of ``_uvarint``: the unsigned varint of
+    protobuf, ORC, Avro, Kafka, LevelDB, Thrift compact, snappy and
+    git deltas. Negative values must be masked or zigzagged first."""
+    if v < 0:
+        raise ValueError("varint: negative value")
+    out = bytearray()
+    while v > 0x7F:
+        out.append((v & 0x7F) | 0x80)
+        v >>= 7
+    out.append(v)
+    return bytes(out)
+
+
+def _zz_enc(v: int) -> bytes:
+    """Zigzag varint of a signed 64-bit value, the inverse of
+    ``_svarint``."""
+    return _enc_uvarint((v << 1) ^ (v >> 63))
+
+
 def _svarints(body: bytes, rows: int) -> tuple[list[int], int]:
     """Decode exactly ``rows`` zigzag varints from ``body`` (the ORC
     decimal mantissa DATA stream shape); returns (values, end_pos).

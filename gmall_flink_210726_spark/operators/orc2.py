@@ -59,11 +59,13 @@ from gmall_flink_210726_spark.operators.multimodal import (
 )
 from gmall_flink_210726_spark.operators.orc import (
     _COMP_NAMES,
+    _enc_uvarint,
     _pb_fields,
     _rle_v2,
     _svarints,
     _unframe,
     _uvarint,
+    _zz_enc,
     _zz,
 )
 
@@ -500,25 +502,13 @@ def _rowindex_params(i: int) -> tuple[int, int, int]:
     return n, 300 * s_target + lo_raw, 300 * s_target + lo_raw + 20
 
 
-def _encode_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _same_len_bump(v: int, zig: bool) -> bytes:
     """Re-encode v+delta (delta in 1..63) at the same varint length —
     the length-preserving lie splice."""
-    enc = _encode_varint(((v << 1) ^ (v >> 63)) if zig else v)
+    enc = _zz_enc(v) if zig else _enc_uvarint(v)
     for delta in range(1, 64):
         nv = v + delta
-        ne = _encode_varint(((nv << 1) ^ (nv >> 63)) if zig else nv)
+        ne = _zz_enc(nv) if zig else _enc_uvarint(nv)
         if len(ne) == len(enc):
             return ne
     raise AssertionError("no same-length bump found")

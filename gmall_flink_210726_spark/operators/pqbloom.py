@@ -50,6 +50,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.orc import _enc_uvarint, _zz_enc
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _decode_rle_hybrid,
     _Reader,
@@ -124,28 +125,8 @@ _T_LIST = 9
 _T_STRUCT = 12
 
 
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _zig(n: int) -> int:
-    return (n << 1) if n >= 0 else ((-n) << 1) - 1
-
-
-def _i(n: int) -> bytes:
-    return _varint(_zig(n))
-
-
 def _binary(b: bytes) -> bytes:
-    return _varint(len(b)) + b
+    return _enc_uvarint(len(b)) + b
 
 
 def _tlist(etype: int, elems: list[bytes]) -> bytes:
@@ -153,7 +134,7 @@ def _tlist(etype: int, elems: list[bytes]) -> bytes:
     head = (
         bytes([(n << 4) | etype])
         if n < 15
-        else bytes([0xF0 | etype]) + _varint(n)
+        else bytes([0xF0 | etype]) + _enc_uvarint(n)
     )
     return head + b"".join(elems)
 
@@ -169,7 +150,7 @@ def _tstruct(items: list[tuple[int, int, bytes]]) -> bytes:
             out.append((delta << 4) | ftype)
         else:
             out.append(ftype)
-            out += _i(fid)
+            out += _zz_enc(fid)
         out += payload
         last = fid
     out.append(0)
@@ -190,7 +171,7 @@ def make_bloom_section(values: list, nblocks: int) -> bytes:
         sbbf_insert(bitset, _h_value(v))
     header = _tstruct(
         [
-            (1, _T_I32, _i(32 * nblocks)),
+            (1, _T_I32, _zz_enc(32 * nblocks)),
             (2, _T_STRUCT, _empty_union()),
             (3, _T_STRUCT, _empty_union()),
             (4, _T_STRUCT, _empty_union()),
@@ -205,7 +186,7 @@ def _data_page(values: list) -> bytes:
     PLAIN values — little-endian int64s, or length-prefixed
     BYTE_ARRAYs."""
     n = len(values)
-    levels = _varint(n << 1) + b"\x01"  # one RLE run of 1s
+    levels = _enc_uvarint(n << 1) + b"\x01"  # one RLE run of 1s
     if values and isinstance(values[0], bytes):
         payload = b"".join(
             struct.pack("<I", len(v)) + v for v in values
@@ -215,17 +196,17 @@ def _data_page(values: list) -> bytes:
     body = struct.pack("<I", len(levels)) + levels + payload
     dph = _tstruct(
         [
-            (1, _T_I32, _i(n)),
-            (2, _T_I32, _i(0)),  # PLAIN
-            (3, _T_I32, _i(3)),  # RLE def levels
-            (4, _T_I32, _i(3)),  # RLE rep levels
+            (1, _T_I32, _zz_enc(n)),
+            (2, _T_I32, _zz_enc(0)),  # PLAIN
+            (3, _T_I32, _zz_enc(3)),  # RLE def levels
+            (4, _T_I32, _zz_enc(3)),  # RLE rep levels
         ]
     )
     header = _tstruct(
         [
-            (1, _T_I32, _i(0)),  # DATA_PAGE
-            (2, _T_I32, _i(len(body))),
-            (3, _T_I32, _i(len(body))),
+            (1, _T_I32, _zz_enc(0)),  # DATA_PAGE
+            (2, _T_I32, _zz_enc(len(body))),
+            (3, _T_I32, _zz_enc(len(body))),
             (5, _T_STRUCT, dph),
         ]
     )
@@ -300,13 +281,13 @@ def write_parquet_bloom(
             _tstruct(
                 [
                     (4, _T_BINARY, _binary(b"schema")),
-                    (5, _T_I32, _i(1)),
+                    (5, _T_I32, _zz_enc(1)),
                 ]
             ),
             _tstruct(
                 [
-                    (1, _T_I32, _i(ptype)),  # INT64 / BYTE_ARRAY
-                    (3, _T_I32, _i(1)),  # OPTIONAL
+                    (1, _T_I32, _zz_enc(ptype)),  # INT64 / BYTE_ARRAY
+                    (3, _T_I32, _zz_enc(1)),  # OPTIONAL
                     (4, _T_BINARY, _binary(b"k")),
                 ]
             ),
@@ -316,35 +297,35 @@ def write_parquet_bloom(
     for (poff, psize, n), (boff, blen) in zip(page_info, bloom_info):
         cmeta = _tstruct(
             [
-                (1, _T_I32, _i(ptype)),
-                (2, _T_LIST, _tlist(_T_I32, [_i(0), _i(3)])),
+                (1, _T_I32, _zz_enc(ptype)),
+                (2, _T_LIST, _tlist(_T_I32, [_zz_enc(0), _zz_enc(3)])),
                 (3, _T_LIST, _tlist(_T_BINARY, [_binary(b"k")])),
-                (4, _T_I32, _i(0)),  # UNCOMPRESSED
-                (5, _T_I64, _i(n)),
-                (6, _T_I64, _i(psize)),
-                (7, _T_I64, _i(psize)),
-                (9, _T_I64, _i(poff)),
-                (14, _T_I64, _i(boff)),
-                (15, _T_I32, _i(blen)),
+                (4, _T_I32, _zz_enc(0)),  # UNCOMPRESSED
+                (5, _T_I64, _zz_enc(n)),
+                (6, _T_I64, _zz_enc(psize)),
+                (7, _T_I64, _zz_enc(psize)),
+                (9, _T_I64, _zz_enc(poff)),
+                (14, _T_I64, _zz_enc(boff)),
+                (15, _T_I32, _zz_enc(blen)),
             ]
         )
         chunk = _tstruct(
-            [(2, _T_I64, _i(poff)), (3, _T_STRUCT, cmeta)]
+            [(2, _T_I64, _zz_enc(poff)), (3, _T_STRUCT, cmeta)]
         )
         row_groups.append(
             _tstruct(
                 [
                     (1, _T_LIST, _tlist(_T_STRUCT, [chunk])),
-                    (2, _T_I64, _i(psize)),
-                    (3, _T_I64, _i(n)),
+                    (2, _T_I64, _zz_enc(psize)),
+                    (3, _T_I64, _zz_enc(n)),
                 ]
             )
         )
     footer = _tstruct(
         [
-            (1, _T_I32, _i(1)),
+            (1, _T_I32, _zz_enc(1)),
             (2, _T_LIST, schema),
-            (3, _T_I64, _i(sum(n for _, _, n in page_info))),
+            (3, _T_I64, _zz_enc(sum(n for _, _, n in page_info))),
             (4, _T_LIST, _tlist(_T_STRUCT, row_groups)),
             (6, _T_BINARY, _binary(b"pqbloom-hand-writer")),
         ]

@@ -56,6 +56,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.orc import _enc_uvarint
 from gmall_flink_210726_spark.operators.parquetmeta import (
     snappy_decompress,
 )
@@ -281,18 +282,6 @@ def _sst_vbyte(i: int, r: int, j: int) -> int:
     return (5 * i + 3 * r + j) % 251
 
 
-def _enc_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _build_block(entries: list[tuple[bytes, bytes]]) -> bytes:
     body = bytearray()
     restarts = []
@@ -309,9 +298,9 @@ def _build_block(entries: list[tuple[bytes, bytes]]) -> bytes:
                 and prev[shared] == key[shared]
             ):
                 shared += 1
-        body += _enc_varint(shared)
-        body += _enc_varint(len(key) - shared)
-        body += _enc_varint(len(value))
+        body += _enc_uvarint(shared)
+        body += _enc_uvarint(len(key) - shared)
+        body += _enc_uvarint(len(value))
         body += key[shared:]
         body += value
         prev = key
@@ -376,7 +365,7 @@ def make_sstable(i: int) -> bytes:
         index_entries.append(
             (
                 chunk[-1][0],
-                _enc_varint(off) + _enc_varint(size),
+                _enc_uvarint(off) + _enc_uvarint(size),
             )
         )
     meta_off = len(out)
@@ -389,8 +378,8 @@ def make_sstable(i: int) -> bytes:
     _emit_block(out, _build_block(index_entries), compress=False)
     idx_size = len(out) - idx_off - 5
     footer = bytearray()
-    footer += _enc_varint(meta_off) + _enc_varint(meta_size)
-    footer += _enc_varint(idx_off) + _enc_varint(idx_size)
+    footer += _enc_uvarint(meta_off) + _enc_uvarint(meta_size)
+    footer += _enc_uvarint(idx_off) + _enc_uvarint(idx_size)
     footer += b"\x00" * (40 - len(footer))
     footer += _MAGIC
     out += footer

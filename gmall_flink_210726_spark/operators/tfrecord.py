@@ -46,7 +46,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
-from gmall_flink_210726_spark.operators.orc import _pb_fields
+from gmall_flink_210726_spark.operators.orc import _enc_uvarint, _pb_fields
 
 _MASK_DELTA = 0xA282EAD8
 
@@ -212,26 +212,15 @@ def read_tfrecord_examples(data: bytes) -> dict | None:
 # --------------------------------------------------------- fixtures
 
 
+_U64 = (1 << 64) - 1  # int64 varints are two's complement
+
+
 def _pb_tag(fn: int, wt: int) -> bytes:
-    return _pb_varint((fn << 3) | wt)
-
-
-def _pb_varint(v: int) -> bytes:
-    if v < 0:
-        v &= (1 << 64) - 1  # int64 varints are two's complement
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return _enc_uvarint((fn << 3) | wt)
 
 
 def _pb_len(fn: int, payload: bytes) -> bytes:
-    return _pb_tag(fn, 2) + _pb_varint(len(payload)) + payload
+    return _pb_tag(fn, 2) + _enc_uvarint(len(payload)) + payload
 
 
 def make_tf_example(
@@ -246,9 +235,9 @@ def make_tf_example(
     def entry(name: str, feat: bytes) -> bytes:
         return _pb_len(1, _pb_len(1, name.encode()) + _pb_len(2, feat))
 
-    id_f = feature(3, _pb_len(1, _pb_varint(rid)))
+    id_f = feature(3, _pb_len(1, _enc_uvarint(rid & _U64)))
     tok_f = feature(
-        3, _pb_len(1, b"".join(_pb_varint(t) for t in tokens))
+        3, _pb_len(1, b"".join(_enc_uvarint(t & _U64) for t in tokens))
     )
     txt_f = feature(1, _pb_len(1, text))
     sc_f = feature(2, _pb_len(1, struct.pack("<f", score)))

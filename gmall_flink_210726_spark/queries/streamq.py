@@ -8,6 +8,13 @@ driver's events parquet → streaming operator → memory sink → the
 materialized result is returned as a batch DataFrame for the DuckDB
 oracle compare.
 
+Two runners execute every ``st*`` stream, both with an availableNow
+trigger under :func:`replay_partitions`: :func:`_run_to_memory` (memory
+sink, the sink rows are the result) and :func:`_run_to_epoch_sink`
+(checkpointed foreachBatch into the overwrite-idempotent epoch sink,
+then a merge over what the sink durably wrote). Both wait and stop
+through :func:`_await_then_stop`.
+
 - ``st1_stream_daily_uv`` drives the T5 keyed-state operator
   (``applyInPandasWithState``, streaming/stateful.py) — the streaming
   twin of dwm/UniqueVisitApp.java:50-92.
@@ -32,12 +39,17 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_flink_210726_spark.registry import register
+from gmall_flink_210726_spark.sinks import append_stats_exactly_once
+from gmall_flink_210726_spark.streaming.pipelines import write_foreach_batch
 from gmall_flink_210726_spark.streaming.stateful import (
     streaming_daily_uv,
     streaming_detect_jumps,
@@ -151,6 +163,18 @@ def replay_partitions(spark: SparkSession, *source_paths: str):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _await_then_stop(q) -> None:
+    """Wait for an availableNow query to drain its backlog, then stop it
+    on every exit, so neither a hung stream (``TimeoutError``) nor a
+    failed micro-batch leaves a query running behind the caller's
+    cleanup."""
+    try:
+        if not q.awaitTermination(600):
+            raise TimeoutError(f"streaming query {q.name or q.id} did not finish")
+    finally:
+        q.stop()
+
+
 def _run_to_memory(stream_df: DataFrame, prefix: str, *source_paths: str) -> str:
     """Execute the streaming plan with an availableNow trigger into a
     memory sink; returns the sink table name. availableNow processes the
@@ -171,13 +195,46 @@ def _run_to_memory(stream_df: DataFrame, prefix: str, *source_paths: str) -> str
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError(f"streaming query {name} did not finish")
-        finally:
-            q.stop()
+        _await_then_stop(q)
     return name
+
+
+def _run_to_epoch_sink(
+    stream_df: DataFrame,
+    partials: Callable[[DataFrame], DataFrame],
+    serve: Callable[[DataFrame], DataFrame],
+    *source_paths: str,
+) -> DataFrame:
+    """Replay ``stream_df`` through the checkpointed foreachBatch sink
+    (K3/T9): each micro-batch writes ``partials(batch)`` as its own
+    overwrite-idempotent ``epoch_id=N`` partition
+    (``sinks.append_stats_exactly_once``), so a retried epoch replaces
+    rather than double-counts. ``serve`` then merges what the sink
+    durably wrote, and the result is materialized before the sink and
+    checkpoint dirs are removed (the driver collects after the query
+    returns; repeated runs must not accumulate temp state).
+
+    Everything runs under :func:`replay_partitions` sized from
+    ``source_paths``, so the read-back shuffle keeps the replay's
+    partition count."""
+    spark = stream_df.sparkSession
+    out = tempfile.mkdtemp(prefix="epoch_sink_")
+    ckpt = tempfile.mkdtemp(prefix="epoch_ckpt_")
+    try:
+        with replay_partitions(spark, *source_paths):
+            _await_then_stop(
+                write_foreach_batch(
+                    stream_df,
+                    lambda batch, epoch: append_stats_exactly_once(
+                        partials(batch), epoch, out
+                    ),
+                    checkpoint_dir=ckpt,
+                )
+            )
+            return serve(spark.read.parquet(out)).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -337,9 +394,6 @@ def st3_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def st4_stream_jump_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     # stage events + a far-future sentinel into a temp stream dir; the
     # sentinel's mid emits nothing (non-entry, fresh key) but its ts
     # pushes the watermark past every pending entry's 60 s deadline
@@ -491,13 +545,6 @@ def st5_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink"),
 )
 def st6_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import write_foreach_batch
-
-    out = tempfile.mkdtemp(prefix="st6_sink_")
-    ckpt = tempfile.mkdtemp(prefix="st6_ckpt_")
     ev = (
         _stream_events(spark, sf_dir)
         .select(
@@ -515,31 +562,12 @@ def st6_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
         "pv_ct",
         (F.col("pv_ct") % 2).alias("parity"),
     )
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(
-                result,
-                lambda b, e: append_stats_exactly_once(b, e, out),
-                checkpoint_dir=ckpt,
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st6 foreachBatch stream did not finish")
-            q.stop()
-            # materialize the read-back BEFORE deleting the sink dir (the
-            # driver collects after we return), then clean up: repeated
-            # bench/parity runs must not accumulate /tmp state
-            readback = (
-                spark.read.parquet(out)
-                .select("stt", "event_type", "pv_ct", "parity")
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        import shutil
-
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return readback
+    return _run_to_epoch_sink(
+        result,
+        lambda batch: batch,
+        lambda sunk: sunk.select("stt", "event_type", "pv_ct", "parity"),
+        f"{sf_dir}/events.parquet",
+    )
 
 
 @register(
@@ -562,9 +590,6 @@ def st6_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "stateful"),
 )
 def st7_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from gmall_flink_210726_spark.streaming.pipelines import streaming_dedup
 
     stage = tempfile.mkdtemp(prefix="st7_replay_")

@@ -19,7 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_210726_spark.queries.streamq import replay_partitions
+from gmall_flink_210726_spark.queries.streamq import (
+    _run_to_epoch_sink,
+    _stream_events,
+)
 from gmall_flink_210726_spark.registry import register
 from gmall_flink_210726_spark.sources.batch import load_table
 
@@ -54,48 +57,24 @@ _HASH60 = (
     tags=("streaming", "sketch", "sink"),
 )
 def st9_stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from gmall_flink_210726_spark.operators.sketch import cms_cells, cms_probe
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import write_foreach_batch
 
-    out = tempfile.mkdtemp(prefix="st9_cells_")
-    ckpt = tempfile.mkdtemp(prefix="st9_ckpt_")
     ev = _stream_events(spark, sf_dir).select("user_id")
 
-    def _write_cells(batch: DataFrame, epoch: int) -> None:
+    def _cells(batch: DataFrame) -> DataFrame:
         counts = batch.groupBy("user_id").agg(F.count(F.lit(1)).alias("ct"))
-        append_stats_exactly_once(
-            cms_cells(counts, "user_id", "ct"), epoch, out
-        )
+        return cms_cells(counts, "user_id", "ct")
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(ev, _write_cells, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st9 sketch stream did not finish")
-            q.stop()
-            merged = (
-                spark.read.parquet(out)
-                .groupBy("j", "ctr")
-                .agg(F.sum("cell").alias("cell"))
-            )
-            exact = (
-                load_table(spark, sf_dir, "events")
-                .groupBy("user_id")
-                .agg(F.count(F.lit(1)).alias("ct"))
-            )
-            result = cms_probe(merged, exact, "user_id", "ct").localCheckpoint(
-                eager=True
-            )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    def _probe(cells: DataFrame) -> DataFrame:
+        merged = cells.groupBy("j", "ctr").agg(F.sum("cell").alias("cell"))
+        exact = (
+            load_table(spark, sf_dir, "events")
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("ct"))
+        )
+        return cms_probe(merged, exact, "user_id", "ct")
+
+    return _run_to_epoch_sink(ev, _cells, _probe, f"{sf_dir}/events.parquet")
 
 
 @register(
@@ -133,51 +112,32 @@ def st9_stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sketch", "sink"),
 )
 def st10_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from gmall_flink_210726_spark.operators.sketch import (
         hll_estimate_from_registers,
         hll_registers,
     )
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import write_foreach_batch
 
-    out = tempfile.mkdtemp(prefix="st10_regs_")
-    ckpt = tempfile.mkdtemp(prefix="st10_ckpt_")
     ev = _stream_events(spark, sf_dir).select("user_id")
 
-    def _write_regs(batch: DataFrame, epoch: int) -> None:
+    def _regs(batch: DataFrame) -> DataFrame:
         keyed = batch.select("user_id").distinct()
-        append_stats_exactly_once(
-            hll_registers(keyed, [], "user_id"), epoch, out
-        )
+        return hll_registers(keyed, [], "user_id")
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(ev, _write_regs, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st10 sketch stream did not finish")
-            q.stop()
-            merged = (
-                spark.read.parquet(out)
-                .groupBy("reg")
-                .agg(F.max("m").alias("m"))
-                .withColumn("scope", F.lit("all"))
-            )
-            est = hll_estimate_from_registers(merged, ["scope"])
-            exact = (
-                load_table(spark, sf_dir, "events")
-                .agg(F.count_distinct("user_id").alias("exact_distinct"))
-                .withColumn("scope", F.lit("all"))
-            )
-            result = est.join(exact, "scope").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    def _estimate(regs: DataFrame) -> DataFrame:
+        merged = (
+            regs.groupBy("reg")
+            .agg(F.max("m").alias("m"))
+            .withColumn("scope", F.lit("all"))
+        )
+        est = hll_estimate_from_registers(merged, ["scope"])
+        exact = (
+            load_table(spark, sf_dir, "events")
+            .agg(F.count_distinct("user_id").alias("exact_distinct"))
+            .withColumn("scope", F.lit("all"))
+        )
+        return est.join(exact, "scope")
+
+    return _run_to_epoch_sink(ev, _regs, _estimate, f"{sf_dir}/events.parquet")
 
 
 @register(
@@ -349,22 +309,10 @@ def st11_stream_left_outer_interval_join(
     tags=("streaming", "sketch", "sink"),
 )
 def st12_stream_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from gmall_flink_210726_spark.operators.sketch import (
-        bloom_filter_calibration,
-    )
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import write_foreach_batch
-
     m_bits, k_hashes = 8192, 4
-    out = tempfile.mkdtemp(prefix="st12_bits_")
-    ckpt = tempfile.mkdtemp(prefix="st12_ckpt_")
     ev = _stream_events(spark, sf_dir).select("user_id")
 
-    def _write_bits(batch: DataFrame, epoch: int) -> None:
+    def _bits(batch: DataFrame) -> DataFrame:
         ks = F.explode(F.sequence(F.lit(0), F.lit(k_hashes - 1))).alias("j")
         bit = (
             F.conv(
@@ -382,74 +330,65 @@ def st12_stream_bloom_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long")
             % F.lit(m_bits)
         ).alias("bit")
-        bits = (
+        return (
             batch.select("user_id").distinct().select("user_id", ks)
             .select(bit)
             .distinct()
         )
-        append_stats_exactly_once(bits, epoch, out)
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(ev, _write_bits, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st12 sketch stream did not finish")
-            q.stop()
-            merged_bits = spark.read.parquet(out).select("bit").distinct()
-            members = (
-                load_table(spark, sf_dir, "events")
-                .select(F.col("user_id").alias("key"))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            probes = members.unionByName(
-                members.select((F.col("key") + F.lit(1_000_000_000)).alias("key"))
-            )
-            # reuse the batch calibration operator's probe/truth logic, but
-            # against the STREAM-merged filter: re-derive probe bits and
-            # join the durable bit set
-            ks = F.explode(F.sequence(F.lit(0), F.lit(k_hashes - 1))).alias("j")
-            bit = (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws(":", F.col("j"), F.col("k").cast("string"))),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % F.lit(m_bits)
-            ).alias("bit")
-            pr = probes.select(F.col("key").alias("k")).distinct()
-            probe_bits = pr.select("k", ks).select("k", bit)
-            hits = (
-                probe_bits.join(
-                    F.broadcast(merged_bits.select("bit", F.lit(1).alias("_set"))),
-                    "bit",
-                    "left",
-                )
-                .groupBy("k")
-                .agg((F.count("_set") == F.lit(k_hashes)).alias("bloom_pass"))
-            )
-            truth = hits.join(
-                members.select(F.col("key").alias("k"), F.lit(1).alias("_m")),
-                "k",
+    def _calibrate(bits: DataFrame) -> DataFrame:
+        merged_bits = bits.select("bit").distinct()
+        members = (
+            load_table(spark, sf_dir, "events")
+            .select(F.col("user_id").alias("key"))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        probes = members.unionByName(
+            members.select((F.col("key") + F.lit(1_000_000_000)).alias("key"))
+        )
+        # reuse the batch calibration operator's probe/truth logic, but
+        # against the STREAM-merged filter: re-derive probe bits and
+        # join the durable bit set
+        ks = F.explode(F.sequence(F.lit(0), F.lit(k_hashes - 1))).alias("j")
+        bit = (
+            F.conv(
+                F.substring(
+                    F.md5(F.concat_ws(":", F.col("j"), F.col("k").cast("string"))),
+                    1,
+                    15,
+                ),
+                16,
+                10,
+            ).cast("long")
+            % F.lit(m_bits)
+        ).alias("bit")
+        pr = probes.select(F.col("key").alias("k")).distinct()
+        probe_bits = pr.select("k", ks).select("k", bit)
+        hits = (
+            probe_bits.join(
+                F.broadcast(merged_bits.select("bit", F.lit(1).alias("_set"))),
+                "bit",
                 "left",
-            ).select("k", "bloom_pass", F.col("_m").isNotNull().alias("is_member"))
-            result = truth.agg(
-                F.count(F.lit(1)).alias("n_probes"),
-                F.sum(F.col("is_member").cast("long")).cast("long").alias("n_members"),
-                F.sum(F.col("bloom_pass").cast("long")).cast("long").alias("n_pass"),
-                F.sum(
-                    (F.col("bloom_pass") & ~F.col("is_member")).cast("long")
-                ).cast("long").alias("n_false_pos"),
-                F.sum(
-                    (~F.col("bloom_pass") & F.col("is_member")).cast("long")
-                ).cast("long").alias("n_false_neg"),
-            ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+            )
+            .groupBy("k")
+            .agg((F.count("_set") == F.lit(k_hashes)).alias("bloom_pass"))
+        )
+        truth = hits.join(
+            members.select(F.col("key").alias("k"), F.lit(1).alias("_m")),
+            "k",
+            "left",
+        ).select("k", "bloom_pass", F.col("_m").isNotNull().alias("is_member"))
+        return truth.agg(
+            F.count(F.lit(1)).alias("n_probes"),
+            F.sum(F.col("is_member").cast("long")).cast("long").alias("n_members"),
+            F.sum(F.col("bloom_pass").cast("long")).cast("long").alias("n_pass"),
+            F.sum(
+                (F.col("bloom_pass") & ~F.col("is_member")).cast("long")
+            ).cast("long").alias("n_false_pos"),
+            F.sum(
+                (~F.col("bloom_pass") & F.col("is_member")).cast("long")
+            ).cast("long").alias("n_false_neg"),
+        )
+
+    return _run_to_epoch_sink(ev, _bits, _calibrate, f"{sf_dir}/events.parquet")

@@ -1,22 +1,39 @@
-r"""Streaming wave 3: pre-aggregated top-k serving.
+r"""Streaming wave 3: epoch-sink serving patterns (st13-st21) and the
+stream-ingest twins of the blob decoders (st22-st37).
 
-st13 maintains per-(hour, event_type) count partials through the
-checkpointed foreachBatch pipeline and the overwrite-idempotent
-epoch-partition sink, then ranks top-3 types per hour AT READ TIME
-from the merged durable partials — the pre-aggregate-then-serve
-pattern that replaces "sort the raw stream" at 100 TB: per-epoch
-state is bounded by (hours x types) touched in the batch, the merge
-is an additive SUM (replay-safe exactly like st9's CMS cells), and
-the rank window runs over the aggregated frame only.
+Every query here, except st17's memory-sink as-of join, runs through
+``streamq._run_to_epoch_sink``: each micro-batch reduces to bounded
+partials written through the overwrite-idempotent epoch-partition sink,
+and the result is served at read time from the merged durable partials.
+
+- st13-st21 pre-aggregate, then serve: top-k per hour (st13), CDC upsert
+  materialization (st14), KMV, AMS F2, histogram quantiles and bitmap
+  distinct sketches (st15, st18-st20), a salted stream-stream interval
+  join (st16) and a stream-static dim enrichment (st21). Per-epoch state
+  is bounded by the keys or cells a batch touches, never by its volume,
+  and each merge (SUM, argmax, set-min, bit_or) is replay-safe.
+- st22-st37 are one ``_replay_ingest`` call each: a blob synthesizer
+  lands the documents as 32 parquet files, a file stream replays them 16
+  per trigger through the family's decoder on the stream plan, and the
+  per-bucket partials (row count, decoded-format count, long sums of the
+  decoder's columns) are summed at read.
 """
 
 from __future__ import annotations
+
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gmall_flink_210726_spark.queries.streamq import replay_partitions
+from gmall_flink_210726_spark.queries.streamq import (
+    _run_to_epoch_sink,
+    _run_to_memory,
+    _stream_events,
+)
 from gmall_flink_210726_spark.registry import register
 from gmall_flink_210726_spark.sources.batch import load_table
 
@@ -47,17 +64,6 @@ from gmall_flink_210726_spark.sources.batch import load_table
     tags=("streaming", "sink", "topk"),
 )
 def st13_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
-    )
-
-    out = tempfile.mkdtemp(prefix="st13_topk_")
-    ckpt = tempfile.mkdtemp(prefix="st13_ckpt_")
     # ts arrives as epoch-nanos bigint (streamq._read_events_stream
     # contract); bucket to the hour STRING inside the batch reduction
     # so the durable partial key is timezone-free
@@ -68,40 +74,25 @@ def st13_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
     )
 
-    def _write_partials(batch: DataFrame, epoch: int) -> None:
-        partials = batch.groupBy("hour", "event_type").agg(
+    def _partials(batch: DataFrame) -> DataFrame:
+        return batch.groupBy("hour", "event_type").agg(
             F.count(F.lit(1)).cast("long").alias("ct")
         )
-        append_stats_exactly_once(partials, epoch, out)
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st13 top-k stream did not finish")
-            q.stop()
-            merged = (
-                spark.read.parquet(out)
-                .groupBy("hour", "event_type")
-                .agg(F.sum("ct").cast("long").alias("ct"))
+    def _top3(partials: DataFrame) -> DataFrame:
+        merged = partials.groupBy("hour", "event_type").agg(
+            F.sum("ct").cast("long").alias("ct")
+        )
+        rk = F.row_number().over(
+            Window.partitionBy("hour").orderBy(
+                F.col("ct").desc(), F.col("event_type")
             )
-            rk = F.row_number().over(
-                Window.partitionBy("hour").orderBy(
-                    F.col("ct").desc(), F.col("event_type")
-                )
-            )
-            result = (
-                merged.select(
-                    "hour", "event_type", "ct", rk.cast("long").alias("rk")
-                )
-                .filter(F.col("rk") <= 3)
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+        )
+        return merged.select(
+            "hour", "event_type", "ct", rk.cast("long").alias("rk")
+        ).filter(F.col("rk") <= 3)
+
+    return _run_to_epoch_sink(ev, _partials, _top3, f"{sf_dir}/events.parquet")
 
 
 @register(
@@ -132,17 +123,6 @@ def st13_stream_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink", "cdc"),
 )
 def st14_stream_upsert_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
-    )
-
-    out = tempfile.mkdtemp(prefix="st14_upsert_")
-    ckpt = tempfile.mkdtemp(prefix="st14_ckpt_")
     ev = _stream_events(spark, sf_dir).select(
         "user_id",
         F.col("event_type").alias("last_type"),
@@ -150,8 +130,8 @@ def st14_stream_upsert_materialize(spark: SparkSession, sf_dir: str) -> DataFram
         F.expr("ts div 1000").cast("long").alias("last_ts_us"),
     )
 
-    def _write_partials(batch: DataFrame, epoch: int) -> None:
-        latest = (
+    def _partials(batch: DataFrame) -> DataFrame:
+        return (
             batch.groupBy("user_id")
             .agg(
                 F.max_by(
@@ -161,23 +141,10 @@ def st14_stream_upsert_materialize(spark: SparkSession, sf_dir: str) -> DataFram
             )
             .select("user_id", "s.*")
         )
-        append_stats_exactly_once(latest, epoch, out)
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st14 upsert stream did not finish")
-            q.stop()
-            result = (
-                upsert_serve(spark.read.parquet(out))
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    return _run_to_epoch_sink(
+        ev, _partials, upsert_serve, f"{sf_dir}/events.parquet"
+    )
 
 
 def upsert_serve(partials: DataFrame) -> DataFrame:
@@ -231,21 +198,10 @@ def upsert_serve(partials: DataFrame) -> DataFrame:
     tags=("streaming", "sketch", "sink"),
 )
 def st15_stream_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
-    )
-
-    out = tempfile.mkdtemp(prefix="st15_kmv_")
-    ckpt = tempfile.mkdtemp(prefix="st15_ckpt_")
     ev = _stream_events(spark, sf_dir).select("user_id")
     k = 64
 
-    def _write_bottomk(batch: DataFrame, epoch: int) -> None:
+    def _bottomk(batch: DataFrame) -> DataFrame:
         hashed = (
             batch.where(F.col("user_id").isNotNull())
             .select(F.md5(F.col("user_id").cast("string")).alias("h"))
@@ -253,52 +209,38 @@ def st15_stream_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # per-batch bottom-k: a TakeOrdered (sort-limit), never a full
         # global sort materialization
-        append_stats_exactly_once(hashed.orderBy("h").limit(k), epoch, out)
+        return hashed.orderBy("h").limit(k)
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(ev, _write_bottomk, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st15 sketch stream did not finish")
-            q.stop()
-            merged = (
-                spark.read.parquet(out).select("h").distinct().orderBy("h").limit(k)
+    def _estimate(bottomks: DataFrame) -> DataFrame:
+        merged = bottomks.select("h").distinct().orderBy("h").limit(k)
+        wr = Window.orderBy("h")
+        kth = (
+            merged.withColumn("r", F.row_number().over(wr))
+            .agg(
+                F.max(F.when(F.col("r") == k, F.col("h"))).alias("kh"),
+                F.max("r").cast("long").alias("k_used"),
             )
-            wr = Window.orderBy("h")
-            kth = (
-                merged.withColumn("r", F.row_number().over(wr))
-                .agg(
-                    F.max(F.when(F.col("r") == k, F.col("h"))).alias("kh"),
-                    F.max("r").cast("long").alias("k_used"),
-                )
-                .withColumn("scope", F.lit("all"))
-            )
-            frac = F.conv(F.substring("kh", 1, 12), 16, 10).cast("long") / F.lit(
-                float(1 << 48)
-            )
-            est = F.when(
-                F.col("k_used") < k, F.col("k_used").cast("double")
-            ).otherwise(F.lit(float(k - 1)) / frac)
-            exact = (
-                load_table(spark, sf_dir, "events")
-                .agg(F.count_distinct("user_id").cast("long").alias("exact_distinct"))
-                .withColumn("scope", F.lit("all"))
-            )
-            result = (
-                kth.join(exact, "scope")
-                .select(
-                    "scope",
-                    "k_used",
-                    "exact_distinct",
-                    F.round(est, 4).alias("kmv_estimate"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+            .withColumn("scope", F.lit("all"))
+        )
+        frac = F.conv(F.substring("kh", 1, 12), 16, 10).cast("long") / F.lit(
+            float(1 << 48)
+        )
+        est = F.when(
+            F.col("k_used") < k, F.col("k_used").cast("double")
+        ).otherwise(F.lit(float(k - 1)) / frac)
+        exact = (
+            load_table(spark, sf_dir, "events")
+            .agg(F.count_distinct("user_id").cast("long").alias("exact_distinct"))
+            .withColumn("scope", F.lit("all"))
+        )
+        return kth.join(exact, "scope").select(
+            "scope",
+            "k_used",
+            "exact_distinct",
+            F.round(est, 4).alias("kmv_estimate"),
+        )
+
+    return _run_to_epoch_sink(ev, _bottomk, _estimate, f"{sf_dir}/events.parquet")
 
 
 @register(
@@ -336,18 +278,7 @@ def st15_stream_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st16_stream_salted_interval_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
-    )
-
     n_salts = 8
-    out = tempfile.mkdtemp(prefix="st16_salted_")
-    ckpt = tempfile.mkdtemp(prefix="st16_ckpt_")
     ev = _stream_events(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -388,29 +319,17 @@ def st16_stream_salted_interval_join(
         ),
     ).select("purchase_id")
 
-    def _write_partials(batch: DataFrame, epoch: int) -> None:
-        partials = batch.groupBy("purchase_id").agg(
+    def _partials(batch: DataFrame) -> DataFrame:
+        return batch.groupBy("purchase_id").agg(
             F.count(F.lit(1)).cast("long").alias("view_ct")
         )
-        append_stats_exactly_once(partials, epoch, out)
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(joined, _write_partials, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st16 salted interval join did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("purchase_id")
-                .agg(F.sum("view_ct").cast("long").alias("view_ct"))
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    def _merge(partials: DataFrame) -> DataFrame:
+        return partials.groupBy("purchase_id").agg(
+            F.sum("view_ct").cast("long").alias("view_ct")
+        )
+
+    return _run_to_epoch_sink(joined, _partials, _merge, f"{sf_dir}/events.parquet")
 
 
 @register(
@@ -441,11 +360,6 @@ def st16_stream_salted_interval_join(
     tags=("streaming", "join", "asof"),
 )
 def st17_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_210726_spark.queries.streamq import (
-        _run_to_memory,
-        _stream_events,
-    )
-
     # timestamp_micros, not millis: the as-of output IS the matched
     # timestamp, so sub-millisecond precision must survive the round
     # trip (st3 only counts matches and tolerates ms grain)
@@ -529,81 +443,51 @@ def st17_stream_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st18_stream_histogram_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
-    )
-
-    out = tempfile.mkdtemp(prefix="st18_hist_")
-    ckpt = tempfile.mkdtemp(prefix="st18_ckpt_")
     ev = _stream_events(spark, sf_dir).select(
         F.least(
             F.expr("CAST(round(value * 100) AS BIGINT) div 200"), F.lit(249)
         ).alias("bucket")
     )
 
-    def _write_partials(batch: DataFrame, epoch: int) -> None:
-        partials = batch.groupBy("bucket").agg(
+    def _partials(batch: DataFrame) -> DataFrame:
+        return batch.groupBy("bucket").agg(
             F.count(F.lit(1)).cast("long").alias("ct")
         )
-        append_stats_exactly_once(partials, epoch, out)
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st18 histogram stream did not finish")
-            q.stop()
-            h = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(F.sum("ct").cast("long").alias("ct"))
-            )
-            c = h.withColumn(
-                "cum",
-                F.sum("ct").over(
-                    Window.orderBy("bucket").rowsBetween(
-                        Window.unboundedPreceding, Window.currentRow
-                    )
-                ).cast("long"),
-            )
-            n = h.agg(F.sum("ct").cast("long").alias("nn"))
-            qf = spark.createDataFrame(
-                [("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)],
-                "p string, num long, den long",
-            )
-            r = qf.crossJoin(F.broadcast(n)).select(
-                "p",
-                F.expr("(num * nn + den - 1) div den").alias("rank_at"),
-                "nn",
-            )
-            sel = (
-                r.join(c, c["cum"] >= r["rank_at"])
-                .groupBy("p", "nn")
-                .agg(F.min("bucket").alias("bucket"))
-            )
-            result = (
-                sel.join(c, "bucket")
-                .select(
-                    "p",
-                    F.col("bucket").cast("long").alias("bucket"),
-                    (F.col("bucket") * 200).cast("long").alias(
-                        "bucket_lo_cents"
-                    ),
-                    "cum",
-                    F.col("nn").alias("n_rows"),
+    def _quantiles(partials: DataFrame) -> DataFrame:
+        h = partials.groupBy("bucket").agg(F.sum("ct").cast("long").alias("ct"))
+        c = h.withColumn(
+            "cum",
+            F.sum("ct").over(
+                Window.orderBy("bucket").rowsBetween(
+                    Window.unboundedPreceding, Window.currentRow
                 )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+            ).cast("long"),
+        )
+        n = h.agg(F.sum("ct").cast("long").alias("nn"))
+        qf = spark.createDataFrame(
+            [("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100)],
+            "p string, num long, den long",
+        )
+        r = qf.crossJoin(F.broadcast(n)).select(
+            "p",
+            F.expr("(num * nn + den - 1) div den").alias("rank_at"),
+            "nn",
+        )
+        sel = (
+            r.join(c, c["cum"] >= r["rank_at"])
+            .groupBy("p", "nn")
+            .agg(F.min("bucket").alias("bucket"))
+        )
+        return sel.join(c, "bucket").select(
+            "p",
+            F.col("bucket").cast("long").alias("bucket"),
+            (F.col("bucket") * 200).cast("long").alias("bucket_lo_cents"),
+            "cum",
+            F.col("nn").alias("n_rows"),
+        )
+
+    return _run_to_epoch_sink(ev, _partials, _quantiles, f"{sf_dir}/events.parquet")
 
 
 @register(
@@ -634,20 +518,9 @@ def st18_stream_histogram_quantiles(
     tags=("streaming", "sketch", "sink"),
 )
 def st19_stream_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
-    )
-
-    out = tempfile.mkdtemp(prefix="st19_ams_")
-    ckpt = tempfile.mkdtemp(prefix="st19_ckpt_")
     ev = _stream_events(spark, sf_dir).select("user_id")
 
-    def _write_partials(batch: DataFrame, epoch: int) -> None:
+    def _partials(batch: DataFrame) -> DataFrame:
         js = batch.sparkSession.range(16).select(
             F.col("id").cast("int").alias("j")
         )
@@ -674,39 +547,18 @@ def st19_stream_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(-1))
             .alias("sign"),
         )
-        partials = signed.groupBy("j").agg(
-            F.sum("sign").cast("long").alias("s")
-        )
-        append_stats_exactly_once(partials, epoch, out)
+        return signed.groupBy("j").agg(F.sum("sign").cast("long").alias("s"))
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st19 AMS stream did not finish")
-            q.stop()
-            merged = (
-                spark.read.parquet(out)
-                .groupBy("j")
-                .agg(F.sum("s").cast("long").alias("s"))
-            )
-            result = (
-                merged.agg(
-                    F.sum(F.col("s") * F.col("s")).cast("long").alias("sum_sq")
-                )
-                .select(
-                    F.lit(16).cast("long").alias("n_estimators"),
-                    (F.col("sum_sq").cast("double") / F.lit(16.0)).alias(
-                        "f2_estimate"
-                    ),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    def _f2(partials: DataFrame) -> DataFrame:
+        merged = partials.groupBy("j").agg(F.sum("s").cast("long").alias("s"))
+        return merged.agg(
+            F.sum(F.col("s") * F.col("s")).cast("long").alias("sum_sq")
+        ).select(
+            F.lit(16).cast("long").alias("n_estimators"),
+            (F.col("sum_sq").cast("double") / F.lit(16.0)).alias("f2_estimate"),
+        )
+
+    return _run_to_epoch_sink(ev, _partials, _f2, f"{sf_dir}/events.parquet")
 
 
 @register(
@@ -734,17 +586,6 @@ def st19_stream_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st20_stream_bitmap_distinct(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
-    )
-
-    out = tempfile.mkdtemp(prefix="st20_bitmap_")
-    ckpt = tempfile.mkdtemp(prefix="st20_ckpt_")
     ev = _stream_events(spark, sf_dir).select(
         F.date_format(
             F.timestamp_micros(F.expr("ts div 1000")), "yyyy-MM-dd"
@@ -752,8 +593,8 @@ def st20_stream_bitmap_distinct(
         "user_id",
     )
 
-    def _write_partials(batch: DataFrame, epoch: int) -> None:
-        words = batch.groupBy(
+    def _words(batch: DataFrame) -> DataFrame:
+        return batch.groupBy(
             "day", F.expr("user_id div 64").alias("w")
         ).agg(
             F.bit_or(
@@ -763,29 +604,16 @@ def st20_stream_bitmap_distinct(
                 )
             ).alias("bits")
         )
-        append_stats_exactly_once(words, epoch, out)
 
-    try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(ev, _write_partials, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st20 bitmap stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("day", "w")
-                .agg(F.bit_or("bits").alias("bits"))
-                .groupBy("day")
-                .agg(
-                    F.sum(F.bit_count("bits")).cast("long").alias("exact_uv")
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    def _uv(words: DataFrame) -> DataFrame:
+        return (
+            words.groupBy("day", "w")
+            .agg(F.bit_or("bits").alias("bits"))
+            .groupBy("day")
+            .agg(F.sum(F.bit_count("bits")).cast("long").alias("exact_uv"))
+        )
+
+    return _run_to_epoch_sink(ev, _words, _uv, f"{sf_dir}/events.parquet")
 
 
 @register(
@@ -818,18 +646,6 @@ def st20_stream_bitmap_distinct(
 def st21_stream_static_enrich(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from gmall_flink_210726_spark.queries.streamq import _stream_events
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.sources.batch import load_table
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
-    )
-
-    out = tempfile.mkdtemp(prefix="st21_enrich_")
-    ckpt = tempfile.mkdtemp(prefix="st21_ckpt_")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
@@ -848,33 +664,65 @@ def st21_stream_static_enrich(
         F.col("c_nationkey") == F.col("n_nationkey"),
     )
 
-    def _write_partials(batch: DataFrame, epoch: int) -> None:
-        partials = batch.groupBy("nation").agg(
+    def _partials(batch: DataFrame) -> DataFrame:
+        return batch.groupBy("nation").agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             F.sum("cents").cast("long").alias("revenue_cents"),
         )
-        append_stats_exactly_once(partials, epoch, out)
 
+    def _merge(partials: DataFrame) -> DataFrame:
+        return partials.groupBy("nation").agg(
+            F.sum("n_events").cast("long").alias("n_events"),
+            F.sum("revenue_cents").cast("long").alias("revenue_cents"),
+        )
+
+    return _run_to_epoch_sink(enriched, _partials, _merge, f"{sf_dir}/events.parquet")
+
+
+def _replay_ingest(
+    spark: SparkSession,
+    sf_dir: str,
+    synth: Callable[..., DataFrame],
+    decode: Callable[[DataFrame], DataFrame],
+    fmt: str,
+    count: str,
+    *sums: str,
+    ok: str = "n_ok",
+) -> DataFrame:
+    """The landing-and-replay shape of the stream-ingest twins
+    (st22-st37). ``synth`` lands the documents as 32 parquet files of
+    blobs, a file stream replays them 16 per trigger (two micro-batches
+    whose file splits land on every core, so blob bodies never shuffle),
+    ``decode`` runs on the stream plan, and each epoch writes per-bucket
+    (``media_id % 10``) partials through :func:`_run_to_epoch_sink`: the
+    row count ``count``, the ``format == fmt`` count ``ok`` and long sums
+    of the decoder columns ``sums``. Serving sums every partial column."""
+    cols = (count, ok, *sums)
+
+    def _partials(batch: DataFrame) -> DataFrame:
+        return batch.groupBy((F.col("media_id") % 10).alias("bucket")).agg(
+            F.count(F.lit(1)).cast("long").alias(count),
+            F.sum((F.col("format") == fmt).cast("long")).cast("long").alias(ok),
+            *(F.sum(c).cast("long").alias(c) for c in sums),
+        )
+
+    def _merge(partials: DataFrame) -> DataFrame:
+        return partials.groupBy("bucket").agg(
+            *(F.sum(c).cast("long").alias(c) for c in cols)
+        )
+
+    src = tempfile.mkdtemp(prefix="ingest_src_")
     try:
-        with replay_partitions(spark, f"{sf_dir}/events.parquet"):
-            q = write_foreach_batch(enriched, _write_partials, checkpoint_dir=ckpt)
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st21 stream-static enrich did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("nation")
-                .agg(
-                    F.sum("n_events").cast("long").alias("n_events"),
-                    F.sum("revenue_cents").cast("long").alias("revenue_cents"),
-                )
-                .localCheckpoint(eager=True)
-            )
+        docs = load_table(spark, sf_dir, "documents")
+        synth(docs, partitions=32).write.mode("overwrite").parquet(src)
+        stream = (
+            spark.readStream.schema(spark.read.parquet(src).schema)
+            .option("maxFilesPerTrigger", 16)
+            .parquet(src)
+        )
+        return _run_to_epoch_sink(decode(stream), _partials, _merge, src)
     finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+        shutil.rmtree(src, ignore_errors=True)
 
 
 @register(
@@ -928,92 +776,17 @@ def st21_stream_static_enrich(
     "warc_text_extract",
     tags=("streaming", "llm", "multimodal"),
 )
-def st22_stream_warc_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st22_stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.warc import (
         synthesize_wet_media,
         warc_text_extract,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.sources.batch import load_table
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_wet_media, warc_text_extract, "warc",
+        "n_streams", "n_records", "n_responses", "n_conversions", "n_blocks",
+        "n_words",
     )
-
-    src = tempfile.mkdtemp(prefix="st22_src_")
-    out = tempfile.mkdtemp(prefix="st22_out_")
-    ckpt = tempfile.mkdtemp(prefix="st22_ckpt_")
-    try:
-        # 32 source files, 16 per trigger: two micro-batches whose
-        # file splits land on every core — blob bodies never shuffle
-        # (at real scale a trigger brings thousands of files and this
-        # layout choice is moot; at bench scale a 2-file trigger
-        # would starve 30 of 32 cores during the Python decode)
-        (
-            synthesize_wet_media(load_table(spark, sf_dir, "documents"), partitions=32)
-            .write.mode("overwrite")
-            .option("compression", "none")  # blobs are already gzip
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = warc_text_extract(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_streams"),
-                F.sum(
-                    (F.col("format") == "warc").cast("long")
-                ).cast("long").alias("n_ok"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("n_responses").cast("long").alias("n_responses"),
-                F.sum("n_conversions").cast("long").alias(
-                    "n_conversions"
-                ),
-                F.sum("n_blocks").cast("long").alias("n_blocks"),
-                F.sum("n_words").cast("long").alias("n_words"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st22 warc ingest stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_streams").cast("long").alias("n_streams"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_records").cast("long").alias("n_records"),
-                    F.sum("n_responses").cast("long").alias("n_responses"),
-                    F.sum("n_conversions").cast("long").alias(
-                        "n_conversions"
-                    ),
-                    F.sum("n_blocks").cast("long").alias("n_blocks"),
-                    F.sum("n_words").cast("long").alias("n_words"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1073,79 +846,16 @@ def st22_stream_warc_ingest(
     "operators/wds.py wds_sample_stats",
     tags=("streaming", "llm", "multimodal"),
 )
-def st23_stream_webdataset(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st23_stream_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.wds import (
         synthesize_wds_media,
         wds_sample_stats,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_wds_media, wds_sample_stats, "webdataset",
+        "n_shards", "n_ok", "n_bad", "n_pixels", "pixel_sum", ok="n_loaded",
     )
-
-    src = tempfile.mkdtemp(prefix="st23_src_")
-    out = tempfile.mkdtemp(prefix="st23_out_")
-    ckpt = tempfile.mkdtemp(prefix="st23_ckpt_")
-    try:
-        (
-            synthesize_wds_media(load_table(spark, sf_dir, "documents"), partitions=32)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = wds_sample_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_shards"),
-                F.sum(
-                    (F.col("format") == "webdataset").cast("long")
-                ).cast("long").alias("n_loaded"),
-                F.sum("n_ok").cast("long").alias("n_ok"),
-                F.sum("n_bad").cast("long").alias("n_bad"),
-                F.sum("n_pixels").cast("long").alias("n_pixels"),
-                F.sum("pixel_sum").cast("long").alias("pixel_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st23 webdataset stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_shards").cast("long").alias("n_shards"),
-                    F.sum("n_loaded").cast("long").alias("n_loaded"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_bad").cast("long").alias("n_bad"),
-                    F.sum("n_pixels").cast("long").alias("n_pixels"),
-                    F.sum("pixel_sum").cast("long").alias("pixel_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1193,79 +903,16 @@ def st23_stream_webdataset(
     "avro_container_stats",
     tags=("streaming", "llm", "multimodal"),
 )
-def st24_stream_avro_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st24_stream_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.avro import (
         avro_container_stats,
         synthesize_avro_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_avro_media, avro_container_stats, "avro",
+        "n_files", "n_records", "n_blocks", "id_sum", "vals_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st24_src_")
-    out = tempfile.mkdtemp(prefix="st24_out_")
-    ckpt = tempfile.mkdtemp(prefix="st24_ckpt_")
-    try:
-        (
-            synthesize_avro_media(load_table(spark, sf_dir, "documents"), partitions=32)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = avro_container_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_files"),
-                F.sum(
-                    (F.col("format") == "avro").cast("long")
-                ).cast("long").alias("n_ok"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("n_blocks").cast("long").alias("n_blocks"),
-                F.sum("id_sum").cast("long").alias("id_sum"),
-                F.sum("vals_sum").cast("long").alias("vals_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st24 avro ingest stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_files").cast("long").alias("n_files"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_records").cast("long").alias("n_records"),
-                    F.sum("n_blocks").cast("long").alias("n_blocks"),
-                    F.sum("id_sum").cast("long").alias("id_sum"),
-                    F.sum("vals_sum").cast("long").alias("vals_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1309,75 +956,16 @@ def st24_stream_avro_ingest(
     "orc_column_stats",
     tags=("streaming", "llm", "multimodal", "lakehouse"),
 )
-def st25_stream_orc_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st25_stream_orc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.orc import (
         orc_column_stats,
         synthesize_orc_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_orc_media, orc_column_stats, "orc",
+        "n_files", "n_rows", "k_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st25_src_")
-    out = tempfile.mkdtemp(prefix="st25_out_")
-    ckpt = tempfile.mkdtemp(prefix="st25_ckpt_")
-    try:
-        (
-            synthesize_orc_media(load_table(spark, sf_dir, "documents"), partitions=32)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = orc_column_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_files"),
-                F.sum(
-                    (F.col("format") == "orc").cast("long")
-                ).cast("long").alias("n_ok"),
-                F.sum("n_rows").cast("long").alias("n_rows"),
-                F.sum("k_sum").cast("long").alias("k_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st25 orc ingest stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_files").cast("long").alias("n_files"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_rows").cast("long").alias("n_rows"),
-                    F.sum("k_sum").cast("long").alias("k_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1418,77 +1006,16 @@ def st25_stream_orc_ingest(
     "operators/kafkalog.py kafka_segment_stats",
     tags=("streaming", "llm", "multimodal", "kafka"),
 )
-def st26_stream_kafka_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st26_stream_kafka_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.kafkalog import (
         kafka_segment_stats,
         synthesize_kafka_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_kafka_media, kafka_segment_stats, "kafka",
+        "n_segments", "n_batches", "n_records", "payload_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st26_src_")
-    out = tempfile.mkdtemp(prefix="st26_out_")
-    ckpt = tempfile.mkdtemp(prefix="st26_ckpt_")
-    try:
-        (
-            synthesize_kafka_media(load_table(spark, sf_dir, "documents"), partitions=32)
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = kafka_segment_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_segments"),
-                F.sum(
-                    (F.col("format") == "kafka").cast("long")
-                ).cast("long").alias("n_ok"),
-                F.sum("n_batches").cast("long").alias("n_batches"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("payload_sum").cast("long").alias("payload_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st26 kafka ingest stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_segments").cast("long").alias("n_segments"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_batches").cast("long").alias("n_batches"),
-                    F.sum("n_records").cast("long").alias("n_records"),
-                    F.sum("payload_sum").cast("long").alias("payload_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1531,88 +1058,16 @@ def st26_stream_kafka_ingest(
     "operators/wikidump.py wiki_dump_stats",
     tags=("streaming", "llm", "text"),
 )
-def st27_stream_wiki_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st27_stream_wiki_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.wikidump import (
         synthesize_wiki_dump_media,
         wiki_dump_stats,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.sources.batch import load_table
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_wiki_dump_media, wiki_dump_stats, "wikidump",
+        "n_dumps", "n_pages", "id_sum", "plain_len_sum", "link_count",
     )
-
-    src = tempfile.mkdtemp(prefix="st27_src_")
-    out = tempfile.mkdtemp(prefix="st27_out_")
-    ckpt = tempfile.mkdtemp(prefix="st27_ckpt_")
-    try:
-        (
-            synthesize_wiki_dump_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .option("compression", "none")  # blobs are already bz2
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = wiki_dump_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_dumps"),
-                F.sum(
-                    (F.col("format") == "wikidump").cast("long")
-                ).cast("long").alias("n_ok"),
-                F.sum("n_pages").cast("long").alias("n_pages"),
-                F.sum("id_sum").cast("long").alias("id_sum"),
-                F.sum("plain_len_sum").cast("long").alias(
-                    "plain_len_sum"
-                ),
-                F.sum("link_count").cast("long").alias("link_count"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st27 wiki ingest stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_dumps").cast("long").alias("n_dumps"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_pages").cast("long").alias("n_pages"),
-                    F.sum("id_sum").cast("long").alias("id_sum"),
-                    F.sum("plain_len_sum").cast("long").alias(
-                        "plain_len_sum"
-                    ),
-                    F.sum("link_count").cast("long").alias("link_count"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1662,86 +1117,16 @@ def st27_stream_wiki_ingest(
     "n_ok. operators/deltadv.py scan_delta_table_mor",
     tags=("streaming", "llm", "lakehouse"),
 )
-def st28_stream_delta_dv_scan(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st28_stream_delta_dv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.deltadv import (
         delta_dv_scan_stats,
         synthesize_delta_dv_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.sources.batch import load_table
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_delta_dv_media, delta_dv_scan_stats, "delta",
+        "n_tables", "deleted_rows", "live_rows", "k_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st28_src_")
-    out = tempfile.mkdtemp(prefix="st28_out_")
-    ckpt = tempfile.mkdtemp(prefix="st28_ckpt_")
-    try:
-        (
-            synthesize_delta_dv_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .option("compression", "none")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = delta_dv_scan_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_tables"),
-                F.sum(
-                    (F.col("format") == "delta").cast("long")
-                ).cast("long").alias("n_ok"),
-                F.sum("deleted_rows").cast("long").alias(
-                    "deleted_rows"
-                ),
-                F.sum("live_rows").cast("long").alias("live_rows"),
-                F.sum("k_sum").cast("long").alias("k_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st28 delta dv stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_tables").cast("long").alias("n_tables"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("deleted_rows").cast("long").alias(
-                        "deleted_rows"
-                    ),
-                    F.sum("live_rows").cast("long").alias("live_rows"),
-                    F.sum("k_sum").cast("long").alias("k_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1789,85 +1174,16 @@ def st28_stream_delta_dv_scan(
 def st29_stream_warc_http_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from gmall_flink_210726_spark.operators.warc import (
         synthesize_warc_http_media,
         warc_http_text,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.sources.batch import load_table
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_warc_http_media, warc_http_text, "warc",
+        "n_streams", "n_http", "status_sum", "n_chunked", "n_gzip",
+        "n_deflate", "n_words",
     )
-
-    src = tempfile.mkdtemp(prefix="st29_src_")
-    out = tempfile.mkdtemp(prefix="st29_out_")
-    ckpt = tempfile.mkdtemp(prefix="st29_ckpt_")
-    try:
-        (
-            synthesize_warc_http_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .option("compression", "none")  # blobs are already gzip
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = warc_http_text(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_streams"),
-                F.sum((F.col("format") == "warc").cast("long"))
-                .cast("long")
-                .alias("n_ok"),
-                F.sum("n_http").cast("long").alias("n_http"),
-                F.sum("status_sum").cast("long").alias("status_sum"),
-                F.sum("n_chunked").cast("long").alias("n_chunked"),
-                F.sum("n_gzip").cast("long").alias("n_gzip"),
-                F.sum("n_deflate").cast("long").alias("n_deflate"),
-                F.sum("n_words").cast("long").alias("n_words"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st29 warc http stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_streams").cast("long").alias("n_streams"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_http").cast("long").alias("n_http"),
-                    F.sum("status_sum").cast("long").alias("status_sum"),
-                    F.sum("n_chunked").cast("long").alias("n_chunked"),
-                    F.sum("n_gzip").cast("long").alias("n_gzip"),
-                    F.sum("n_deflate").cast("long").alias("n_deflate"),
-                    F.sum("n_words").cast("long").alias("n_words"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -1913,79 +1229,15 @@ def st29_stream_warc_http_ingest(
 def st30_stream_orc_decimal_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from gmall_flink_210726_spark.operators.orc2 import (
         orc_dec_stats,
         synthesize_orc_dec_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.sources.batch import load_table
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_orc_dec_media, orc_dec_stats, "orc",
+        "n_files", "n_rows", "dec_sum_mant", "ns_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st30_src_")
-    out = tempfile.mkdtemp(prefix="st30_out_")
-    ckpt = tempfile.mkdtemp(prefix="st30_ckpt_")
-    try:
-        (
-            synthesize_orc_dec_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .option("compression", "none")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = orc_dec_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_files"),
-                F.sum((F.col("format") == "orc").cast("long"))
-                .cast("long")
-                .alias("n_ok"),
-                F.sum("n_rows").cast("long").alias("n_rows"),
-                F.sum("dec_sum_mant").cast("long").alias("dec_sum_mant"),
-                F.sum("ns_sum").cast("long").alias("ns_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st30 orc decimal stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_files").cast("long").alias("n_files"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_rows").cast("long").alias("n_rows"),
-                    F.sum("dec_sum_mant").cast("long").alias("dec_sum_mant"),
-                    F.sum("ns_sum").cast("long").alias("ns_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2060,91 +1312,16 @@ def st30_stream_orc_decimal_ingest(
 def st31_stream_kafka_txn_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from gmall_flink_210726_spark.operators.kafkalog import (
         kafka_committed_stats,
         synthesize_kafka_txn_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.sources.batch import load_table
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_kafka_txn_media, kafka_committed_stats,
+        "kafka", "n_segments", "committed_records", "committed_sum",
+        "aborted_records",
     )
-
-    src = tempfile.mkdtemp(prefix="st31_src_")
-    out = tempfile.mkdtemp(prefix="st31_out_")
-    ckpt = tempfile.mkdtemp(prefix="st31_ckpt_")
-    try:
-        (
-            synthesize_kafka_txn_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .option("compression", "none")  # blobs already compressed
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = kafka_committed_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_segments"),
-                F.sum((F.col("format") == "kafka").cast("long"))
-                .cast("long")
-                .alias("n_ok"),
-                F.sum("committed_records")
-                .cast("long")
-                .alias("committed_records"),
-                F.sum("committed_sum")
-                .cast("long")
-                .alias("committed_sum"),
-                F.sum("aborted_records")
-                .cast("long")
-                .alias("aborted_records"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st31 kafka txn stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_segments").cast("long").alias("n_segments"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("committed_records")
-                    .cast("long")
-                    .alias("committed_records"),
-                    F.sum("committed_sum")
-                    .cast("long")
-                    .alias("committed_sum"),
-                    F.sum("aborted_records")
-                    .cast("long")
-                    .alias("aborted_records"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2192,89 +1369,16 @@ def st31_stream_kafka_txn_ingest(
 def st32_stream_warc_zstd_ingest(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
     from gmall_flink_210726_spark.operators.warc import (
         synthesize_warc_zstd_media,
         warc_zstd_text_extract,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.sources.batch import load_table
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_warc_zstd_media, warc_zstd_text_extract,
+        "warc", "n_streams", "n_records", "n_responses", "n_conversions",
+        "n_words",
     )
-
-    src = tempfile.mkdtemp(prefix="st32_src_")
-    out = tempfile.mkdtemp(prefix="st32_out_")
-    ckpt = tempfile.mkdtemp(prefix="st32_ckpt_")
-    try:
-        (
-            synthesize_warc_zstd_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .option("compression", "none")  # blobs already zstd
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = warc_zstd_text_extract(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_streams"),
-                F.sum((F.col("format") == "warc").cast("long"))
-                .cast("long")
-                .alias("n_ok"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("n_responses")
-                .cast("long")
-                .alias("n_responses"),
-                F.sum("n_conversions")
-                .cast("long")
-                .alias("n_conversions"),
-                F.sum("n_words").cast("long").alias("n_words"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st32 warc zstd stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_streams").cast("long").alias("n_streams"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_records").cast("long").alias("n_records"),
-                    F.sum("n_responses")
-                    .cast("long")
-                    .alias("n_responses"),
-                    F.sum("n_conversions")
-                    .cast("long")
-                    .alias("n_conversions"),
-                    F.sum("n_words").cast("long").alias("n_words"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2332,80 +1436,16 @@ def st32_stream_warc_zstd_ingest(
     "read_hudi_mor_snapshot",
     tags=("streaming", "llm", "lakehouse", "multimodal"),
 )
-def st33_stream_hudi_mor_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st33_stream_hudi_mor_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.hudi import (
         hudi_mor_stats,
         synthesize_hudi_mor_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_hudi_mor_media, hudi_mor_stats, "hudi",
+        "n_tables", "n_blocks", "total_rows", "k_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st33_src_")
-    out = tempfile.mkdtemp(prefix="st33_out_")
-    ckpt = tempfile.mkdtemp(prefix="st33_ckpt_")
-    try:
-        (
-            synthesize_hudi_mor_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        merged = hudi_mor_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_tables"),
-                F.sum((F.col("format") == "hudi").cast("long"))
-                .cast("long")
-                .alias("n_ok"),
-                F.sum("n_blocks").cast("long").alias("n_blocks"),
-                F.sum("total_rows").cast("long").alias("total_rows"),
-                F.sum("k_sum").cast("long").alias("k_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                merged, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st33 hudi mor stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_tables").cast("long").alias("n_tables"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_blocks").cast("long").alias("n_blocks"),
-                    F.sum("total_rows").cast("long").alias("total_rows"),
-                    F.sum("k_sum").cast("long").alias("k_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2447,78 +1487,16 @@ def st33_stream_hudi_mor_ingest(
     "operators/flac.py read_flac",
     tags=("streaming", "llm", "multimodal"),
 )
-def st34_stream_flac_ingest(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st34_stream_flac_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.flac import (
         flac_stats,
         synthesize_flac_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_flac_media, flac_stats, "flac", "n_blobs",
+        "n_samples", "sample_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st34_src_")
-    out = tempfile.mkdtemp(prefix="st34_out_")
-    ckpt = tempfile.mkdtemp(prefix="st34_ckpt_")
-    try:
-        (
-            synthesize_flac_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = flac_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_blobs"),
-                F.sum((F.col("format") == "flac").cast("long"))
-                .cast("long")
-                .alias("n_ok"),
-                F.sum("n_samples").cast("long").alias("n_samples"),
-                F.sum("sample_sum").cast("long").alias("sample_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st34 flac stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_blobs").cast("long").alias("n_blobs"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_samples").cast("long").alias("n_samples"),
-                    F.sum("sample_sum").cast("long").alias("sample_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2584,84 +1562,16 @@ def st34_stream_flac_ingest(
     "operators/kafkalog.py read_kafka_compacted",
     tags=("streaming", "llm", "multimodal"),
 )
-def st35_stream_kafka_compacted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st35_stream_kafka_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.kafkalog import (
         kafka_compacted_stats,
         synthesize_kafka_compacted_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_kafka_compacted_media, kafka_compacted_stats,
+        "kafka-compacted", "n_blobs", "n_records", "live_keys", "value_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st35_src_")
-    out = tempfile.mkdtemp(prefix="st35_out_")
-    ckpt = tempfile.mkdtemp(prefix="st35_ckpt_")
-    try:
-        (
-            synthesize_kafka_compacted_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = kafka_compacted_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_blobs"),
-                F.sum(
-                    (F.col("format") == "kafka-compacted").cast(
-                        "long"
-                    )
-                )
-                .cast("long")
-                .alias("n_ok"),
-                F.sum("n_records").cast("long").alias("n_records"),
-                F.sum("live_keys").cast("long").alias("live_keys"),
-                F.sum("value_sum").cast("long").alias("value_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st35 compacted stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_blobs").cast("long").alias("n_blobs"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_records").cast("long").alias("n_records"),
-                    F.sum("live_keys").cast("long").alias("live_keys"),
-                    F.sum("value_sum").cast("long").alias("value_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2707,84 +1617,16 @@ def st35_stream_kafka_compacted(
     "front door as a stream. operators/gitpack.py read_git_pack",
     tags=("streaming", "llm", "multimodal"),
 )
-def st36_stream_git_pack(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st36_stream_git_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.gitpack import (
         git_pack_stats,
         synthesize_git_pack_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_git_pack_media, git_pack_stats, "git-pack",
+        "n_blobs", "n_objects", "blob_bytes", "blob_byte_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st36_src_")
-    out = tempfile.mkdtemp(prefix="st36_out_")
-    ckpt = tempfile.mkdtemp(prefix="st36_ckpt_")
-    try:
-        (
-            synthesize_git_pack_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = git_pack_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_blobs"),
-                F.sum((F.col("format") == "git-pack").cast("long"))
-                .cast("long")
-                .alias("n_ok"),
-                F.sum("n_objects").cast("long").alias("n_objects"),
-                F.sum("blob_bytes").cast("long").alias("blob_bytes"),
-                F.sum("blob_byte_sum")
-                .cast("long")
-                .alias("blob_byte_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st36 git stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_blobs").cast("long").alias("n_blobs"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_objects").cast("long").alias("n_objects"),
-                    F.sum("blob_bytes").cast("long").alias("blob_bytes"),
-                    F.sum("blob_byte_sum")
-                    .cast("long")
-                    .alias("blob_byte_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result
 
 
 @register(
@@ -2824,79 +1666,13 @@ def st36_stream_git_pack(
     "snapshot ingest as a stream. operators/hfile.py read_hfile",
     tags=("streaming", "llm", "multimodal"),
 )
-def st37_stream_hbase_hfile(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
+def st37_stream_hbase_hfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_210726_spark.operators.hfile import (
         hfile_stats,
         synthesize_hfile_media,
     )
-    from gmall_flink_210726_spark.sinks import append_stats_exactly_once
-    from gmall_flink_210726_spark.streaming.pipelines import (
-        write_foreach_batch,
+
+    return _replay_ingest(
+        spark, sf_dir, synthesize_hfile_media, hfile_stats, "hfile", "n_blobs",
+        "n_cells", "value_byte_sum",
     )
-
-    src = tempfile.mkdtemp(prefix="st37_src_")
-    out = tempfile.mkdtemp(prefix="st37_out_")
-    ckpt = tempfile.mkdtemp(prefix="st37_ckpt_")
-    try:
-        (
-            synthesize_hfile_media(
-                load_table(spark, sf_dir, "documents"),
-                partitions=32,
-            )
-            .write.mode("overwrite")
-            .parquet(src)
-        )
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(src)
-        )
-        decoded = hfile_stats(stream)
-
-        def _write_partials(batch: DataFrame, epoch: int) -> None:
-            partials = batch.groupBy(
-                (F.col("media_id") % 10).alias("bucket")
-            ).agg(
-                F.count(F.lit(1)).cast("long").alias("n_blobs"),
-                F.sum((F.col("format") == "hfile").cast("long"))
-                .cast("long")
-                .alias("n_ok"),
-                F.sum("n_cells").cast("long").alias("n_cells"),
-                F.sum("value_byte_sum")
-                .cast("long")
-                .alias("value_byte_sum"),
-            )
-            append_stats_exactly_once(partials, epoch, out)
-
-        with replay_partitions(spark, src):
-            q = write_foreach_batch(
-                decoded, _write_partials, checkpoint_dir=ckpt
-            )
-            finished = q.awaitTermination(600)
-            if not finished:  # pragma: no cover - hung stream
-                raise TimeoutError("st37 hfile stream did not finish")
-            q.stop()
-            result = (
-                spark.read.parquet(out)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("n_blobs").cast("long").alias("n_blobs"),
-                    F.sum("n_ok").cast("long").alias("n_ok"),
-                    F.sum("n_cells").cast("long").alias("n_cells"),
-                    F.sum("value_byte_sum")
-                    .cast("long")
-                    .alias("value_byte_sum"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return result

@@ -88,15 +88,19 @@ def write_foreach_batch(
     df: DataFrame,
     sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ):
     """K3 analog — exactly-once micro-batch sink (T9: checkpointed).
     The reference batches 2 rows / 2000 ms into ClickHouse
-    (util/ClickHouseUtil.java:46-49); here the batch is the trigger."""
-    writer = df.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    (util/ClickHouseUtil.java:46-49); here the batch is the trigger.
+    The trigger is availableNow: the query drains the source's backlog
+    in micro-batches, then stops; a restart on the same checkpoint
+    resumes after the last committed epoch."""
+    return (
+        df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def route_batch_to_sinks(

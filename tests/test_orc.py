@@ -13,11 +13,13 @@ import pytest
 from gmall_flink_210726_spark.operators.orc import (
     _closest_fixed_bits,
     _decode_width,
+    _enc_uvarint,
     _make_orc,
     _orc_values,
     _pb_fields,
     _svarint,
     _uvarint,
+    _zz_enc,
     read_orc_int_column,
     rle_v2_signed,
 )
@@ -49,6 +51,20 @@ class TestVarint:
         for read in (_uvarint, _svarint):
             with pytest.raises(ValueError):
                 read(b"\x80\x80", 0)
+
+    @pytest.mark.parametrize(
+        "v, n_bytes", [(0, 1), (127, 1), (128, 2), ((1 << 63) - 1, 9), (-5, 10)]
+    )
+    def test_encoder_round_trips(self, v, n_bytes):
+        # a negative int64 goes through tfrecord's two's-complement mask
+        from gmall_flink_210726_spark.operators.tfrecord import _U64
+
+        assert _uvarint(_enc_uvarint(v & _U64), 0) == (v & _U64, n_bytes)
+        assert _svarint(_zz_enc(v), 0)[0] == v
+
+    def test_encoder_refuses_unmasked_negative(self):
+        with pytest.raises(ValueError, match="negative"):
+            _enc_uvarint(-1)
 
     def test_orc2_reads_through_the_same_varint(self):
         from gmall_flink_210726_spark.operators import orc2

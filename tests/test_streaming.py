@@ -413,3 +413,116 @@ class TestReplayPartitions:
         finally:
             spark.streams.removeListener(listener)
         assert listener.last["stateOperators"][0]["numShufflePartitions"] == 1
+
+
+class TestEpochSinkRunner:
+    """``queries/streamq._run_to_epoch_sink`` leaves nothing behind on
+    any exit: no running query, no sink or checkpoint dir, and the
+    session's shuffle partitions restored."""
+
+    @pytest.fixture
+    def runner(self, spark, tmp_path, monkeypatch):
+        import tempfile
+
+        from gmall_flink_210726_spark.queries.streamq import _run_to_epoch_sink
+
+        src = tmp_path / "src"
+        src.mkdir()
+        (src / "a.json").write_text('{"x": 1}\n{"x": 2}\n')
+        temp = tmp_path / "tmp"
+        temp.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(temp))
+        before = {q.id for q in spark.streams.active}
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+
+        def _run(partials):
+            stream = spark.readStream.schema("x long").json(str(src))
+            return _run_to_epoch_sink(stream, partials, lambda df: df, str(src))
+
+        def _assert_clean():
+            assert {q.id for q in spark.streams.active} <= before
+            assert list(temp.iterdir()) == []
+            assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+        return _run, _assert_clean
+
+    def test_serves_what_the_sink_wrote(self, runner):
+        run, assert_clean = runner
+        got = run(lambda batch: batch.select((F.col("x") * 10).alias("y")))
+        assert sorted(r.y for r in got.collect()) == [10, 20]
+        assert_clean()
+
+    def test_failed_epoch_propagates_and_cleans_up(self, runner):
+        from pyspark.errors import StreamingQueryException
+
+        run, assert_clean = runner
+
+        def refuse(batch):
+            raise RuntimeError("epoch 0 refused")
+
+        with pytest.raises(StreamingQueryException, match="epoch 0 refused"):
+            run(refuse)
+        assert_clean()
+
+    def test_timed_out_query_is_stopped_before_cleanup(self, runner, monkeypatch):
+        from pyspark.sql.streaming.query import StreamingQuery
+
+        run, assert_clean = runner
+        # the wait reports a timeout while the query is still running
+        monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda q, t: False)
+        with pytest.raises(TimeoutError, match="did not finish"):
+            run(lambda batch: batch)
+        assert_clean()
+
+
+_RUNNERS = frozenset({"_await_then_stop", "_run_to_memory", "_run_to_epoch_sink"})
+
+
+def _stray_stream_runs(src: str, runners=frozenset()) -> list[int]:
+    """Lines where ``src`` calls ``.awaitTermination(`` or
+    ``write_foreach_batch(`` outside the functions named in ``runners``:
+    only the two runners in ``queries/streamq.py`` and their shared
+    wait-then-stop step may start and wait for a stream."""
+    import ast
+
+    tree = ast.parse(src)
+    inside = {
+        id(n)
+        for f in ast.walk(tree)
+        if isinstance(f, ast.FunctionDef) and f.name in runners
+        for n in ast.walk(f)
+    }
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None))
+        in ("awaitTermination", "write_foreach_batch")
+        and id(node) not in inside
+    )
+
+
+def test_queries_run_streams_only_through_the_runners():
+    import pathlib
+
+    import gmall_flink_210726_spark as pkg
+
+    assert _stray_stream_runs(
+        "q = write_foreach_batch(df, sink, ckpt)\n"
+        "q.awaitTermination(600)\n"
+        "def _run_to_memory(q):\n"
+        "    q.awaitTermination(600)\n"
+        "pipelines.write_foreach_batch(df, sink, ckpt)\n",
+        _RUNNERS,
+    ) == [1, 2, 5]
+    queries = pathlib.Path(pkg.__file__).parent / "queries"
+    bad = {
+        p.name: lines
+        for p in sorted(queries.glob("*.py"))
+        if (
+            lines := _stray_stream_runs(
+                p.read_text(), _RUNNERS if p.name == "streamq.py" else frozenset()
+            )
+        )
+    }
+    assert not bad, f"run streams through streamq's two runners: {bad}"
