@@ -23,12 +23,12 @@ Three layers, all hand-implemented:
    headers (size, filter chain restricted to the LZMA2 filter
    0x21, dict-size property byte, padding, CRC-32), the per-block
    integrity CHECK over the decoded bytes (None / CRC-32 /
-   hand-written CRC-64/ECMA-182 / hand-written SHA-256 per FIPS
-   180-4), the INDEX (per-block unpadded + uncompressed sizes,
-   cross-checked against what was ACTUALLY decoded), and the
-   stream footer (CRC-32, backward size pointing back at the
-   index, flags echo, 'YZ'). Byte-aligned stream concatenation
-   with 4-byte null padding (multi-stream .xz) is supported.
+   hand-written CRC-64/ECMA-182 / SHA-256 via ``hashlib``), the
+   INDEX (per-block unpadded + uncompressed sizes, cross-checked
+   against what was ACTUALLY decoded), and the stream footer
+   (CRC-32, backward size pointing back at the index, flags echo,
+   'YZ'). Byte-aligned stream concatenation with 4-byte null
+   padding (multi-stream .xz) is supported.
 
 Validated in tests against stdlib ``lzma``-written files across
 presets, check types, and payload shapes; every framing field lies
@@ -38,6 +38,7 @@ the check — not the grammar — is what catches a content lie).
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
 
@@ -59,68 +60,6 @@ def crc64_xz(data: bytes, crc: int = 0) -> int:
     for b in data:
         crc = (crc >> 8) ^ _CRC64_TAB[(crc ^ b) & 0xFF]
     return crc ^ 0xFFFFFFFFFFFFFFFF
-
-
-# -------------------------------------------------------------- SHA-256
-
-_SHA_K = [
-    0x428A2F98, 0x71374491, 0xB5C0FBCF, 0xE9B5DBA5, 0x3956C25B,
-    0x59F111F1, 0x923F82A4, 0xAB1C5ED5, 0xD807AA98, 0x12835B01,
-    0x243185BE, 0x550C7DC3, 0x72BE5D74, 0x80DEB1FE, 0x9BDC06A7,
-    0xC19BF174, 0xE49B69C1, 0xEFBE4786, 0x0FC19DC6, 0x240CA1CC,
-    0x2DE92C6F, 0x4A7484AA, 0x5CB0A9DC, 0x76F988DA, 0x983E5152,
-    0xA831C66D, 0xB00327C8, 0xBF597FC7, 0xC6E00BF3, 0xD5A79147,
-    0x06CA6351, 0x14292967, 0x27B70A85, 0x2E1B2138, 0x4D2C6DFC,
-    0x53380D13, 0x650A7354, 0x766A0ABB, 0x81C2C92E, 0x92722C85,
-    0xA2BFE8A1, 0xA81A664B, 0xC24B8B70, 0xC76C51A3, 0xD192E819,
-    0xD6990624, 0xF40E3585, 0x106AA070, 0x19A4C116, 0x1E376C08,
-    0x2748774C, 0x34B0BCB5, 0x391C0CB3, 0x4ED8AA4A, 0x5B9CCA4F,
-    0x682E6FF3, 0x748F82EE, 0x78A5636F, 0x84C87814, 0x8CC70208,
-    0x90BEFFFA, 0xA4506CEB, 0xBEF9A3F7, 0xC67178F2,
-]
-
-
-def _rotr(x: int, n: int) -> int:
-    return ((x >> n) | (x << (32 - n))) & 0xFFFFFFFF
-
-
-def sha256_hand(data: bytes) -> bytes:
-    """FIPS 180-4 SHA-256, from the spec (message schedule + 64
-    compression rounds); fuzz-pinned against hashlib in tests."""
-    h = [
-        0x6A09E667, 0xBB67AE85, 0x3C6EF372, 0xA54FF53A,
-        0x510E527F, 0x9B05688C, 0x1F83D9AB, 0x5BE0CD19,
-    ]
-    msg = data + b"\x80"
-    msg += b"\x00" * ((56 - len(msg) % 64) % 64)
-    msg += struct.pack(">Q", 8 * len(data))
-    for off in range(0, len(msg), 64):
-        w = list(struct.unpack_from(">16I", msg, off))
-        for t in range(16, 64):
-            s0 = _rotr(w[t - 15], 7) ^ _rotr(w[t - 15], 18) ^ (w[t - 15] >> 3)
-            s1 = _rotr(w[t - 2], 17) ^ _rotr(w[t - 2], 19) ^ (w[t - 2] >> 10)
-            w.append((w[t - 16] + s0 + w[t - 7] + s1) & 0xFFFFFFFF)
-        a, b, c, d, e, f, g, hh = h
-        for t in range(64):
-            t1 = (
-                hh
-                + (_rotr(e, 6) ^ _rotr(e, 11) ^ _rotr(e, 25))
-                + ((e & f) ^ (~e & g))
-                + _SHA_K[t]
-                + w[t]
-            ) & 0xFFFFFFFF
-            t2 = (
-                (_rotr(a, 2) ^ _rotr(a, 13) ^ _rotr(a, 22))
-                + ((a & b) ^ (a & c) ^ (b & c))
-            ) & 0xFFFFFFFF
-            hh, g, f, e, d, c, b, a = (
-                g, f, e, (d + t1) & 0xFFFFFFFF, c, b, a, (t1 + t2) & 0xFFFFFFFF,
-            )
-        h = [
-            (x + y) & 0xFFFFFFFF
-            for x, y in zip(h, (a, b, c, d, e, f, g, hh))
-        ]
-    return struct.pack(">8I", *h)
 
 
 # ----------------------------------------------------------- LZMA core
@@ -586,7 +525,7 @@ def xz_decompress_stream(
         elif check_id == 4:
             ok = struct.pack("<Q", crc64_xz(plain)) == stored
         elif check_id == 10:
-            ok = sha256_hand(plain) == stored
+            ok = hashlib.sha256(plain).digest() == stored
         else:
             ok = True
         if not ok:

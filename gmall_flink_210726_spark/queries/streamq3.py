@@ -713,10 +713,10 @@ def _replay_ingest(
 
     src = tempfile.mkdtemp(prefix="ingest_src_")
     try:
-        docs = load_table(spark, sf_dir, "documents")
-        synth(docs, partitions=32).write.mode("overwrite").parquet(src)
+        landed = synth(load_table(spark, sf_dir, "documents"), partitions=32)
+        landed.write.mode("overwrite").parquet(src)
         stream = (
-            spark.readStream.schema(spark.read.parquet(src).schema)
+            spark.readStream.schema(landed.schema)
             .option("maxFilesPerTrigger", 16)
             .parquet(src)
         )

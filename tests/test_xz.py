@@ -1,9 +1,8 @@
 """XZ / LZMA2 / LZMA from scratch, pinned against stdlib ``lzma``,
-plus the hand CRC-64 and SHA-256 it checks with. No Spark."""
+plus the hand CRC-64 it checks with. No Spark."""
 
 from __future__ import annotations
 
-import hashlib
 import lzma
 import os
 import random
@@ -11,11 +10,11 @@ import random
 import pytest
 
 from gmall_flink_210726_spark.operators.xz import (
+    _CHECK_SIZES,
     _make_xz_archive,
     _XZ_CHECKS,
     crc64_xz,
     read_xz_archive,
-    sha256_hand,
     xz_decompress_multistream,
     xz_decompress_stream,
 )
@@ -29,11 +28,21 @@ def test_crc64_check_vector():
     assert crc64_xz(b"") == 0
 
 
-def test_sha256_against_hashlib():
-    rng = random.Random(5)
-    for n in (0, 1, 55, 56, 57, 63, 64, 65, 119, 1000):
-        d = bytes(rng.randrange(256) for _ in range(n))
-        assert sha256_hand(d) == hashlib.sha256(d).digest()
+@pytest.mark.parametrize(
+    "check", [lzma.CHECK_CRC32, lzma.CHECK_CRC64, lzma.CHECK_SHA256]
+)
+def test_stored_check_flip_refused(check):
+    # single block, single stream: the check field sits right before
+    # the index, whose first byte is the 0x00 indicator
+    plain = b"check field payload " * 50
+    comp = lzma.compress(plain, format=lzma.FORMAT_XZ, check=check, preset=1)
+    size = _CHECK_SIZES[check]
+    index_start = len(comp) - 12 - 12  # footer 12 + 1-record index 12
+    assert comp[index_start] == 0
+    for k in range(size):
+        bad = bytearray(comp)
+        bad[index_start - size + k] ^= 0x01
+        assert xz_decompress_multistream(bytes(bad)) is None, k
 
 
 # --------------------------------------------------------- decode core
