@@ -29,3 +29,13 @@ Layout (maps to SURVEY.md §2 operator inventory):
 """
 
 __version__ = "0.1.0"
+
+from pyspark import TaskContext as _TaskContext
+
+# the first import in an executor Python worker (a task is running) stops
+# every later task from re-reading each zip on the worker path, see
+# session.ship_package; the driver process is left unpatched
+if _TaskContext.get() is not None:
+    from gmall_flink_210726_spark.session import revalidate_zips_by_stat
+
+    revalidate_zips_by_stat()
