@@ -120,14 +120,23 @@ def replay_partition_count(
 
 
 def _source_bytes(paths) -> int:
+    """Bytes of the files a file source would read under ``paths``. Names
+    starting with ``.`` or ``_`` (checksum sidecars, ``_SUCCESS``, hidden
+    dirs) are skipped, the hidden-file rule of Spark's file index, so the
+    count does not depend on whether the filesystem writes sidecars."""
     total = 0
     for path in paths:
         if os.path.isdir(path):
-            for root, _, files in os.walk(path):
-                total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+            for root, dirs, files in os.walk(path):
+                dirs[:] = [d for d in dirs if not _hidden(d)]
+                total += sum(os.path.getsize(os.path.join(root, f)) for f in files if not _hidden(f))
         else:
             total += os.path.getsize(path)
     return total
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith((".", "_"))
 
 
 @contextmanager

@@ -12,6 +12,7 @@ tier:
 
 from __future__ import annotations
 
+import atexit
 import os
 import sys
 import zipimport
@@ -51,8 +52,18 @@ def ship_package(spark: SparkSession) -> None:
     archive = shutil.make_archive(
         stem, "zip", root_dir=os.path.dirname(pkg_dir), base_dir=os.path.basename(pkg_dir)
     )
+    # executors fetch the zip after addPyFile returns, so it lives until
+    # this interpreter exits
+    atexit.register(_remove_quietly, archive)
     sc.addPyFile(archive)
     sc._gmall_pkg_shipped = True
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
 
 
 def _zip_key(archive: str):
@@ -155,6 +166,23 @@ def get_spark(
         # DuckDB oracle under the UTC session timezone pinned above
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # This Spark ships without libhadoop, so Hadoop's local filesystem
+        # forks a child process for most metadata calls. The checksummed
+        # default LocalFileSystem writes a .crc sidecar beside every file,
+        # which doubles the `chmod` fork setPermission pays per created
+        # file; the raw filesystem writes none.
+        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+        # The default FileContext-based checkpoint manager forks `readlink`
+        # 8 times per atomic write of an offset, commit, source-log, state
+        # delta or schema file. The FileSystem-based one renames with one
+        # rename(2), which on a local disk is atomic and overwrites. That
+        # is safe here because the session is local[N] and each checkpoint
+        # has one writer; a cluster deployment whose checkpoints live on
+        # another filesystem must revisit this conf.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Keep shuffle spill + broadcast thresholds at defaults; AQE
         # auto-broadcasts small sides and coalesces tiny partitions.

@@ -366,6 +366,21 @@ class TestReplayPartitions:
         assert replay_partition_count(3 * (64 << 20), 64 << 20, 4) == 3
         assert replay_partition_count(1 << 50, 64 << 20, 4) == 4
 
+    def test_source_bytes_skip_files_spark_never_reads(self, tmp_path):
+        from gmall_flink_210726_spark.queries.streamq import _source_bytes
+
+        (tmp_path / "part-0.parquet").write_bytes(b"x" * 100)
+        (tmp_path / "sub").mkdir()
+        (tmp_path / "sub" / "part-1.parquet").write_bytes(b"x" * 10)
+        (tmp_path / ".part-0.parquet.crc").write_bytes(b"c" * 7)
+        (tmp_path / "_SUCCESS").write_bytes(b"s" * 3)
+        (tmp_path / "_spark_metadata").mkdir()
+        (tmp_path / "_spark_metadata" / "0").write_bytes(b"m" * 50)
+        (tmp_path / ".hidden").mkdir()
+        (tmp_path / ".hidden" / "part-2.parquet").write_bytes(b"h" * 40)
+        assert _source_bytes([str(tmp_path)]) == 110
+        assert _source_bytes([str(tmp_path / "part-0.parquet"), str(tmp_path / "sub")]) == 110
+
     def test_session_value_restored_when_block_raises(self, spark, tmp_path):
         from gmall_flink_210726_spark.queries.streamq import replay_partitions
 
