@@ -54,11 +54,11 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
-from gmall_flink_210726_spark.operators.orc import _enc_uvarint, _zz_enc
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _Reader,
     snappy_decompress,
 )
+from gmall_flink_210726_spark.operators.wire import _enc_uvarint, _zz_enc
 
 _MAGIC = b"Obj\x01"
 

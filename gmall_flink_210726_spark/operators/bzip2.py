@@ -30,56 +30,10 @@ all levels, runs/repetitive/random payloads).
 
 from __future__ import annotations
 
+from gmall_flink_210726_spark.operators.wire import MsbReader, crc32_msb
+
 _BLOCK_MAGIC = 0x314159265359
 _END_MAGIC = 0x177245385090
-
-# bzip2's CRC-32: MSB-first, poly 0x04C11DB7 (same poly as zip's but
-# bit-reversed convention)
-_CRC_TAB = []
-for _b in range(256):
-    _c = _b << 24
-    for _ in range(8):
-        _c = ((_c << 1) ^ 0x04C11DB7) if _c & 0x80000000 else (_c << 1)
-        _c &= 0xFFFFFFFF
-    _CRC_TAB.append(_c)
-
-
-def _crc32(data: bytes) -> int:
-    crc = 0xFFFFFFFF
-    for b in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _CRC_TAB[(crc >> 24) ^ b]
-    return crc ^ 0xFFFFFFFF
-
-
-class _Bits:
-    """MSB-first bit reader over bytes."""
-
-    __slots__ = ("data", "bitpos", "nbits")
-
-    def __init__(self, data: bytes, bitpos: int = 0):
-        self.data = data
-        self.bitpos = bitpos
-        self.nbits = 8 * len(data)
-
-    def take(self, n: int) -> int:
-        if self.bitpos + n > self.nbits:
-            raise ValueError("bzip2: out of input")
-        out = 0
-        p = self.bitpos
-        d = self.data
-        for _ in range(n):
-            out = (out << 1) | ((d[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        self.bitpos = p
-        return out
-
-    def bit(self) -> int:
-        p = self.bitpos
-        if p >= self.nbits:
-            raise ValueError("bzip2: out of input")
-        self.bitpos = p + 1
-        return (self.data[p >> 3] >> (7 - (p & 7))) & 1
-
 
 def _huff_table(lengths: list[int]):
     """Canonical bzip2 code assignment: codes increase with length,
@@ -112,42 +66,42 @@ def _huff_table(lengths: list[int]):
     return limit, base, perm, min_len, max_len
 
 
-def _huff_decode(bits: _Bits, tab) -> int:
+def _huff_decode(bits: MsbReader, tab) -> int:
     limit, base, perm, min_len, max_len = tab
     ln = min_len
-    vec = bits.take(min_len)
+    vec = bits.read(min_len)
     while vec > limit[ln]:
         ln += 1
         if ln > max_len:
             raise ValueError("bzip2: bad huffman code")
-        vec = (vec << 1) | bits.bit()
+        vec = (vec << 1) | bits.read_bit()
     idx = vec - base[ln]
     if idx < 0 or idx >= len(perm):
         raise ValueError("bzip2: bad huffman code")
     return perm[idx]
 
 
-def _decode_block(bits: _Bits, max_block: int) -> tuple[bytes, int]:
-    stored_crc = bits.take(32)
-    if bits.bit():
+def _decode_block(bits: MsbReader, max_block: int) -> tuple[bytes, int]:
+    stored_crc = bits.read(32)
+    if bits.read_bit():
         raise ValueError("bzip2: randomised blocks unsupported")
-    orig_ptr = bits.take(24)
+    orig_ptr = bits.read(24)
     # two-level used-byte map
-    coarse = bits.take(16)
+    coarse = bits.read(16)
     used = []
     for hi in range(16):
         if coarse & (0x8000 >> hi):
-            fine = bits.take(16)
+            fine = bits.read(16)
             for lo in range(16):
                 if fine & (0x8000 >> lo):
                     used.append((hi << 4) | lo)
     if not used:
         raise ValueError("bzip2: empty symbol map")
     n_syms = len(used) + 2
-    n_groups = bits.take(3)
+    n_groups = bits.read(3)
     if not 2 <= n_groups <= 6:
         raise ValueError("bzip2: bad group count")
-    n_selectors = bits.take(15)
+    n_selectors = bits.read(15)
     if n_selectors < 1:
         raise ValueError("bzip2: no selectors")
     # selectors are MTF-coded group ids in unary
@@ -155,7 +109,7 @@ def _decode_block(bits: _Bits, max_block: int) -> tuple[bytes, int]:
     selectors = []
     for _ in range(n_selectors):
         j = 0
-        while bits.bit():
+        while bits.read_bit():
             j += 1
             if j >= n_groups:
                 raise ValueError("bzip2: bad selector")
@@ -165,11 +119,11 @@ def _decode_block(bits: _Bits, max_block: int) -> tuple[bytes, int]:
     # delta-coded code lengths per group
     tables = []
     for _ in range(n_groups):
-        cur = bits.take(5)
+        cur = bits.read(5)
         lens = []
         for _ in range(n_syms):
-            while bits.bit():
-                cur += -1 if bits.bit() else 1
+            while bits.read_bit():
+                cur += -1 if bits.read_bit() else 1
                 if not 1 <= cur <= 23:
                     raise ValueError("bzip2: bad code length walk")
             lens.append(cur)
@@ -246,7 +200,7 @@ def _decode_block(bits: _Bits, max_block: int) -> tuple[bytes, int]:
             j += 1
         i = j
     plain = bytes(out)
-    if _crc32(plain) != stored_crc:
+    if (crc32_msb(plain, 0xFFFFFFFF) ^ 0xFFFFFFFF) != stored_crc:
         raise ValueError("bzip2: block CRC mismatch")
     return plain, stored_crc
 
@@ -257,17 +211,17 @@ def bz2_decompress_stream(
     """Decode ONE bzip2 stream starting at byte-aligned ``bitpos``.
     Returns (plain bytes, bit position just past the stream footer).
     Raises ValueError on any grammar/CRC violation."""
-    bits = _Bits(data, bitpos)
-    if bits.take(24) != 0x425A68:  # 'BZh'
+    bits = MsbReader(data, bitpos // 8)
+    if bits.read(24) != 0x425A68:  # 'BZh'
         raise ValueError("bzip2: bad stream magic")
-    level = bits.take(8) - 0x30
+    level = bits.read(8) - 0x30
     if not 1 <= level <= 9:
         raise ValueError("bzip2: bad level")
     max_block = 100_000 * level
     out = bytearray()
     stream_crc = 0
     while True:
-        magic = bits.take(48)
+        magic = bits.read(48)
         if magic == _BLOCK_MAGIC:
             plain, blk_crc = _decode_block(bits, max_block)
             out.extend(plain)
@@ -275,9 +229,9 @@ def bz2_decompress_stream(
                 ((stream_crc << 1) | (stream_crc >> 31)) & 0xFFFFFFFF
             ) ^ blk_crc
         elif magic == _END_MAGIC:
-            if bits.take(32) != stream_crc:
+            if bits.read(32) != stream_crc:
                 raise ValueError("bzip2: stream CRC mismatch")
-            return bytes(out), bits.bitpos
+            return bytes(out), bits.pos * 8 + bits.bit
         else:
             raise ValueError("bzip2: bad block magic")
 

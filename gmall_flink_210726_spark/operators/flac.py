@@ -36,6 +36,11 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.wire import (
+    MsbReader,
+    MsbWriter,
+    unzigzag,
+)
 
 # CRC-8, polynomial 0x07, init 0 (FLAC frame-header checksum)
 _CRC8_TABLE = []
@@ -68,112 +73,8 @@ def crc16(data: bytes) -> int:
     return c
 
 
-class _BitWriter:
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int):
-        if n == 0:
-            return
-        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
-        self.nbits += n
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
-
-    def write_signed(self, value: int, n: int):
-        self.write(value & ((1 << n) - 1), n)
-
-    def write_unary(self, q: int):
-        while q >= 32:
-            self.write(0, 32)
-            q -= 32
-        self.write(1, q + 1)  # q zeros then a one
-
-    def align(self):
-        if self.nbits:
-            self.write(0, 8 - self.nbits)
-
-    def write_bits_np(self, bits) -> None:
-        """Append a 0/1 uint8 array of bits (MSB-first stream order),
-        byte-identical to the equivalent sequence of write() calls
-        (optimization round 15, guide §4.2): buffered partial bits are
-        prepended, whole bytes leave via one np.packbits, the tail
-        stays buffered."""
-        nb = self.nbits
-        if nb:
-            lead = np.empty(nb + len(bits), np.uint8)
-            for k in range(nb):
-                lead[k] = (self.acc >> (nb - 1 - k)) & 1
-            lead[nb:] = bits
-            bits = lead
-        n_full = len(bits) & ~7
-        if n_full:
-            self.buf += np.packbits(bits[:n_full]).tobytes()
-        acc = 0
-        for b in bits[n_full:].tolist():
-            acc = (acc << 1) | int(b)
-        self.acc = acc
-        self.nbits = len(bits) - n_full
-
-    def bytes(self) -> bytes:
-        assert self.nbits == 0
-        return bytes(self.buf)
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos  # byte position
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        while n:
-            if self.pos >= len(self.data):
-                raise ValueError("flac: bitstream truncated")
-            avail = 8 - self.bit
-            take = min(n, avail)
-            byte = self.data[self.pos]
-            v = (v << take) | (
-                (byte >> (avail - take)) & ((1 << take) - 1)
-            )
-            self.bit += take
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-            n -= take
-        return v
-
-    def read_signed(self, n: int) -> int:
-        v = self.read(n)
-        if v & (1 << (n - 1)):
-            v -= 1 << n
-        return v
-
-    def read_unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-            if q > 1 << 20:
-                raise ValueError("flac: runaway unary")
-        return q
-
-    def align(self):
-        if self.bit:
-            if self.read(8 - self.bit):
-                raise ValueError("flac: nonzero padding")
-
-
 def _zigzag(e: int) -> int:
     return (e << 1) ^ (e >> 63) if e >= 0 else ((-e) << 1) - 1
-
-
-def _unzigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
 
 
 _FIXED_COEFFS = {
@@ -205,7 +106,7 @@ def _utf8_number_enc(v: int) -> bytes:
     return bytes(out)
 
 
-def _utf8_number_dec(r: _BitReader) -> int:
+def _utf8_number_dec(r: MsbReader) -> int:
     b0 = r.read(8)
     if b0 < 0x80:
         return b0
@@ -282,7 +183,7 @@ def _pcm_md5(channels_pcm, bps: int) -> bytes:
 
 
 def _residual_dec_py(
-    r: _BitReader, blocksize: int, order: int
+    r: MsbReader, blocksize: int, order: int
 ) -> list[int]:
     """From-spec scalar residual decode — the executable documentation
     and the differential-test reference for ``_residual_dec``."""
@@ -309,7 +210,7 @@ def _residual_dec_py(
             for _ in range(cnt):
                 q = r.read_unary()
                 u = (q << param) | r.read(param)
-                out.append(_unzigzag(u))
+                out.append(unzigzag(u))
     return out
 
 
@@ -318,38 +219,16 @@ class _Fallback(Exception):
     guard trips; read_flac reruns the whole blob on the scalar path."""
 
 
-def _take_signed_np(r: _BitReader, count: int, width: int):
-    """Vectorized fixed-width signed read: ``count`` two's-complement
-    values of ``width`` bits from the reader's bit position (MSB-first),
-    as int64; advances the reader. Exact for width <= 62."""
-    if count < 0 or width < 0:
-        raise ValueError("flac: negative bit-read shape")
-    if width == 0:
-        return np.zeros(count, np.int64)
-    if width > 62:  # pragma: no cover - no header field reaches this
-        raise _Fallback
-    total = count * width
-    start = r.pos * 8 + r.bit
-    end = start + total
-    if end > len(r.data) * 8:
-        raise ValueError("flac: bitstream truncated")
-    if count == 0:
-        return np.zeros(0, np.int64)
-    sb = start // 8
-    chunk = np.frombuffer(r.data, np.uint8, (end + 7) // 8 - sb, sb)
-    bits = np.unpackbits(chunk)[start - sb * 8 : start - sb * 8 + total]
-    w = np.left_shift(
-        np.uint64(1), np.arange(width - 1, -1, -1, dtype=np.uint64)
-    )
-    vals = (
-        bits.reshape(count, width).astype(np.uint64) @ w
-    ).astype(np.int64)
-    vals -= (vals >> np.int64(width - 1)) << np.int64(width)
-    r.pos, r.bit = end // 8, end % 8
+def _take_signed_np(r: MsbReader, count: int, width: int):
+    """``count`` two's-complement values of ``width`` bits from the
+    reader's bit position, as int64; advances the reader."""
+    vals = r.take_np(count, width).astype(np.int64)
+    if width:
+        vals -= (vals >> np.int64(width - 1)) << np.int64(width)
     return vals
 
 
-def _rice_vec(r: _BitReader, cnt: int, param: int):
+def _rice_vec(r: MsbReader, cnt: int, param: int):
     """Vectorized rice decode: ``cnt`` unary-quotient + ``param``-bit
     remainder codes from the reader's position, zigzag-decoded to
     int64; advances the reader. The unary terminators are located by
@@ -413,7 +292,7 @@ def _rice_vec(r: _BitReader, cnt: int, param: int):
         need *= 2
 
 
-def _residual_dec(r: _BitReader, blocksize: int, order: int):
+def _residual_dec(r: MsbReader, blocksize: int, order: int):
     """Vectorized residual decode (optimization round 15, guide §4.2)
     -> int64 array; header parsing and every grammar check match
     ``_residual_dec_py``, which is pinned equal to this path in
@@ -503,7 +382,7 @@ def _predict_apply_np(warm, resid, coeffs: list[int], shift: int):
     return np.asarray(xs, np.int64)
 
 
-def _subframe_dec_py(r: _BitReader, n: int, bits: int) -> list[int]:
+def _subframe_dec_py(r: MsbReader, n: int, bits: int) -> list[int]:
     """From-spec scalar subframe decode (lists, arbitrary-precision
     ints) — the executable documentation, the _Fallback target, and
     the differential-test reference for ``_subframe_dec``."""
@@ -550,7 +429,7 @@ def _subframe_dec_py(r: _BitReader, n: int, bits: int) -> list[int]:
     return x
 
 
-def _subframe_dec(r: _BitReader, n: int, bits: int):
+def _subframe_dec(r: MsbReader, n: int, bits: int):
     """Vectorized subframe decode (optimization round 15, guide §4.2)
     -> int64 array; same header walk and grammar checks as
     ``_subframe_dec_py``, with the residual/verbatim bit streams and
@@ -659,7 +538,7 @@ def _read_flac_impl(data: bytes, fast: bool) -> dict | None:
         decoded = 0
         while decoded < total:
             start = pos
-            r = _BitReader(data, pos)
+            r = MsbReader(data, pos)
             if r.read(14) != 0x3FFE or r.read(1):
                 return None
             blocking = r.read(1)
@@ -714,7 +593,8 @@ def _read_flac_impl(data: bytes, fast: bool) -> dict | None:
             for c in range(nch):
                 bits = bps + (1 if c == side else 0)
                 subs.append(dec(r, blocksize, bits))
-            r.align()
+            if r.align():
+                return None  # padding bits must be zero
             fcrc = r.read(16)
             if crc16(data[start : r.pos - 2]) != fcrc:
                 return None  # frame CRC-16
@@ -787,7 +667,7 @@ def _read_flac_impl(data: bytes, fast: bool) -> dict | None:
 
 
 def _residual_enc_py(
-    w: _BitWriter, resid: list[int], order: int, po: int, escape: bool
+    w: MsbWriter, resid: list[int], order: int, po: int, escape: bool
 ):
     """From-spec scalar residual encoder — the executable
     documentation, the fallback for magnitudes outside int64, and the
@@ -832,7 +712,7 @@ def _fixed_width_bits(vals, width: int):
 
 
 def _residual_enc(
-    w: _BitWriter, resid, order: int, po: int, escape: bool
+    w: MsbWriter, resid, order: int, po: int, escape: bool
 ):
     """Vectorized residual encoder (optimization round 15, guide
     §4.2): per-partition rice/escape bit streams are built as one
@@ -895,7 +775,7 @@ def _residual_enc(
 
 
 def _subframe_enc(
-    w: _BitWriter,
+    w: MsbWriter,
     x: list[int],
     bits: int,
     kind: str,
@@ -1004,7 +884,7 @@ def make_flac(
         bs = hi - lo
         use_ls = ch == 2 and f % 2 == 1
         asgn = 8 if use_ls else ch - 1
-        hdr = _BitWriter()
+        hdr = MsbWriter()
         hdr.write(0x3FFE, 14)
         hdr.write(0, 1)
         hdr.write(0, 1)  # fixed blocksize: frame number coded
@@ -1018,7 +898,7 @@ def make_flac(
             ">H", bs - 1
         )
         head += bytes([crc8(head)])
-        body = _BitWriter()
+        body = MsbWriter()
         if use_ls:
             left = channels_pcm[0][lo:hi]
             s = [

@@ -35,6 +35,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.wire import LsbReader, LsbWriter
 
 # ---------------------------------------------------------------- fixture
 # formulas shared with the DuckDB oracle in queries/llm7.py — the
@@ -66,35 +67,11 @@ GIF_SCHEMA = StructType(
 )
 
 
-class _BitWriter:
-    """LSB-first bit packer (the GIF LZW convention)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, width: int) -> None:
-        self.acc |= code << self.nbits
-        self.nbits += width
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.out)
-
-
 def _lzw_encode(indices, min_code: int) -> bytes:
     """Real dictionary-building GIF-LZW encoder (greedy longest-match),
     so the decoder's table growth and width transitions are exercised."""
     clear, eoi = 1 << min_code, (1 << min_code) + 1
-    bw = _BitWriter()
+    bw = LsbWriter()
     width = min_code + 1
     bw.write(clear, width)
     table = {(c,): c for c in range(1 << min_code)}
@@ -242,17 +219,9 @@ def _lzw_decode(data: bytes, min_code: int, n_expected: int) -> list:
     table = [[c] for c in range(1 << min_code)] + [None, None]
     out: list = []
     prev = None
-    acc = nbits = pos = 0
+    read = LsbReader(data).read
     while True:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("LZW stream truncated")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
+        code = read(width)
         if code == clear:
             table = [[c] for c in range(1 << min_code)] + [None, None]
             width = min_code + 1

@@ -58,7 +58,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
-from gmall_flink_210726_spark.operators.orc import _enc_uvarint
+from gmall_flink_210726_spark.operators.wire import _enc_uvarint, uvarint
 
 _OBJ_COMMIT = 1
 _OBJ_TREE = 2
@@ -92,50 +92,28 @@ def _zlib_at(data: bytes, pos: int) -> tuple[bytes, int] | None:
     return payload, end + 4
 
 
-def _obj_header(data: bytes, pos: int) -> tuple[int, int, int] | None:
-    """Pack object header varint -> (type, size, new_pos)."""
+def _obj_header(data: bytes, pos: int) -> tuple[int, int, int]:
+    """Pack object header -> (type, size, new_pos): type and the low 4
+    size bits in the first byte, the rest of the size as a varint."""
     if pos >= len(data):
-        return None
+        raise ValueError("gitpack: truncated object header")
     b0 = data[pos]
-    otype = (b0 >> 4) & 7
     size = b0 & 0x0F
-    shift = 4
     pos += 1
-    while b0 & 0x80:
-        if pos >= len(data):
-            return None
-        b0 = data[pos]
-        size |= (b0 & 0x7F) << shift
-        shift += 7
-        pos += 1
-    return otype, size, pos
-
-
-def _delta_varint(data: bytes, pos: int) -> tuple[int, int] | None:
-    v = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            return None
-        b = data[pos]
-        v |= (b & 0x7F) << shift
-        shift += 7
-        pos += 1
-        if not b & 0x80:
-            return v, pos
+    if b0 & 0x80:
+        rest, pos = uvarint(data, pos)
+        size |= rest << 4
+    return (b0 >> 4) & 7, size, pos
 
 
 def _apply_delta(base: bytes, delta: bytes) -> bytes | None:
-    got = _delta_varint(delta, 0)
-    if got is None:
+    try:
+        base_size, p = uvarint(delta, 0)
+        result_size, p = uvarint(delta, p)
+    except ValueError:
         return None
-    base_size, p = got
     if base_size != len(base):
         return None  # the delta's own base-size books
-    got = _delta_varint(delta, p)
-    if got is None:
-        return None
-    result_size, p = got
     out = bytearray()
     while p < len(delta):
         cmd = delta[p]
@@ -211,10 +189,10 @@ def read_git_pack(data: bytes) -> dict | None:
     pending_ref: list[tuple[int, bytes, bytes]] = []
     for _ in range(count):
         obj_start = pos
-        got = _obj_header(pack, pos)
-        if got is None:
+        try:
+            otype, size, pos = _obj_header(pack, pos)
+        except ValueError:
             return None
-        otype, size, pos = got
         if otype == _OBJ_OFS_DELTA:
             if pos >= len(pack):
                 return None
@@ -222,8 +200,8 @@ def read_git_pack(data: bytes) -> dict | None:
             off = b & 0x7F
             pos += 1
             while b & 0x80:
-                if pos >= len(pack):
-                    return None
+                if pos >= len(pack) or off > obj_start:
+                    return None  # truncated, or a base before the pack
                 b = pack[pos]
                 off = ((off + 1) << 7) | (b & 0x7F)
                 pos += 1

@@ -30,6 +30,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.wire import LsbReader
 
 # RFC 1951 §3.2.5: length codes 257..285 -> (extra bits, base length)
 _LEN_EXTRA = (
@@ -54,32 +55,6 @@ _DIST_BASE = (
 _CLC_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
 
 _MAX_OUT = 1 << 24  # decompression-bomb guard
-
-
-class _Bits:
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for k in range(n):
-            if self.pos >= len(self.data):
-                raise ValueError("out of input")
-            v |= ((self.data[self.pos] >> self.bit) & 1) << k
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return v
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
 
 
 def _build_huffman(lengths: list[int]) -> dict[tuple[int, int], int]:
@@ -120,7 +95,7 @@ def _build_huffman(lengths: list[int]) -> dict[tuple[int, int], int]:
     return table
 
 
-def _read_symbol(bits: _Bits, table: dict[tuple[int, int], int]) -> int:
+def _read_symbol(bits: LsbReader, table: dict[tuple[int, int], int]) -> int:
     code = 0
     for nbits in range(1, 16):
         code = (code << 1) | bits.read(1)  # Huffman codes are MSB-first
@@ -171,8 +146,7 @@ def _inflate_at_py(data: bytes, start: int) -> tuple[bytes, int]:
     single block loop serves both ``inflate()`` and ``_walk_gzip`` —
     the decoder exists exactly once (round-9 ADVICE: the inlined gzip
     copy had drifted)."""
-    bits = _Bits(data)
-    bits.pos = start
+    bits = LsbReader(data, start)
     out = bytearray()
     while True:
         bfinal = bits.read(1)

@@ -51,7 +51,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
-from gmall_flink_210726_spark.operators.orc import _zz_enc
+from gmall_flink_210726_spark.operators.wire import _zz_enc, svarint
 
 # CRC32C (Castagnoli), reflected polynomial 0x82F63B78, from scratch
 _CRC32C_TABLE = []
@@ -167,19 +167,6 @@ def crc32c(data: bytes, crc: int = 0) -> int:
             ^ ac
         )
     return _crc32c_small(data[m:], crc) ^ 0xFFFFFFFF
-
-
-def _zz_dec(data: bytes, pos: int) -> tuple[int, int]:
-    v = shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("kafka: truncated varint")
-        b = data[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (v >> 1) ^ -(v & 1), pos
-        shift += 7
 
 
 _COMP_NAMES = {0: "none", 1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
@@ -494,13 +481,13 @@ def _parse_v2_records(
     out = []
     prev_od = -1
     for k in range(rcount):
-        rlen, rp = _zz_dec(body, rp)
+        rlen, rp = svarint(body, rp)
         rec_end = rp + rlen
         if rlen < 0 or rec_end > len(body) or rp >= len(body):
             return None
         rp += 1  # record attributes
-        ts_delta, rp = _zz_dec(body, rp)
-        off_delta, rp = _zz_dec(body, rp)
+        ts_delta, rp = svarint(body, rp)
+        off_delta, rp = svarint(body, rp)
         if dense:
             if off_delta != k:
                 return None
@@ -508,29 +495,29 @@ def _parse_v2_records(
             if off_delta <= prev_od:
                 return None
             prev_od = off_delta
-        klen, rp = _zz_dec(body, rp)
+        klen, rp = svarint(body, rp)
         key = None
         if klen >= 0:
             if rp + klen > len(body):
                 return None
             key = body[rp : rp + klen]
             rp += klen
-        vlen, rp = _zz_dec(body, rp)
+        vlen, rp = svarint(body, rp)
         value = None
         if vlen >= 0:
             if rp + vlen > len(body):
                 return None
             value = body[rp : rp + vlen]
             rp += vlen
-        nhdr, rp = _zz_dec(body, rp)
+        nhdr, rp = svarint(body, rp)
         if nhdr < 0:
             return None
         for _ in range(nhdr):
-            hk, rp = _zz_dec(body, rp)
+            hk, rp = svarint(body, rp)
             if hk < 0 or rp + hk > len(body):
                 return None
             rp += hk
-            hv, rp = _zz_dec(body, rp)
+            hv, rp = svarint(body, rp)
             if hv < 0 or rp + hv > len(body):
                 return None
             rp += hv

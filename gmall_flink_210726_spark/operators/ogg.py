@@ -57,28 +57,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
-
-# --------------------------------------------------------------------------
-# RFC 3533 §6.2 page CRC: poly 0x04C11DB7, init 0, unreflected, no xor
-# --------------------------------------------------------------------------
-
-_OGG_CRC_TABLE = []
-for _b in range(256):
-    _r = _b << 24
-    for _ in range(8):
-        _r = ((_r << 1) ^ 0x04C11DB7) if _r & 0x80000000 else (_r << 1)
-        _r &= 0xFFFFFFFF
-    _OGG_CRC_TABLE.append(_r)
-
-
-def ogg_crc(data: bytes) -> int:
-    crc = 0
-    for byte in data:
-        crc = (
-            (crc << 8) & 0xFFFFFFFF
-        ) ^ _OGG_CRC_TABLE[((crc >> 24) & 0xFF) ^ byte]
-    return crc
-
+from gmall_flink_210726_spark.operators.wire import crc32_msb
 
 # RFC 6716 §3.1 Table 2: config -> frame duration in 48 kHz samples
 _OPUS_DUR = (
@@ -170,7 +149,7 @@ def read_ogg_opus(data: bytes) -> dict | None:
             return None
         page = bytearray(data[pos:page_end])
         page[22:26] = b"\x00\x00\x00\x00"
-        if ogg_crc(bytes(page)) != crc:
+        if crc32_msb(bytes(page)) != crc:
             return None  # page CRC
         pages.append(
             (
@@ -322,7 +301,7 @@ def _make_page(
         "<BBqIIIB", 0, flags, granule, serial, seq, 0, len(lace)
     )
     page = bytearray(head + lace + payload)
-    crc = ogg_crc(bytes(page))
+    crc = crc32_msb(bytes(page))
     page[22:26] = struct.pack("<I", crc)
     return bytes(page)
 

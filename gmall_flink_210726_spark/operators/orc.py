@@ -50,6 +50,12 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.wire import (
+    MsbReader,
+    svarint,
+    unzigzag,
+    uvarint,
+)
 
 _COMP_NAMES = {0: "none", 1: "zlib", 2: "snappy", 4: "lz4", 5: "zstd"}
 
@@ -59,29 +65,13 @@ def _pb_fields(data: bytes) -> dict[int, list]:
     out: dict[int, list] = {}
     pos = 0
     n = len(data)
-
-    def varint() -> int:
-        nonlocal pos
-        v = shift = 0
-        while True:
-            if pos >= n:
-                raise ValueError("pb: truncated varint")
-            b = data[pos]
-            pos += 1
-            v |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return v
-            shift += 7
-            if shift > 70:
-                raise ValueError("pb: varint too long")
-
     while pos < n:
-        hdr = varint()
+        hdr, pos = uvarint(data, pos, n)
         fn, wt = hdr >> 3, hdr & 7
         if wt == 0:
-            v: object = varint()
+            v, pos = uvarint(data, pos, n)
         elif wt == 2:
-            ln = varint()
+            ln, pos = uvarint(data, pos, n)
             if pos + ln > n:
                 raise ValueError("pb: truncated bytes field")
             v = data[pos : pos + ln]
@@ -100,10 +90,6 @@ def _pb_fields(data: bytes) -> dict[int, list]:
     return out
 
 
-def _zz(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def _decode_width(code: int) -> int:
     if code <= 23:
         return code + 1
@@ -120,74 +106,6 @@ def _closest_fixed_bits(n: int) -> int:
     raise ValueError("fixed bits > 64")
 
 
-class _BitReader:
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def take(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            if self.pos >= len(self.data):
-                raise ValueError("rle: bit stream exhausted")
-            v = (v << 1) | (
-                (self.data[self.pos] >> (7 - self.bit)) & 1
-            )
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return v
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-
-
-def _svarint(data: bytes, pos: int) -> tuple[int, int]:
-    v, pos = _uvarint(data, pos)
-    return _zz(v), pos
-
-
-def _uvarint(data: bytes, pos: int) -> tuple[int, int]:
-    v = shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("rle: truncated varint")
-        b = data[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint: too long")
-
-
-def _enc_uvarint(v: int) -> bytes:
-    """LEB128, the inverse of ``_uvarint``: the unsigned varint of
-    protobuf, ORC, Avro, Kafka, LevelDB, Thrift compact, snappy and
-    git deltas. Negative values must be masked or zigzagged first."""
-    if v < 0:
-        raise ValueError("varint: negative value")
-    out = bytearray()
-    while v > 0x7F:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-    return bytes(out)
-
-
-def _zz_enc(v: int) -> bytes:
-    """Zigzag varint of a signed 64-bit value, the inverse of
-    ``_svarint``."""
-    return _enc_uvarint((v << 1) ^ (v >> 63))
-
-
 def _svarints(body: bytes, rows: int) -> tuple[list[int], int]:
     """Decode exactly ``rows`` zigzag varints from ``body`` (the ORC
     decimal mantissa DATA stream shape); returns (values, end_pos).
@@ -195,7 +113,7 @@ def _svarints(body: bytes, rows: int) -> tuple[list[int], int]:
     located with numpy, per-byte-position contributions OR-ed in at
     most 9 vectorized passes (~8x over the scalar loop); varints
     longer than 9 bytes (> 63-bit magnitudes, arbitrary-precision
-    territory) fall back to the scalar ``_svarint`` loop. Raises the
+    territory) fall back to the scalar ``svarint`` loop. Raises the
     scalar path's ValueError on truncation."""
     b = np.frombuffer(body, np.uint8)
     ends = np.flatnonzero(b < 0x80)
@@ -211,7 +129,7 @@ def _svarints(body: bytes, rows: int) -> tuple[list[int], int]:
     if int(lens.max()) > 9:  # arbitrary-precision scalar fallback
         vals, pos = [], 0
         for _ in range(rows):
-            v, pos = _svarint(body, pos)
+            v, pos = svarint(body, pos)
             vals.append(v)
         return vals, pos
     vals = np.zeros(rows, np.uint64)
@@ -235,28 +153,9 @@ def rle_v2_unsigned(data: bytes, n: int) -> tuple[list[int], int]:
     return _rle_v2(data, n, signed=False)
 
 
-def _bits_np(data: bytes, pos: int, count: int, width: int):
-    """Vectorized big-endian bit-unpack: ``count`` values of ``width``
-    bits starting at byte ``pos`` (MSB-first, the RLEv2 packing);
-    returns (uint64 array, end byte position). Exact for width <= 64:
-    the bit-matrix x power-of-two dot product is integer numpy."""
-    if count < 0:
-        raise ValueError("rle: negative bit-unpack count")
-    total = count * width
-    nbytes = (total + 7) // 8
-    if pos + nbytes > len(data):
-        raise ValueError("rle: bit stream exhausted")
-    chunk = np.frombuffer(data, np.uint8, nbytes, pos)
-    bits = np.unpackbits(chunk)[:total].reshape(count, width)
-    w = np.left_shift(
-        np.uint64(1), np.arange(width - 1, -1, -1, dtype=np.uint64)
-    )
-    return bits.astype(np.uint64) @ w, pos + nbytes
-
-
 def _zz_np(vals):
     """Vectorized zigzag decode of uint64 values -> int64 (two's
-    complement view; exact for every 64-bit pattern, matching _zz)."""
+    complement view; exact for every 64-bit pattern, matching unzigzag)."""
     return (
         (vals >> np.uint64(1)) ^ (np.uint64(0) - (vals & np.uint64(1)))
     ).view(np.int64)
@@ -275,9 +174,9 @@ def _rle_v2(
     (operators/orc2.py cross-checks the index against it).
 
     Vectorized (optimization round 14, guide §4.2): the per-run value
-    extraction goes through numpy ``unpackbits`` instead of the
-    per-BIT Python loop in ``_BitReader.take`` (~25x on DIRECT-heavy
-    streams); run-header parsing and grammar checks are unchanged.
+    extraction is one numpy unpack (``MsbReader.take_np``) instead of
+    one ``MsbReader.read`` per value; run-header parsing and grammar
+    checks are unchanged.
     Rare shapes where int64 intermediates could overflow (DELTA with
     width > 32 or |base| >= 2^53; PATCHED_BASE with width + patch
     width > 64) take the original scalar path, ``_rle_v2_py`` —
@@ -301,14 +200,17 @@ def _rle_v2(
             if pos + 1 + w > len(data):
                 raise ValueError("rle: truncated short repeat")
             v = int.from_bytes(data[pos + 1 : pos + 1 + w], "big")
-            out.extend([_zz(v) if signed else v] * cnt)
+            out.extend([unzigzag(v) if signed else v] * cnt)
             pos += 1 + w
         elif enc == 1:  # DIRECT
             width = _decode_width((h >> 1) & 0x1F)
             if pos + 1 >= len(data):
                 raise ValueError("rle: truncated direct header")
             ln = ((h & 1) << 8 | data[pos + 1]) + 1
-            vals, pos = _bits_np(data, pos + 2, ln, width)
+            bits = MsbReader(data, pos + 2)
+            vals = bits.take_np(ln, width)
+            bits.align()
+            pos = bits.pos
             if signed:
                 vals = _zz_np(vals)
             out.extend(vals.tolist())
@@ -320,30 +222,29 @@ def _rle_v2(
             ln = ((h & 1) << 8 | data[pos + 1]) + 1
             p = pos + 2
             if signed:
-                base, p = _svarint(data, p)
+                base, p = svarint(data, p)
             else:
-                base, p = _uvarint(data, p)
-            dbase, p = _svarint(data, p)
+                base, p = uvarint(data, p)
+            dbase, p = svarint(data, p)
             vals = [base]
             if ln > 1:
                 vals.append(base + dbase)
             if width:
                 sign = 1 if dbase >= 0 else -1
+                bits = MsbReader(data, p)
                 if width <= 32 and -(1 << 53) < base + dbase < (1 << 53):
                     # ln <= 2 packs no deltas (the scalar range(ln-2)
-                    # no-op); a raw ln-2 of -1 would read the whole
-                    # remaining buffer via np.frombuffer(count=-1).
-                    deltas, p = _bits_np(data, p, max(ln - 2, 0), width)
+                    # no-op); a raw count of -1 is refused by take_np.
+                    deltas = bits.take_np(max(ln - 2, 0), width)
                     cum = np.cumsum(deltas.astype(np.int64)) * sign + (
                         base + dbase
                     )
                     vals.extend(cum.tolist())
                 else:  # overflow-safe scalar fallback
-                    bits = _BitReader(data, p)
                     for _ in range(ln - 2):
-                        vals.append(vals[-1] + sign * bits.take(width))
-                    bits.align()
-                    p = bits.pos
+                        vals.append(vals[-1] + sign * bits.read(width))
+                bits.align()
+                p = bits.pos
             else:
                 for _ in range(ln - 2):
                     vals.append(vals[-1] + dbase)
@@ -371,11 +272,11 @@ def _rle_v2(
                 if runs is not None:
                     del runs[runs0:]
                 return _rle_v2_py(data, n, signed, runs)
-            vals_a, p = _bits_np(data, p, ln, width)
-            entries, p = _bits_np(
-                data, p, pll, _closest_fixed_bits(pgw + pwidth)
-            )
-            vals = vals_a.tolist()
+            bits = MsbReader(data, p)
+            vals = bits.take_np(ln, width).tolist()
+            bits.align()
+            entries = bits.take_np(pll, _closest_fixed_bits(pgw + pwidth))
+            bits.align()
             pmask = (1 << pwidth) - 1
             gap_pos = 0
             for entry in entries.tolist():
@@ -386,7 +287,7 @@ def _rle_v2(
                         raise ValueError("rle: patch past run")
                     vals[gap_pos] |= patch << width
             out.extend(base + v for v in vals)
-            pos = p
+            pos = bits.pos
     if len(out) != n:
         raise ValueError("rle: run overshoots value count")
     return out, enc_mask
@@ -419,18 +320,18 @@ def _rle_v2_py(
             if pos + 1 + w > len(data):
                 raise ValueError("rle: truncated short repeat")
             v = int.from_bytes(data[pos + 1 : pos + 1 + w], "big")
-            out.extend([_zz(v) if signed else v] * cnt)
+            out.extend([unzigzag(v) if signed else v] * cnt)
             pos += 1 + w
         elif enc == 1:  # DIRECT
             width = _decode_width((h >> 1) & 0x1F)
             if pos + 1 >= len(data):
                 raise ValueError("rle: truncated direct header")
             ln = ((h & 1) << 8 | data[pos + 1]) + 1
-            bits = _BitReader(data, pos + 2)
+            bits = MsbReader(data, pos + 2)
             if signed:
-                out.extend(_zz(bits.take(width)) for _ in range(ln))
+                out.extend(unzigzag(bits.read(width)) for _ in range(ln))
             else:
-                out.extend(bits.take(width) for _ in range(ln))
+                out.extend(bits.read(width) for _ in range(ln))
             bits.align()
             pos = bits.pos
         elif enc == 3:  # DELTA
@@ -441,18 +342,18 @@ def _rle_v2_py(
             ln = ((h & 1) << 8 | data[pos + 1]) + 1
             p = pos + 2
             if signed:
-                base, p = _svarint(data, p)
+                base, p = svarint(data, p)
             else:
-                base, p = _uvarint(data, p)
-            dbase, p = _svarint(data, p)
+                base, p = uvarint(data, p)
+            dbase, p = svarint(data, p)
             vals = [base]
             if ln > 1:
                 vals.append(base + dbase)
             if width:
-                bits = _BitReader(data, p)
+                bits = MsbReader(data, p)
                 sign = 1 if dbase >= 0 else -1
                 for _ in range(ln - 2):
-                    vals.append(vals[-1] + sign * bits.take(width))
+                    vals.append(vals[-1] + sign * bits.read(width))
                 bits.align()
                 p = bits.pos
             else:
@@ -478,24 +379,23 @@ def _rle_v2_py(
             if base & msb:
                 base = -(base & (msb - 1))
             p += bw
-            bits = _BitReader(data, p)
-            vals = [bits.take(width) for _ in range(ln)]
+            bits = MsbReader(data, p)
+            vals = [bits.read(width) for _ in range(ln)]
             bits.align()
-            bits2 = _BitReader(data, bits.pos)
             ew = _closest_fixed_bits(pgw + pwidth)
             pmask = (1 << pwidth) - 1
             gap_pos = 0
             for _ in range(pll):
-                entry = bits2.take(ew)
+                entry = bits.read(ew)
                 gap_pos += entry >> pwidth
                 patch = entry & pmask
                 if patch:
                     if gap_pos >= ln:
                         raise ValueError("rle: patch past run")
                     vals[gap_pos] |= patch << width
-            bits2.align()
+            bits.align()
             out.extend(base + v for v in vals)
-            pos = bits2.pos
+            pos = bits.pos
     if len(out) != n:
         raise ValueError("rle: run overshoots value count")
     return out, enc_mask
@@ -635,9 +535,9 @@ def read_orc_int_column(data: bytes) -> dict | None:
         if not isinstance(ist_raw, bytes):
             return None
         ist = _pb_fields(ist_raw)
-        smin = _zz(ist.get(1, [0])[0])
-        smax = _zz(ist.get(2, [0])[0])
-        ssum = _zz(ist.get(3, [0])[0])
+        smin = unzigzag(ist.get(1, [0])[0])
+        smax = unzigzag(ist.get(2, [0])[0])
+        ssum = unzigzag(ist.get(3, [0])[0])
         if (
             cs.get(1, [None])[0] != num_rows
             or smin != min(vals)
@@ -910,7 +810,7 @@ def read_orc_string_column(data: bytes) -> dict | None:
             if (
                 ss.get(1, [None])[0] != min(strs)
                 or ss.get(2, [None])[0] != max(strs)
-                or _zz(ss.get(3, [0])[0]) != tot_len
+                or unzigzag(ss.get(3, [0])[0]) != tot_len
             ):
                 return None
         return {

@@ -59,14 +59,17 @@ from gmall_flink_210726_spark.operators.multimodal import (
 )
 from gmall_flink_210726_spark.operators.orc import (
     _COMP_NAMES,
-    _enc_uvarint,
     _pb_fields,
     _rle_v2,
     _svarints,
     _unframe,
-    _uvarint,
+)
+from gmall_flink_210726_spark.operators.wire import (
+    _enc_uvarint,
     _zz_enc,
-    _zz,
+    unzigzag,
+    uvarint,
+    uvarints,
 )
 
 _ORC_EPOCH = 1420070400  # 2015-01-01T00:00:00Z
@@ -246,9 +249,9 @@ def read_orc_dec_ts(data: bytes) -> dict | None:
     tst = _pb_fields(ts_stats.get(9, [b""])[0]) if 9 in ts_stats else {}
     min_ms = min(total_ns) // 10**6
     max_ms = max(total_ns) // 10**6
-    if 3 in tst and _zz(tst[3][0]) != min_ms:
+    if 3 in tst and unzigzag(tst[3][0]) != min_ms:
         return None
-    if 4 in tst and _zz(tst[4][0]) != max_ms:
+    if 4 in tst and unzigzag(tst[4][0]) != max_ms:
         return None
     return {
         "n_rows": num_rows,
@@ -363,15 +366,6 @@ def orc_dec_stats(df: DataFrame) -> DataFrame:
 # --------------------------------------------------------- ROW_INDEX
 
 
-def _packed_varints(raw: bytes) -> list[int]:
-    out = []
-    pos = 0
-    while pos < len(raw):
-        v, pos = _uvarint(raw, pos)
-        out.append(v)
-    return out
-
-
 def _parse_row_index(raw: bytes) -> list[dict]:
     """RowIndex -> [{'positions': [...], 'min': .., 'max': ..,
     'n': ..}] for an integer column."""
@@ -383,10 +377,10 @@ def _parse_row_index(raw: bytes) -> list[dict]:
         ist = _pb_fields(stats.get(2, [b""])[0]) if 2 in stats else {}
         entries.append(
             {
-                "positions": _packed_varints(ent.get(1, [b""])[0]),
+                "positions": uvarints(ent.get(1, [b""])[0]),
                 "n": stats.get(1, [None])[0],
-                "min": _zz(ist.get(1, [0])[0]),
-                "max": _zz(ist.get(2, [0])[0]),
+                "min": unzigzag(ist.get(1, [0])[0]),
+                "max": unzigzag(ist.get(2, [0])[0]),
             }
         )
     return entries
@@ -559,15 +553,15 @@ def _patch_row_index(
     while p < end and not (
         (stats_done or not lie_stats) and (pos_done or not lie_pos)
     ):
-        tag, p = _uvarint(data, p)
+        tag, p = uvarint(data, p)
         assert tag == 0x0A  # entry, length-delimited
-        elen, p = _uvarint(data, p)
+        elen, p = uvarint(data, p)
         e_end = p + elen
         positions_span = None
         stats_span = None
         while p < e_end:
-            t2, p = _uvarint(data, p)
-            l2, p = _uvarint(data, p)
+            t2, p = uvarint(data, p)
+            l2, p = uvarint(data, p)
             if t2 == 0x0A:
                 positions_span = (p, p + l2)
             elif t2 == 0x12:
@@ -575,32 +569,32 @@ def _patch_row_index(
             p += l2
         if lie_pos and not pos_done and entry_no == 1:
             s0, _s1 = positions_span
-            v, after = _uvarint(data, s0)
+            v, after = uvarint(data, s0)
             blob[s0:after] = _same_len_bump(v, zig=False)
             pos_done = True
         if lie_stats and not stats_done and stats_span is not None:
             sp, s_end = stats_span
             ist_span = None
             while sp < s_end:
-                t3, sp = _uvarint(data, sp)
+                t3, sp = uvarint(data, sp)
                 if t3 == 0x08:  # numberOfValues varint
-                    _, sp = _uvarint(data, sp)
+                    _, sp = uvarint(data, sp)
                     continue
-                l3, sp = _uvarint(data, sp)
+                l3, sp = uvarint(data, sp)
                 if t3 == 0x12:
                     ist_span = (sp, sp + l3)
                 sp += l3
             ist = _pb_fields(data[ist_span[0] : ist_span[1]])
-            emin, emax = _zz(ist.get(1, [0])[0]), _zz(ist.get(2, [0])[0])
+            emin, emax = unzigzag(ist.get(1, [0])[0]), unzigzag(ist.get(2, [0])[0])
             if not (emin > hi or emax < lo):  # first SELECTED stride
                 ip, i_end = ist_span
                 while ip < i_end:
-                    t4, ip = _uvarint(data, ip)
+                    t4, ip = uvarint(data, ip)
                     v4_start = ip
-                    v4, ip = _uvarint(data, ip)
+                    v4, ip = uvarint(data, ip)
                     if t4 == 0x10:  # maximum
                         blob[v4_start:ip] = _same_len_bump(
-                            _zz(v4), zig=True
+                            unzigzag(v4), zig=True
                         )
                         stats_done = True
                         break
@@ -903,20 +897,20 @@ def _make_orc_bloom(i: int) -> bytes:
     entry = 0
     s_target = i % nst
     while p < end:
-        tag, p = _uvarint(data, p)
+        tag, p = uvarint(data, p)
         assert tag == 0x0A
-        elen, p = _uvarint(data, p)
+        elen, p = uvarint(data, p)
         e_end = p + elen
         k_span = bits_span = None
         q2 = p
         while q2 < e_end:
-            t2, q2 = _uvarint(data, q2)
+            t2, q2 = uvarint(data, q2)
             if t2 == 0x08:
                 v_start = q2
-                _v, q2 = _uvarint(data, q2)
+                _v, q2 = uvarint(data, q2)
                 k_span = (v_start, q2)
             else:
-                l2, q2 = _uvarint(data, q2)
+                l2, q2 = uvarint(data, q2)
                 if t2 == 0x1A:
                     bits_span = (q2, q2 + l2)
                 q2 += l2
@@ -1080,7 +1074,7 @@ def read_orc_double_bin(data: bytes) -> dict | None:
     if bs_cs.get(1, [None])[0] != num_rows:
         return None
     bstat = _pb_fields(bs_cs.get(8, [b""])[0]) if 8 in bs_cs else {}
-    if 1 in bstat and _zz(bstat[1][0]) != blen_sum:
+    if 1 in bstat and unzigzag(bstat[1][0]) != blen_sum:
         return None
     return {
         "n_rows": num_rows,

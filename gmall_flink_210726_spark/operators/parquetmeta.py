@@ -40,6 +40,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.wire import unzigzag, uvarint
 
 
 class _Reader:
@@ -58,19 +59,11 @@ class _Reader:
         return b
 
     def varint(self) -> int:
-        out = shift = 0
-        while True:
-            b = self.byte()
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return out
-            shift += 7
-            if shift > 63:
-                raise ValueError("thrift: varint too long")
+        v, self.pos = uvarint(self.data, self.pos, self.end)
+        return v
 
     def zigzag(self) -> int:
-        v = self.varint()
-        return (v >> 1) ^ -(v & 1)
+        return unzigzag(self.varint())
 
     def take(self, n: int) -> bytes:
         if n < 0 or self.pos + n > self.end:

@@ -50,12 +50,12 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
-from gmall_flink_210726_spark.operators.orc import _enc_uvarint, _zz_enc
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _decode_rle_hybrid,
     _Reader,
     _read_struct,
 )
+from gmall_flink_210726_spark.operators.wire import _enc_uvarint, _zz_enc
 from gmall_flink_210726_spark.operators.zstd import xxh64
 
 # ----------------------------------------------- split-block filter

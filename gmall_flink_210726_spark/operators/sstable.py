@@ -56,10 +56,10 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
-from gmall_flink_210726_spark.operators.orc import _enc_uvarint
 from gmall_flink_210726_spark.operators.parquetmeta import (
     snappy_decompress,
 )
+from gmall_flink_210726_spark.operators.wire import _enc_uvarint, uvarint
 
 _MAGIC = bytes.fromhex("57fb808b247547db")
 _MASK_DELTA = 0xA282EAD8
@@ -67,20 +67,6 @@ _MASK_DELTA = 0xA282EAD8
 
 def _mask_crc(c: int) -> int:
     return (((c >> 15) | (c << 17)) + _MASK_DELTA) & 0xFFFFFFFF
-
-
-def _varint(data: bytes, pos: int) -> tuple[int, int] | None:
-    v = 0
-    shift = 0
-    while True:
-        if pos >= len(data) or shift > 63:
-            return None
-        b = data[pos]
-        v |= (b & 0x7F) << shift
-        shift += 7
-        pos += 1
-        if not b & 0x80:
-            return v, pos
 
 
 def _read_block(data: bytes, off: int, size: int) -> bytes | None:
@@ -106,7 +92,8 @@ def _read_block(data: bytes, off: int, size: int) -> bytes | None:
 def _parse_block(
     block: bytes,
 ) -> tuple[list[tuple[bytes, bytes]], int] | None:
-    """-> ([(key, value)], n_restarts); None on grammar violation."""
+    """-> ([(key, value)], n_restarts); None on grammar violation,
+    ValueError on a bad varint."""
     if len(block) < 8:
         return None
     (n_restarts,) = struct.unpack_from("<I", block, len(block) - 4)
@@ -131,18 +118,9 @@ def _parse_block(
     while pos < tail:
         entry_starts.add(pos)
         at_restart = pos in rs
-        got = _varint(block, pos)
-        if got is None:
-            return None
-        shared, pos = got
-        got = _varint(block, pos)
-        if got is None:
-            return None
-        non_shared, pos = got
-        got = _varint(block, pos)
-        if got is None:
-            return None
-        vlen, pos = got
+        shared, pos = uvarint(block, pos)
+        non_shared, pos = uvarint(block, pos)
+        vlen, pos = uvarint(block, pos)
         if pos + non_shared + vlen > tail:
             return None
         if at_restart and shared != 0:
@@ -168,79 +146,66 @@ def read_sstable(data: bytes) -> dict | None:
     if len(data) < 48 or data[-8:] != _MAGIC:
         return None
     footer = data[len(data) - 48 :]
-    got = _varint(footer, 0)
-    if got is None:
-        return None
-    meta_off, p = got
-    got = _varint(footer, p)
-    if got is None:
-        return None
-    meta_size, p = got
-    got = _varint(footer, p)
-    if got is None:
-        return None
-    idx_off, p = got
-    got = _varint(footer, p)
-    if got is None:
-        return None
-    idx_size, p = got
-    if any(footer[p:40].strip(b"\x00")):
-        return None  # footer padding must be zero
-    meta_block = _read_block(data, meta_off, meta_size)
-    if meta_block is None or _parse_block(meta_block) is None:
-        return None
-    idx_block = _read_block(data, idx_off, idx_size)
-    if idx_block is None:
-        return None
-    got2 = _parse_block(idx_block)
-    if got2 is None:
-        return None
-    index_entries, _ = got2
-    if not index_entries:
-        return None
-    n_entries = key_bytes = val_byte_sum = n_restarts = 0
-    prev_key: bytes | None = None
-    prev_end = 0
-    for sep_key, handle in index_entries:
-        got = _varint(handle, 0)
-        if got is None:
+    try:
+        meta_off, p = uvarint(footer, 0)
+        meta_size, p = uvarint(footer, p)
+        idx_off, p = uvarint(footer, p)
+        idx_size, p = uvarint(footer, p)
+        if any(footer[p:40].strip(b"\x00")):
+            return None  # footer padding must be zero
+        meta_block = _read_block(data, meta_off, meta_size)
+        if meta_block is None or _parse_block(meta_block) is None:
             return None
-        b_off, hp = got
-        got = _varint(handle, hp)
-        if got is None or got[1] != len(handle):
+        idx_block = _read_block(data, idx_off, idx_size)
+        if idx_block is None:
             return None
-        b_size = got[0]
-        if b_off != prev_end:
-            return None  # data blocks must tile in file order
-        prev_end = b_off + b_size + 5
-        block = _read_block(data, b_off, b_size)
-        if block is None:
-            return None
-        got2 = _parse_block(block)
+        got2 = _parse_block(idx_block)
         if got2 is None:
             return None
-        entries, nr = got2
-        if not entries:
+        index_entries, _ = got2
+        if not index_entries:
             return None
-        n_restarts += nr
-        for key, value in entries:
-            if prev_key is not None and key <= prev_key:
-                return None  # strict global order
-            prev_key = key
-            n_entries += 1
-            key_bytes += len(key)
-            val_byte_sum += sum(value)
-        if entries[-1][0] > sep_key:
-            return None  # separator must bound its block
-    if prev_end != meta_off:
-        return None  # data area must end where metaindex begins
-    return {
-        "n_blocks": len(index_entries),
-        "n_entries": n_entries,
-        "key_bytes": key_bytes,
-        "val_byte_sum": val_byte_sum,
-        "n_restarts": n_restarts,
-    }
+        n_entries = key_bytes = val_byte_sum = n_restarts = 0
+        prev_key: bytes | None = None
+        prev_end = 0
+        for sep_key, handle in index_entries:
+            b_off, hp = uvarint(handle, 0)
+            b_size, hp = uvarint(handle, hp)
+            if hp != len(handle):
+                return None
+            if b_off != prev_end:
+                return None  # data blocks must tile in file order
+            prev_end = b_off + b_size + 5
+            block = _read_block(data, b_off, b_size)
+            if block is None:
+                return None
+            got2 = _parse_block(block)
+            if got2 is None:
+                return None
+            entries, nr = got2
+            if not entries:
+                return None
+            n_restarts += nr
+            for key, value in entries:
+                if prev_key is not None and key <= prev_key:
+                    return None  # strict global order
+                prev_key = key
+                n_entries += 1
+                key_bytes += len(key)
+                val_byte_sum += sum(value)
+            if entries[-1][0] > sep_key:
+                return None  # separator must bound its block
+        if prev_end != meta_off:
+            return None  # data area must end where metaindex begins
+        return {
+            "n_blocks": len(index_entries),
+            "n_entries": n_entries,
+            "key_bytes": key_bytes,
+            "val_byte_sum": val_byte_sum,
+            "n_restarts": n_restarts,
+        }
+    except ValueError:
+        return None  # a truncated or overlong varint
 
 
 SSTABLE_SCHEMA = StructType(

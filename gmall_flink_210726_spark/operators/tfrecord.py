@@ -46,7 +46,8 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
-from gmall_flink_210726_spark.operators.orc import _enc_uvarint, _pb_fields
+from gmall_flink_210726_spark.operators.orc import _pb_fields
+from gmall_flink_210726_spark.operators.wire import _enc_uvarint, uvarints
 
 _MASK_DELTA = 0xA282EAD8
 
@@ -80,28 +81,6 @@ def tfrecord_frames(data: bytes) -> list[bytes]:
         pos += length + 4
     if not out:
         raise ValueError("tfrecord: empty file")
-    return out
-
-
-def _packed_varints(raw: bytes) -> list[int]:
-    out = []
-    pos = 0
-    while pos < len(raw):
-        v = shift = 0
-        while True:
-            if pos >= len(raw):
-                raise ValueError("tfrecord: truncated packed varint")
-            b = raw[pos]
-            pos += 1
-            v |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-            if shift > 70:
-                raise ValueError("tfrecord: packed varint too long")
-        if v >= 1 << 63:
-            v -= 1 << 64  # int64 two's complement
-        out.append(v)
     return out
 
 
@@ -160,7 +139,10 @@ def parse_tf_example(body: bytes) -> dict[str, tuple[str, list]]:
         else:  # Int64List: packed varints
             if len(raw) != 1 or not isinstance(raw[0], bytes):
                 raise ValueError("tfrecord: bad packed int64_list")
-            out[name] = ("int64", _packed_varints(raw[0]))
+            out[name] = (  # int64 two's complement
+                "int64",
+                [v - (1 << 64) if v >> 63 else v for v in uvarints(raw[0])],
+            )
     return out
 
 

@@ -37,6 +37,7 @@ from gmall_flink_210726_spark.operators.multimodal import (
     blob_stats,
     synthesize_blobs,
 )
+from gmall_flink_210726_spark.operators.wire import MsbReader, MsbWriter
 
 # ---------------------------------------------------------------- fixture
 # formulas shared with the DuckDB oracle in queries/llm7.py
@@ -270,42 +271,31 @@ def _lzw_encode(data: bytes) -> bytes:
     2^width - 1 entries (511/1023/2047), one earlier than plain LZW,
     which is exactly what keeps the one-entry-behind decoder's width
     in lockstep with the encoder's."""
-    out = bytearray()
-    acc = nbits = 0
+    bw = MsbWriter()
     width, next_code = 9, 258
     table: dict[bytes, int] = {bytes([b]): b for b in range(256)}
-
-    def put(code: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    put(256)
+    bw.write(256, width)
     w = b""
     for ch in data:
         wc = w + bytes([ch])
         if wc in table:
             w = wc
             continue
-        put(table[w])
+        bw.write(table[w], width)
         table[wc] = next_code
         next_code += 1
         if next_code == (1 << width) - 1 and width < 12:
             width += 1
         elif next_code >= 4094:  # keep 4094/4095 free: clear + restart
-            put(256)
+            bw.write(256, width)
             table = {bytes([b]): b for b in range(256)}
             next_code, width = 258, 9
         w = bytes([ch])
     if w:
-        put(table[w])
-    put(257)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
+        bw.write(table[w], width)
+    bw.write(257, width)
+    bw.align()
+    return bw.bytes()
 
 
 def _lzw_decode(src: bytes, expected: int) -> bytes:
@@ -314,25 +304,12 @@ def _lzw_decode(src: bytes, expected: int) -> bytes:
     lands on the same code boundary; KwKwK (code == next) resolves to
     prev + prev[0]; any code beyond next is corrupt."""
     out = bytearray()
-    acc = nbits = pos = 0
+    read = MsbReader(src).read
     width, next_code = 9, 258
     table: dict[int, bytes] = {b: bytes([b]) for b in range(256)}
     prev: bytes | None = None
-
-    def get() -> int:
-        nonlocal acc, nbits, pos
-        while nbits < width:
-            if pos >= len(src):
-                raise ValueError("lzw source exhausted")
-            acc = (acc << 8) | src[pos]
-            pos += 1
-            nbits += 8
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        return code
-
     while len(out) < expected:
-        code = get()
+        code = read(width)
         if code == 257:  # EOI before enough pixels
             raise ValueError("lzw stream short")
         if code == 256:

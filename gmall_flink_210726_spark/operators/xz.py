@@ -42,6 +42,8 @@ import hashlib
 import struct
 import zlib
 
+from gmall_flink_210726_spark.operators.wire import uvarint
+
 # --------------------------------------------------------------- CRC-64
 
 # ECMA-182 polynomial, reflected form 0xC96C5795D7870F42 (the xz spec's
@@ -433,19 +435,14 @@ _CHECK_NAMES = {0: "none", 1: "crc32", 4: "crc64", 10: "sha256"}
 
 
 def _mb_int(data: bytes, pos: int, end: int) -> tuple[int, int]:
-    """xz multibyte (varint) integer."""
-    out = shift = 0
-    while True:
-        if pos >= end or shift > 63:
-            raise ValueError("xz: bad multibyte integer")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            if b == 0 and shift:
-                raise ValueError("xz: non-minimal multibyte integer")
-            return out, pos
-        shift += 7
+    """xz multibyte integer: a varint of at most 9 bytes, with no
+    trailing zero byte."""
+    v, after = uvarint(data, pos, end)
+    if after - pos > 9:
+        raise ValueError("xz: bad multibyte integer")
+    if after - pos > 1 and data[after - 1] == 0:
+        raise ValueError("xz: non-minimal multibyte integer")
+    return v, after
 
 
 def xz_decompress_stream(

@@ -12,13 +12,13 @@ from gmall_flink_210726_spark.operators.avro import (
     _decode_value,
     _make_avro,
     _snappy_literal,
-    _zz_enc,
     read_avro_container,
 )
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _Reader,
     snappy_decompress,
 )
+from gmall_flink_210726_spark.operators.wire import _zz_enc
 
 
 def _rdr(b: bytes) -> _Reader:

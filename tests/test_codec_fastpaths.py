@@ -175,10 +175,8 @@ class TestRleV2Vectorized:
                 assert a == b
 
     def test_svarints_agrees_with_scalar(self):
-        from gmall_flink_210726_spark.operators.orc import (
-            _svarint,
-            _svarints,
-        )
+        from gmall_flink_210726_spark.operators.orc import _svarints
+        from gmall_flink_210726_spark.operators.wire import svarint
 
         rng = random.Random(5)
         for _ in range(200)  :
@@ -196,7 +194,7 @@ class TestRleV2Vectorized:
             body = bytes(body)
             ref, pos = [], 0
             for _ in range(len(vals)):
-                v, pos = _svarint(body, pos)
+                v, pos = svarint(body, pos)
                 ref.append(v)
             assert _svarints(body, len(vals)) == (ref, pos)
         with pytest.raises(ValueError):
@@ -414,12 +412,11 @@ class TestFlacVectorized:
 
     def test_residual_decoders_agree(self):
         from gmall_flink_210726_spark.operators.flac import (
-            _BitReader,
-            _BitWriter,
             _residual_dec,
             _residual_dec_py,
             _residual_enc_py,
         )
+        from gmall_flink_210726_spark.operators.wire import MsbReader, MsbWriter
 
         rng = random.Random(7)
         for trial in range(60):
@@ -432,20 +429,20 @@ class TestFlacVectorized:
             po = rng.choice((0, 1))
             if n % (1 << po):
                 po = 0
-            w = _BitWriter()
+            w = MsbWriter()
             _residual_enc_py(w, resid, order, po, rng.random() < 0.3)
             w.align()
             data = w.bytes()
-            fast = _residual_dec(_BitReader(data), n, order)
-            slow = _residual_dec_py(_BitReader(data), n, order)
+            fast = _residual_dec(MsbReader(data), n, order)
+            slow = _residual_dec_py(MsbReader(data), n, order)
             assert fast.tolist() == slow, trial
 
     def test_encoder_byte_identical_to_scalar(self):
         from gmall_flink_210726_spark.operators.flac import (
-            _BitWriter,
             _residual_enc,
             _residual_enc_py,
         )
+        from gmall_flink_210726_spark.operators.wire import MsbWriter
 
         rng = random.Random(99)
         for trial in range(60):
@@ -459,7 +456,7 @@ class TestFlacVectorized:
             if n % (1 << po):
                 po = 0
             esc = rng.random() < 0.5
-            w1, w2 = _BitWriter(), _BitWriter()
+            w1, w2 = MsbWriter(), MsbWriter()
             # desync the byte phase to exercise write_bits_np's
             # buffered-partial-bit prepend
             phase = rng.randrange(0, 7)

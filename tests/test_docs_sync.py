@@ -107,3 +107,37 @@ def test_every_package_function_has_a_caller():
         and uses[fn.name] == _name_uses(fn)[fn.name]
     ]
     assert not orphans, f"functions nothing calls: {orphans}"
+
+
+# Bit coders kept outside operators/wire.py, by module and class name:
+# JPEG's reader and writer do 0xFF00 byte-stuffing and marker checks,
+# and zstd reads its FSE and Huffman streams backwards from the end.
+_OWN_BIT_CODERS = {
+    ("jpeg.py", "_BitReader"),
+    ("jpeg.py", "_BitWriter"),
+    ("zstd.py", "_BackBits"),
+}
+
+
+def test_wire_primitives_have_one_copy():
+    """LEB128 loops and bit reader/writer classes live only in
+    operators/wire.py, so no pasted copy can drift from it."""
+    pkg = ROOT / "gmall_flink_210726_spark"
+    copies = []
+    for p in sorted(pkg.rglob("*.py")):
+        if p == pkg / "operators" / "wire.py":
+            continue
+        text = p.read_text()
+        copies += [
+            f"{p.relative_to(ROOT)}:{text.count(chr(10), 0, m.start()) + 1} "
+            "LEB128 loop"
+            for m in re.finditer(r"& 0x7[Ff]\) << shift", text)
+        ]
+        copies += [
+            f"{p.relative_to(ROOT)}:{node.lineno} class {node.name}"
+            for node in ast.walk(ast.parse(text))
+            if isinstance(node, ast.ClassDef)
+            and "Bit" in node.name
+            and (p.name, node.name) not in _OWN_BIT_CODERS
+        ]
+    assert not copies, f"copies of operators/wire.py primitives: {copies}"

@@ -106,15 +106,15 @@ class TestEncoderRanges:
 
     def test_coded_number_boundaries(self):
         from gmall_flink_210726_spark.operators.flac import (
-            _BitReader,
             _utf8_number_dec,
             _utf8_number_enc,
         )
+        from gmall_flink_210726_spark.operators.wire import MsbReader
 
         for v in (127, 128, 2047, 2048, 16383, 16384, 65535, 65536,
                   262143, 262144):
             enc = _utf8_number_enc(v)
-            assert _utf8_number_dec(_BitReader(enc)) == v, v
+            assert _utf8_number_dec(MsbReader(enc)) == v, v
 
     def test_bps_knob_roundtrips(self):
         """Every streamable FLAC sample size, not just 16-bit; the

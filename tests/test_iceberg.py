@@ -181,11 +181,9 @@ class TestSchemaResolution:
         assert read_avro_resolved(blob, READER_V2) is None
 
     def test_promotions(self):
-        from gmall_flink_210726_spark.operators.avro import (
-            _decode_resolved,
-            _zz_enc,
-        )
+        from gmall_flink_210726_spark.operators.avro import _decode_resolved
         from gmall_flink_210726_spark.operators.parquetmeta import _Reader
+        from gmall_flink_210726_spark.operators.wire import _zz_enc
 
         def rdr(b):
             return _Reader(b, 0, len(b))
@@ -202,11 +200,9 @@ class TestSchemaResolution:
             pass
 
     def test_reader_union_branch_matching(self):
-        from gmall_flink_210726_spark.operators.avro import (
-            _decode_resolved,
-            _zz_enc,
-        )
+        from gmall_flink_210726_spark.operators.avro import _decode_resolved
         from gmall_flink_210726_spark.operators.parquetmeta import _Reader
+        from gmall_flink_210726_spark.operators.wire import _zz_enc
 
         # writer long resolved into reader ["null","long"]
         got = _decode_resolved(

@@ -7,11 +7,10 @@ import struct
 
 from gmall_flink_210726_spark.operators.kafkalog import (
     _make_kafka_segment,
-    _zz_dec,
-    _zz_enc,
     crc32c,
     read_kafka_segment,
 )
+from gmall_flink_210726_spark.operators.wire import _zz_enc, svarint
 
 
 class TestCrc32c:
@@ -29,7 +28,7 @@ class TestCrc32c:
 class TestVarints:
     def test_zigzag_roundtrip(self):
         for v in (0, -1, 1, 63, -64, 300, -301, 2**40, -(2**40)):
-            got, pos = _zz_dec(_zz_enc(v), 0)
+            got, pos = svarint(_zz_enc(v), 0)
             assert got == v and pos == len(_zz_enc(v))
 
 
@@ -392,7 +391,6 @@ class TestCompaction:
         from gmall_flink_210726_spark.operators.kafkalog import (
             _enc_batch_sparse,
             _enc_kv_record,
-            _zz_enc,
             read_kafka_compacted,
         )
         from gmall_flink_210726_spark.operators.tar import (

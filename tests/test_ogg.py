@@ -6,25 +6,25 @@ from gmall_flink_210726_spark.operators.ogg import (
     _ogg_packet_samples,
     _ogg_preskip,
     make_ogg_opus,
-    ogg_crc,
     read_ogg_opus,
 )
+from gmall_flink_210726_spark.operators.wire import crc32_msb
 
 
 class TestCrc:
     def test_empty_is_zero(self):
-        assert ogg_crc(b"") == 0
+        assert crc32_msb(b"") == 0
 
     def test_rfc_variant_differs_from_zlib(self):
         import zlib
 
         data = b"OggS\x00\x02" + bytes(20)
-        assert ogg_crc(data) != zlib.crc32(data)
+        assert crc32_msb(data) != zlib.crc32(data)
 
     def test_unreflected_shift_behavior(self):
         # one zero byte shifts the register without feedback
-        assert ogg_crc(b"\x00") == 0
-        assert ogg_crc(b"\x80") != 0
+        assert crc32_msb(b"\x00") == 0
+        assert crc32_msb(b"\x80") != 0
 
 
 class TestModel:

@@ -13,15 +13,17 @@ import pytest
 from gmall_flink_210726_spark.operators.orc import (
     _closest_fixed_bits,
     _decode_width,
-    _enc_uvarint,
     _make_orc,
     _orc_values,
     _pb_fields,
-    _svarint,
-    _uvarint,
-    _zz_enc,
     read_orc_int_column,
     rle_v2_signed,
+)
+from gmall_flink_210726_spark.operators.wire import (
+    _enc_uvarint,
+    _zz_enc,
+    svarint,
+    uvarint,
 )
 
 
@@ -38,17 +40,17 @@ def _write(vals, compression="uncompressed", stripe_size=4096):
 
 class TestVarint:
     def test_max_uint64_decodes(self):
-        assert _uvarint(b"\xff" * 9 + b"\x01", 0) == ((1 << 64) - 1, 10)
-        assert _svarint(b"\x03", 0) == (-2, 1)
+        assert uvarint(b"\xff" * 9 + b"\x01", 0) == ((1 << 64) - 1, 10)
+        assert svarint(b"\x03", 0) == (-2, 1)
 
     def test_overlong_varint_raises(self):
         # 11 continuation bytes before the terminator: past 64 bits
-        for read in (_uvarint, _svarint):
+        for read in (uvarint, svarint):
             with pytest.raises(ValueError, match="too long"):
                 read(b"\xff" * 11 + b"\x01", 0)
 
     def test_truncated_varint_raises(self):
-        for read in (_uvarint, _svarint):
+        for read in (uvarint, svarint):
             with pytest.raises(ValueError):
                 read(b"\x80\x80", 0)
 
@@ -59,8 +61,8 @@ class TestVarint:
         # a negative int64 goes through tfrecord's two's-complement mask
         from gmall_flink_210726_spark.operators.tfrecord import _U64
 
-        assert _uvarint(_enc_uvarint(v & _U64), 0) == (v & _U64, n_bytes)
-        assert _svarint(_zz_enc(v), 0)[0] == v
+        assert uvarint(_enc_uvarint(v & _U64), 0) == (v & _U64, n_bytes)
+        assert svarint(_zz_enc(v), 0)[0] == v
 
     def test_encoder_refuses_unmasked_negative(self):
         with pytest.raises(ValueError, match="negative"):
@@ -69,7 +71,7 @@ class TestVarint:
     def test_orc2_reads_through_the_same_varint(self):
         from gmall_flink_210726_spark.operators import orc2
 
-        assert orc2._uvarint is _uvarint
+        assert orc2.uvarint is uvarint
 
 
 class TestProtobufWalk:

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 import struct
+import time
 
 import pytest
 
@@ -209,6 +210,20 @@ class TestLZW:
             (i * 3 + 1) % 256 for i in range(600)
         )
         assert _lzw_decode(_lzw_encode(data), len(data)) == data
+
+    def test_large_strip_round_trips_in_linear_time(self):
+        """The bit accumulators stay bounded: a 256 KB random strip
+        round-trips in seconds, where an accumulator that grows with the
+        strip makes both directions quadratic."""
+        from gmall_flink_210726_spark.operators.tiff import (
+            _lzw_decode,
+            _lzw_encode,
+        )
+
+        data = random.Random(17).randbytes(256 * 1024)
+        t0 = time.perf_counter()
+        assert _lzw_decode(_lzw_encode(data), len(data)) == data
+        assert time.perf_counter() - t0 < 10.0
 
     def test_lzw_tiff_round_trip_both_endians(self):
         from gmall_flink_210726_spark.operators.tiff import (
