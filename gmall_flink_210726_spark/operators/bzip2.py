@@ -74,7 +74,7 @@ def _huff_decode(bits: MsbReader, tab) -> int:
         ln += 1
         if ln > max_len:
             raise ValueError("bzip2: bad huffman code")
-        vec = (vec << 1) | bits.read_bit()
+        vec = (vec << 1) | bits.read(1)
     idx = vec - base[ln]
     if idx < 0 or idx >= len(perm):
         raise ValueError("bzip2: bad huffman code")
@@ -83,7 +83,7 @@ def _huff_decode(bits: MsbReader, tab) -> int:
 
 def _decode_block(bits: MsbReader, max_block: int) -> tuple[bytes, int]:
     stored_crc = bits.read(32)
-    if bits.read_bit():
+    if bits.read(1):
         raise ValueError("bzip2: randomised blocks unsupported")
     orig_ptr = bits.read(24)
     # two-level used-byte map
@@ -109,7 +109,7 @@ def _decode_block(bits: MsbReader, max_block: int) -> tuple[bytes, int]:
     selectors = []
     for _ in range(n_selectors):
         j = 0
-        while bits.read_bit():
+        while bits.read(1):
             j += 1
             if j >= n_groups:
                 raise ValueError("bzip2: bad selector")
@@ -122,8 +122,8 @@ def _decode_block(bits: MsbReader, max_block: int) -> tuple[bytes, int]:
         cur = bits.read(5)
         lens = []
         for _ in range(n_syms):
-            while bits.read_bit():
-                cur += -1 if bits.read_bit() else 1
+            while bits.read(1):
+                cur += -1 if bits.read(1) else 1
                 if not 1 <= cur <= 23:
                     raise ValueError("bzip2: bad code length walk")
             lens.append(cur)

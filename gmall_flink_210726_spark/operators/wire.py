@@ -39,10 +39,10 @@ def unzigzag(u: int) -> int:
     return (u >> 1) ^ -(u & 1)
 
 
-def svarint(data, pos: int, end: int | None = None) -> tuple[int, int]:
+def svarint(data, pos: int) -> tuple[int, int]:
     """Zigzag-decoded ``uvarint``: the signed varint of protobuf
     sint64, ORC, Avro, Kafka and Thrift compact."""
-    v, pos = uvarint(data, pos, end)
+    v, pos = uvarint(data, pos)
     return unzigzag(v), pos
 
 
@@ -105,17 +105,6 @@ class MsbReader:
         self.pos, self.bit = pos, bit
         return v
 
-    def read_bit(self) -> int:
-        """``read(1)`` without the loop, for bit-serial Huffman codes."""
-        pos, bit = self.pos, self.bit
-        if pos >= len(self.data):
-            raise ValueError("bits: truncated")
-        if bit == 7:
-            self.pos, self.bit = pos + 1, 0
-        else:
-            self.bit = bit + 1
-        return (self.data[pos] >> (7 - bit)) & 1
-
     def read_signed(self, n: int) -> int:
         """``n``-bit two's complement."""
         v = self.read(n)
@@ -126,7 +115,7 @@ class MsbReader:
     def read_unary(self) -> int:
         """Count of 0 bits before the next 1 bit."""
         q = 0
-        while not self.read_bit():
+        while not self.read(1):
             q += 1
             if q > 1 << 20:
                 raise ValueError("bits: runaway unary")

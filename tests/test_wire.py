@@ -78,11 +78,11 @@ class TestReaders:
             ]
             assert r.pos * 8 + r.bit == start + count * width
 
-    def test_read_bit_and_unary(self):
+    def test_unary_then_single_bits(self):
         data = bytes([0b00010110, 0b10000000])
         r = MsbReader(data)
         assert r.read_unary() == 3
-        assert [r.read_bit() for _ in range(4)] == [0, 1, 1, 0]
+        assert [r.read(1) for _ in range(4)] == [0, 1, 1, 0]
         assert r.read_unary() == 0
         assert r.align() == 0 and (r.pos, r.bit) == (2, 0)
 
