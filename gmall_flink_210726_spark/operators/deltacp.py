@@ -47,8 +47,9 @@ from gmall_flink_210726_spark.operators.multimodal import (
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _decode_rle_hybrid,
     _page_decompress,
-    _read_struct,
-    _Reader,
+    column_chunk,
+    read_footer,
+    read_page,
 )
 from gmall_flink_210726_spark.operators.tar import _BLOCK, _make_header
 from gmall_flink_210726_spark.operators.wds import _iter_tar_members
@@ -62,21 +63,11 @@ def _read_struct_leaf(
     """Decode one max_def=2 / max_rep=0 leaf across all row groups:
     returns one entry per ROW — None for struct-null, ("null",) for
     field-null, else the value. PLAIN only; physical types INT64(2),
-    INT32(1), BOOLEAN(0, bit-packed LSB-first), BYTE_ARRAY(6)."""
-    row_groups = meta.get(4)
-    if not isinstance(row_groups, list):
-        return None
+    INT32(1), BOOLEAN(0, bit-packed LSB-first), BYTE_ARRAY(6).
+    ``meta`` is the file's ``read_footer``."""
     out: list = []
-    for rg in row_groups:
-        cols = rg.get(1) if isinstance(rg, dict) else None
-        if not isinstance(cols, list):
-            return None
-        chunk = None
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if isinstance(cm, dict) and tuple(cm.get(3, ())) == path:
-                chunk = cm
-                break
+    for rg in meta[4]:
+        chunk = column_chunk(rg, path)
         if chunk is None:
             return None
         if chunk.get(1) != ptype or chunk.get(4) != 0:  # PLAIN/NONE
@@ -87,21 +78,19 @@ def _read_struct_leaf(
             return None
         got = 0
         while got < n_vals:
-            r = _Reader(data, pos, len(data))
-            try:
-                ph = _read_struct(r)
-            except ValueError:
+            got_page = read_page(data, pos)
+            if got_page is None:
                 return None
+            ph, page, pos = got_page
             if ph.get(1) != 0:
                 return None
             dph = ph.get(5)
             if not isinstance(dph, dict) or dph.get(2) != 0:
                 return None
             pn = dph.get(1)
-            psize = ph.get(3)
-            page = _page_decompress(
-                data[r.pos : r.pos + psize], 0, ph.get(2)
-            )
+            if not isinstance(pn, int):
+                return None
+            page = _page_decompress(page, 0, ph[2])
             if page is None or len(page) < 4:
                 return None
             (dlen,) = struct.unpack_from("<I", page, 0)
@@ -154,7 +143,6 @@ def _read_struct_leaf(
                     out.append(vals[vi])
                     vi += 1
             got += pn
-            pos = r.pos + psize
         if got != n_vals:
             return None
     if len(out) != meta.get(3):
@@ -172,6 +160,22 @@ _LEAVES = {
     "meta_id": ((b"metaData", b"id"), 6),
     "proto_mrv": ((b"protocol", b"minReaderVersion"), 1),
 }
+
+
+def _decode_leaves(
+    blob: bytes, leaf_spec: dict
+) -> tuple[dict, int] | None:
+    """Footer walk + every leaf of ``leaf_spec`` -> (columns, rows)."""
+    meta = read_footer(blob)
+    if meta is None:
+        return None
+    leaves = {}
+    for name, (path, ptype) in leaf_spec.items():
+        col = _read_struct_leaf(blob, meta, path, ptype)
+        if col is None:
+            return None
+        leaves[name] = col
+    return leaves, meta[3]
 
 
 def _replay_tail_commits(
@@ -268,25 +272,10 @@ def read_delta_checkpoint_table(data: bytes) -> dict | None:
     except (ValueError, KeyError, TypeError, UnicodeDecodeError):
         return None
     ckpt = files.get(f"_delta_log/{v:020d}.checkpoint.parquet")
-    if ckpt is None:
+    got = None if ckpt is None else _decode_leaves(ckpt, _LEAVES)
+    if got is None:
         return None
-    if len(ckpt) < 12 or ckpt[:4] != b"PAR1" or ckpt[-4:] != b"PAR1":
-        return None
-    (flen,) = struct.unpack_from("<I", ckpt, len(ckpt) - 8)
-    start = len(ckpt) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(ckpt, start, len(ckpt) - 8))
-    except ValueError:
-        return None
-    leaves = {}
-    for name, (path, ptype) in _LEAVES.items():
-        col = _read_struct_leaf(ckpt, meta, path, ptype)
-        if col is None:
-            return None
-        leaves[name] = col
-    n_rows = meta.get(3)
+    leaves, n_rows = got
     if n_rows != declared_size:
         return None  # _last_checkpoint.size must tell the truth
     live: dict[str, tuple[int, int]] = {}
@@ -572,32 +561,6 @@ _SIDECAR_LEAVES = {
     "add_stats": ((b"add", b"stats"), 6),
     "remove_path": ((b"remove", b"path"), 6),
 }
-
-
-def _decode_leaves(
-    blob: bytes, leaf_spec: dict
-) -> tuple[dict, int] | None:
-    """Footer walk + every leaf of ``leaf_spec`` -> (columns, rows)."""
-    if len(blob) < 12 or blob[:4] != b"PAR1" or blob[-4:] != b"PAR1":
-        return None
-    (flen,) = struct.unpack_from("<I", blob, len(blob) - 8)
-    start = len(blob) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(blob, start, len(blob) - 8))
-    except ValueError:
-        return None
-    leaves = {}
-    for name, (path, ptype) in leaf_spec.items():
-        col = _read_struct_leaf(blob, meta, path, ptype)
-        if col is None:
-            return None
-        leaves[name] = col
-    n_rows = meta.get(3)
-    if not isinstance(n_rows, int):
-        return None
-    return leaves, n_rows
 
 
 def read_delta_v2_checkpoint_table(data: bytes) -> dict | None:

@@ -441,61 +441,43 @@ def _read_pos_delete_parquet(
     from gmall_flink_210726_spark.operators.parquetmeta import (
         _decode_rle_hybrid,
         _page_decompress,
-        _read_struct,
-        _Reader,
+        column_chunk,
+        read_footer,
+        read_page,
     )
 
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None:
         return None
-    (flen,) = _struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    row_groups = meta.get(4)
-    if not isinstance(num_rows, int) or not isinstance(row_groups, list):
-        return None
+    num_rows, row_groups = meta[3], meta[4]
     paths: list[str] = []
     poss: list[int] = []
     for rg in row_groups:
-        cols = rg.get(1) if isinstance(rg, dict) else None
-        if not isinstance(cols, list):
-            return None
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if not isinstance(cm, dict):
-                return None
-            name = cm.get(3)
-            ctype = cm.get(1)
-            codec = cm.get(4)
+        for name, ctype in ((b"file_path", 6), (b"pos", 2)):
+            cm = column_chunk(rg, [name])
+            if cm is None or len(rg[1]) != 2:
+                return None  # exactly these two columns
             n_vals = cm.get(5)
-            off = cm.get(9)
-            if codec != 0 or not isinstance(off, int):
+            pos = cm.get(9)
+            if cm.get(1) != ctype or cm.get(4) != 0:
                 return None
-            want_str = name == [b"file_path"] and ctype == 6
-            want_i64 = name == [b"pos"] and ctype == 2
-            if not (want_str or want_i64):
+            if not isinstance(n_vals, int) or not isinstance(pos, int):
                 return None
+            want_i64 = ctype == 2
             got = 0
-            pos = off
             try:
                 while got < n_vals:
-                    r = _Reader(data, pos, len(data))
-                    ph = _read_struct(r)
+                    got_page = read_page(data, pos)
+                    if got_page is None:
+                        return None
+                    ph, page, pos = got_page
                     if ph.get(1) != 0:
                         return None
                     dph = ph.get(5)
                     if not isinstance(dph, dict) or dph.get(2) != 0:
                         return None
                     pn = dph.get(1)
-                    psize = ph.get(3)
-                    page = _page_decompress(
-                        data[r.pos : r.pos + psize], 0, ph.get(2)
-                    )
+                    page = _page_decompress(page, 0, ph[2])
                     if page is None:
                         return None
                     (dlen,) = _struct.unpack_from("<I", page, 0)
@@ -531,7 +513,6 @@ def _read_pos_delete_parquet(
                         if bp != len(body):
                             return None
                     got += pn
-                    pos = r.pos + psize
             except (ValueError, UnicodeDecodeError):
                 return None
             if got != n_vals:

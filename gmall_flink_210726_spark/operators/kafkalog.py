@@ -471,8 +471,9 @@ def _parse_v2_records(
     body: bytes, rcount: int, dense: bool = True
 ) -> list[dict] | None:
     """Shared v2 record-framing walk ->
-    [{'ts_delta','off_delta','key','value'}]; None on any framing
-    violation (exact lengths, exact consumption).  ``dense=True``
+    [{'ts_delta','off_delta','key','value'}]; None on a framing
+    violation (exact lengths, exact consumption); a truncated or
+    overlong varint raises ValueError instead. ``dense=True``
     requires offset deltas 0..rcount-1 (a producer-written batch);
     ``dense=False`` allows the GAPS a compacted-log cleaner leaves
     (original offsets preserved, cleaned records missing) but still

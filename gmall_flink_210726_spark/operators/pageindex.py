@@ -53,10 +53,14 @@ from gmall_flink_210726_spark.operators.multimodal import (
 )
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _CODECS,
+    _chunk_of,
     _decode_rle_hybrid,
+    _page_body_at,
     _page_decompress,
     _read_struct,
     _Reader,
+    read_footer,
+    read_page,
 )
 
 # --------------------------------------------------------------------------
@@ -87,38 +91,20 @@ def read_parquet_page_index(
     DECODED min/max equal the index's claim. Pages outside the
     predicate are never touched.
     """
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None:
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    row_groups = meta.get(4)
-    if not isinstance(num_rows, int) or not isinstance(row_groups, list):
-        return None
+    num_rows, row_groups = meta[3], meta[4]
     n_groups = len(row_groups)
     n_pages = n_read = rows_read = match_count = match_sum = 0
     total_rows = 0
     for rg in row_groups:
-        if not isinstance(rg, dict):
+        # the ColumnChunk itself: the index locations (4-7) sit beside
+        # its ColumnMetaData (3), not in it
+        chunk = _chunk_of(rg, [b"k"])
+        if chunk is None or not isinstance(rg.get(3), int):
             return None
-        cols = rg.get(1)
-        rg_rows = rg.get(3)
-        if not isinstance(cols, list) or not isinstance(rg_rows, int):
-            return None
-        chunk = None
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if isinstance(cm, dict) and cm.get(3) == [b"k"]:
-                chunk = cc
-                break
-        if chunk is None:
-            return None
+        rg_rows = rg[3]
         cm = chunk[3]
         codec = cm.get(4)
         if cm.get(1) != 2 or codec not in _CODECS:  # INT64 only
@@ -193,29 +179,21 @@ def read_parquet_page_index(
                 return None
             if cmax < lo or cmin > hi:
                 continue  # SKIPPED — these bytes are never touched
-            r = _Reader(data, offsets[p], len(data))
-            try:
-                ph = _read_struct(r)
-            except ValueError:
+            got_page = read_page(data, offsets[p])
+            if got_page is None:
                 return None
+            ph, page, end = got_page
             if ph.get(1) != 0:  # DATA_PAGE v1
                 return None
             dph = ph.get(5)
             if not isinstance(dph, dict) or dph.get(2) != 0:  # PLAIN
                 return None
             pn = dph.get(1)
-            psize = ph.get(3)
-            usize = ph.get(2)
             if pn != spans[p]:
                 return None  # header vs OffsetIndex row books
-            if not isinstance(psize, int) or not isinstance(usize, int):
-                return None
-            if r.pos - offsets[p] + psize != csizes[p]:
+            if end - offsets[p] != csizes[p]:
                 return None  # compressed_page_size INCLUDES the header
-            page = data[r.pos : r.pos + psize]
-            if len(page) != psize:
-                return None
-            page = _page_decompress(page, codec, usize)
+            page = _page_decompress(page, codec, ph[2])
             if page is None or len(page) < 4:
                 return None
             (dlen,) = struct.unpack_from("<I", page, 0)
@@ -330,20 +308,14 @@ def _make_parquet_pageindex(i: int) -> bytes:
         version="1.0",
     )
     data = bytearray(buf.getvalue())
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    meta = _read_struct(
-        _Reader(bytes(data), len(data) - 8 - flen, len(data) - 8)
-    )
-    first_cc = meta[4][0][1][0]
+    first_cc = read_footer(bytes(data))[4][0][1][0]
     if lie:
         # First data page of the first group: walk its header, skip
         # the def-level stream, then bump value[0]'s byte 6 — the
         # decoded max explodes past the claimed max.
-        off = first_cc[3][9]
-        r = _Reader(bytes(data), off, len(data))
-        _read_struct(r)  # page header; r.pos now at the body
-        (dlen,) = struct.unpack_from("<I", data, r.pos)
-        data[r.pos + 4 + dlen + 6] = 0x40
+        at = _page_body_at(bytes(data), first_cc[3][9])
+        (dlen,) = struct.unpack_from("<I", data, at)
+        data[at + 4 + dlen + 6] = 0x40
     if bad:
         data[first_cc[6]] = 0xFF  # ColumnIndex thrift becomes garbage
     return bytes(data)

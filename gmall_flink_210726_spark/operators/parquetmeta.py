@@ -21,7 +21,8 @@ planning pass, hand-decoded:
   the file-level num_rows — the footer's own books must balance.
 
 Corrupt-stripe contract: bad magic, an out-of-bounds footer length,
-or an invalid type nibble degrades to ``format='unknown'``.
+an invalid type nibble or Thrift nesting past ``_MAX_DEPTH`` degrades
+to ``format='unknown'``.
 Arrow-batched ``mapInPandas``, zero shuffle.
 
 Grammar sources: Apache Thrift compact protocol spec;
@@ -31,6 +32,7 @@ apache/parquet-format FileMetaData (both public).
 from __future__ import annotations
 
 import struct
+import zlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -63,7 +65,8 @@ class _Reader:
         return v
 
     def zigzag(self) -> int:
-        return unzigzag(self.varint())
+        v, self.pos = uvarint(self.data, self.pos, self.end)
+        return unzigzag(v)
 
     def take(self, n: int) -> bytes:
         if n < 0 or self.pos + n > self.end:
@@ -73,7 +76,22 @@ class _Reader:
         return b
 
 
-def _read_value(r: _Reader, ctype: int, container: bool = False):
+# Deepest Thrift nesting a parquet reader accepts. Well-formed headers
+# stay under 10: FileMetaData > row_groups > RowGroup > columns >
+# ColumnChunk > ColumnMetaData > encoding_stats > PageEncodingStats is
+# 8, and a logical-type union under a SchemaElement is 7. A run of
+# nested-struct headers past this is a stack bomb, not metadata.
+_MAX_DEPTH = 64
+
+
+def _read_value(
+    r: _Reader, ctype: int, container: bool = False, depth: int = 0
+):
+    # integers and binaries first: they are most of a parquet footer
+    if ctype in (4, 5, 6):  # I16 / I32 / I64
+        return r.zigzag()
+    if ctype == 8:  # BINARY / STRING
+        return r.take(r.varint())
     if ctype in (1, 2):  # BOOL
         if container:
             # Inside LIST/SET/MAP a bool element is a standalone byte
@@ -87,36 +105,34 @@ def _read_value(r: _Reader, ctype: int, container: bool = False):
         return ctype == 1  # true/false encoded in the field header
     if ctype == 3:  # BYTE
         return r.byte()
-    if ctype in (4, 5, 6):  # I16 / I32 / I64
-        return r.zigzag()
     if ctype == 7:  # DOUBLE: 8 raw bytes
         return struct.unpack("<d", r.take(8))[0]
-    if ctype == 8:  # BINARY / STRING
-        return r.take(r.varint())
+    if depth >= _MAX_DEPTH:
+        raise ValueError("thrift: nesting too deep")
+    if ctype == 12:  # STRUCT
+        return _read_struct(r, depth + 1)
     if ctype in (9, 10):  # LIST / SET
         head = r.byte()
         size = head >> 4
         etype = head & 0x0F
         if size == 15:
             size = r.varint()
-        return [_read_value(r, etype, container=True) for _ in range(size)]
+        return [_read_value(r, etype, True, depth + 1) for _ in range(size)]
     if ctype == 11:  # MAP
         size = r.varint()
         if size == 0:
             return {}
         kv = r.byte()
         return {
-            _read_value(r, kv >> 4, container=True): _read_value(
-                r, kv & 0x0F, container=True
+            _read_value(r, kv >> 4, True, depth + 1): _read_value(
+                r, kv & 0x0F, True, depth + 1
             )
             for _ in range(size)
         }
-    if ctype == 12:  # STRUCT
-        return _read_struct(r)
     raise ValueError(f"thrift: bad type {ctype}")
 
 
-def _read_struct(r: _Reader) -> dict[int, object]:
+def _read_struct(r: _Reader, depth: int = 0) -> dict[int, object]:
     fields: dict[int, object] = {}
     fid = 0
     while True:
@@ -129,11 +145,23 @@ def _read_struct(r: _Reader) -> dict[int, object]:
             fid += delta
         else:
             fid = r.zigzag()
-        fields[fid] = _read_value(r, ctype)
+        fields[fid] = _read_value(r, ctype, False, depth)
 
 
-def parse_parquet_footer(data: bytes) -> dict | None:
-    """Framing + FileMetaData walk + books-balance cross-check."""
+# --------------------------------------------------------------------------
+# The parquet reader core: every walker below (and in deltacp, iceberg,
+# pageindex and pqbloom) frames the file, finds its column chunks and
+# reads its page headers through these three functions. Format rules —
+# page type, v1 vs v2, encodings, level widths, decompression — stay
+# with the walkers.
+# --------------------------------------------------------------------------
+
+
+def read_footer(data: bytes) -> dict | None:
+    """FileMetaData of a parquet file, or None: ``PAR1`` at both ends,
+    a footer length that fits between them, a Thrift struct that
+    parses, and the fields every walker needs (3 num_rows an int,
+    4 row_groups a list)."""
     if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
         return None
     (flen,) = struct.unpack_from("<I", data, len(data) - 8)
@@ -144,15 +172,67 @@ def parse_parquet_footer(data: bytes) -> dict | None:
         meta = _read_struct(_Reader(data, start, len(data) - 8))
     except ValueError:
         return None
-    num_rows = meta.get(3)
-    schema = meta.get(2)
-    row_groups = meta.get(4)
-    if (
-        not isinstance(num_rows, int)
-        or not isinstance(schema, list)
-        or not isinstance(row_groups, list)
+    if not isinstance(meta.get(3), int) or not isinstance(meta.get(4), list):
+        return None
+    return meta
+
+
+def _chunk_of(row_group, path: list[bytes]) -> dict | None:
+    """The ColumnChunk of ``row_group`` whose ColumnMetaData has
+    path_in_schema ``path`` (the first one), or None."""
+    cols = row_group.get(1) if isinstance(row_group, dict) else None
+    if not isinstance(cols, list):
+        return None
+    for cc in cols:
+        cm = cc.get(3) if isinstance(cc, dict) else None
+        if isinstance(cm, dict) and cm.get(3) == path:
+            return cc
+    return None
+
+
+def column_chunk(row_group, path) -> dict | None:
+    """The ColumnMetaData of ``row_group``'s column whose
+    path_in_schema equals ``path`` (a sequence of name bytes), or
+    None."""
+    cc = _chunk_of(row_group, list(path))
+    return None if cc is None else cc[3]
+
+
+def read_page(data: bytes, pos: int) -> tuple[dict, bytes, int] | None:
+    """The PageHeader at ``pos``: (header, still-compressed page bytes,
+    position after the page), or None when the header does not parse,
+    its sizes (2 uncompressed, 3 compressed) are not non-negative ints
+    or the page runs past ``data``, or its optional CRC (4: CRC-32 of
+    the page as stored) does not match — the one check that catches a
+    flipped value byte no count or level cross-check can see."""
+    if pos < 0:
+        return None
+    r = _Reader(data, pos, len(data))
+    try:
+        ph = _read_struct(r)
+    except ValueError:
+        return None
+    usize, psize = ph.get(2), ph.get(3)
+    if not isinstance(usize, int) or not isinstance(psize, int):
+        return None
+    end = r.pos + psize
+    if usize < 0 or psize < 0 or end > len(data):
+        return None
+    page = data[r.pos : end]
+    crc = ph.get(4)
+    if crc is not None and (
+        not isinstance(crc, int) or zlib.crc32(page) != crc & 0xFFFFFFFF
     ):
         return None
+    return ph, page, end
+
+
+def parse_parquet_footer(data: bytes) -> dict | None:
+    """Framing + FileMetaData walk + books-balance cross-check."""
+    meta = read_footer(data)
+    if meta is None or not isinstance(meta.get(2), list):
+        return None
+    num_rows, schema, row_groups = meta[3], meta[2], meta[4]
     # SchemaElement: field 4 = name (binary), field 5 = num_children.
     # The first element is the root; leaves have no children.
     leaves = [
@@ -246,18 +326,35 @@ def _flip_first_page_value(blob: bytes) -> bytes:
     VALUES region of column k. Counts, levels and framing all stay
     valid — only the page CRC can catch it (without verification the
     walk would return a silently wrong k_sum)."""
-    (flen,) = struct.unpack_from("<I", blob, len(blob) - 8)
-    meta = _read_struct(
-        _Reader(blob, len(blob) - 8 - flen, len(blob) - 8)
-    )
-    cm = meta[4][0][1][0][3]  # rg0 -> cc0 -> ColumnMetaData
-    off = cm[9]
-    r = _Reader(blob, off, len(blob))
-    ph = _read_struct(r)
-    (dlen,) = struct.unpack_from("<I", blob, r.pos)
+    k_chunk = column_chunk(read_footer(blob)[4][0], [b"k"])
+    at = _page_body_at(blob, k_chunk[9])
+    (dlen,) = struct.unpack_from("<I", blob, at)
     out = bytearray(blob)
-    out[r.pos + 4 + dlen + 5] ^= 0x55  # inside the first int64s
+    out[at + 4 + dlen + 5] ^= 0x55  # inside the first int64s
     return bytes(out)
+
+
+def _page_body_at(blob: bytes, off: int) -> int:
+    """Offset of the body of the page whose header is at ``off``."""
+    _, page, end = read_page(blob, off)
+    return end - len(page)
+
+
+def _smash_page_body(blob: bytearray, col: int) -> None:
+    """Overwrite the first body word of row group 0's first ``col``
+    data page with 0xFFFFFFFF; the page header stays intact."""
+    import io
+
+    import pyarrow.parquet as pq
+
+    off = (
+        pq.ParquetFile(io.BytesIO(bytes(blob)))
+        .metadata.row_group(0)
+        .column(col)
+        .data_page_offset
+    )
+    at = _page_body_at(bytes(blob), off)
+    blob[at : at + 4] = b"\xff\xff\xff\xff"
 
 
 def synthesize_parquet_media(docs: DataFrame) -> DataFrame:
@@ -385,75 +482,38 @@ def read_parquet_column_k(
     encoding, def levels all 1 (no nulls written), per-page value
     counts summing to the chunk's num_values, and the chunk counts
     summing to the file num_rows."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
-        return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    row_groups = meta.get(4)
-    if not isinstance(num_rows, int) or not isinstance(row_groups, list):
+    meta = read_footer(data)
+    if meta is None:
         return None
     total_vals = ksum = n_pages = 0
     collected: list[int] = []
-    for rg in row_groups:
-        cols = rg.get(1) if isinstance(rg, dict) else None
-        if not isinstance(cols, list):
-            return None
-        chunk = None
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if (
-                isinstance(cm, dict)
-                and cm.get(3) == [name]  # path_in_schema
-            ):
-                chunk = cm
-                break
+    for rg in meta[4]:
+        chunk = column_chunk(rg, [name])
         if chunk is None:
             return None
         codec = chunk.get(4)
         if chunk.get(1) != 2 or codec not in _CODECS:  # INT64 only
             return None
         n_vals = chunk.get(5)
-        off = chunk.get(9)
-        if not isinstance(n_vals, int) or not isinstance(off, int):
+        pos = chunk.get(9)
+        if not isinstance(n_vals, int) or not isinstance(pos, int):
             return None
         got = 0
-        pos = off
         try:
             while got < n_vals:
-                r = _Reader(data, pos, len(data))
-                ph = _read_struct(r)
+                got_page = read_page(data, pos)
+                if got_page is None:
+                    return None
+                ph, page, pos = got_page
                 if ph.get(1) != 0:  # DATA_PAGE v1 only
                     return None
                 dph = ph.get(5)
                 if not isinstance(dph, dict) or dph.get(2) != 0:  # PLAIN
                     return None
                 pn = dph.get(1)
-                psize = ph.get(3)
-                usize = ph.get(2)
-                if not isinstance(pn, int) or not isinstance(psize, int):
+                if not isinstance(pn, int):
                     return None
-                page = data[r.pos : r.pos + psize]
-                if len(page) != psize:
-                    return None
-                crc = ph.get(4)
-                if crc is not None:
-                    # optional page CRC (standard CRC-32 over the
-                    # serialized, still-compressed page bytes, spec
-                    # PageHeader.crc) — the one integrity layer that
-                    # catches a flipped VALUE byte no count/level
-                    # cross-check can see
-                    import zlib as _zlib
-
-                    if _zlib.crc32(page) != crc & 0xFFFFFFFF:
-                        return None
-                page = _page_decompress(page, codec, usize)
+                page = _page_decompress(page, codec, ph[2])
                 if page is None:
                     return None
                 (dlen,) = struct.unpack_from("<I", page, 0)
@@ -469,13 +529,12 @@ def read_parquet_column_k(
                     collected.extend(decoded)
                 got += pn
                 n_pages += 1
-                pos = r.pos + psize
         except ValueError:
             return None
         if got != n_vals:
             return None
         total_vals += n_vals
-    if total_vals != num_rows:
+    if total_vals != meta[3]:
         return None  # chunk counts must sum to the file row count
     out = {"n_values": total_vals, "k_sum": ksum, "n_pages": n_pages}
     if collect_values:
@@ -605,33 +664,15 @@ def read_parquet_column_s_dict(
     counts, data-page count, summed per-group dictionary sizes, and
     byte-value checksums over both the materialized column and the
     dictionaries themselves."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None:
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    row_groups = meta.get(4)
-    if not isinstance(num_rows, int) or not isinstance(row_groups, list):
-        return None
+    num_rows, row_groups = meta[3], meta[4]
     n_values = n_nulls = n_pages = dict_size = 0
     value_bytes_sum = dict_bytes_sum = 0
     collected: list[bytes | None] = []
     for rg in row_groups:
-        cols = rg.get(1) if isinstance(rg, dict) else None
-        if not isinstance(cols, list):
-            return None
-        chunk = None
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if isinstance(cm, dict) and cm.get(3) == [name]:
-                chunk = cm
-                break
+        chunk = column_chunk(rg, [name])
         if chunk is None:
             return None
         codec = chunk.get(4)
@@ -643,8 +684,10 @@ def read_parquet_column_s_dict(
             return None
         try:
             # --- dictionary page ---
-            r = _Reader(data, dict_off, len(data))
-            ph = _read_struct(r)
+            got_page = read_page(data, dict_off)
+            if got_page is None:
+                return None
+            ph, page, next_pos = got_page
             if ph.get(1) != 2:  # DICTIONARY_PAGE
                 return None
             dph = ph.get(7)
@@ -652,13 +695,9 @@ def read_parquet_column_s_dict(
             if not isinstance(dph, dict) or dph.get(2) not in (0, 2):
                 return None
             nd = dph.get(1)
-            psize, usize = ph.get(3), ph.get(2)
-            if not isinstance(nd, int) or not isinstance(psize, int):
+            if not isinstance(nd, int):
                 return None
-            page = data[r.pos : r.pos + psize]
-            if len(page) != psize:
-                return None
-            page = _page_decompress(page, codec, usize)
+            page = _page_decompress(page, codec, ph[2])
             if page is None:
                 return None
             dvals: list[bytes] = []
@@ -677,10 +716,11 @@ def read_parquet_column_s_dict(
             dsums = [sum(v) for v in dvals]
             # --- data pages ---
             got = 0
-            pos = r.pos + psize
             while got < n_vals:
-                r2 = _Reader(data, pos, len(data))
-                ph2 = _read_struct(r2)
+                got_page = read_page(data, next_pos)
+                if got_page is None:
+                    return None
+                ph2, page2, next_pos = got_page
                 if ph2.get(1) != 0:  # DATA_PAGE v1
                     return None
                 dph2 = ph2.get(5)
@@ -688,13 +728,9 @@ def read_parquet_column_s_dict(
                 if not isinstance(dph2, dict) or dph2.get(2) not in (2, 8):
                     return None
                 pn = dph2.get(1)
-                psize2, usize2 = ph2.get(3), ph2.get(2)
-                if not isinstance(pn, int) or not isinstance(psize2, int):
+                if not isinstance(pn, int):
                     return None
-                page2 = data[r2.pos : r2.pos + psize2]
-                if len(page2) != psize2:
-                    return None
-                page2 = _page_decompress(page2, codec, usize2)
+                page2 = _page_decompress(page2, codec, ph2[2])
                 if page2 is None or len(page2) < 4:
                     return None
                 (dlen,) = struct.unpack_from("<I", page2, 0)
@@ -725,7 +761,6 @@ def read_parquet_column_s_dict(
                 n_nulls += pn - nn
                 got += pn
                 n_pages += 1
-                pos = r2.pos + psize2
         except ValueError:
             return None
         if got != n_vals:
@@ -906,32 +941,15 @@ def read_parquet_columns_v2(data: bytes) -> dict | None:
     header's definition-levels byte length frames exactly, the
     delta runs' own total_value_count matches the page, and the
     string section's concatenated bytes are consumed exactly."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None:
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    row_groups = meta.get(4)
-    if not isinstance(num_rows, int) or not isinstance(row_groups, list):
-        return None
+    num_rows, row_groups = meta[3], meta[4]
     n_values = n_pages = 0
     k_sum = s_bytes_sum = 0
     for rg in row_groups:
-        cols = rg.get(1) if isinstance(rg, dict) else None
-        if not isinstance(cols, list):
-            return None
-        chunks: dict[bytes, dict] = {}
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if isinstance(cm, dict) and cm.get(3) in ([b"k"], [b"s"]):
-                chunks[cm[3][0]] = cm
-        if set(chunks) != {b"k", b"s"}:
+        chunks = {n: column_chunk(rg, [n]) for n in (b"k", b"s")}
+        if None in chunks.values():
             return None
         rg_rows = rg.get(3)
         if not isinstance(rg_rows, int):
@@ -945,15 +963,16 @@ def read_parquet_columns_v2(data: bytes) -> dict | None:
             if chunk.get(1) != want_type or codec not in _CODECS:
                 return None
             n_vals = chunk.get(5)
-            off = chunk.get(9)
-            if not isinstance(n_vals, int) or not isinstance(off, int):
+            pos = chunk.get(9)
+            if not isinstance(n_vals, int) or not isinstance(pos, int):
                 return None
             try:
                 got = 0
-                pos = off
                 while got < n_vals:
-                    r = _Reader(data, pos, len(data))
-                    ph = _read_struct(r)
+                    got_page = read_page(data, pos)
+                    if got_page is None:
+                        return None
+                    ph, page, pos = got_page
                     if ph.get(1) != 3:  # DATA_PAGE_V2
                         return None
                     dph = ph.get(8)
@@ -963,17 +982,13 @@ def read_parquet_columns_v2(data: bytes) -> dict | None:
                     nnull = dph.get(2)
                     dlen = dph.get(5)
                     rlen = dph.get(6)
-                    psize, usize = ph.get(3), ph.get(2)
+                    usize = ph[2]
                     if (
                         not isinstance(pn, int)
-                        or not isinstance(psize, int)
                         or not isinstance(dlen, int)
                         or rlen != 0
                         or nnull != 0  # fixture columns are dense
                     ):
-                        return None
-                    page = data[r.pos : r.pos + psize]
-                    if len(page) != psize:
                         return None
                     # v2: level bytes are NEVER compressed; the data
                     # section is, unless is_compressed (field 7) = false
@@ -1006,7 +1021,6 @@ def read_parquet_columns_v2(data: bytes) -> dict | None:
                     if name == b"k":
                         n_pages += 1
                     got += pn
-                    pos = r.pos + psize
                 if got != n_vals:
                     return None
                 if name == b"k":
@@ -1133,32 +1147,15 @@ def read_parquet_columns_bss_dba(data: bytes) -> dict | None:
     Proofs: quarter-sums of the reconstructed doubles (the fixture
     writes exact quarter values, so 4*v is integer-exact) and the
     byte-value checksum of the front-decoded strings."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None:
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    row_groups = meta.get(4)
-    if not isinstance(num_rows, int) or not isinstance(row_groups, list):
-        return None
+    num_rows, row_groups = meta[3], meta[4]
     n_values = n_pages = 0
     v_q_sum = s_bytes_sum = 0
     for rg in row_groups:
-        cols = rg.get(1) if isinstance(rg, dict) else None
-        if not isinstance(cols, list):
-            return None
-        chunks: dict[bytes, dict] = {}
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if isinstance(cm, dict) and cm.get(3) in ([b"v"], [b"s"]):
-                chunks[cm[3][0]] = cm
-        if set(chunks) != {b"v", b"s"}:
+        chunks = {n: column_chunk(rg, [n]) for n in (b"v", b"s")}
+        if None in chunks.values():
             return None
         for name, want_type, want_enc in (
             (b"v", 5, 9),   # DOUBLE, BYTE_STREAM_SPLIT
@@ -1169,15 +1166,16 @@ def read_parquet_columns_bss_dba(data: bytes) -> dict | None:
             if chunk.get(1) != want_type or codec not in _CODECS:
                 return None
             n_vals = chunk.get(5)
-            off = chunk.get(9)
-            if not isinstance(n_vals, int) or not isinstance(off, int):
+            pos = chunk.get(9)
+            if not isinstance(n_vals, int) or not isinstance(pos, int):
                 return None
             try:
                 got = 0
-                pos = off
                 while got < n_vals:
-                    r = _Reader(data, pos, len(data))
-                    ph = _read_struct(r)
+                    got_page = read_page(data, pos)
+                    if got_page is None:
+                        return None
+                    ph, page, pos = got_page
                     if ph.get(1) != 3:  # DATA_PAGE_V2
                         return None
                     dph = ph.get(8)
@@ -1185,17 +1183,13 @@ def read_parquet_columns_bss_dba(data: bytes) -> dict | None:
                         return None
                     pn, nnull = dph.get(1), dph.get(2)
                     dlen, rlen = dph.get(5), dph.get(6)
-                    psize, usize = ph.get(3), ph.get(2)
+                    usize = ph[2]
                     if (
                         not isinstance(pn, int)
-                        or not isinstance(psize, int)
                         or not isinstance(dlen, int)
                         or rlen != 0
                         or nnull != 0
                     ):
-                        return None
-                    page = data[r.pos : r.pos + psize]
-                    if len(page) != psize:
                         return None
                     if dlen:
                         lv = _decode_rle_hybrid(page[:dlen], pn, 1)
@@ -1227,7 +1221,6 @@ def read_parquet_columns_bss_dba(data: bytes) -> dict | None:
                             return None
                         s_bytes_sum += sum(sum(v) for v in vals)
                     got += pn
-                    pos = r.pos + psize
                 if got != n_vals:
                     return None
                 if name == b"v":
@@ -1338,38 +1331,20 @@ def parquet_stats_skip(
     """Footer stats walk + predicate ``lo <= k <= hi`` with
     row-group skipping; reads only unskippable groups' pages
     (PLAIN int64 v1 pages, required column)."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None:
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    row_groups = meta.get(4)
-    if not isinstance(num_rows, int) or not isinstance(row_groups, list):
-        return None
+    num_rows, row_groups = meta[3], meta[4]
     n_groups = len(row_groups)
     n_skipped = n_match = match_sum = n_rows_seen = 0
     for rg in row_groups:
-        cols = rg.get(1) if isinstance(rg, dict) else None
-        if not isinstance(cols, list):
-            return None
-        chunk = None
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if isinstance(cm, dict) and cm.get(3) == [b"k"]:
-                chunk = cm
-                break
+        chunk = column_chunk(rg, [b"k"])
         if chunk is None or chunk.get(1) != 2 or chunk.get(4) != 0:
             return None  # INT64, UNCOMPRESSED only here
         n_vals = chunk.get(5)
-        off = chunk.get(9)
+        pos = chunk.get(9)
         stats = chunk.get(12)
-        if not isinstance(n_vals, int) or not isinstance(off, int):
+        if not isinstance(n_vals, int) or not isinstance(pos, int):
             return None
         n_rows_seen += n_vals
         smin = smax = None
@@ -1387,22 +1362,19 @@ def parquet_stats_skip(
         # read the group's pages
         try:
             got = 0
-            pos = off
             vmin = vmax = None
             while got < n_vals:
-                r = _Reader(data, pos, len(data))
-                ph = _read_struct(r)
+                got_page = read_page(data, pos)
+                if got_page is None:
+                    return None
+                ph, page, pos = got_page
                 if ph.get(1) != 0:
                     return None
                 dph = ph.get(5)
                 if not isinstance(dph, dict) or dph.get(2) != 0:
                     return None
                 pn = dph.get(1)
-                psize = ph.get(3)
-                if not isinstance(pn, int) or not isinstance(psize, int):
-                    return None
-                page = data[r.pos : r.pos + psize]
-                if len(page) != psize:
+                if not isinstance(pn, int):
                     return None
                 (dlen,) = struct.unpack_from("<I", page, 0)
                 levels = _decode_rle_hybrid(page[4 : 4 + dlen], pn, 1)
@@ -1419,7 +1391,6 @@ def parquet_stats_skip(
                         n_match += 1
                         match_sum += val
                 got += pn
-                pos = r.pos + psize
             if got != n_vals:
                 return None
             # stats truthfulness cross-check on READ groups
@@ -1636,8 +1607,8 @@ def _read_list_chunk(
     codec = chunk.get(4)
     if chunk.get(1) != ptype or codec not in _CODECS:
         return None
-    n_vals, off = chunk.get(5), chunk.get(9)
-    if not isinstance(n_vals, int) or not isinstance(off, int):
+    n_vals, pos = chunk.get(5), chunk.get(9)
+    if not isinstance(n_vals, int) or not isinstance(pos, int):
         return None
     def_bits = max_def.bit_length()
     rep_bits = max_rep.bit_length()
@@ -1645,17 +1616,12 @@ def _read_list_chunk(
     defs: list[int] = []
     vals: list = []
     got = n_pages = 0
-    pos = off
     while got < n_vals:
-        r = _Reader(data, pos, len(data))
-        ph = _read_struct(r)
-        ptype_page = ph.get(1)
-        psize, usize = ph.get(3), ph.get(2)
-        if not isinstance(psize, int):
+        got_page = read_page(data, pos)
+        if got_page is None:
             return None
-        raw = data[r.pos : r.pos + psize]
-        if len(raw) != psize:
-            return None
+        ph, raw, pos = got_page
+        ptype_page, usize = ph.get(1), ph[2]
         if ptype_page == 0:  # DATA_PAGE v1: whole page compressed
             dph = ph.get(5)
             # values PLAIN; def (field 3) + rep (field 4) levels RLE
@@ -1750,7 +1716,6 @@ def _read_list_chunk(
         defs.extend(pdefs)
         got += pn
         n_pages += 1
-        pos = r.pos + psize
     if got != n_vals:
         return None  # per-page counts must sum to the chunk num_values
     return reps, defs, vals, n_pages
@@ -1779,25 +1744,10 @@ def read_parquet_nested(data: bytes) -> dict | None:
     counts, element sum + null/empty-list breakdown for the int
     list, and element count / byte-length sum / null-list counts
     for the string list."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None or not isinstance(meta.get(2), list):
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    schema = meta.get(2)
-    row_groups = meta.get(4)
-    if (
-        not isinstance(num_rows, int)
-        or not isinstance(schema, list)
-        or not isinstance(row_groups, list)
-    ):
-        return None
+    num_rows, schema, row_groups = meta[3], meta[2], meta[4]
     leaves = _schema_leaf_levels(schema)
     if leaves is None:
         return None
@@ -1834,21 +1784,13 @@ def read_parquet_nested(data: bytes) -> dict | None:
         if not isinstance(rg, dict) or not isinstance(rg.get(3), int):
             return None
         rg_rows = rg[3]
-        cols = rg.get(1)
-        if not isinstance(cols, list):
-            return None
-        chunks: dict[bytes, dict] = {}
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if isinstance(cm, dict) and isinstance(cm.get(3), list):
-                path = cm[3]
-                if path:
-                    chunks[path[0]] = cm
-        if b"arr" not in chunks or b"tags" not in chunks:
+        arr_chunk = column_chunk(rg, arr_path)
+        tag_chunk = column_chunk(rg, tag_path)
+        if arr_chunk is None or tag_chunk is None:
             return None
         try:
-            got_a = _read_list_chunk(data, chunks[b"arr"], 3, 2)
-            got_t = _read_list_chunk(data, chunks[b"tags"], 3, 6)
+            got_a = _read_list_chunk(data, arr_chunk, 3, 2)
+            got_t = _read_list_chunk(data, tag_chunk, 3, 6)
         except ValueError:
             return None
         if got_a is None or got_t is None:
@@ -1984,19 +1926,10 @@ def _make_parquet_nested(
     )
     blob = bytearray(buf.getvalue())
     if i % bad_stripe == 0:
-        off = (
-            pq.ParquetFile(io.BytesIO(bytes(blob)))
-            .metadata.row_group(0)
-            .column(0)
-            .data_page_offset
-        )
-        # skip the thrift PageHeader, then smash the first body word
-        # (v1: the rep-level length prefix on NONE pages, codec
-        # grammar on compressed ones; v2: the raw rep-level RLE
-        # stream itself, breaking the rep==0/num_rows books)
-        r = _Reader(bytes(blob), off, len(blob))
-        _read_struct(r)
-        blob[r.pos : r.pos + 4] = b"\xff\xff\xff\xff"
+        # v1: the rep-level length prefix on NONE pages, codec grammar
+        # on compressed ones; v2: the raw rep-level RLE stream itself,
+        # breaking the rep==0/num_rows books
+        _smash_page_body(blob, 0)
     return bytes(blob)
 
 
@@ -2030,25 +1963,10 @@ def read_parquet_map(data: bytes) -> dict | None:
     Returns checksums the oracle recomputes blind: record/page/
     entry counts, null/empty-map breakdown, key byte-length sum,
     null-value count and value sum."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None or not isinstance(meta.get(2), list):
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    schema = meta.get(2)
-    row_groups = meta.get(4)
-    if (
-        not isinstance(num_rows, int)
-        or not isinstance(schema, list)
-        or not isinstance(row_groups, list)
-    ):
-        return None
+    num_rows, schema, row_groups = meta[3], meta[2], meta[4]
     leaves = _schema_leaf_levels(schema)
     if leaves is None:
         return None
@@ -2081,21 +1999,13 @@ def read_parquet_map(data: bytes) -> dict | None:
         if not isinstance(rg, dict) or not isinstance(rg.get(3), int):
             return None
         rg_rows = rg[3]
-        cols = rg.get(1)
-        if not isinstance(cols, list):
-            return None
-        chunks: dict[bytes, dict] = {}
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if isinstance(cm, dict) and isinstance(cm.get(3), list):
-                path = cm[3]
-                if path:
-                    chunks[path[-1]] = cm
-        if b"key" not in chunks or b"value" not in chunks:
+        key_chunk = column_chunk(rg, key_path)
+        val_chunk = column_chunk(rg, val_path)
+        if key_chunk is None or val_chunk is None:
             return None
         try:
-            got_k = _read_list_chunk(data, chunks[b"key"], 2, 6)
-            got_v = _read_list_chunk(data, chunks[b"value"], 3, 2)
+            got_k = _read_list_chunk(data, key_chunk, 2, 6)
+            got_v = _read_list_chunk(data, val_chunk, 3, 2)
         except ValueError:
             return None
         if got_k is None or got_v is None:
@@ -2205,15 +2115,7 @@ def _make_parquet_map(i: int, bad_stripe: int = 14) -> bytes:
     )
     blob = bytearray(buf.getvalue())
     if i % bad_stripe == 0:
-        off = (
-            pq.ParquetFile(io.BytesIO(bytes(blob)))
-            .metadata.row_group(0)
-            .column(1)  # the value chunk
-            .data_page_offset
-        )
-        r = _Reader(bytes(blob), off, len(blob))
-        _read_struct(r)
-        blob[r.pos : r.pos + 4] = b"\xff\xff\xff\xff"
+        _smash_page_body(blob, 1)  # the value chunk
     return bytes(blob)
 
 
@@ -2381,25 +2283,10 @@ def read_parquet_deep(data: bytes) -> dict | None:
     groups sum to the file. Returns nested-structure checksums the
     oracle recomputes blind at every depth: outer/inner null+empty
     breakdowns, element count/null count/sum."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None or not isinstance(meta.get(2), list):
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    schema = meta.get(2)
-    row_groups = meta.get(4)
-    if (
-        not isinstance(num_rows, int)
-        or not isinstance(schema, list)
-        or not isinstance(row_groups, list)
-    ):
-        return None
+    num_rows, schema, row_groups = meta[3], meta[2], meta[4]
     chains = _schema_leaf_chains(schema)
     if chains is None:
         return None
@@ -2431,20 +2318,7 @@ def read_parquet_deep(data: bytes) -> dict | None:
         if not isinstance(rg, dict) or not isinstance(rg.get(3), int):
             return None
         rg_rows = rg[3]
-        cols = rg.get(1)
-        if not isinstance(cols, list):
-            return None
-        chunk = None
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if (
-                isinstance(cm, dict)
-                and isinstance(cm.get(3), list)
-                and cm[3]
-                and cm[3][0] == b"arr2"
-            ):
-                chunk = cm
-                break
+        chunk = column_chunk(rg, path)
         if chunk is None:
             return None
         try:
@@ -2564,15 +2438,7 @@ def _make_parquet_deep(i: int, bad_stripe: int = 16) -> bytes:
     )
     blob = bytearray(buf.getvalue())
     if i % bad_stripe == 0:
-        off = (
-            pq.ParquetFile(io.BytesIO(bytes(blob)))
-            .metadata.row_group(0)
-            .column(0)
-            .data_page_offset
-        )
-        r = _Reader(bytes(blob), off, len(blob))
-        _read_struct(r)
-        blob[r.pos : r.pos + 4] = b"\xff\xff\xff\xff"
+        _smash_page_body(blob, 0)
     return bytes(blob)
 
 
@@ -2597,25 +2463,10 @@ def read_parquet_struct(data: bytes) -> dict | None:
     leaf and not the other is a corrupt file (the struct analog of
     the MAP zip cross-check). Chains derive from `_schema_leaf_chains`
     ((opt,1)(opt,2) per leaf, validated)."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None or not isinstance(meta.get(2), list):
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    schema = meta.get(2)
-    row_groups = meta.get(4)
-    if (
-        not isinstance(num_rows, int)
-        or not isinstance(schema, list)
-        or not isinstance(row_groups, list)
-    ):
-        return None
+    num_rows, schema, row_groups = meta[3], meta[2], meta[4]
     chains = _schema_leaf_chains(schema)
     if chains is None:
         return None
@@ -2644,21 +2495,13 @@ def read_parquet_struct(data: bytes) -> dict | None:
         if not isinstance(rg, dict) or not isinstance(rg.get(3), int):
             return None
         rg_rows = rg[3]
-        cols = rg.get(1)
-        if not isinstance(cols, list):
-            return None
-        chunks: dict[bytes, dict] = {}
-        for cc in cols:
-            cm = cc.get(3) if isinstance(cc, dict) else None
-            if isinstance(cm, dict) and isinstance(cm.get(3), list):
-                path = cm[3]
-                if len(path) == 2 and path[0] == b"s":
-                    chunks[path[1]] = cm
-        if b"a" not in chunks or b"b" not in chunks:
+        a_chunk = column_chunk(rg, a_path)
+        b_chunk = column_chunk(rg, b_path)
+        if a_chunk is None or b_chunk is None:
             return None
         try:
-            got_a = _read_list_chunk(data, chunks[b"a"], 2, 2, max_rep=0)
-            got_b = _read_list_chunk(data, chunks[b"b"], 2, 6, max_rep=0)
+            got_a = _read_list_chunk(data, a_chunk, 2, 2, max_rep=0)
+            got_b = _read_list_chunk(data, b_chunk, 2, 6, max_rep=0)
         except ValueError:
             return None
         if got_a is None or got_b is None:
@@ -2765,15 +2608,7 @@ def _make_parquet_struct(i: int, bad_stripe: int = 15) -> bytes:
     )
     blob = bytearray(buf.getvalue())
     if i % bad_stripe == 0:
-        off = (
-            pq.ParquetFile(io.BytesIO(bytes(blob)))
-            .metadata.row_group(0)
-            .column(1)  # field b
-            .data_page_offset
-        )
-        r = _Reader(bytes(blob), off, len(blob))
-        _read_struct(r)
-        blob[r.pos : r.pos + 4] = b"\xff\xff\xff\xff"
+        _smash_page_body(blob, 1)  # field b
     return bytes(blob)
 
 
@@ -2787,17 +2622,8 @@ def parquet_leaf_fields(data: bytes) -> list[tuple[int | None, bytes]] | None:
     element (num_children absent/0), in schema order. field_id is
     SchemaElement field 9 (the identifier Iceberg resolves columns
     by); None when the writer did not assign one."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
-        return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    schema = meta.get(2)
+    meta = read_footer(data)
+    schema = None if meta is None else meta.get(2)
     if not isinstance(schema, list) or not schema:
         return None
     out: list[tuple[int | None, bytes]] = []

@@ -54,6 +54,9 @@ from gmall_flink_210726_spark.operators.parquetmeta import (
     _decode_rle_hybrid,
     _Reader,
     _read_struct,
+    column_chunk,
+    read_footer,
+    read_page,
 )
 from gmall_flink_210726_spark.operators.wire import _enc_uvarint, _zz_enc
 from gmall_flink_210726_spark.operators.zstd import xxh64
@@ -348,19 +351,17 @@ def _read_group_values(
     pos = off
     values: list = []
     while got < n_vals:
-        r = _Reader(data, pos, len(data))
-        ph = _read_struct(r)
+        got_page = read_page(data, pos)
+        if got_page is None:
+            return None
+        ph, page, pos = got_page
         if ph.get(1) != 0:
             return None
         dph = ph.get(5)
         if not isinstance(dph, dict) or dph.get(2) != 0:
             return None
         pn = dph.get(1)
-        psize = ph.get(3)
-        if not isinstance(pn, int) or not isinstance(psize, int):
-            return None
-        page = data[r.pos : r.pos + psize]
-        if len(page) != psize:
+        if not isinstance(pn, int):
             return None
         (dlen,) = struct.unpack_from("<I", page, 0)
         levels = _decode_rle_hybrid(page[4 : 4 + dlen], pn, 1)
@@ -385,7 +386,6 @@ def _read_group_values(
             if bp != len(vals):
                 return None
         got += pn
-        pos = r.pos + psize
     return values if got == n_vals else None
 
 
@@ -398,32 +398,18 @@ def read_parquet_bloom_lookup(
     their pages, and re-probe every decoded value against the
     group's own filter (false negatives are a spec violation; a
     planted lie must degrade)."""
-    if len(data) < 12 or data[:4] != b"PAR1" or data[-4:] != b"PAR1":
+    meta = read_footer(data)
+    if meta is None:
         return None
-    (flen,) = struct.unpack_from("<I", data, len(data) - 8)
-    start = len(data) - 8 - flen
-    if flen <= 0 or start < 4:
-        return None
-    try:
-        meta = _read_struct(_Reader(data, start, len(data) - 8))
-    except ValueError:
-        return None
-    num_rows = meta.get(3)
-    row_groups = meta.get(4)
-    if not isinstance(num_rows, int) or not isinstance(row_groups, list):
-        return None
+    num_rows, row_groups = meta[3], meta[4]
     hq = _h_value(q)
     n_groups = n_maybe = n_found = 0
     found_group = -1
     k_sum_read = 0
     total = 0
     for g, rg in enumerate(row_groups):
-        cols = rg.get(1) if isinstance(rg, dict) else None
-        if not isinstance(cols, list) or len(cols) != 1:
-            return None
-        cc = cols[0]
-        cm = cc.get(3) if isinstance(cc, dict) else None
-        if not isinstance(cm, dict) or cm.get(3) != [b"k"]:
+        cm = column_chunk(rg, [b"k"])
+        if cm is None or len(rg[1]) != 1:
             return None
         if cm.get(1) != ptype or cm.get(4) != 0:
             return None

@@ -92,8 +92,9 @@ def _read_block(data: bytes, off: int, size: int) -> bytes | None:
 def _parse_block(
     block: bytes,
 ) -> tuple[list[tuple[bytes, bytes]], int] | None:
-    """-> ([(key, value)], n_restarts); None on grammar violation,
-    ValueError on a bad varint."""
+    """-> ([(key, value)], n_restarts); None on a grammar violation,
+    while a truncated or overlong varint raises ValueError (the
+    caller's ``try`` catches it)."""
     if len(block) < 8:
         return None
     (n_restarts,) = struct.unpack_from("<I", block, len(block) - 4)

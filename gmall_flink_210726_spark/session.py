@@ -101,7 +101,7 @@ def revalidate_zips_by_stat() -> None:
     zipimport.zipimporter.invalidate_caches = _invalidate_zip_if_changed
 
 
-def ensure_parallelism(df, min_partitions: int | None = None):
+def ensure_parallelism(df):
     """Round-robin repartition IFF the plan's scan parallelism is below
     the cluster's core count.
 
@@ -114,7 +114,7 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     only the operator's projected columns (call after .select).
     """
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     # probe scan parallelism via the file list (sub-ms) instead of
     # df.rdd.getNumPartitions(), which forces a full physical plan
     # (~1 s of driver time per call). File count underestimates split

@@ -141,3 +141,37 @@ def test_wire_primitives_have_one_copy():
             and (p.name, node.name) not in _OWN_BIT_CODERS
         ]
     assert not copies, f"copies of operators/wire.py primitives: {copies}"
+
+
+# parquet framing patterns that belong to the reader core only
+_PARQUET_CORE = {"read_footer", "_chunk_of", "read_page"}
+_PARQUET_COPIES = {
+    "footer prologue": r'\[:4\] != b"PAR1"',
+    "chunk lookup": r"\bcc\.get\(3\)",
+    "page-header read": r"\bph = _read_struct\b",
+}
+
+
+def test_parquet_primitives_have_one_copy():
+    """Footer framing, the column-chunk lookup and the page-header read
+    live only in parquetmeta's reader core, so the walkers share one
+    set of checks."""
+    pkg = ROOT / "gmall_flink_210726_spark"
+    core = pkg / "operators" / "parquetmeta.py"
+    copies = []
+    for p in sorted(pkg.rglob("*.py")):
+        text = p.read_text()
+        allowed: list[range] = []
+        if p == core:
+            allowed = [
+                range(node.lineno, node.end_lineno + 1)
+                for node in ast.parse(text).body
+                if isinstance(node, ast.FunctionDef)
+                and node.name in _PARQUET_CORE
+            ]
+        for what, pat in _PARQUET_COPIES.items():
+            for m in re.finditer(pat, text):
+                line = text.count(chr(10), 0, m.start()) + 1
+                if not any(line in r for r in allowed):
+                    copies.append(f"{p.relative_to(ROOT)}:{line} {what}")
+    assert not copies, f"copies of the parquet reader core: {copies}"
