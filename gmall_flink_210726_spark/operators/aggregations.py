@@ -10,9 +10,7 @@ per-record incremental reduce, minus the hand-written state.
 Scale note (100 TB): hash aggregation shuffles once on
 (window, *keys); AQE coalesces small post-shuffle partitions and
 splits skewed ones. Exact distinct counts add a second internal
-shuffle (expand + two-phase agg) — `approx_distinct=True` switches to
-HLL-based `approx_count_distinct` which stays single-pass; the
-streaming bindings use the same flag (SURVEY §4.2).
+shuffle (expand + two-phase agg).
 """
 
 from __future__ import annotations
@@ -25,36 +23,31 @@ from pyspark.sql import functions as F
 from gmall_flink_210726_spark.functions.scalar import DT_FMT
 
 
-def tumbling_window_agg(
-    df: DataFrame,
-    ts_col: str,
-    duration: str,
-    keys: Sequence[str],
-    aggs: Sequence[Column],
-    stt_fmt: str = DT_FMT,
+def window_agg(
+    df: DataFrame, window: Column, keys: Sequence[str], aggs: Sequence[Column]
 ) -> DataFrame:
-    """A1/A2/T3 — keyed tumbling event-time window aggregate with the
-    reference's ``stt``/``edt`` window-bound stamping
-    (dws/ProductStatsApp.java:230-241).
+    """A1/A2/T3 — keyed event-time window aggregate with the reference's
+    ``stt``/``edt`` window-bound stamping (dws/ProductStatsApp.java:
+    230-241): ``stt``, ``edt``, the keys, then the aggregates.
 
-    Batch-replay form; the streaming binding adds withWatermark upstream
-    (streaming/pipelines.py) and reuses this exact groupBy.
+    ``window`` is any window column: ``F.window`` (tumbling or sliding)
+    or ``F.session_window``. The same call is the batch and the
+    streaming form: on a stream with ``withWatermark`` upstream, append
+    mode emits each window once, when the watermark passes its end
+    (T10: later events are dropped in both engines).
     """
-    w = F.window(F.col(ts_col), duration)
-    out = df.groupBy(w.alias("window"), *[F.col(k) for k in keys]).agg(*aggs)
+    out = df.groupBy(window.alias("w"), *keys).agg(*aggs)
     return out.select(
-        F.date_format(F.col("window.start"), stt_fmt).alias("stt"),
-        F.date_format(F.col("window.end"), stt_fmt).alias("edt"),
-        *[F.col(k) for k in keys],
-        *[F.col(c) for c in out.columns if c != "window" and c not in keys],
+        F.date_format("w.start", DT_FMT).alias("stt"),
+        F.date_format("w.end", DT_FMT).alias("edt"),
+        *keys,
+        *[c for c in out.columns if c != "w" and c not in keys],
     )
 
 
-def distinct_count(col: str, alias: str, approx: bool = False) -> Column:
-    """A3 — distinct count inside a window. The reference carries a
-    HashSet in the accumulator and counts its size
-    (bean/ProductStats.java:75-86); Spark's exact countDistinct plans a
-    two-phase distinct aggregate, `approx` the one-pass HLL sketch."""
-    if approx:
-        return F.approx_count_distinct(col).alias(alias)
+def distinct_count(col: str, alias: str) -> Column:
+    """A3 — exact distinct count inside a window. The reference carries
+    a HashSet in the accumulator and counts its size
+    (bean/ProductStats.java:75-86); Spark plans a two-phase distinct
+    aggregate."""
     return F.countDistinct(col).alias(alias)

@@ -1,5 +1,6 @@
-"""Product-analytics operators: ordered funnels, cohort retention,
-CDC latest-row compaction, and blocked fuzzy (edit-distance) matching.
+"""Product-analytics operators: ordered funnels, cohort retention and
+blocked fuzzy (edit-distance) matching. CDC latest-row compaction is
+``operators/stateful.first_per_key`` with descending orderings.
 
 These are the analytics shapes the reference serves from its ADS layer
 (gmall-publisher queries over the aggregated ClickHouse tables,
@@ -8,8 +9,8 @@ service/impl — e.g. the sugar dashboard GMV/UV endpoints); here they are
 first-class distributed operators instead of post-hoc dashboard SQL.
 
 Scale notes (100 TB):
-- funnel / cohort / compaction shuffle once per stage on the entity key
-  (user_id / o_custkey) — no global windows, no driver collects.
+- funnel / cohort shuffle once per stage on the entity key
+  (user_id) — no global windows, no driver collects.
 - fuzzy_match blocks on a cheap deterministic key before computing
   Levenshtein, turning the quadratic all-pairs comparison into an
   equi-join whose fan-out is bounded by the block size (the classic
@@ -111,29 +112,6 @@ def cohort_retention(
         )
         .groupBy("cohort_week", "week_offset")
         .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-
-
-def latest_by_key(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[Column],
-) -> DataFrame:
-    """CDC log compaction: keep each key's latest row.
-
-    The reference's dim layer applies upserts row-at-a-time into HBase
-    (DimSinkFunction); the batch-replay equivalent is a single
-    row_number() per key over the change stream — ties MUST be broken
-    by a unique column in ``order_cols`` so the survivor is
-    deterministic under replay. One shuffle on the key; no state.
-    """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 

@@ -439,11 +439,11 @@ def _read_pos_delete_parquet(
     import struct as _struct
 
     from gmall_flink_210726_spark.operators.parquetmeta import (
-        _decode_rle_hybrid,
         _page_decompress,
         column_chunk,
         read_footer,
         read_page,
+        required_values,
     )
 
     meta = read_footer(data)
@@ -478,17 +478,9 @@ def _read_pos_delete_parquet(
                         return None
                     pn = dph.get(1)
                     page = _page_decompress(page, 0, ph[2])
-                    if page is None:
+                    body = None if page is None else required_values(page, pn)
+                    if body is None:
                         return None
-                    (dlen,) = _struct.unpack_from("<I", page, 0)
-                    levels = _decode_rle_hybrid(
-                        page[4 : 4 + dlen], pn, 1
-                    )
-                    if len(levels) != pn or any(
-                        v != 1 for v in levels
-                    ):
-                        return None
-                    body = page[4 + dlen :]
                     if want_i64:
                         if len(body) != 8 * pn:
                             return None

@@ -54,13 +54,13 @@ from gmall_flink_210726_spark.operators.multimodal import (
 from gmall_flink_210726_spark.operators.parquetmeta import (
     _CODECS,
     _chunk_of,
-    _decode_rle_hybrid,
     _page_body_at,
     _page_decompress,
     _read_struct,
     _Reader,
     read_footer,
     read_page,
+    required_values,
 )
 
 # --------------------------------------------------------------------------
@@ -194,19 +194,8 @@ def read_parquet_page_index(
             if end - offsets[p] != csizes[p]:
                 return None  # compressed_page_size INCLUDES the header
             page = _page_decompress(page, codec, ph[2])
-            if page is None or len(page) < 4:
-                return None
-            (dlen,) = struct.unpack_from("<I", page, 0)
-            if 4 + dlen > len(page):
-                return None
-            try:
-                levels = _decode_rle_hybrid(page[4 : 4 + dlen], pn, 1)
-            except ValueError:
-                return None
-            if len(levels) != pn or any(v != 1 for v in levels):
-                return None
-            body = page[4 + dlen :]
-            if len(body) != 8 * pn:
+            body = None if page is None else required_values(page, pn)
+            if body is None or len(body) != 8 * pn:
                 return None
             vals = struct.unpack(f"<{pn}q", body)
             if min(vals) != cmin or max(vals) != cmax:

@@ -151,9 +151,10 @@ def _read_struct(r: _Reader, depth: int = 0) -> dict[int, object]:
 # --------------------------------------------------------------------------
 # The parquet reader core: every walker below (and in deltacp, iceberg,
 # pageindex and pqbloom) frames the file, finds its column chunks and
-# reads its page headers through these three functions. Format rules —
-# page type, v1 vs v2, encodings, level widths, decompression — stay
-# with the walkers.
+# reads its page headers through these three functions; the v1 walkers
+# of required columns also share the level prologue in
+# ``required_values``. Format rules — page type, v1 vs v2, encodings,
+# level widths, decompression — stay with the walkers.
 # --------------------------------------------------------------------------
 
 
@@ -225,6 +226,25 @@ def read_page(data: bytes, pos: int) -> tuple[dict, bytes, int] | None:
     ):
         return None
     return ph, page, end
+
+
+def required_values(page: bytes, n: int) -> bytes | None:
+    """The value bytes of a decompressed v1 data page of ``n`` values
+    in a required column, or None: a u32 definition-level length inside
+    the page, ``n`` width-1 RLE/bit-packed levels that are all 1 (no
+    null was written), then the values."""
+    if not isinstance(n, int) or len(page) < 4:
+        return None
+    (dlen,) = struct.unpack_from("<I", page, 0)
+    if 4 + dlen > len(page):
+        return None
+    try:
+        levels = _decode_rle_hybrid(page[4 : 4 + dlen], n, 1)
+    except ValueError:
+        return None
+    if len(levels) != n or any(v != 1 for v in levels):
+        return None
+    return page[4 + dlen :]
 
 
 def parse_parquet_footer(data: bytes) -> dict | None:
@@ -511,17 +531,9 @@ def read_parquet_column_k(
                 if not isinstance(dph, dict) or dph.get(2) != 0:  # PLAIN
                     return None
                 pn = dph.get(1)
-                if not isinstance(pn, int):
-                    return None
                 page = _page_decompress(page, codec, ph[2])
-                if page is None:
-                    return None
-                (dlen,) = struct.unpack_from("<I", page, 0)
-                levels = _decode_rle_hybrid(page[4 : 4 + dlen], pn, 1)
-                if len(levels) != pn or any(v != 1 for v in levels):
-                    return None  # nulls were never written
-                vals = page[4 + dlen :]
-                if len(vals) != 8 * pn:
+                vals = None if page is None else required_values(page, pn)
+                if vals is None or len(vals) != 8 * pn:
                     return None
                 decoded = struct.unpack_from(f"<{pn}q", vals, 0)
                 ksum += sum(decoded)
@@ -1374,14 +1386,8 @@ def parquet_stats_skip(
                 if not isinstance(dph, dict) or dph.get(2) != 0:
                     return None
                 pn = dph.get(1)
-                if not isinstance(pn, int):
-                    return None
-                (dlen,) = struct.unpack_from("<I", page, 0)
-                levels = _decode_rle_hybrid(page[4 : 4 + dlen], pn, 1)
-                if len(levels) != pn or any(v != 1 for v in levels):
-                    return None
-                body = page[4 + dlen :]
-                if len(body) != 8 * pn:
+                body = required_values(page, pn)
+                if body is None or len(body) != 8 * pn:
                     return None
                 for k in range(pn):
                     (val,) = struct.unpack_from("<q", body, 8 * k)

@@ -51,12 +51,12 @@ from gmall_flink_210726_spark.operators.multimodal import (
     synthesize_blobs,
 )
 from gmall_flink_210726_spark.operators.parquetmeta import (
-    _decode_rle_hybrid,
     _Reader,
     _read_struct,
     column_chunk,
     read_footer,
     read_page,
+    required_values,
 )
 from gmall_flink_210726_spark.operators.wire import _enc_uvarint, _zz_enc
 from gmall_flink_210726_spark.operators.zstd import xxh64
@@ -361,13 +361,9 @@ def _read_group_values(
         if not isinstance(dph, dict) or dph.get(2) != 0:
             return None
         pn = dph.get(1)
-        if not isinstance(pn, int):
+        vals = required_values(page, pn)
+        if vals is None:
             return None
-        (dlen,) = struct.unpack_from("<I", page, 0)
-        levels = _decode_rle_hybrid(page[4 : 4 + dlen], pn, 1)
-        if len(levels) != pn or any(v != 1 for v in levels):
-            return None
-        vals = page[4 + dlen :]
         if ptype == 2:
             if len(vals) != 8 * pn:
                 return None

@@ -20,17 +20,22 @@ Ties are broken on a unique id column so results are deterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def first_per_key(
-    df: DataFrame, keys: list[str], order_by: list[str]
+    df: DataFrame, keys: list[str], order_by: list[str | Column]
 ) -> DataFrame:
     """Deterministic dedup: keep the first row per key ordered by
-    ``order_by`` (T5 — 'first visit of the day wins'). Equivalent to
-    dropDuplicates but reproducible, hence oracle-comparable."""
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in order_by])
+    ``order_by`` — names sort ascending, a ``Column`` sorts as given
+    (T5 — 'first visit of the day wins'; CDC compaction — 'latest
+    change wins' with ``desc()``). Equivalent to dropDuplicates but
+    reproducible, hence oracle-comparable: the ordering must end on a
+    unique column so the survivor is the same on every replay. One
+    shuffle on the key; no state."""
+    order = [F.col(c).asc() if isinstance(c, str) else c for c in order_by]
+    w = Window.partitionBy(*keys).orderBy(*order)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

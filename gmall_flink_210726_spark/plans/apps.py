@@ -26,16 +26,24 @@ from pyspark.sql import functions as F
 
 from gmall_flink_210726_spark.functions.scalar import DT_FMT
 from gmall_flink_210726_spark.functions.tokenizer import tokenize_col
+from gmall_flink_210726_spark.operators.aggregations import window_agg
 from gmall_flink_210726_spark.operators.joins import interval_join
 from gmall_flink_210726_spark.operators.parse import parse_json_column
-from gmall_flink_210726_spark.operators.split import explode_with_parent, union_by_name
+from gmall_flink_210726_spark.operators.split import (
+    explode_with_parent,
+    split_stream,
+    union_by_name,
+)
+from gmall_flink_210726_spark.operators.stateful import first_per_key
 from gmall_flink_210726_spark.schemas import LOG_EVENT_SCHEMA
 
 # --------------------------------------------------------------------- helpers
 
 
-def _event_time_ms(ts_ms: Column) -> Column:
-    return F.timestamp_millis(ts_ms)
+def _stamp(now_ms: int | None) -> Column:
+    """F9 — the processing-time ``ts`` stamp of a DWS row; ``now_ms``
+    pins it for deterministic tests."""
+    return F.lit(now_ms) if now_ms is not None else F.unix_millis(F.current_timestamp())
 
 
 def with_event_ts(df: DataFrame, create_time_col: str = "create_time") -> DataFrame:
@@ -83,10 +91,18 @@ def base_log_app(raw: DataFrame, value_col: str = "value") -> dict[str, DataFram
         ),
     )
 
-    start = fixed.filter(F.col("start").isNotNull())
-    page = fixed.filter(F.col("start").isNull())
+    return {**split_log(fixed), "dirty": dirty}
+
+
+def split_log(events: DataFrame) -> dict[str, DataFrame]:
+    """dwd/BaseLogApp.java:97-131 — the 3-way split of parsed log events
+    (R1) with the display flatten (R2, :113-125), shared by the batch
+    app and its streaming binding. Returns {'page', 'start', 'display'}."""
+    branches = split_stream(
+        events, {"page": F.col("start").isNull(), "start": F.col("start").isNotNull()}
+    )
     display = explode_with_parent(
-        page.filter(F.col("displays").isNotNull()),
+        branches["page"].filter(F.col("displays").isNotNull()),
         "displays",
         ["common", "page", "ts"],
         element_alias="display",
@@ -97,7 +113,7 @@ def base_log_app(raw: DataFrame, value_col: str = "value") -> dict[str, DataFram
         F.col("page.page_id").alias("page_id"),
         "ts",
     )
-    return {"page": page, "start": start, "display": display, "dirty": dirty}
+    return {**branches, "display": display}
 
 
 # ------------------------------------------------------------------- BaseDBApp
@@ -134,17 +150,10 @@ def unique_visit_app(page: DataFrame) -> DataFrame:
     the 24h-TTL ValueState<lastVisitDate>."""
     entries = page.filter(F.col("page.last_page_id").isNull())
     with_day = entries.withColumn(
-        "dt", F.date_format(_event_time_ms(F.col("ts")), "yyyy-MM-dd")
+        "dt", F.date_format(F.timestamp_millis(F.col("ts")), "yyyy-MM-dd")
     )
     # page_id tie-break: deterministic winner when two entries share a ts
-    w = Window.partitionBy("common.mid", "dt").orderBy(
-        F.col("ts").asc(), F.col("page.page_id").asc()
-    )
-    return (
-        with_day.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "dt")
-    )
+    return first_per_key(with_day, ["common.mid", "dt"], ["ts", "page.page_id"]).drop("dt")
 
 
 # ----------------------------------------------------------- UserJumpDetailApp
@@ -374,7 +383,7 @@ def visitor_stats_app(
 
     pv = page.select(
         *keys(page),
-        _event_time_ms(F.col("ts")).alias("event_time"),
+        F.timestamp_millis(F.col("ts")).alias("event_time"),
         F.lit(0).alias("uv_ct"),
         F.lit(1).alias("pv_ct"),
         F.when(F.col("page.last_page_id").isNull(), 1).otherwise(0).alias("sv_ct"),
@@ -383,7 +392,7 @@ def visitor_stats_app(
     )
     uv = unique_visits.select(
         *keys(unique_visits),
-        _event_time_ms(F.col("ts")).alias("event_time"),
+        F.timestamp_millis(F.col("ts")).alias("event_time"),
         F.lit(1).alias("uv_ct"),
         F.lit(0).alias("pv_ct"),
         F.lit(0).alias("sv_ct"),
@@ -392,7 +401,7 @@ def visitor_stats_app(
     )
     uj = jumps.select(
         *keys(jumps),
-        _event_time_ms(F.col("ts")).alias("event_time"),
+        F.timestamp_millis(F.col("ts")).alias("event_time"),
         F.lit(0).alias("uv_ct"),
         F.lit(0).alias("pv_ct"),
         F.lit(0).alias("sv_ct"),
@@ -400,32 +409,13 @@ def visitor_stats_app(
         F.lit(0).cast("long").alias("dur_sum"),
     )
     unioned = union_by_name([pv, uv, uj])
-    ts_stamp = (
-        F.lit(now_ms) if now_ms is not None else F.unix_millis(F.current_timestamp())
-    )
-    agg = unioned.groupBy(
-        F.window("event_time", window_duration).alias("w"), "ar", "ch", "vc", "is_new"
-    ).agg(
-        F.sum("uv_ct").alias("uv_ct"),
-        F.sum("pv_ct").alias("pv_ct"),
-        F.sum("sv_ct").alias("sv_ct"),
-        F.sum("uj_ct").alias("uj_ct"),
-        F.sum("dur_sum").alias("dur_sum"),
-    )
-    return agg.select(
-        F.date_format("w.start", DT_FMT).alias("stt"),
-        F.date_format("w.end", DT_FMT).alias("edt"),
-        "vc",
-        "ch",
-        "ar",
-        "is_new",
-        "uv_ct",
-        "pv_ct",
-        "sv_ct",
-        "uj_ct",
-        "dur_sum",
-        ts_stamp.alias("ts"),
-    )
+    counters = ["uv_ct", "pv_ct", "sv_ct", "uj_ct", "dur_sum"]
+    return window_agg(
+        unioned,
+        F.window("event_time", window_duration),
+        ["vc", "ch", "ar", "is_new"],
+        [F.sum(c).alias(c) for c in counters],
+    ).withColumn("ts", _stamp(now_ms))
 
 
 # ------------------------------------------------------------- ProductStatsApp
@@ -474,13 +464,13 @@ def product_stats_app(
             & (F.col("page.item_type") == "sku_id")
         ),
         F.col("page.item"),
-        _event_time_ms(F.col("ts")),
+        F.timestamp_millis(F.col("ts")),
         click_ct=F.lit(1),
     )
     displays = shape(
         display.filter(F.col("item_type") == "sku_id"),
         F.col("item"),
-        _event_time_ms(F.col("ts")),
+        F.timestamp_millis(F.col("ts")),
         display_ct=F.lit(1),
     )
     orders = shape(
@@ -523,12 +513,11 @@ def product_stats_app(
     unioned = union_by_name(
         [clicks, displays, orders, payments, carts, favors, refunds, comments]
     )
-    ts_stamp = (
-        F.lit(now_ms) if now_ms is not None else F.unix_millis(F.current_timestamp())
-    )
-    agg = unioned.groupBy(
-        F.window("event_time", window_duration).alias("w"), "sku_id"
-    ).agg(
+    return window_agg(
+        unioned,
+        F.window("event_time", window_duration),
+        ["sku_id"],
+        [
         F.sum("display_ct").alias("display_ct"),
         F.sum("click_ct").alias("click_ct"),
         F.sum("favor_ct").alias("favor_ct"),
@@ -542,14 +531,8 @@ def product_stats_app(
         F.sum("refund_amount").alias("refund_amount"),
         F.sum("comment_ct").alias("comment_ct"),
         F.sum("good_comment_ct").alias("good_comment_ct"),
-    )
-    return agg.select(
-        F.date_format("w.start", DT_FMT).alias("stt"),
-        F.date_format("w.end", DT_FMT).alias("edt"),
-        "sku_id",
-        *[c for c in agg.columns if c not in ("w", "sku_id")],
-        ts_stamp.alias("ts"),
-    )
+        ],
+    ).withColumn("ts", _stamp(now_ms))
 
 
 # ------------------------------------------------------------ ProvinceStatsApp
@@ -565,32 +548,21 @@ def province_stats_app(
     Intended semantics: sums split_total_amount (the DDL column; the
     committed SQL reads a non-existent total_amount, SURVEY §4.3)."""
     src = order_wide.withColumn("rt", F.to_timestamp("create_time", DT_FMT))
-    ts_stamp = (
-        F.lit(now_ms) if now_ms is not None else F.unix_millis(F.current_timestamp())
-    )
-    agg = src.groupBy(
-        F.window("rt", window_duration).alias("w"),
-        "province_id",
-        "province_name",
-        "province_area_code",
-        "province_iso_code",
-        "province_3166_2_code",
-    ).agg(
-        F.sum("split_total_amount").alias("order_amount"),
-        F.countDistinct("order_id").alias("order_count"),
-    )
-    return agg.select(
-        F.date_format("w.start", DT_FMT).alias("stt"),
-        F.date_format("w.end", DT_FMT).alias("edt"),
-        "province_id",
-        "province_name",
-        "province_area_code",
-        "province_iso_code",
-        "province_3166_2_code",
-        "order_amount",
-        "order_count",
-        ts_stamp.alias("ts"),
-    )
+    return window_agg(
+        src,
+        F.window("rt", window_duration),
+        [
+            "province_id",
+            "province_name",
+            "province_area_code",
+            "province_iso_code",
+            "province_3166_2_code",
+        ],
+        [
+            F.sum("split_total_amount").alias("order_amount"),
+            F.countDistinct("order_id").alias("order_count"),
+        ],
+    ).withColumn("ts", _stamp(now_ms))
 
 
 # ------------------------------------------------------------- KeywordStatsApp
@@ -603,25 +575,31 @@ def keyword_stats_app(
 ) -> DataFrame:
     """dws/KeywordStatsApp.java — search-event filter (P4, :40-45),
     tokenizer UDTF + lateral explode (D1, :47-53), TUMBLE count (A5,
-    :56-61). Source constant 'search' per the reference's insert."""
-    searches = page.filter(
+    :56-61). Source constant 'search' per the reference's insert.
+
+    The same function is the batch and the streaming form: the
+    reference's 2 s watermark is set on every page event BEFORE the
+    search filter (a post-filter watermark would stall whenever
+    searches are sparse), and a batch plan does not keep it."""
+    events = page.withColumn(
+        "event_time", F.timestamp_millis(F.col("ts"))
+    ).withWatermark("event_time", "2 seconds")
+    searches = events.filter(
         (F.col("page.last_page_id") == "search") & F.col("page.item").isNotNull()
     )
     words = searches.select(
-        _event_time_ms(F.col("ts")).alias("event_time"),
-        F.explode(tokenize_col(F.col("page.item"))).alias("keyword"),
+        "event_time", F.explode(tokenize_col(F.col("page.item"))).alias("keyword")
     )
-    ts_stamp = (
-        F.lit(now_ms) if now_ms is not None else F.unix_millis(F.current_timestamp())
-    )
-    agg = words.groupBy(
-        F.window("event_time", window_duration).alias("w"), "keyword"
-    ).agg(F.count(F.lit(1)).alias("ct"))
-    return agg.select(
+    return window_agg(
+        words,
+        F.window("event_time", window_duration),
+        ["keyword"],
+        [F.count(F.lit(1)).alias("ct")],
+    ).select(
         "keyword",
         "ct",
         F.lit("search").alias("source"),
-        F.date_format("w.start", DT_FMT).alias("stt"),
-        F.date_format("w.end", DT_FMT).alias("edt"),
-        ts_stamp.alias("ts"),
+        "stt",
+        "edt",
+        _stamp(now_ms).alias("ts"),
     )

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_flink_210726_spark.functions.scalar import money_sum
+from gmall_flink_210726_spark.operators.aggregations import window_agg
 from gmall_flink_210726_spark.operators.layout import zorder_key_sql
 from gmall_flink_210726_spark.registry import register
 from gmall_flink_210726_spark.sources.batch import load_table
@@ -395,14 +396,11 @@ def x9_sliding_window_pv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.timestamp_millis(F.expr("unix_micros(ts) div 1000")).alias("event_time"),
         "event_type",
     )
-    agg = ev.groupBy(
-        F.window("event_time", "1 day", "6 hours").alias("w"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("pv_ct"))
-    return agg.select(
-        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-        F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
-        "event_type",
-        "pv_ct",
+    return window_agg(
+        ev,
+        F.window("event_time", "1 day", "6 hours"),
+        ["event_type"],
+        [F.count(F.lit(1)).alias("pv_ct")],
     )
 
 

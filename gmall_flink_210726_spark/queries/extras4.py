@@ -24,12 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_210726_spark.operators.analytics import (
-    cohort_retention,
-    funnel_counts,
-    latest_by_key,
-)
+from gmall_flink_210726_spark.operators.analytics import cohort_retention, funnel_counts
 from gmall_flink_210726_spark.operators.sketch import hll_distinct, shard_binpack
+from gmall_flink_210726_spark.operators.stateful import first_per_key
 from gmall_flink_210726_spark.registry import register
 from gmall_flink_210726_spark.sources.batch import load_table
 
@@ -109,12 +106,12 @@ def q_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="CDC log compaction — latest row per key with a deterministic "
     "unique-column tiebreak (replay-stable survivor), the batch analog "
     "of the reference's HBase dim upsert (DimSinkFunction.java). One "
-    "row_number shuffle on the key. operators/analytics.py:latest_by_key",
+    "row_number shuffle on the key. operators/stateful.py:first_per_key",
     tags=("analytics", "cdc"),
 )
 def q_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    latest = latest_by_key(
+    latest = first_per_key(
         orders,
         ["o_custkey"],
         [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()],

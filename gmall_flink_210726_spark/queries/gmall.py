@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_flink_210726_spark.functions.scalar import money_sum, one_hot
-from gmall_flink_210726_spark.operators.aggregations import distinct_count, tumbling_window_agg
+from gmall_flink_210726_spark.operators.aggregations import distinct_count, window_agg
 from gmall_flink_210726_spark.operators.joins import enrich_dims
 from gmall_flink_210726_spark.registry import register
 from gmall_flink_210726_spark.sources.batch import load_table
@@ -42,10 +42,9 @@ _WIN1H_END = "strftime(make_timestamp((epoch_us(ts) // 3600000000) * 3600000000 
 )
 def a1_event_stats_tumble10m(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    return tumbling_window_agg(
+    return window_agg(
         events,
-        ts_col="ts",
-        duration="10 minutes",
+        F.window("ts", "10 minutes"),
         keys=["event_type"],
         aggs=[F.count(F.lit(1)).alias("pv_ct"), money_sum("value", "val_sum")],
     )
@@ -69,10 +68,9 @@ def a1_event_stats_tumble10m(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a3_distinct_users_tumble1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    return tumbling_window_agg(
+    return window_agg(
         events,
-        ts_col="ts",
-        duration="1 hour",
+        F.window("ts", "1 hour"),
         keys=["event_type"],
         aggs=[
             distinct_count("user_id", "uv_ct"),

@@ -237,15 +237,14 @@ def j1_interval_join_purchase_views(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("gmall", "agg"),
 )
 def a2_multikey_tumble1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from gmall_flink_210726_spark.operators.aggregations import tumbling_window_agg
+    from gmall_flink_210726_spark.operators.aggregations import window_agg
 
     events = load_table(spark, sf_dir, "events").withColumn(
         "segment", F.col("user_id") % 4
     )
-    return tumbling_window_agg(
+    return window_agg(
         events,
-        ts_col="ts",
-        duration="1 hour",
+        F.window("ts", "1 hour"),
         keys=["event_type", "segment"],
         aggs=[F.count(F.lit(1)).alias("pv_ct"), money_sum("value", "dur_sum")],
     )

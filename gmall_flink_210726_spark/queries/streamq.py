@@ -47,6 +47,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_flink_210726_spark.operators.aggregations import window_agg
 from gmall_flink_210726_spark.registry import register
 from gmall_flink_210726_spark.sinks import append_stats_exactly_once
 from gmall_flink_210726_spark.streaming.pipelines import write_foreach_batch
@@ -307,14 +308,11 @@ def st2_stream_tumble_pv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("event_time", "14 seconds")
     )
-    agg = ev.groupBy(F.window("event_time", "1 day").alias("w"), "event_type").agg(
-        F.count(F.lit(1)).alias("pv_ct")
-    )
-    out = agg.select(
-        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-        F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
-        "event_type",
-        "pv_ct",
+    out = window_agg(
+        ev,
+        F.window("event_time", "1 day"),
+        ["event_type"],
+        [F.count(F.lit(1)).alias("pv_ct")],
     )
     sink = _run_to_memory(out, "st2_tumble_pv", f"{sf_dir}/events.parquet")
     return spark.table(sink)
@@ -513,14 +511,11 @@ def st5_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("event_time", "14 seconds")
     )
-    agg = ev.groupBy(
-        F.session_window("event_time", "30 minutes").alias("w"), "user_id"
-    ).agg(F.count(F.lit(1)).alias("ev_ct"))
-    out = agg.select(
-        "user_id",
-        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-        F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
-        "ev_ct",
+    out = window_agg(
+        ev,
+        F.session_window("event_time", "30 minutes"),
+        ["user_id"],
+        [F.count(F.lit(1)).alias("ev_ct")],
     )
     sink = _run_to_memory(out, "st5_session", f"{sf_dir}/events.parquet")
     return spark.table(sink)
@@ -562,14 +557,14 @@ def st6_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .withWatermark("event_time", "14 seconds")
     )
-    agg = ev.groupBy(
-        F.window("event_time", "10 minutes").alias("w"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("pv_ct"))
+    agg = window_agg(
+        ev,
+        F.window("event_time", "10 minutes"),
+        ["event_type"],
+        [F.count(F.lit(1)).alias("pv_ct")],
+    )
     result = agg.select(
-        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-        "event_type",
-        "pv_ct",
-        (F.col("pv_ct") % 2).alias("parity"),
+        "stt", "event_type", "pv_ct", (F.col("pv_ct") % 2).alias("parity")
     )
     return _run_to_epoch_sink(
         result,
@@ -665,13 +660,11 @@ def st8_stream_sliding_pv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withWatermark("event_time", "14 seconds")
     )
-    agg = ev.groupBy(
-        F.window("event_time", "1 day", "6 hours").alias("w"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("pv_ct"))
-    out = agg.select(
-        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
-        "event_type",
-        "pv_ct",
-    )
+    out = window_agg(
+        ev,
+        F.window("event_time", "1 day", "6 hours"),
+        ["event_type"],
+        [F.count(F.lit(1)).alias("pv_ct")],
+    ).drop("edt")
     sink = _run_to_memory(out, "st8_sliding", f"{sf_dir}/events.parquet")
     return spark.table(sink)

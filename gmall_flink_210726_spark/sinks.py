@@ -30,9 +30,11 @@ import threading
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from gmall_flink_210726_spark.operators.stateful import first_per_key
 
 
 def create_table_if_not_exists(
@@ -247,12 +249,7 @@ def upsert_dim_table(
     cannot double-break and a freshly re-created lock is never lost.
     """
     if order_col is not None:
-        w = Window.partitionBy(pk).orderBy(F.col(order_col).desc())
-        updates = (
-            updates.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        updates = first_per_key(updates, [pk], [F.col(order_col).desc()])
     else:
         updates = updates.dropDuplicates([pk])
 

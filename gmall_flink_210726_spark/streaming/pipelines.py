@@ -9,7 +9,8 @@ variants are the same expressions bound to readStream inputs plus:
 - stream-stream interval join with watermarked range condition (J1 —
   the exact Spark equivalent of Flink's intervalJoin two-sided state,
   with watermark-driven state eviction, SURVEY §2.6).
-- windowed aggregation in append mode (emits on watermark passage ≈
+- windowed aggregation is the batch ``operators/aggregations.window_agg``
+  on a watermarked stream, in append mode (emits on watermark passage ≈
   Flink window firing; equality with batch holds on final results,
   SURVEY §7.4 risk 4).
 - sinks as ``foreachBatch`` (K3 JDBC-batch analog: whole micro-batch
@@ -49,25 +50,6 @@ def streaming_interval_join(
         f"r.{right_time} <= l.{left_time} + INTERVAL {upper_s} SECOND"
     )
     return lhs.join(rhs, cond, how)
-
-
-def streaming_tumbling_agg(
-    df: DataFrame,
-    event_time_col: str,
-    duration: str,
-    keys: list[str],
-    aggs: list[Column],
-    watermark: str = "2 seconds",
-) -> DataFrame:
-    """A1/A2 streaming — watermarked tumbling window aggregate. Append
-    mode emits each window once, when the watermark passes window end —
-    the reference's single firing per window (T10: late events beyond
-    the watermark are dropped in both engines)."""
-    return (
-        df.withWatermark(event_time_col, watermark)
-        .groupBy(F.window(F.col(event_time_col), duration).alias("window"), *keys)
-        .agg(*aggs)
-    )
 
 
 def streaming_dedup(

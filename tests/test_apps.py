@@ -272,6 +272,12 @@ class TestDwsApps:
         assert ks.filter(F.col("keyword").contains(" ")).count() == 0
         assert ks.filter(F.col("source") != "search").count() == 0
 
+    def test_keyword_stats_batch_plan_has_no_watermark(self, log_branches):
+        """The app sets the streaming watermark itself; one function can
+        serve both modes only because a batch plan does not keep it."""
+        ks = apps.keyword_stats_app(log_branches["page"], now_ms=NOW_MS)
+        assert "EventTimeWatermark" not in ks._jdf.queryExecution().optimizedPlan().toString()
+
     def test_product_stats_invariants(self, spark, log_branches, business):
         wide = apps.order_wide_app(business["orders"], business["details"], business["dims"])
         pw = apps.payment_wide_app(business["payments"], wide)

@@ -175,3 +175,18 @@ def test_parquet_primitives_have_one_copy():
                 if not any(line in r for r in allowed):
                     copies.append(f"{p.relative_to(ROOT)}:{line} {what}")
     assert not copies, f"copies of the parquet reader core: {copies}"
+
+
+def test_window_stats_have_one_copy():
+    """The reference's DWS window stamp (``stt``/``edt`` from the window
+    bounds) is built only by ``operators/aggregations.window_agg``, the
+    one windowed-stats operator of batch and streaming plans."""
+    pkg = ROOT / "gmall_flink_210726_spark"
+    copies = [
+        f"{p.relative_to(ROOT)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "operators" / "aggregations.py"
+        for text in [p.read_text()]
+        for m in re.finditer(r'alias\("stt"\)', text)
+    ]
+    assert not copies, f"copies of aggregations.window_agg: {copies}"

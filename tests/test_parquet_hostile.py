@@ -1,11 +1,13 @@
 """Hostile parquet bytes against every walker on the shared reader core
 (``parquetmeta.read_footer`` / ``column_chunk`` / ``read_page``).
 
-Each walker starts from one of its own valid fixtures and gets five
+Each walker starts from one of its own valid fixtures and gets six
 corruptions: a truncated file, a footer length past the start, a
-3,000-byte run of nested-struct field headers, and a first page header
-with no compressed size or one that runs past the end of the file. A
-walker must refuse each one with None or ValueError, in bounded time.
+3,000-byte run of nested-struct field headers, a first page header
+with no compressed size or one that runs past the end of the file, and
+a valid first page header in front of a 2-byte page, too short for the
+level length a v1 page starts with. A walker must refuse each one with
+None or ValueError, in bounded time.
 """
 
 from __future__ import annotations
@@ -115,15 +117,15 @@ def test_thrift_writer_round_trips_a_footer():
     assert pm._read_struct(pm._Reader(enc, 0, len(enc))) == meta
 
 
-def _with_first_page(base: bytes, header: dict) -> bytes:
-    """``base`` with ``header`` written after its pages, and every
+def _with_first_page(base: bytes, header: dict, page: bytes = b"") -> bytes:
+    """``base`` with ``header`` and ``page`` written after its pages, and every
     column chunk's first data and dictionary page (and every OffsetIndex
     page location) moved to it."""
     meta = pm.read_footer(base)
     (flen,) = struct.unpack_from("<I", base, len(base) - 8)
     body = bytearray(base[: len(base) - 8 - flen])
     at = len(body)
-    body += _thrift(header)
+    body += _thrift(header) + page
     for rg in meta[4]:
         for cc in rg[1]:
             cc[3][9] = at
@@ -154,8 +156,11 @@ CASES = {
     "page_past_eof": lambda b: (
         _with_first_page(b, {**_DATA_PAGE, 3: 1 << 20})
     ),
+    "two_byte_page": lambda b: (
+        _with_first_page(b, {**_DATA_PAGE, 2: 2, 3: 2}, b"\x02\x00")
+    ),
 }
-_PAGE_CASES = {"page_without_size", "page_past_eof"}
+_PAGE_CASES = {"page_without_size", "page_past_eof", "two_byte_page"}
 
 
 @pytest.mark.parametrize("case", list(CASES))

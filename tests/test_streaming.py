@@ -16,10 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from gmall_flink_210726_spark import fixtures
-from gmall_flink_210726_spark.streaming.pipelines import (
-    streaming_interval_join,
-    streaming_tumbling_agg,
-)
+from gmall_flink_210726_spark.operators.aggregations import window_agg
+from gmall_flink_210726_spark.streaming.pipelines import streaming_interval_join
 from gmall_flink_210726_spark.streaming.stateful import (
     streaming_daily_uv,
     streaming_detect_jumps,
@@ -202,17 +200,17 @@ class TestStreamingBindings:
     def test_tumbling_agg_matches_batch(self, spark, tmp_path):
         rows = _flat_events()
         _write_batches(str(tmp_path), rows, "is_entry", sentinel=True)
-        src = _stream_source(spark, str(tmp_path)).withColumn(
-            "event_time", F.timestamp_millis("ts")
+        src = (
+            _stream_source(spark, str(tmp_path))
+            .withColumn("event_time", F.timestamp_millis("ts"))
+            .withWatermark("event_time", "2 seconds")
         )
-        agg = streaming_tumbling_agg(
+        agg = window_agg(
             src,
-            "event_time",
-            "10 minutes",
+            F.window("event_time", "10 minutes"),
             ["mid"],
             [F.count(F.lit(1)).alias("ct")],
-            watermark="2 seconds",
-        ).select(F.col("window.start").alias("ws"), "mid", "ct")
+        ).select(F.to_timestamp("stt").alias("ws"), "mid", "ct")
         out = _run_stream(spark, agg, "agg_out")
         got = {(r.ws, r.mid): r.ct for r in out.collect() if r.mid != "_sentinel"}
 

@@ -16,7 +16,6 @@ from gmall_flink_210726_spark.plans import apps
 from gmall_flink_210726_spark.streaming.apps import (
     base_log_stream,
     enrich_stream_with_dims,
-    keyword_stats_stream,
     visitor_stats_stream,
 )
 
@@ -122,7 +121,7 @@ class TestStreamingDws:
 
     def test_keyword_stats_stream_matches_batch(self, spark, log_dir):
         branches = base_log_stream(_raw_stream(spark, log_dir))
-        out = _run(spark, keyword_stats_stream(branches["page"]), "ks_stream")
+        out = _run(spark, apps.keyword_stats_app(branches["page"]), "ks_stream")
         got = {(r.stt, r.keyword): r.ct for r in out.collect()}
 
         raw = spark.read.text(log_dir)

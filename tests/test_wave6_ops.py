@@ -14,9 +14,9 @@ from gmall_flink_210726_spark.operators.analytics import (
     cohort_retention,
     funnel_counts,
     fuzzy_match_pairs,
-    latest_by_key,
 )
 from gmall_flink_210726_spark.operators.sketch import hll_distinct, shard_binpack
+from gmall_flink_210726_spark.operators.stateful import first_per_key
 
 
 def _ev(spark, rows):
@@ -61,7 +61,7 @@ class TestLatestByKey:
         df = spark.createDataFrame(
             [Row(k=1, seq=2, v="b"), Row(k=1, seq=3, v="c"), Row(k=1, seq=1, v="a")]
         )
-        out = latest_by_key(df, ["k"], [F.col("seq").desc()]).collect()
+        out = first_per_key(df, ["k"], [F.col("seq").desc()]).collect()
         assert len(out) == 1 and out[0].v == "c"
 
 
