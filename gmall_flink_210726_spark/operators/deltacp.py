@@ -78,7 +78,7 @@ def _read_struct_leaf(
             return None
         got = 0
         while got < n_vals:
-            got_page = read_page(data, pos)
+            got_page = read_page(data, pos, n_vals - got)
             if got_page is None:
                 return None
             ph, page, pos = got_page

@@ -467,7 +467,7 @@ def _read_pos_delete_parquet(
             got = 0
             try:
                 while got < n_vals:
-                    got_page = read_page(data, pos)
+                    got_page = read_page(data, pos, n_vals - got)
                     if got_page is None:
                         return None
                     ph, page, pos = got_page

@@ -179,7 +179,7 @@ def read_parquet_page_index(
                 return None
             if cmax < lo or cmin > hi:
                 continue  # SKIPPED — these bytes are never touched
-            got_page = read_page(data, offsets[p])
+            got_page = read_page(data, offsets[p], rg_rows - fris[p])
             if got_page is None:
                 return None
             ph, page, end = got_page

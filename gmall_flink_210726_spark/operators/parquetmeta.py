@@ -199,13 +199,22 @@ def column_chunk(row_group, path) -> dict | None:
     return None if cc is None else cc[3]
 
 
-def read_page(data: bytes, pos: int) -> tuple[dict, bytes, int] | None:
+def read_page(
+    data: bytes, pos: int, remaining: int | None
+) -> tuple[dict, bytes, int] | None:
     """The PageHeader at ``pos``: (header, still-compressed page bytes,
     position after the page), or None when the header does not parse,
     its sizes (2 uncompressed, 3 compressed) are not non-negative ints
     or the page runs past ``data``, or its optional CRC (4: CRC-32 of
     the page as stored) does not match — the one check that catches a
-    flipped value byte no count or level cross-check can see."""
+    flipped value byte no count or level cross-check can see.
+
+    ``remaining`` is how many of its column chunk's values (ColumnMetaData
+    5 num_values) are not yet read; a data page (v1 header 5, v2 header
+    8) must claim a non-negative int num_values no larger, checked before
+    any level is decoded, since the level decoders allocate what a page
+    claims (10^6 values fit in a 4-byte RLE run). None skips the check,
+    for writers re-reading their own fixtures."""
     if pos < 0:
         return None
     r = _Reader(data, pos, len(data))
@@ -219,6 +228,12 @@ def read_page(data: bytes, pos: int) -> tuple[dict, bytes, int] | None:
     end = r.pos + psize
     if usize < 0 or psize < 0 or end > len(data):
         return None
+    if remaining is not None:
+        for dph in (ph.get(5), ph.get(8)):
+            if isinstance(dph, dict) and not (
+                isinstance(dph.get(1), int) and 0 <= dph[1] <= remaining
+            ):
+                return None
     page = data[r.pos : end]
     crc = ph.get(4)
     if crc is not None and (
@@ -356,7 +371,7 @@ def _flip_first_page_value(blob: bytes) -> bytes:
 
 def _page_body_at(blob: bytes, off: int) -> int:
     """Offset of the body of the page whose header is at ``off``."""
-    _, page, end = read_page(blob, off)
+    _, page, end = read_page(blob, off, None)
     return end - len(page)
 
 
@@ -521,7 +536,7 @@ def read_parquet_column_k(
         got = 0
         try:
             while got < n_vals:
-                got_page = read_page(data, pos)
+                got_page = read_page(data, pos, n_vals - got)
                 if got_page is None:
                     return None
                 ph, page, pos = got_page
@@ -696,7 +711,7 @@ def read_parquet_column_s_dict(
             return None
         try:
             # --- dictionary page ---
-            got_page = read_page(data, dict_off)
+            got_page = read_page(data, dict_off, n_vals)
             if got_page is None:
                 return None
             ph, page, next_pos = got_page
@@ -729,7 +744,7 @@ def read_parquet_column_s_dict(
             # --- data pages ---
             got = 0
             while got < n_vals:
-                got_page = read_page(data, next_pos)
+                got_page = read_page(data, next_pos, n_vals - got)
                 if got_page is None:
                     return None
                 ph2, page2, next_pos = got_page
@@ -981,7 +996,7 @@ def read_parquet_columns_v2(data: bytes) -> dict | None:
             try:
                 got = 0
                 while got < n_vals:
-                    got_page = read_page(data, pos)
+                    got_page = read_page(data, pos, n_vals - got)
                     if got_page is None:
                         return None
                     ph, page, pos = got_page
@@ -1184,7 +1199,7 @@ def read_parquet_columns_bss_dba(data: bytes) -> dict | None:
             try:
                 got = 0
                 while got < n_vals:
-                    got_page = read_page(data, pos)
+                    got_page = read_page(data, pos, n_vals - got)
                     if got_page is None:
                         return None
                     ph, page, pos = got_page
@@ -1376,7 +1391,7 @@ def parquet_stats_skip(
             got = 0
             vmin = vmax = None
             while got < n_vals:
-                got_page = read_page(data, pos)
+                got_page = read_page(data, pos, n_vals - got)
                 if got_page is None:
                     return None
                 ph, page, pos = got_page
@@ -1623,7 +1638,7 @@ def _read_list_chunk(
     vals: list = []
     got = n_pages = 0
     while got < n_vals:
-        got_page = read_page(data, pos)
+        got_page = read_page(data, pos, n_vals - got)
         if got_page is None:
             return None
         ph, raw, pos = got_page

@@ -351,7 +351,7 @@ def _read_group_values(
     pos = off
     values: list = []
     while got < n_vals:
-        got_page = read_page(data, pos)
+        got_page = read_page(data, pos, n_vals - got)
         if got_page is None:
             return None
         ph, page, pos = got_page

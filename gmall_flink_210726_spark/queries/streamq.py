@@ -141,6 +141,18 @@ def _hidden(name: str) -> bool:
 
 
 @contextmanager
+def _pinned_conf(spark: SparkSession, key: str, value: str):
+    """Set session conf ``key`` to ``value`` and restore the session
+    value on exit."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@contextmanager
 def replay_partitions(spark: SparkSession, *source_paths: str):
     """Pin ``spark.sql.shuffle.partitions`` for a bounded stream replay of
     ``source_paths`` (files or directories) and restore the session value
@@ -165,12 +177,69 @@ def replay_partitions(spark: SparkSession, *source_paths: str):
     n = replay_partition_count(
         _source_bytes(source_paths), advisory, spark.sparkContext.defaultParallelism
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    with _pinned_conf(spark, "spark.sql.shuffle.partitions", str(n)):
         yield n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+# Streaming logical nodes of the package's streams whose rows leave in
+# the micro-batch their input arrives in: the stateless ones, and the
+# watermarked deduplication (a first occurrence is emitted at once; the
+# watermark only evicts its key).
+_EAGER_NODES = frozenset({
+    "StreamingRelation", "StreamingRelationV2", "SubqueryAlias", "Project",
+    "Filter", "EventTimeWatermark", "Generate", "Expand", "MapInPandas",
+    "DeduplicateWithinWatermark",
+})
+
+
+def watermark_batch_emits(stream_df: DataFrame) -> bool:
+    """Whether a micro-batch that only advances the watermark can add
+    sink rows to ``stream_df``, read from its analyzed logical plan.
+
+    Yes for a streaming ``Aggregate`` (tumbling, sliding and session
+    windows emit in append mode once the watermark closes them), a
+    non-inner stream-stream ``Join`` (its outer rows wait for the
+    watermark), a state function with an event- or processing-time
+    timeout, and any streaming node this rule does not know. No for
+    what emits rows in the batch their input arrives in: an inner
+    stream-stream join, ``dropDuplicatesWithinWatermark``, a
+    ``NoTimeout`` state function; for those a trailing no-data batch
+    only evicts state. Static subtrees (the batch side of a
+    stream-static join) keep no state and are not walked."""
+
+    def emits(node) -> bool:
+        if not node.isStreaming():
+            return False
+        kind = node.getClass().getSimpleName()
+        if kind == "Join":
+            if (
+                node.left().isStreaming()
+                and node.right().isStreaming()
+                and node.joinType().sql() != "INNER"
+            ):
+                return True
+        elif kind == "FlatMapGroupsInPandasWithState":
+            if node.timeout().toString() != "NoTimeout":
+                return True
+        elif kind not in _EAGER_NODES:
+            return True  # an Aggregate, or a node the rule does not know
+        children = node.children()
+        return any(emits(children.apply(i)) for i in range(children.size()))
+
+    return emits(stream_df._jdf.queryExecution().analyzed())
+
+
+def _watermark_batches(stream_df: DataFrame):
+    """Run watermark-only micro-batches (Spark's
+    ``noDataMicroBatches``) for a replay of ``stream_df`` exactly when
+    :func:`watermark_batch_emits`; the session value is restored on
+    exit. A replay ends with its backlog and its checkpoint is
+    discarded, so a batch that only evicts state is pure cost."""
+    return _pinned_conf(
+        stream_df.sparkSession,
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "true" if watermark_batch_emits(stream_df) else "false",
+    )
 
 
 def _await_then_stop(q) -> None:
@@ -188,16 +257,18 @@ def _await_then_stop(q) -> None:
 def _run_to_memory(stream_df: DataFrame, prefix: str, *source_paths: str) -> str:
     """Execute the streaming plan with an availableNow trigger into a
     memory sink; returns the sink table name. availableNow processes the
-    whole backlog then stops, running trailing no-data micro-batches so
-    watermark-closed state flushes (noDataMicroBatches, on by default).
+    whole backlog then stops. A trailing watermark-only micro-batch runs
+    only when it can still emit rows, i.e. when watermark-closed windows,
+    outer-join rows or timers are waiting (:func:`watermark_batch_emits`);
+    st3, st7, st16 and st17 end at their last data batch.
 
     The stream runs under :func:`replay_partitions` sized from
     ``source_paths``, the files the plan replays; the session's shuffle
-    partitions are restored before returning, so later batch plans keep
-    their own parallelism."""
+    partitions and no-data batch setting are restored before returning,
+    so later plans keep their own."""
     spark = stream_df.sparkSession
     name = f"{prefix}_{next(_sink_seq)}"
-    with replay_partitions(spark, *source_paths):
+    with replay_partitions(spark, *source_paths), _watermark_batches(stream_df):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -226,12 +297,13 @@ def _run_to_epoch_sink(
 
     Everything runs under :func:`replay_partitions` sized from
     ``source_paths``, so the read-back shuffle keeps the replay's
-    partition count."""
+    partition count, and the stream runs watermark-only micro-batches
+    as :func:`_run_to_memory` does."""
     spark = stream_df.sparkSession
     out = tempfile.mkdtemp(prefix="epoch_sink_")
     ckpt = tempfile.mkdtemp(prefix="epoch_ckpt_")
     try:
-        with replay_partitions(spark, *source_paths):
+        with replay_partitions(spark, *source_paths), _watermark_batches(stream_df):
             _await_then_stop(
                 write_foreach_batch(
                     stream_df,

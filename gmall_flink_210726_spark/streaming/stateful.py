@@ -25,6 +25,7 @@ from __future__ import annotations
 from collections.abc import Iterable
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -50,10 +51,16 @@ _STATE_PENDING = StructType([StructField("ts", LongType()), StructField("payload
 
 
 def _sorted_concat(pdfs: Iterable[pd.DataFrame]) -> pd.DataFrame:
+    """The group's rows in one frame, ordered by (ts, payload), ties kept
+    in arrival order (a stable numpy lexsort; payload is a non-null
+    string per the input contract). One frame, the usual case, is not
+    copied through ``pd.concat``."""
     frames = [p for p in pdfs if len(p)]
     if not frames:
         return pd.DataFrame(columns=["mid", "ts", "flag", "payload"])
-    return pd.concat(frames).sort_values(["ts", "payload"], kind="mergesort")
+    pdf = frames[0] if len(frames) == 1 else pd.concat(frames)
+    order = np.lexsort((pdf["payload"].to_numpy(), pdf["ts"].to_numpy()))
+    return pdf.iloc[order]
 
 
 def _fix_is_new_fn(key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState):
@@ -93,26 +100,32 @@ def streaming_fix_is_new(df: DataFrame) -> DataFrame:
     )
 
 
+_DAY_MS = 86_400_000
+
+
+def _iso_day(day: int) -> str:
+    """yyyy-MM-dd of a day number counted from the epoch."""
+    return str(np.datetime64(int(day), "D"))
+
+
 def _daily_uv_fn(key: Any, pdfs: Iterable[pd.DataFrame], state: GroupState):
     """T5 — dwm/UniqueVisitApp.java:70-91: emit the mid's first event per
     day; state is the last emitted visit date (the reference's 24 h TTL
     re-keys by day — replay keeps the date string)."""
     pdf = _sorted_concat(pdfs)
-    last_date = state.get[0] if state.exists else None
-    if len(pdf):
-        # vectorized first-per-day: a row is kept when its day differs
-        # from the previous kept row's day — with rows sorted by ts,
-        # that is exactly 'day != previous row's day', seeded by the
-        # carried-over state date.
-        days = pd.to_datetime(pdf["ts"], unit="ms").dt.strftime("%Y-%m-%d")
-        prev = days.shift(1)
-        prev.iloc[0] = last_date
-        keep_mask = (days != prev).to_numpy()
-        kept = pdf[keep_mask]
-        state.update((days.iloc[-1],))
-        yield kept
-    else:
+    if not len(pdf):
         yield pd.DataFrame(columns=pdf.columns)
+        return
+    # vectorized first-per-day: with rows sorted by ts, a row is kept
+    # when its UTC day (integer ms // day) differs from the previous
+    # row's, the first row compared against the carried-over state date.
+    # The yyyy-MM-dd state string is compared and written once per key.
+    days = pdf["ts"].to_numpy(dtype=np.int64) // _DAY_MS
+    keep = np.empty(len(days), dtype=bool)
+    keep[1:] = days[1:] != days[:-1]
+    keep[0] = not state.exists or state.get[0] != _iso_day(days[0])
+    state.update((_iso_day(days[-1]),))
+    yield pdf[keep]
 
 
 def streaming_daily_uv(df: DataFrame) -> DataFrame:

@@ -190,3 +190,18 @@ def test_window_stats_have_one_copy():
         for m in re.finditer(r'alias\("stt"\)', text)
     ]
     assert not copies, f"copies of aggregations.window_agg: {copies}"
+
+
+def test_no_data_batch_setting_has_one_copy():
+    """Whether a stream runs watermark-only micro-batches is decided in
+    one place, ``queries/streamq.watermark_batch_emits``, and set only
+    by the stream runners there; no query or app pins it itself."""
+    pkg = ROOT / "gmall_flink_210726_spark"
+    copies = [
+        f"{p.relative_to(ROOT)}:{text.count(chr(10), 0, m.start()) + 1}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "queries" / "streamq.py"
+        for text in [p.read_text()]
+        for m in re.finditer(r"noDataMicroBatches", text)
+    ]
+    assert not copies, f"noDataMicroBatches outside queries/streamq.py: {copies}"

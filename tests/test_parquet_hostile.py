@@ -193,10 +193,67 @@ def test_read_page_refuses_what_no_walker_may_read():
     CRC mismatch are refused by the core, before any walker rule."""
     base = pm._make_parquet(1)  # written with page CRCs
     pos = pm.column_chunk(pm.read_footer(base)[4][0], [b"k"])[9]
-    ph, page, end = pm.read_page(base, pos)
+    ph, page, end = pm.read_page(base, pos, None)
     assert isinstance(ph.get(4), int) and pos < end - len(page)
-    assert pm.read_page(base, -1) is None
+    assert pm.read_page(base, -1, None) is None
     for bad in ({**ph, 3: -1}, {**ph, 3: len(base)}, {**ph, 4: ph[4] ^ 1}):
         hdr = _thrift(bad)
-        assert pm.read_page(hdr + page, 0) is None
-    assert pm.read_page(_thrift(ph) + page, 0)[1] == page
+        assert pm.read_page(hdr + page, 0, None) is None
+    assert pm.read_page(_thrift(ph) + page, 0, None)[1] == page
+
+
+def _count_bomb(base: bytes) -> bytes:
+    """``base`` whose first data page (of the walker's own page type)
+    claims 10^6 values in one 4-byte RLE run of definition levels, far
+    past its column chunk's num_values."""
+    meta = pm.read_footer(base)
+    first = min(cc[3].get(11, cc[3][9]) for rg in meta[4] for cc in rg[1])
+    ph, _, after = pm.read_page(base, first, None)
+    if ph.get(1) == 2:  # a dictionary page leads: take the data page after it
+        ph, _, _ = pm.read_page(base, after, None)
+    levels = _enc_uvarint(2 * 10**6) + b"\x01"  # run of 10^6 ones
+    if ph.get(1) == 3:  # DATA_PAGE_V2: level lengths live in the header
+        body = levels
+        hdr = {1: 3, 2: len(body), 3: len(body),
+               8: {**ph[8], 1: 10**6, 3: 10**6, 5: len(levels), 6: 0}}
+    else:
+        body = struct.pack("<I", len(levels)) + levels
+        hdr = {1: 0, 2: len(body), 3: len(body), 5: {**ph[5], 1: 10**6}}
+    return _with_first_page(base, hdr, body)
+
+
+@pytest.mark.parametrize(
+    "name,make,walk",
+    [w[:3] for w in WALKERS if w[3]],
+    ids=[w[0] for w in WALKERS if w[3]],
+)
+def test_page_count_bomb_is_refused_before_levels(name, make, walk):
+    """A data page claiming more values than its column chunk has left is
+    refused by ``read_page`` before a level is decoded, so the walk
+    allocates nothing near the 10^6 values the page claims."""
+    import tracemalloc
+
+    bad = _count_bomb(make())
+    tracemalloc.start()
+    try:
+        try:
+            got = walk(bad)
+        except ValueError:
+            got = None
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert got is None
+    assert peak < 1 << 20
+
+
+def test_read_page_checks_the_chunk_count():
+    base = pm._make_parquet(1)
+    chunk = pm.column_chunk(pm.read_footer(base)[4][0], [b"k"])
+    ph, page, _ = pm.read_page(base, chunk[9], chunk[5])
+    pn = ph[5][1]
+    for remaining, ok in ((pn, True), (pn - 1, False), (None, True)):
+        assert (pm.read_page(base, chunk[9], remaining) is not None) is ok
+    for bad in (-1, b"x"):
+        hdr = _thrift({**ph, 5: {**ph[5], 1: bad}})
+        assert pm.read_page(hdr + page, 0, pn) is None

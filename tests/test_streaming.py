@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from gmall_flink_210726_spark import fixtures
 from gmall_flink_210726_spark.operators.aggregations import window_agg
+from gmall_flink_210726_spark.queries.streamq import watermark_batch_emits
 from gmall_flink_210726_spark.streaming.pipelines import streaming_interval_join
 from gmall_flink_210726_spark.streaming.stateful import (
     streaming_daily_uv,
@@ -392,40 +393,271 @@ class TestReplayPartitions:
                 raise RuntimeError("boom")
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
+        # a failing runner also restores the no-data batch setting
+        from pyspark.errors import StreamingQueryException
+
+        from gmall_flink_210726_spark.queries.streamq import _run_to_epoch_sink
+
+        key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        src = tmp_path / "src"
+        src.mkdir()
+        (src / "a.json").write_text('{"x": 1}\n')
+        spark.conf.set(key, "true")
+        seen = []
+
+        def refuse(batch):
+            seen.append(spark.conf.get(key))
+            raise RuntimeError("epoch 0 refused")
+
+        stream = spark.readStream.schema("x long").json(str(src))
+        with pytest.raises(StreamingQueryException, match="epoch 0 refused"):
+            _run_to_epoch_sink(stream, refuse, lambda df: df, str(src))
+        # a stateless stream can gain no row from a watermark-only batch
+        assert seen == ["false"]
+        assert spark.conf.get(key) == "true"
+
     def test_st1_state_store_uses_sized_partitions(self, spark):
-        import time
-
-        from pyspark.sql.streaming import StreamingQueryListener
-
         from gmall_flink_210726_spark.registry import load_all
         from tests.conftest import SF_SMALL
 
-        class Progress(StreamingQueryListener):
-            def __init__(self):
-                self.ids, self.last, self.done = set(), None, set()
+        progress = _progress_of(
+            spark,
+            "st1_daily_uv",
+            lambda: load_all()["st1_stream_daily_uv"].fn(spark, SF_SMALL).collect(),
+        )
+        assert progress[-1]["stateOperators"][0]["numShufflePartitions"] == 1
 
-            def onQueryStarted(self, event):
-                if (event.name or "").startswith("st1_daily_uv"):
-                    self.ids.add(event.id)
 
-            def onQueryProgress(self, event):
-                if event.progress.id in self.ids:
-                    self.last = json.loads(event.progress.json)
+def _progress_of(spark, prefix, run):
+    """Progress reports, in order, of the streams named ``prefix*`` that
+    ``run()`` starts, read by a listener once each has terminated."""
+    import time
 
-            def onQueryTerminated(self, event):
-                self.done.add(event.id)
+    from pyspark.sql.streaming import StreamingQueryListener
 
-        listener = Progress()
-        spark.streams.addListener(listener)
-        try:
-            load_all()["st1_stream_daily_uv"].fn(spark, SF_SMALL).collect()
-            end = time.monotonic() + 30
-            while not (listener.ids and listener.ids <= listener.done):
-                assert time.monotonic() < end, "no terminated event for st1"
-                time.sleep(0.1)
-        finally:
-            spark.streams.removeListener(listener)
-        assert listener.last["stateOperators"][0]["numShufflePartitions"] == 1
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.ids, self.seen, self.done = set(), [], set()
+
+        def onQueryStarted(self, event):
+            if (event.name or "").startswith(prefix):
+                self.ids.add(event.id)
+
+        def onQueryProgress(self, event):
+            if event.progress.id in self.ids:
+                self.seen.append(json.loads(event.progress.json))
+
+        def onQueryTerminated(self, event):
+            self.done.add(event.id)
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        run()
+        end = time.monotonic() + 30
+        while not (listener.ids and listener.ids <= listener.done):
+            assert time.monotonic() < end, f"no terminated event for {prefix}"
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    return listener.seen
+
+
+class TestWatermarkBatches:
+    """A bounded replay runs a watermark-only micro-batch only when it can
+    still add sink rows (queries/streamq.py:watermark_batch_emits)."""
+
+    @pytest.fixture
+    def events(self, spark):
+        from gmall_flink_210726_spark.queries.streamq import _stream_events
+        from tests.conftest import SF_SMALL
+
+        return _stream_events(spark, SF_SMALL).select(
+            "event_id",
+            "user_id",
+            "event_type",
+            F.expr("ts div 1000000").alias("ms"),
+            F.timestamp_millis(F.expr("ts div 1000000")).alias("event_time"),
+        )
+
+    def _interval_join(self, events, how):
+        from gmall_flink_210726_spark.streaming.pipelines import streaming_interval_join
+
+        return streaming_interval_join(
+            events.filter("event_type = 'purchase'"),
+            events.filter("event_type = 'view'"),
+            "user_id", "user_id", "event_time", "event_time",
+            -300, 0, "0 seconds", "0 seconds", how,
+        )
+
+    def _flat(self, events):
+        return events.select(
+            F.col("user_id").cast("string").alias("mid"),
+            F.col("ms").alias("ts"),
+            F.lit("entry").alias("flag"),
+            F.col("event_id").cast("string").alias("payload"),
+        )
+
+    def test_inner_interval_join_skips_the_flush(self, events):
+        assert not watermark_batch_emits(self._interval_join(events, "inner"))
+
+    def test_left_outer_interval_join_flushes(self, events):
+        assert watermark_batch_emits(self._interval_join(events, "left_outer"))
+
+    @pytest.mark.parametrize("kind", ["tumbling", "session"])
+    def test_watermarked_windows_flush(self, events, kind):
+        window = {
+            "tumbling": lambda: F.window("event_time", "1 day"),
+            "session": lambda: F.session_window("event_time", "30 minutes"),
+        }[kind]()
+        stream = window_agg(
+            events.withWatermark("event_time", "14 seconds"),
+            window,
+            ["event_type"],
+            [F.count(F.lit(1)).alias("pv_ct")],
+        )
+        assert watermark_batch_emits(stream)
+
+    def test_drop_duplicates_within_watermark_skips_the_flush(self, events):
+        from gmall_flink_210726_spark.streaming.pipelines import streaming_dedup
+
+        stream = streaming_dedup(events, ["user_id"], "event_time", "1 hour")
+        assert not watermark_batch_emits(stream)
+
+    def test_no_timeout_state_function_skips_the_flush(self, events):
+        assert not watermark_batch_emits(streaming_daily_uv(self._flat(events)))
+
+    def test_event_time_timeout_state_function_flushes(self, events):
+        assert watermark_batch_emits(streaming_detect_jumps(self._flat(events)))
+
+    def test_stateless_stream_skips_the_flush(self, events):
+        assert not watermark_batch_emits(events.filter("event_type = 'view'"))
+
+    def test_st3_ends_at_its_last_data_batch(self, spark):
+        from gmall_flink_210726_spark.registry import load_all
+        from tests.conftest import SF_SMALL
+
+        progress = _progress_of(
+            spark,
+            "st3_interval_join",
+            lambda: load_all()["st3_stream_interval_join"].fn(spark, SF_SMALL).collect(),
+        )
+        assert [p["numInputRows"] > 0 for p in progress] == [True]
+
+
+def _sorted_concat_pandas(pdfs):
+    """The pandas form of ``stateful._sorted_concat``, kept as the
+    reference for its numpy one."""
+    import pandas as pd
+
+    frames = [p for p in pdfs if len(p)]
+    if not frames:
+        return pd.DataFrame(columns=["mid", "ts", "flag", "payload"])
+    return pd.concat(frames).sort_values(["ts", "payload"], kind="mergesort")
+
+
+def _daily_uv_pandas(key, pdfs, state):
+    """The pandas form of ``stateful._daily_uv_fn`` (a date string per
+    row), kept as the reference for its integer-day one."""
+    import pandas as pd
+
+    pdf = _sorted_concat_pandas(pdfs)
+    last_date = state.get[0] if state.exists else None
+    if len(pdf):
+        days = pd.to_datetime(pdf["ts"], unit="ms").dt.strftime("%Y-%m-%d")
+        prev = days.shift(1)
+        prev.iloc[0] = last_date
+        state.update((days.iloc[-1],))
+        yield pdf[(days != prev).to_numpy()]
+    else:
+        yield pd.DataFrame(columns=pdf.columns)
+
+
+class _State:
+    """The part of ``GroupState`` the NoTimeout handlers use."""
+
+    def __init__(self, value=None):
+        self.value = value
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = tuple(value)
+
+
+class TestStateHandlersMatchPandas:
+    """``streaming/stateful``'s numpy ``_sorted_concat`` and integer-day
+    ``_daily_uv_fn`` agree with their pandas forms on seeded random
+    groups: ts ties broken by payload (and equal (ts, payload) pairs kept
+    in arrival order), several input frames, empty frames and groups, and
+    a carried-over state date on either side of the data."""
+
+    DAY = 86_400_000
+
+    def _group(self, rng):
+        import pandas as pd
+
+        base = int(rng.integers(-3, 20_000)) * self.DAY
+        frames = []
+        for _ in range(int(rng.integers(0, 4))):
+            n = int(rng.integers(0, 12))
+            # few distinct ts and payloads, so both tie levels occur
+            ts = base + rng.integers(0, 4, n) * (self.DAY // 2) + rng.integers(0, 3, n)
+            frames.append(
+                pd.DataFrame(
+                    {
+                        "mid": "m",
+                        "ts": ts.astype("int64"),
+                        "flag": [f"f{j}" for j in range(n)],
+                        "payload": [f"p{v}" for v in rng.integers(0, 3, n)],
+                    },
+                    index=rng.integers(0, 5, n),
+                )
+            )
+        state = None
+        if rng.random() < 0.6:
+            day = base // self.DAY + int(rng.integers(-1, 3))
+            state = (str(pd.Timestamp(day * self.DAY, unit="ms").date()),)
+        return frames, state
+
+    def test_sorted_concat_matches_pandas(self):
+        import numpy as np
+        import pandas as pd
+
+        from gmall_flink_210726_spark.streaming.stateful import _sorted_concat
+
+        rng = np.random.default_rng(13)
+        for _ in range(300):
+            frames, _state = self._group(rng)
+            pd.testing.assert_frame_equal(
+                _sorted_concat(iter(frames)), _sorted_concat_pandas(iter(frames))
+            )
+
+    def test_daily_uv_matches_pandas(self):
+        import numpy as np
+        import pandas as pd
+
+        from gmall_flink_210726_spark.streaming.stateful import _daily_uv_fn
+
+        rng = np.random.default_rng(21)
+        kinds = set()
+        for _ in range(300):
+            frames, state = self._group(rng)
+            got_state, want_state = _State(state), _State(state)
+            (got,) = _daily_uv_fn(("m",), iter(frames), got_state)
+            (want,) = _daily_uv_pandas(("m",), iter(frames), want_state)
+            pd.testing.assert_frame_equal(got, want)
+            assert got_state.value == want_state.value
+            filled = sum(len(f) > 0 for f in frames)
+            kinds.add((filled > 0, filled > 1, state is not None))
+        # empty / one filled frame / several, each with and without state
+        assert len(kinds) == 6
 
 
 class TestEpochSinkRunner:
